@@ -87,11 +87,13 @@ object Bench {
         (f"""{"queries":$qs,"jobs":$js,"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir"}""" + "\n")
           .getBytes("UTF-8")): Unit
     println(line)
+    // stop first, so nothing the session prints while stopping can land
+    // after the summary line
+    spark.stop()
     // LAST line, compact (< 200 chars): the driver parses a 2000-char
     // stdout TAIL, and at 410 queries the big line above (~10 KB) cannot
     // survive it — two rounds of PERF came back empty (VERDICT r14 #2).
     // Additions-only: the big line and the per-row bench_q lines stay.
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","n":${results.size},"per_query_file":"BENCH_LAST.json"}""")
-    spark.stop()
   }
 }

@@ -242,10 +242,10 @@ object TextHashUtil {
     val n = s.numElements()
     if (n == 0) return 0L
     // table capacity: next power of two >= 2n. Guard the shift — past
-    // 2^30 elements n*2 overflows Int and the loop would exit with a
-    // full table, turning the insert probe into an infinite scan
-    require(n < (1 << 30),
-      s"hash_pair_intersect_size: array of $n elements exceeds the 2^30 bound")
+    // 2^29 elements the capacity would have to reach 2^31, which
+    // overflows Int, and the doubling loop would never exit
+    require(n <= (1 << 29),
+      s"hash_pair_intersect_size: array of $n elements exceeds the 2^29 bound")
     var cap = 4
     while (cap < n * 2) cap <<= 1
     val mask = cap - 1
@@ -518,6 +518,13 @@ object TextHash {
   def ngramHashes(tokens: Column, nGramWidth: Int): Column =
     bridge.column(NGramHashes(bridge.expression(tokens), nGramWidth))
 
+  /** `hash_pair_intersect_size(a, b)`: |A ∩ B| over two
+    * `array<struct<bigint,bigint>>` hash-pair arrays, as produced by
+    * [[ngramHashes]]. Precondition, not checked: neither array holds a
+    * duplicate element — a duplicate of the larger array is counted once
+    * per occurrence, where `size(array_intersect(a, b))` counts it once.
+    * Null elements are skipped; a null array gives null. The smaller
+    * array may hold at most 2^29 elements. */
   def hashPairIntersectSize(a: Column, b: Column): Column =
     bridge.column(HashPairIntersectSize(bridge.expression(a), bridge.expression(b)))
 }

@@ -1412,15 +1412,6 @@ object Dedup extends QueryModule {
       .distinct()
   }
 
-  /** ARRAY-INTERSECT verify (optimization r15 — the containmentPairs
-    * shape replacing the exploded (pair × gram) shuffle_hash probe +
-    * per-pair count aggregate + separate sizes aggregate and its two
-    * joins): candidate pairs join the pinned (doc_id, gs, n) relation on
-    * each side and |A∩B| is a per-row `size(array_intersect)` projection
-    * over the 16-byte-hash arrays; sizes ride the arrays as `n`. Both
-    * sides stay semi-restricted to candidate docs — O(dup volume), not
-    * corpus scale (the 1M-doc DedupScale discipline). LAZY — the caller
-    * pins. */
   /** Candidate pairs joined with BOTH sides' pinned gram arrays plus the
     * exact kernel overlap: (doc_a, doc_b, i, na, nb) — the one
     * definition of the verify join shared by the Jaccard (PPJoin) and

@@ -34,7 +34,7 @@ object MergeTable {
         writeBucket(spark, table, df.filter(pmod(col(keyCol), lit(buckets)) === k),
           k, version = 0L))
     }
-    TxLog.commit(table, adds, Seq.empty, expectedCurrent = -1L)
+    TxLog.commit(table, adds, Seq.empty, expectedCurrent = -1L, schema = df.schema)
       .getOrElse(sys.error(s"initial load conflict on $table"))
   }
 
@@ -66,9 +66,7 @@ object MergeTable {
       // exactly the per-bucket key replacement.
       val oldFiles = touched.flatMap(k => byBucket.getOrElse(k, Seq.empty))
       val old =
-        if (oldFiles.nonEmpty)
-          spark.read.option("mergeSchema", "true")
-            .parquet(oldFiles.map(f => s"$table/$f"): _*)
+        if (oldFiles.nonEmpty) TxLog.read(spark, table, snap, oldFiles)
         else updates.limit(0)
       // allowMissingColumns = schema evolution: an update batch may
       // carry NEW columns (old rows null-fill) or omit columns the
@@ -82,7 +80,7 @@ object MergeTable {
           merged.filter(pmod(col(keyCol), lit(buckets)) === k), k, next)))
       val removes = touched.flatMap(k => byBucket.getOrElse(k, Seq.empty))
       TxLog.commit(table, adds, removes, expectedCurrent = snap.version,
-          primitive = primitive) match {
+          primitive = primitive, schema = merged.schema) match {
         case Some(v) =>
           if (checkpointEvery > 0 && v > 0 && v % checkpointEvery == 0)
             TxLog.writeCheckpoint(table, primitive): Unit
@@ -117,8 +115,7 @@ object MergeTable {
         .filter(byBucket.contains) // a key in an empty bucket deletes nothing
       if (touched.isEmpty) return (snap.version, Seq.empty)
       val oldFiles = touched.flatMap(byBucket)
-      val old = spark.read.option("mergeSchema", "true")
-        .parquet(oldFiles.map(f => s"$table/$f"): _*)
+      val old = TxLog.read(spark, table, snap, oldFiles)
       val remaining = old.join(keys.select(keyCol), Seq(keyCol), "left_anti")
       val written = writeBuckets(spark, table, remaining, keyCol, buckets,
         touched, snap.version + 1)
@@ -129,7 +126,7 @@ object MergeTable {
           remaining.filter(pmod(col(keyCol), lit(buckets)) === k),
           k, snap.version + 1)))
       TxLog.commit(table, adds, oldFiles, expectedCurrent = snap.version,
-          primitive = primitive) match {
+          primitive = primitive, schema = remaining.schema) match {
         case Some(v) => result = Some((v, touched))
         case None => adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
       }
@@ -147,22 +144,21 @@ object MergeTable {
     *   - `insert`  — key absent at `fromV`, present at `toV` (post-image)
     *   - `update`  — key present in both with a different row (post-image)
     *   - `delete`  — key present at `fromV`, absent at `toV` (pre-image)
-    * Both versions must share a schema (columns are aligned by name;
-    * a diverged schema fails loudly rather than null-filling a diff). */
+    * Both versions must share a schema (columns are aligned by name, and
+    * each side is read with its own version's schema, so a diverged
+    * schema fails loudly rather than null-filling a diff). */
   def changes(spark: SparkSession, table: String, keyCol: String,
       fromV: Long, toV: Long): DataFrame = {
     val sa = TxLog.snapshot(table, Some(fromV))
     val sb = TxLog.snapshot(table, Some(toV))
     val removed = (sa.files.toSet -- sb.files.toSet).toSeq.sorted
     val added = (sb.files.toSet -- sa.files.toSet).toSeq.sorted
-    val empty = Streams.readMergeTable(spark, table, Some(toV)).limit(0)
-    def rd(fs: Seq[String]): DataFrame =
-      if (fs.isEmpty) empty
-      else spark.read.option("mergeSchema", "true")
-        .parquet(fs.map(f => s"$table/$f"): _*)
-    val cols = rd(added).columns.sorted
-    val old = rd(removed).select(cols.map(col): _*)
-    val neu = rd(added).select(cols.map(col): _*)
+    val empty = TxLog.read(spark, table, sb, sb.files).limit(0)
+    def rd(snap: TxLog.Snapshot, fs: Seq[String]): DataFrame =
+      if (fs.isEmpty) empty else TxLog.read(spark, table, snap, fs)
+    val cols = rd(sb, added).columns.sorted
+    val old = rd(sa, removed).select(cols.map(col): _*)
+    val neu = rd(sb, added).select(cols.map(col): _*)
     val oldKeys = old.select(col(keyCol)).distinct()
     val newKeys = neu.select(col(keyCol)).distinct()
     val post = neu.exceptAll(old) // inserts + update post-images
@@ -269,7 +265,7 @@ object MergeTable {
       val stats = adds.flatMap(f =>
         bucketStats.get(bucketOfFile(f)).map(f -> _)).toMap
       TxLog.commit(table, adds, Seq.empty, expectedCurrent = snap.version,
-          primitive = primitive, stats = stats) match {
+          primitive = primitive, stats = stats, schema = rows.schema) match {
         case Some(v) => result = Some(v)
         case None => adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
       }
@@ -412,11 +408,9 @@ object MergeTable {
       rangesOk && bloomOk
     }
     val base =
-      if (keep.nonEmpty)
-        spark.read.option("mergeSchema", "true")
-          .parquet(keep.map(f => s"$table/$f"): _*)
+      if (keep.nonEmpty) TxLog.read(spark, table, snap, keep)
       else // every file pruned: empty relation with the table's schema
-        Streams.readMergeTable(spark, table, asOf).limit(0)
+        TxLog.read(spark, table, snap, snap.files).limit(0)
     val ranged = ranges.foldLeft(base) { case (df, (c, lo, hi)) =>
       // try_cast: a malformed value is NULL → excluded by the range
       // predicate, matching the stats side's no-interval degradation
@@ -473,8 +467,7 @@ object MergeTable {
       else {
         val next = snap.version + 1
         val oldFiles = todo.flatMap(byBucket)
-        val df = spark.read.option("mergeSchema", "true")
-          .parquet(oldFiles.map(f => s"$table/$f"): _*)
+        val df = TxLog.read(spark, table, snap, oldFiles)
         val written = writeBuckets(spark, table, df, keyCol, buckets, todo, next)
         val adds = todo.map(k => written.getOrElse(k,
           // bucket whose live files hold zero rows: partitionBy made no
@@ -498,7 +491,7 @@ object MergeTable {
           }.toMap)
         }.toMap
         TxLog.commit(table, adds, oldFiles, expectedCurrent = snap.version,
-            primitive = primitive, stats = stats) match {
+            primitive = primitive, stats = stats, schema = df.schema) match {
           case Some(v) =>
             adds.foreach(f => foldSidecars(table, f, byBucket(bucketOfFile(f))))
             result = Some(Some((v, todo)))
@@ -552,8 +545,7 @@ object MergeTable {
       val byBucket = snap.files.groupBy(bucketOfFile)
       val todo = byBucket.keys.toSeq.sorted
       val next = snap.version + 1
-      val df = spark.read.option("mergeSchema", "true")
-        .parquet(snap.files.map(f => s"$table/$f"): _*)
+      val df = TxLog.read(spark, table, snap, snap.files)
       val zd = df
         .withColumn("__b", pmod(col(keyCol), lit(buckets)).cast("int"))
         .withColumn("__z", Zorder.zvalue(col(xCol), col(yCol), bits))
@@ -576,7 +568,7 @@ object MergeTable {
         if (written.isEmpty) Map.empty
         else {
           val zk = zStatsKey(xCol, yCol, bits)
-          val rows = spark.read.parquet(written.values.toSeq.map(f => s"$table/$f"): _*)
+          val rows = TxLog.read(spark, table, snap, written.values.toSeq)
             .withColumn("__z", Zorder.zvalue(col(xCol), col(yCol), bits))
             .groupBy(input_file_name().as("__f"))
             .agg(min("__z").as("zlo"), max("__z").as("zhi"),
@@ -602,7 +594,7 @@ object MergeTable {
           }.toMap
         }
       TxLog.commit(table, adds, snap.files, expectedCurrent = snap.version,
-          primitive = primitive, stats = stats) match {
+          primitive = primitive, stats = stats, schema = df.schema) match {
         case Some(v) =>
           // fold bloom sidecars per bucket (buckets are key-disjoint, so
           // a chunk's rows come only from its own bucket's files)
@@ -646,10 +638,8 @@ object MergeTable {
       zOk && colOk(xCol, xlo, xhi) && colOk(yCol, ylo, yhi)
     }
     val base =
-      if (keep.nonEmpty)
-        spark.read.option("mergeSchema", "true")
-          .parquet(keep.map(f => s"$table/$f"): _*)
-      else Streams.readMergeTable(spark, table, asOf).limit(0)
+      if (keep.nonEmpty) TxLog.read(spark, table, snap, keep)
+      else TxLog.read(spark, table, snap, snap.files).limit(0)
     base.filter(col(xCol).cast("long").between(xlo, xhi) &&
       col(yCol).cast("long").between(ylo, yhi))
   }
@@ -661,10 +651,10 @@ object MergeTable {
   def lookup(spark: SparkSession, table: String, keyCol: String, key: Long,
       buckets: Int): DataFrame = {
     val b = java.lang.Math.floorMod(key, buckets.toLong).toInt
-    val files = TxLog.snapshot(table).files.filter(bucketOfFile(_) == b)
+    val snap = TxLog.snapshot(table)
+    val files = snap.files.filter(bucketOfFile(_) == b)
     require(files.nonEmpty, s"no file for bucket $b in $table")
-    spark.read.parquet(files.map(f => s"$table/$f"): _*)
-      .filter(col(keyCol) === key)
+    TxLog.read(spark, table, snap, files).filter(col(keyCol) === key)
   }
 
   /** Fold a rewrite's constituent sidecars onto `newFile`: the new

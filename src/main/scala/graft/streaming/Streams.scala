@@ -682,16 +682,26 @@ object Streams {
     withLiveTuning(spark, Seq(eventsPath)) {
       val q = agg.writeStream.outputMode(OutputMode.Update())
         .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+          // the batch (a stateful aggregate) is evaluated ONCE, into the
+          // driver: one micro-batch's per-user rows, the side a join would
+          // broadcast anyway. Its keys then filter the state, which is
+          // only scanned, never shuffled; a null key is replaced like any
+          // other (`IN` never matches null, so it is tested apart)
+          lazy val rows = batch.collect()
           var committed = false
           var attempt = 0
           while (!committed) {
             val snap = TxLog.snapshot(tableDir)
             val merged =
               if (snap.files.nonEmpty) {
-                val state = spark.read.parquet(
-                  snap.files.map(f => s"$tableDir/$f"): _*)
-                state.join(batch.select("user_id"), Seq("user_id"), "left_anti")
-                  .unionByName(batch)
+                val keys = rows.map(_.getAs[Any]("user_id"))
+                val nullKey = keys.contains(null)
+                TxLog.read(spark, tableDir, snap, snap.files)
+                  .filter(coalesce(
+                    not(col("user_id").isInCollection(keys.filter(_ != null))),
+                    lit(!nullKey)))
+                  .unionByName(spark.createDataFrame(
+                    java.util.Arrays.asList(rows: _*), batch.schema))
               } else batch
             // stage the new part OUTSIDE the log, then move it in: until
             // the commit entry lands, the file is an invisible orphan
@@ -702,7 +712,8 @@ object Streams {
             val name = s"part-b$batchId-a$attempt-${part.getName.stripPrefix("part-")}"
             Files.move(part.toPath, Paths.get(tableDir, name))
             committed = TxLog.commit(tableDir, Seq(name), snap.files,
-              expectedCurrent = snap.version, primitive = primitive).isDefined
+              expectedCurrent = snap.version, primitive = primitive,
+              schema = merged.schema).isDefined
             if (!committed) { // conflict: orphan our part, re-read, retry
               Files.deleteIfExists(Paths.get(tableDir, name)): Unit
             }
@@ -1407,16 +1418,13 @@ object Streams {
     readMergeTable(spark, tableDir)
   }
 
-  /** Snapshot (optionally time-traveled) read of a TxLog MERGE table.
-    * mergeSchema: bucket files may carry evolved (additive) schemas —
-    * untouched buckets keep the old one, and rows there null-fill the
-    * new columns. */
+  /** Snapshot (optionally time-traveled) read of a TxLog MERGE table,
+    * with the schema the log recorded at that version ([[TxLog.read]]):
+    * files written before a column was added read it as null. */
   def readMergeTable(spark: SparkSession, tableDir: String,
       asOf: Option[Long] = None): DataFrame = {
     val snap = TxLog.snapshot(tableDir, asOf)
-    require(snap.files.nonEmpty, s"empty table $tableDir at version ${snap.version}")
-    spark.read.option("mergeSchema", "true")
-      .parquet(snap.files.map(f => s"$tableDir/$f"): _*)
+    TxLog.read(spark, tableDir, snap, snap.files)
   }
 
   /** FULL-OUTER stream-stream interval join: [[leftOuterIntervalJoin]]

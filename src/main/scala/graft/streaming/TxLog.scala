@@ -1,6 +1,8 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
@@ -28,9 +30,29 @@ trait CommitPrimitive {
 /** Minimal log-based transactional table format (the lake-scale MERGE
   * sink the upsert rows defer to): a table is a directory of immutable
   * parquet part files plus a `_txlog/` of versioned JSON commit entries
-  * `{version, adds[], removes[]}`. The CURRENT table state is the log
-  * replay — data files are never read unless a committed entry
-  * references them, which gives:
+  * `<v>.json`, each with the fields, in this order:
+  *
+  *   - `version`: the entry's version (consecutive from 0);
+  *   - `adds`, `removes`: data file names relative to the table root;
+  *   - `schema`: the TABLE's schema after this commit, as base64 of
+  *     `StructType.json` (absent from entries written before the field
+  *     existed);
+  *   - `stats` (optional): per-file, per-column (min, max) intervals;
+  *   - `ts`: the writer's commit wall-clock time.
+  *
+  * Schema rule: a commit's schema is the previous version's schema plus
+  * every column of the added files it does not have yet, appended in
+  * order of first appearance; columns are never dropped, so a file
+  * missing a column reads it as null. An added column whose type
+  * differs from the table's column of the same name fails the commit.
+  * An entry without `schema` (written before the field existed) puts the
+  * table on parquet footer inference (`mergeSchema`) for that version
+  * and every later one: the log cannot vouch for those files' columns. A
+  * checkpoint `<v>.checkpoint.json` holds `{version, files[], schema,
+  * stats}` of the replayed snapshot.
+  *
+  * The CURRENT table state is the log replay — data files are never
+  * read unless a committed entry references them, which gives:
   *
   *   - **atomic commits**: an entry is published through a
   *     [[CommitPrimitive]] (create-exclusive), so concurrent writers get
@@ -61,9 +83,26 @@ object TxLog {
     * as a z-interval can prune a file whose rows match — silent row
     * loss). A scan prunes only on intervals recorded FOR ITS column; a
     * file without a matching interval is always kept (safe degradation
-    * for pre-stats files, expired entries, and foreign columns). */
+    * for pre-stats files, expired entries, and foreign columns).
+    * `schema` is the table schema recorded at `version` (None for a log
+    * written without one: readers then infer it from the files). */
   final case class Snapshot(version: Long, files: Seq[String],
-      stats: Map[String, Map[String, (Long, Long)]] = Map.empty)
+      stats: Map[String, Map[String, (Long, Long)]] = Map.empty,
+      schema: Option[StructType] = None)
+
+  /** Read `files` (table-relative, from `snap` or staged by a writer of
+    * its table) with the schema the log recorded for `snap`, so building
+    * the DataFrame runs no Spark job; a snapshot without a recorded
+    * schema falls back to footer inference (`mergeSchema`, one job). */
+  def read(spark: SparkSession, table: String, snap: Snapshot,
+      files: Seq[String]): DataFrame = {
+    require(files.nonEmpty, s"no files to read in $table at version ${snap.version}")
+    val paths = files.map(f => s"$table/$f")
+    snap.schema match {
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    }
+  }
 
   /** POSIX-local [[CommitPrimitive]]: stage a temp file beside the
     * target, then HARD-LINK it in — link creation is atomic and fails if
@@ -131,9 +170,10 @@ object TxLog {
     require(asOf.isEmpty || upTo.nonEmpty || base.nonEmpty || all.isEmpty,
       s"no committed version <= ${asOf.get} in $table")
     val fromV = base.getOrElse(-1L)
-    var files = base.fold(Vector.empty[String])(v => readCheckpoint(table, v).toVector)
-    var stats = base.fold(Map.empty[String, Map[String, (Long, Long)]])(
-      v => readStats(table, s"$v.checkpoint.json"))
+    val cp = base.map(v => text(table, s"$v.checkpoint.json"))
+    var files = cp.fold(Vector.empty[String])(arr(_, "files").toVector)
+    var stats = cp.fold(Map.empty[String, Map[String, (Long, Long)]])(parseStats)
+    var newest = cp // each entry holds the whole schema: only the newest counts
     val replay = upTo.filter(_ > fromV)
     // versions are always committed consecutively, so the replayed
     // suffix must be exactly fromV+1, fromV+2, … — a hole means entries
@@ -142,11 +182,14 @@ object TxLog {
     require(replay == ((fromV + 1) to (fromV + replay.length)),
       s"log gap after checkpoint $fromV in $table: ${replay.mkString(",")}")
     replay.foreach { v =>
-      val (adds, removes) = readEntry(table, v)
-      files = files.filterNot(removes.toSet) ++ adds
-      stats = (stats -- removes) ++ readStats(table, s"$v.json")
+      val txt = text(table, s"$v.json")
+      val removes = arr(txt, "removes")
+      files = files.filterNot(removes.toSet) ++ arr(txt, "adds")
+      stats = (stats -- removes) ++ parseStats(txt)
+      newest = Some(txt)
     }
-    Snapshot(replay.lastOption.orElse(base).getOrElse(-1L), files, stats)
+    Snapshot(replay.lastOption.orElse(base).getOrElse(-1L), files, stats,
+      newest.flatMap(parseSchema))
   }
 
   /** Write a checkpoint of the CURRENT snapshot: one JSON file holding
@@ -167,7 +210,8 @@ object TxLog {
     }
     val entry =
       s"""{"version":${snap.version},"files":[${
-        snap.files.map("\"" + _ + "\"").mkString(",")}]${statsJson(snap.stats)}}"""
+        snap.files.map("\"" + _ + "\"").mkString(",")}]${
+        schemaJson(snap.schema)}${statsJson(snap.stats)}}"""
     val target = logDir(table).resolve(s"${snap.version}.checkpoint.json")
     if (primitive.createExclusive(target, entry.getBytes("UTF-8"))) Some(snap.version)
     else None
@@ -189,17 +233,58 @@ object TxLog {
       .mkString(""","stats":{""", ",", "}")
   }
 
+  /** `,"schema":"<base64 of StructType.json>"` — empty string on a
+    * schema-less log. Base64 holds no `"`, `,`, `]` or `}`, so the
+    * regex replay of the other fields stays exact. */
+  private def schemaJson(schema: Option[StructType]): String =
+    schema.fold("")(s => s""","schema":"${
+      java.util.Base64.getEncoder.encodeToString(s.json.getBytes("UTF-8"))}"""")
+
+  private def parseSchema(txt: String): Option[StructType] =
+    """"schema":"([A-Za-z0-9+/=]*)"""".r.findFirstMatchIn(txt).map { m =>
+      DataType.fromJson(new String(
+        java.util.Base64.getDecoder.decode(m.group(1)), "UTF-8")).asInstanceOf[StructType]
+    }
+
+  /** The schema recorded at version `v` (its entry, or its checkpoint
+    * once the entry has expired); None on a schema-less log. */
+  private def schemaAt(table: String, v: Long): Option[StructType] =
+    Seq(s"$v.json", s"$v.checkpoint.json")
+      .find(f => Files.exists(logDir(table).resolve(f)))
+      .flatMap(f => parseSchema(text(table, f)))
+
+  /** Parquet files hold every column as nullable, and a read returns
+    * them so: the log records the schema the files actually carry. */
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(asNullable(m.keyType), asNullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
+
+  /** The table's schema after a commit adding files of schema `added`:
+    * `prev` plus `added`'s new columns in order; a type clash fails. */
+  private def evolve(table: String, prev: StructType, added: StructType): StructType =
+    added.fields.foldLeft(prev) { (s, f) =>
+      s.fields.find(_.name == f.name) match {
+        case Some(g) =>
+          require(g.dataType == f.dataType,
+            s"column ${f.name} of type ${f.dataType.simpleString} clashes with " +
+              s"${g.dataType.simpleString} in $table")
+          s
+        case None => s.add(f)
+      }
+    }
+
   /** Parse the `stats` object of a log/checkpoint file (empty when the
     * field is absent — pre-stats entries stay readable). A key without
     * the `|` column separator (the pre-multi-column format) is DROPPED:
     * an interval whose column is unknown cannot be safely matched to
     * any scan, and a stat-less file is always read — safe degradation
     * in the only direction the contract allows. */
-  private def readStats(table: String,
-      fileName: String): Map[String, Map[String, (Long, Long)]] = {
-    val p = logDir(table).resolve(fileName)
-    if (!Files.exists(p)) return Map.empty
-    val txt = new String(Files.readAllBytes(p), "UTF-8")
+  private def parseStats(txt: String): Map[String, Map[String, (Long, Long)]] =
     """"stats":\{([^}]*)\}""".r.findFirstMatchIn(txt) match {
       case None => Map.empty
       case Some(m) =>
@@ -213,7 +298,6 @@ object TxLog {
           }.toSeq.groupBy(_._1)
           .map { case (f, rows) => f -> rows.map(r => r._2 -> r._3).toMap }
     }
-  }
 
   /** Retention: delete entry files AT OR BELOW the newest checkpoint.
     * Readers then start from the checkpoint; time travel below it is
@@ -229,38 +313,33 @@ object TxLog {
     }
   }
 
-  private def readCheckpoint(table: String, v: Long): Seq[String] = {
-    val txt = new String(
-      Files.readAllBytes(logDir(table).resolve(s"$v.checkpoint.json")), "UTF-8")
-    val m = """"files":\[([^\]]*)\]""".r.findFirstMatchIn(txt)
-    m.map(_.group(1)).filter(_.nonEmpty)
+  private def text(table: String, fileName: String): String =
+    new String(Files.readAllBytes(logDir(table).resolve(fileName)), "UTF-8")
+
+  /** One string-array field of a log/checkpoint file. The JSON is written
+    * by [[commit]] and [[writeCheckpoint]] with a fixed field order, no
+    * nesting, and file names VALIDATED to contain no `"` or `,`
+    * (enforced at commit time), so a regex-based parse is exact (no JSON
+    * library in the engine deps). */
+  private def arr(txt: String, field: String): Seq[String] =
+    s""""$field":\\[([^\\]]*)\\]""".r.findFirstMatchIn(txt)
+      .map(_.group(1)).filter(_.nonEmpty)
       .map(_.split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\"")))
       .getOrElse(Seq.empty)
-  }
-
-  /** Parse one committed entry → (adds, removes). The JSON is written by
-    * [[commit]] with a fixed field order, no nesting, and file names
-    * VALIDATED to contain no `"` or `,` (enforced at commit time), so a
-    * regex-based parse is exact (no JSON library in the engine deps). */
-  private[streaming] def readEntry(table: String, v: Long): (Seq[String], Seq[String]) = {
-    val txt = new String(Files.readAllBytes(logDir(table).resolve(s"$v.json")), "UTF-8")
-    def arr(field: String): Seq[String] = {
-      val m = s""""$field":\\[([^\\]]*)\\]""".r.findFirstMatchIn(txt)
-      m.map(_.group(1)).filter(_.nonEmpty)
-        .map(_.split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\"")))
-        .getOrElse(Seq.empty)
-    }
-    (arr("adds"), arr("removes"))
-  }
 
   /** Atomically commit `version` = current + 1 through `primitive`.
     * Returns the committed version, or None on a CONFLICT (someone else
     * committed that version first — re-read the snapshot and retry).
     * File names are relative to the table root; names containing `"` or
     * `,` would corrupt the regex replay, so they are rejected HERE, at
-    * write time, instead of corrupting every later read. */
+    * write time, instead of corrupting every later read. `schema` is the
+    * schema of the `adds` files (the written DataFrame's); the entry
+    * records the table schema it implies under the rule in the object
+    * doc, and a type clash fails here, before anything lands. On a log
+    * that already lacks schemas the entry records none either. */
   def commit(table: String, adds: Seq[String], removes: Seq[String],
-      expectedCurrent: Long, primitive: CommitPrimitive = LocalFs,
+      expectedCurrent: Long, schema: StructType,
+      primitive: CommitPrimitive = LocalFs,
       stats: Map[String, Map[String, (Long, Long)]] = Map.empty): Option[Long] = {
     (adds ++ removes).foreach { n =>
       require(!n.contains('"') && !n.contains(',') && !n.contains('|'),
@@ -272,12 +351,17 @@ object TxLog {
     }
     require(stats.keySet.subsetOf(adds.toSet),
       s"stats may only cover this commit's adds: ${stats.keySet -- adds.toSet}")
+    val added = asNullable(schema).asInstanceOf[StructType]
+    val tableSchema =
+      if (expectedCurrent < 0) Some(added)
+      else schemaAt(table, expectedCurrent).map(evolve(table, _, added))
     val next = expectedCurrent + 1
     val d = logDir(table)
     Files.createDirectories(d)
     val entry =
       s"""{"version":$next,"adds":[${adds.map("\"" + _ + "\"").mkString(",")}],""" +
-        s""""removes":[${removes.map("\"" + _ + "\"").mkString(",")}]${statsJson(stats)},""" +
+        s""""removes":[${removes.map("\"" + _ + "\"").mkString(",")}]""" +
+        s"""${schemaJson(tableSchema)}${statsJson(stats)},""" +
         s""""ts":${System.currentTimeMillis()}}"""
     if (primitive.createExclusive(d.resolve(s"$next.json"), entry.getBytes("UTF-8")))
       Some(next)
@@ -324,8 +408,8 @@ object TxLog {
     * travel. */
   def vacuum(table: String, minAgeMs: Long = defaultVacuumMinAgeMs): Seq[String] = {
     val referenced = (versions(table)
-      .flatMap { v => val (a, r) = readEntry(table, v); a ++ r } ++
-      checkpointVersions(table).flatMap(v => readCheckpoint(table, v))).toSet
+      .flatMap { v => val t = text(table, s"$v.json"); arr(t, "adds") ++ arr(t, "removes") } ++
+      checkpointVersions(table).flatMap(v => arr(text(table, s"$v.checkpoint.json"), "files"))).toSet
     val root = Paths.get(table)
     if (!Files.exists(root)) return Seq.empty
     val cutoff = System.currentTimeMillis() - minAgeMs

@@ -2,6 +2,7 @@ package graft
 
 import graft.streaming.{MergeTable, TxLog}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bucket-file pruning of MergeTable: a merge must rewrite ONLY the
@@ -67,6 +68,21 @@ class MergeTableSpec extends AnyFunSuite {
     assert(byK(1L) === Some("new") && byK(2L) === Some("new"))
     assert(byK(7L) === None, "untouched rows must null-fill the evolved column")
     assert(byK.size === 16)
+    // the log holds each version's schema: time travel reads the old one
+    assert(TxLog.snapshot(table).schema.map(_.fieldNames.toSeq) ===
+      Some(Seq("k", "v", "tag")))
+    assert(MergeTable.read(spark, table, Some(0L)).columns === Array("k", "v"))
+  }
+
+  test("a column type clash fails the commit, and the table is untouched") {
+    val table = GraftSession.tempDirCleanedOnExit("spec-mergetbl-clash").toString
+    MergeTable.load(spark, table, Seq((0L, 1.0)).toDF("k", "v"), "k", buckets = 2)
+    intercept[IllegalArgumentException] {
+      MergeTable.append(spark, table, Seq((1L, "x")).toDF("k", "v"), "k", buckets = 2)
+    }
+    assert(TxLog.versions(table) === Seq(0L))
+    assert(MergeTable.read(spark, table).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq === Seq((0L, 1.0)))
   }
 
   test("deleteKeys drops rows bucket-locally; emptied buckets keep a schema file") {
@@ -186,7 +202,7 @@ class MergeTableSpec extends AnyFunSuite {
     MergeTable.load(spark, t2, Seq((0L, 5L)).toDF("k", "t"), "k", buckets = 1)
     val s0 = TxLog.snapshot(t2)
     val baseF = s0.files.head
-    assert(TxLog.commit(t2, Seq(baseF), Seq(baseF), s0.version,
+    assert(TxLog.commit(t2, Seq(baseF), Seq(baseF), s0.version, s0.schema.get,
       stats = Map(baseF -> Map("t" -> (5L, 5L)))).isDefined)
     MergeTable.append(spark, t2, Seq((1L, 10L)).toDF("k", "t"),
       "k", buckets = 1, statsCols = Seq("t"))
@@ -206,6 +222,7 @@ class MergeTableSpec extends AnyFunSuite {
     val t3 = GraftSession.tempDirCleanedOnExit("spec-mergetbl-stats3").toString
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(t3))
     assert(TxLog.commit(t3, adds, Seq.empty, -1L,
+      StructType(Seq(StructField("k", LongType), StructField("t", LongType))),
       stats = Map("bx.parquet" -> Map("t" -> (3L, 9L)))) === Some(0L))
     assert(TxLog.snapshot(t3).stats === Map("bx.parquet" -> Map("t" -> (3L, 9L))))
     // checkpoint carries stats through replay truncation
@@ -284,7 +301,7 @@ class MergeTableSpec extends AnyFunSuite {
     // (the GDPR bucket-erase shape); its keys surface as deletes
     val snap = TxLog.snapshot(table)
     val b2 = snap.files.filter(_.startsWith("b2-"))
-    assert(TxLog.commit(table, Seq.empty, b2, snap.version).isDefined)
+    assert(TxLog.commit(table, Seq.empty, b2, snap.version, snap.schema.get).isDefined)
     val dels = MergeTable.changes(spark, table, "k", 3L, 4L).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).sorted.toSeq
     assert(dels === Seq((2L, 2.0, "delete"), (6L, 6.0, "delete"),

@@ -1,14 +1,21 @@
 package graft
 
 import graft.streaming.TxLog
+import org.apache.spark.scheduler.JobCounter
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.FileTime
 
 /** The TxLog commit protocol: atomicity, conflict detection, snapshot
   * isolation, time travel, crash-orphan invisibility + vacuum. */
 class TxLogSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
+
+  /** Schema of the placeholder part files the protocol cases commit. */
+  private val kv = StructType(Seq(StructField("k", LongType)))
 
   private def freshTable(tag: String): String = {
     val t = GraftSession.tempDirCleanedOnExit(s"txlog-$tag").toString
@@ -19,12 +26,36 @@ class TxLogSpec extends AnyFunSuite {
   private def writePart(table: String, name: String): Unit =
     Files.write(Paths.get(table, name), Array[Byte](80, 65, 82, 49)) // "PAR1"
 
+  /** Write `df` as ONE parquet file at `dir/name`. */
+  private def writeFile(df: DataFrame, dir: String, name: String): Unit = {
+    val stage = s"${GraftSession.tempDirCleanedOnExit("txlog-stage")}/out"
+    df.coalesce(1).write.parquet(stage)
+    val part = new java.io.File(stage).listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.createDirectories(Paths.get(dir))
+    Files.move(part.toPath, Paths.get(dir, name))
+  }
+
+  /** Land one events file per batch in `dir`, each batch a list of
+    * (user_id, value) events, with increasing modification times so a
+    * `maxFilesPerTrigger = 1` stream takes them in order. */
+  private def landEvents(dir: String, batches: Seq[Seq[(Option[Long], Double)]]): Unit = {
+    val schema = streaming.Streams.eventsFileSchema(TimestampType)
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    batches.zipWithIndex.foreach { case (evs, b) =>
+      val rows = evs.zipWithIndex.map { case ((u, v), i) =>
+        Row(b * 1000L + i, ts, u.map(Long.box).orNull, "view", v, "{}") }
+      val name = f"batch$b%03d.parquet"
+      writeFile(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema), dir, name)
+      Files.setLastModifiedTime(Paths.get(dir, name), FileTime.fromMillis(1000000L * (b + 1)))
+    }
+  }
+
   test("commits replay to the expected file set; removes hide files") {
     val t = freshTable("replay")
     writePart(t, "a.parquet"); writePart(t, "b.parquet"); writePart(t, "c.parquet")
-    assert(TxLog.commit(t, Seq("a.parquet"), Seq.empty, -1L) === Some(0L))
-    assert(TxLog.commit(t, Seq("b.parquet"), Seq.empty, 0L) === Some(1L))
-    assert(TxLog.commit(t, Seq("c.parquet"), Seq("a.parquet"), 1L) === Some(2L))
+    assert(TxLog.commit(t, Seq("a.parquet"), Seq.empty, -1L, kv) === Some(0L))
+    assert(TxLog.commit(t, Seq("b.parquet"), Seq.empty, 0L, kv) === Some(1L))
+    assert(TxLog.commit(t, Seq("c.parquet"), Seq("a.parquet"), 1L, kv) === Some(2L))
     assert(TxLog.snapshot(t).files.sorted === Seq("b.parquet", "c.parquet"))
     assert(TxLog.snapshot(t, Some(1L)).files.sorted === Seq("a.parquet", "b.parquet"))
     assert(TxLog.snapshot(t, Some(0L)).files === Seq("a.parquet"))
@@ -33,11 +64,11 @@ class TxLogSpec extends AnyFunSuite {
   test("timestamp time travel: versionAt resolves captured instants; pre-ts entries fall back to mtime") {
     val t = freshTable("tsat")
     writePart(t, "a.parquet"); writePart(t, "b.parquet")
-    assert(TxLog.commit(t, Seq("a.parquet"), Seq.empty, -1L) === Some(0L))
+    assert(TxLog.commit(t, Seq("a.parquet"), Seq.empty, -1L, kv) === Some(0L))
     Thread.sleep(15)
     val between = System.currentTimeMillis()
     Thread.sleep(15)
-    assert(TxLog.commit(t, Seq("b.parquet"), Seq("a.parquet"), 0L) === Some(1L))
+    assert(TxLog.commit(t, Seq("b.parquet"), Seq("a.parquet"), 0L, kv) === Some(1L))
     assert(TxLog.versionAt(t, between) === 0L)
     assert(TxLog.versionAt(t, System.currentTimeMillis()) === 1L)
     assert(TxLog.snapshot(t, Some(TxLog.versionAt(t, between))).files === Seq("a.parquet"))
@@ -53,12 +84,71 @@ class TxLogSpec extends AnyFunSuite {
     assert(TxLog.versionAt(t2, System.currentTimeMillis() + 1000) === 0L)
   }
 
+  test("the table schema rides the log: commit, time travel, checkpoint, clash") {
+    val t = freshTable("schema")
+    def fields(fs: (String, DataType)*) = StructType(fs.map { case (n, d) =>
+      StructField(n, d, nullable = false) })
+    def names(asOf: Option[Long] = None) =
+      TxLog.snapshot(t, asOf).schema.map(_.fieldNames.toSeq)
+    assert(TxLog.commit(t, Seq("a.parquet"), Seq.empty, -1L,
+      fields("k" -> LongType, "v" -> DoubleType)) === Some(0L))
+    assert(TxLog.commit(t, Seq("b.parquet"), Seq.empty, 0L,
+      fields("tag" -> StringType, "k" -> LongType)) === Some(1L))
+    assert(names(Some(0L)) === Some(Seq("k", "v")))
+    assert(names() === Some(Seq("k", "v", "tag")), "new columns append in order")
+    assert(TxLog.snapshot(t).schema.get.forall(_.nullable),
+      "parquet files hold every column as nullable")
+    // a removal keeps every column, and so does a metadata-only re-add
+    assert(TxLog.commit(t, Seq.empty, Seq("b.parquet"), 1L, kv) === Some(2L))
+    assert(TxLog.commit(t, Seq("a.parquet"), Seq("a.parquet"), 2L, kv) === Some(3L))
+    assert(names() === Some(Seq("k", "v", "tag")))
+    // a type clash fails the commit itself: nothing lands
+    intercept[IllegalArgumentException] {
+      TxLog.commit(t, Seq("c.parquet"), Seq.empty, 3L, fields("v" -> StringType))
+    }
+    assert(TxLog.versions(t) === (0L to 3L))
+    // the checkpoint carries the schema past entry retention, and a
+    // commit on top of it evolves from it
+    val full = TxLog.snapshot(t)
+    assert(TxLog.writeCheckpoint(t) === Some(3L))
+    TxLog.expireEntriesBelowCheckpoint(t)
+    assert(TxLog.snapshot(t) === full)
+    assert(TxLog.commit(t, Seq("d.parquet"), Seq.empty, 3L,
+      fields("w" -> IntegerType)) === Some(4L))
+    assert(names() === Some(Seq("k", "v", "tag", "w")))
+    assert(names(Some(3L)) === Some(Seq("k", "v", "tag")))
+  }
+
+  test("a log written without schemas reads through footer inference") {
+    import spark.implicits._
+    // two files with different columns, committed in the entry format
+    // that predates the schema field: the read must merge their schemas
+    val t = freshTable("no-schema")
+    writeFile(Seq((1L, 1.5)).toDF("k", "v"), t, "a.parquet")
+    writeFile(Seq((2L, "x")).toDF("k", "tag"), t, "b.parquet")
+    Files.createDirectories(Paths.get(t, "_txlog"))
+    Files.write(Paths.get(t, "_txlog", "0.json"),
+      """{"version":0,"adds":["a.parquet","b.parquet"],"removes":[]}""".getBytes("UTF-8"))
+    assert(TxLog.snapshot(t).schema === None)
+    val df = streaming.Streams.readMergeTable(spark, t)
+    assert(df.columns.sorted === Array("k", "tag", "v"))
+    assert(df.select("k", "v", "tag").orderBy("k").collect().toSeq ===
+      Seq(Row(1L, 1.5, null), Row(2L, null, "x")))
+    // a later commit cannot vouch for the older files' columns either:
+    // the table stays on inference
+    val c = Seq((3L, 2.5)).toDF("k", "v")
+    writeFile(c, t, "c.parquet")
+    assert(TxLog.commit(t, Seq("c.parquet"), Seq.empty, 0L, c.schema) === Some(1L))
+    assert(TxLog.snapshot(t).schema === None)
+    assert(streaming.Streams.readMergeTable(spark, t).count() === 3L)
+  }
+
   test("conflicting commit at the same version loses; no lost update") {
     val t = freshTable("conflict")
-    assert(TxLog.commit(t, Seq("x.parquet"), Seq.empty, -1L) === Some(0L))
+    assert(TxLog.commit(t, Seq("x.parquet"), Seq.empty, -1L, kv) === Some(0L))
     // two writers both read version 0, both try to commit version 1
-    assert(TxLog.commit(t, Seq("w1.parquet"), Seq("x.parquet"), 0L) === Some(1L))
-    assert(TxLog.commit(t, Seq("w2.parquet"), Seq("x.parquet"), 0L) === None,
+    assert(TxLog.commit(t, Seq("w1.parquet"), Seq("x.parquet"), 0L, kv) === Some(1L))
+    assert(TxLog.commit(t, Seq("w2.parquet"), Seq("x.parquet"), 0L, kv) === None,
       "second writer must get a conflict, not overwrite")
     assert(TxLog.snapshot(t).files === Seq("w1.parquet"))
   }
@@ -66,7 +156,7 @@ class TxLogSpec extends AnyFunSuite {
   test("crash orphan (data file, no log entry) is invisible and vacuumed") {
     val t = freshTable("orphan")
     writePart(t, "live.parquet")
-    assert(TxLog.commit(t, Seq("live.parquet"), Seq.empty, -1L) === Some(0L))
+    assert(TxLog.commit(t, Seq("live.parquet"), Seq.empty, -1L, kv) === Some(0L))
     writePart(t, "orphan.parquet") // writer died before its commit rename
     assert(TxLog.snapshot(t).files === Seq("live.parquet"),
       "readers must never see an uncommitted file")
@@ -74,7 +164,7 @@ class TxLogSpec extends AnyFunSuite {
     assert(!Files.exists(Paths.get(t, "orphan.parquet")))
     // removed-but-logged files survive vacuum: they back time travel
     writePart(t, "v1.parquet")
-    assert(TxLog.commit(t, Seq("v1.parquet"), Seq("live.parquet"), 0L) === Some(1L))
+    assert(TxLog.commit(t, Seq("v1.parquet"), Seq("live.parquet"), 0L, kv) === Some(1L))
     assert(TxLog.vacuum(t, minAgeMs = 0L) === Seq.empty)
     assert(Files.exists(Paths.get(t, "live.parquet")))
   }
@@ -82,7 +172,7 @@ class TxLogSpec extends AnyFunSuite {
   test("vacuum with the default age guard spares an in-flight writer's staged file") {
     val t = freshTable("vacuum-race")
     writePart(t, "committed.parquet")
-    assert(TxLog.commit(t, Seq("committed.parquet"), Seq.empty, -1L) === Some(0L))
+    assert(TxLog.commit(t, Seq("committed.parquet"), Seq.empty, -1L, kv) === Some(0L))
     // a concurrent writer has staged its next part but not committed yet:
     // unreferenced AND freshly written — exactly what an age-blind sweep
     // would delete out from under the about-to-land commit entry
@@ -91,7 +181,7 @@ class TxLogSpec extends AnyFunSuite {
       "default-age vacuum must not sweep a freshly staged file")
     assert(Files.exists(Paths.get(t, "inflight.parquet")))
     // ... so the in-flight commit still lands on intact data
-    assert(TxLog.commit(t, Seq("inflight.parquet"), Seq.empty, 0L) === Some(1L))
+    assert(TxLog.commit(t, Seq("inflight.parquet"), Seq.empty, 0L, kv) === Some(1L))
     assert(TxLog.snapshot(t).files.sorted ===
       Seq("committed.parquet", "inflight.parquet"))
   }
@@ -99,10 +189,10 @@ class TxLogSpec extends AnyFunSuite {
   test("commit rejects file names that would corrupt the JSON replay") {
     val t = freshTable("badname")
     intercept[IllegalArgumentException] {
-      TxLog.commit(t, Seq("a,b.parquet"), Seq.empty, -1L)
+      TxLog.commit(t, Seq("a,b.parquet"), Seq.empty, -1L, kv)
     }
     intercept[IllegalArgumentException] {
-      TxLog.commit(t, Seq("ok.parquet"), Seq("a\"b.parquet"), -1L)
+      TxLog.commit(t, Seq("ok.parquet"), Seq("a\"b.parquet"), -1L, kv)
     }
     assert(TxLog.versions(t) === Seq.empty, "no partial entry may land")
   }
@@ -174,7 +264,7 @@ class TxLogSpec extends AnyFunSuite {
     for (v <- 0 to 5) {
       writePart(t, s"f$v.parquet")
       val removes = if (v == 3) Seq("f0.parquet") else Seq.empty
-      assert(TxLog.commit(t, Seq(s"f$v.parquet"), removes, v - 1L) === Some(v.toLong))
+      assert(TxLog.commit(t, Seq(s"f$v.parquet"), removes, v - 1L, kv) === Some(v.toLong))
     }
     val full = TxLog.snapshot(t)
     assert(TxLog.writeCheckpoint(t) === Some(5L))
@@ -183,7 +273,7 @@ class TxLogSpec extends AnyFunSuite {
     assert(TxLog.snapshot(t) === full)
     // commits continue past the checkpoint and compose with it
     writePart(t, "f6.parquet")
-    assert(TxLog.commit(t, Seq("f6.parquet"), Seq("f1.parquet"), 5L) === Some(6L))
+    assert(TxLog.commit(t, Seq("f6.parquet"), Seq("f1.parquet"), 5L, kv) === Some(6L))
     val after = TxLog.snapshot(t)
     assert(after.version === 6L)
     assert(after.files.sorted ===
@@ -260,9 +350,9 @@ class TxLogSpec extends AnyFunSuite {
       }
     }
     val t = freshTable("condput")
-    assert(TxLog.commit(t, Seq("a.parquet"), Seq.empty, -1L, condPut) === Some(0L))
-    assert(TxLog.commit(t, Seq("b.parquet"), Seq("a.parquet"), 0L, condPut) === Some(1L))
-    assert(TxLog.commit(t, Seq("c.parquet"), Seq("a.parquet"), 0L, condPut) === None,
+    assert(TxLog.commit(t, Seq("a.parquet"), Seq.empty, -1L, kv, condPut) === Some(0L))
+    assert(TxLog.commit(t, Seq("b.parquet"), Seq("a.parquet"), 0L, kv, condPut) === Some(1L))
+    assert(TxLog.commit(t, Seq("c.parquet"), Seq("a.parquet"), 0L, kv, condPut) === None,
       "conflict must surface through the conditional put")
     assert(TxLog.snapshot(t).files === Seq("b.parquet"))
     // and the full MergeTable flow (load + merge + checkpoint) runs on it
@@ -299,6 +389,45 @@ class TxLogSpec extends AnyFunSuite {
       streaming.Streams.readMergeTable(spark, table, Some(v))
         .agg(sum("n_events")).head.getLong(0))
     assert(counts === counts.sorted, s"a later version lost events: $counts")
+  }
+
+  test("merge sink keeps one row per key across micro-batches, the null key included") {
+    val root = freshTable("null-key")
+    // two one-file batches, each with one null-user event: the second
+    // batch's cumulative null row must REPLACE the first, like any key's;
+    // a third batch without the null key must keep its row
+    landEvents(s"$root/in", Seq(
+      Seq((None, 1.0), (Some(7L), 2.0)),
+      Seq((None, 3.0), (Some(7L), 5.0)),
+      Seq((Some(8L), 1.0))))
+    val got = streaming.Streams.runMergeTotals(spark, s"$root/in", s"$root/table",
+        Map("maxFilesPerTrigger" -> "1"))
+      .select("user_id", "n_events", "total").orderBy("user_id").collect().toSeq
+    assert(got === Seq(Row(null, 2L, 4.0), Row(7L, 2L, 7.0), Row(8L, 1L, 1.0)))
+    assert(TxLog.versions(s"$root/table") === Seq(0L, 1L, 2L))
+  }
+
+  test("a merge-sink micro-batch runs at most 2 Spark jobs; building a read runs none") {
+    val sc = spark.sparkContext
+    val root = freshTable("jobs")
+    val table = s"$root/table"
+    def run(name: String, batches: Int): Int = {
+      landEvents(s"$root/$name", (0 until batches).map(b => Seq((Some(b.toLong), 1.0))))
+      val j0 = JobCounter.submitted(sc)
+      streaming.Streams.runMergeTotals(spark, s"$root/$name", table,
+        Map("maxFilesPerTrigger" -> "1"))
+      JobCounter.submitted(sc) - j0
+    }
+    run("seed", 1) // later calls merge into existing state
+    val one = run("one", 1)
+    val three = run("three", 3)
+    // both calls pay the same stream start: the difference is 2 batches
+    assert(three - one <= 4, s"1 batch ran $one jobs, 3 batches ran $three")
+    val j0 = JobCounter.submitted(sc)
+    val latest = streaming.Streams.readMergeTable(spark, table)
+    val first = streaming.Streams.readMergeTable(spark, table, Some(0L))
+    assert(JobCounter.submitted(sc) - j0 === 0, "building a read must not probe footers")
+    assert(latest.count() === 3L && first.count() === 1L)
   }
 
   test("merge sink end-to-end on an object-store primitive (no filesystem atomicity)") {
