@@ -34,9 +34,10 @@ object Bench {
       Tables(spark, sfDir, "orders").join(Tables(spark, sfDir, "customer"),
         col("o_custkey") === col("c_custkey")).count()
       // one tiny iterative loop: the graph queries' join→agg→checkpoint
-      // codegen paths cost ~4 s on first compile in a fresh JVM (LoopTune:
-      // first run ~7 s, warm runs 2.7-3.4 s ≈ the r2 slot) — without this
-      // the first q_graph_* row measures the JIT, not the engine
+      // codegen paths cost ~4 s on first compile in a fresh JVM (first run
+      // ~7 s, warm runs 2.7-3.4 s ≈ the r2 slot; BASELINE.md, "Where the
+      // residual inflation lives") — without this the first q_graph_* row
+      // measures the JIT, not the engine
       val warmE = spark.range(300)
         .select((col("id") % 20).as("src"), (col("id") % 17).as("dst"))
       graft.plans.Iterate(
@@ -52,7 +53,11 @@ object Bench {
       .map { case (name, fn) =>
       val j0 = jobCount.get()
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).foreach(_ => ()) } catch { case _: Throwable => () }
+      // a query that throws is recorded as `failed` and kept out of the
+      // total: its time-to-failure would otherwise read as a speedup
+      val status =
+        try { fn(spark, sfDir).foreach(_ => ()); "ok" }
+        catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); "failed" }
       val dt = (System.nanoTime() - t0) / 1e9
       val jobs = jobCount.get() - j0
       // per-query isolation: each reference job ran in its own JVM; drop
@@ -61,17 +66,21 @@ object Bench {
       // incremental per-query line: if the harness's capture window clips
       // the (large) final JSON line, every row is still recoverable from
       // these (VERDICT r4 item 8 — the r4 tail lost 33 rows)
-      println(f"""{"bench_q":"$name","sec":$dt%.3f,"jobs":$jobs}""")
-      (name, dt, jobs)
+      println(f"""{"bench_q":"$name","sec":$dt%.3f,"jobs":$jobs,"status":"$status"}""")
+      (name, dt, jobs, status)
     }
-    val qs = results.map { case (k, v, _) => "\"" + k + f"""":$v%.3f""" }
+    val qs = results.map { case (k, v, _, _) => "\"" + k + f"""":$v%.3f""" }
       .mkString("{", ",", "}")
     // per-query Spark-job counts beside the seconds (VERDICT r14 #8):
     // wall-clock on this host swings with stall windows, job counts are
     // deterministic — the stall-immune round-over-round perf signal
-    val js = results.map { case (k, _, j) => "\"" + k + s"""":$j""" }
+    val js = results.map { case (k, _, j, _) => "\"" + k + s"""":$j""" }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val ss = results.map { case (k, _, _, st) => "\"" + k + s"""":"$st"""" }
+      .mkString("{", ",", "}")
+    val ok = results.filter(_._4 == "ok")
+    val total = ok.map(_._2).sum
+    val nFailed = results.size - ok.size
     // queries map FIRST, scalars LAST: the driver captures a 2000-char
     // tail of stdout, so with 239 queries (~5 KB map) only the line's END
     // survives — ordering the headline fields last keeps them (and the
@@ -84,7 +93,7 @@ object Bench {
     // the driver's 2000-char stdout tail). Carries the jobs map too.
     if (only.isEmpty)
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LAST.json"),
-        (f"""{"queries":$qs,"jobs":$js,"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir"}""" + "\n")
+        (f"""{"queries":$qs,"jobs":$js,"status":$ss,"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir"}""" + "\n")
           .getBytes("UTF-8")): Unit
     println(line)
     // stop first, so nothing the session prints while stopping can land
@@ -94,6 +103,6 @@ object Bench {
     // stdout TAIL, and at 410 queries the big line above (~10 KB) cannot
     // survive it — two rounds of PERF came back empty (VERDICT r14 #2).
     // Additions-only: the big line and the per-row bench_q lines stay.
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","n":${results.size},"per_query_file":"BENCH_LAST.json"}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","n":${results.size},"n_failed":$nFailed,"per_query_file":"BENCH_LAST.json"}""")
   }
 }

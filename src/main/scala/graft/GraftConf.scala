@@ -51,7 +51,7 @@ object GraftConf {
     * `spark.sql.shuffle.partitions` (at 100 TB the cap always wins; at
     * gate scale the floor does, cutting per-micro-batch task-launch +
     * store-commit rounds measured 2x on the stateful floor probe —
-    * StreamKnobProbe, optimization r14). */
+    * OPTIMIZATION_r14.md §1). */
   def streamStateBytesPerPartition: Long =
     long("spark.graft.stream.stateBytesPerPartition", 64L << 20, 1L)
 

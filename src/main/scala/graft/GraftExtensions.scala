@@ -49,34 +49,49 @@ object GraftFunctions {
 
   /** Everything injected, one row per SQL-callable kernel. */
   val all: Seq[Description] = Seq(
-    d("vec_dot", "(array<numeric>, array<numeric>) -> double", classOf[VecDot]) {
+    d("vec_dot", "(array<numeric> a, array<numeric> b) -> double: sum of a[i] * b[i] " +
+        "over the COMMON PREFIX of a and b (a length mismatch is not an error); " +
+        "null elements count as 0; null if a or b is null", classOf[VecDot]) {
       case Seq(a, b) => VecDot(a, b)
     },
-    d("vec_cosine", "(array<numeric>, array<numeric>) -> double", classOf[VecDot]) {
+    d("vec_cosine", "(array<numeric> a, array<numeric> b) -> double: " +
+        "vec_dot(a, b) / (|a| * |b|), the dot over the COMMON PREFIX and each norm " +
+        "over its whole array; null elements count as 0; null if a or b is null; " +
+        "a zero-norm side is a division by zero: an error under ANSI mode, else null",
+        classOf[VecDot]) {
       // composed from the same codegen'd VecDot kernel as the Column API
       // (raw catalyst tree — a Column-DSL composition would splice an
       // unresolvable ColumnNode into the analyzer's expression walk)
       case Seq(a, b) =>
         Divide(VecDot(a, b), Multiply(Sqrt(VecDot(a, a)), Sqrt(VecDot(b, b))))
     },
-    d("minhash_sig", "(array<string> tokens, int ngram_width, int num_hashes) -> array<string>",
+    d("minhash_sig", "(array<string> tokens, int literal ngram_width >= 1, " +
+        "int literal num_hashes) -> array<string>: num_hashes hex minima over the " +
+        "space-joined ngram_width-grams; num_hashes a positive multiple of 4; null " +
+        "tokens are skipped; null when fewer than ngram_width tokens remain",
         classOf[MinHashSig]) {
       case Seq(t, w, k) =>
         MinHashSig(t, intLit("minhash_sig", "ngram_width", w),
           intLit("minhash_sig", "num_hashes", k))
     },
-    d("simhash_sig", "(array<string> tokens) -> string", classOf[SimHashSig]) {
+    d("simhash_sig", "(array<string> tokens) -> string: 64-char '0'/'1' SimHash; " +
+        "null tokens are skipped; null when no tokens remain", classOf[SimHashSig]) {
       case Seq(t) => SimHashSig(t)
     },
-    d("distinct_ngrams", "(array<string> tokens, int ngram_width) -> array<string>",
+    d("distinct_ngrams", "(array<string> tokens, int literal ngram_width >= 1) -> " +
+        "array<string>: distinct space-joined ngram_width-grams in first-occurrence " +
+        "order; null tokens are skipped; empty when fewer than ngram_width tokens remain",
         classOf[DistinctNGrams]) {
       case Seq(t, w) => DistinctNGrams(t, intLit("distinct_ngrams", "ngram_width", w))
     },
-    d("hamming_bits", "(string bits_a, string bits_b) -> bigint",
-        classOf[HammingBits]) {
+    d("hamming_bits", "(string bits_a, string bits_b) -> bigint: count of differing " +
+        "byte positions plus the length difference; meant for equal-length '0'/'1' " +
+        "strings; null if either is null", classOf[HammingBits]) {
       case Seq(a, b) => HammingBits(a, b)
     },
-    d("morton2", "(bigint x, bigint y, int literal bits) -> bigint",
+    d("morton2", "(bigint x, bigint y, int literal bits in [1, 31]) -> bigint: the " +
+        "low `bits` bits of x on the even and of y on the odd bit positions; higher " +
+        "bits are ignored; null if x or y is null",
         classOf[org.apache.spark.sql.catalyst.expressions.ShiftLeft]) {
       // the Z-order interleave behind MergeTable.optimizeZorder, as a
       // pure shift/mask tree (stays in whole-stage codegen); semantics

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
@@ -26,33 +24,6 @@ object Tables {
   def cpuPartitioned(spark: SparkSession, sfDir: String, name: String, key: String): DataFrame = {
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
     apply(spark, sfDir, name).repartition(n, org.apache.spark.sql.functions.col(key))
-  }
-
-  /** (name, size, mtime) digest of a table's file tree — the cache key
-    * for any in-JVM memo derived from the table's CONTENT: a dataset
-    * regenerated at the same path changes its mtimes/sizes and misses,
-    * where a raw-dir key would serve the stale entry (ADVICE r8).
-    * mtime at NANOSECOND granularity (Files.getLastModifiedTime) where
-    * the filesystem carries it: a same-size rewrite inside one
-    * millisecond still changes the key. A directory that vanishes or
-    * errors mid-walk (listFiles() == null — exactly the concurrent
-    * regeneration this key exists to detect) digests with a per-call
-    * nonce, forcing a MISS instead of an NPE or a stale hit (ADVICE r9). */
-  private val fpNonce = new java.util.concurrent.atomic.AtomicLong(1L)
-
-  def fingerprint(sfDir: String, name: String): String = {
-    def mtimeNanos(f: java.io.File): Long =
-      try Files.getLastModifiedTime(f.toPath).to(java.util.concurrent.TimeUnit.NANOSECONDS)
-      catch { case _: java.io.IOException => f.lastModified() }
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory) {
-        val kids = f.listFiles()
-        if (kids == null) fpNonce.getAndIncrement() * 31 + f.getName.hashCode
-        else kids.sortBy(_.getName).map(walk)
-          .foldLeft(f.getName.hashCode.toLong)(_ * 31 + _)
-      } else f.getName.hashCode.toLong * 31 + f.length() * 31 + mtimeNanos(f)
-    val root = new java.io.File(sfDir, s"$name.parquet")
-    s"$sfDir#$name#${if (root.exists()) walk(root) else 0L}"
   }
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {

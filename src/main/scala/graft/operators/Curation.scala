@@ -426,19 +426,15 @@ object Curation extends QueryModule {
         (log(lit(1.0) + col("n_chars")) / 10.0).as("x2"),
         when(col("lang") === "en", 1.0).otherwise(0.0).as("y"))
 
-  /** Trained logistic weights, memoized per data dir (the pcaCache
-    * pattern, review r5): the model/AUC/calibration rows all depend on
-    * the same 3-step GD train — one session now pays the cache + count +
-    * three gradient passes ONCE. Only 3 doubles are held on the driver.
-    */
-  private val thetaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Double, Double, Double)]()
-
+  /** Trained logistic weights: the model/AUC/calibration rows all
+    * depend on the same 3-step GD train — one session pays the cache +
+    * count + three gradient passes ONCE. Only 3 doubles are held on the
+    * driver. */
   private def trainedThetas(s: SparkSession, d: String): (Double, Double, Double) =
-    thetaCache.computeIfAbsent(d, dir => {
+    graft.Memo(s, "thetas", d, "documents") {
       def r9(v: Double): Double =
         BigDecimal(v).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val data = qualityFeatures(s, dir).cache()
+      val data = qualityFeatures(s, d).cache()
       val m = data.count().toDouble
       var (th0, th1, th2) = (0.0, 0.0, 0.0)
       for (_ <- 1 to 3) {
@@ -453,7 +449,7 @@ object Curation extends QueryModule {
       }
       data.unpersist()
       (th0, th1, th2)
-    })
+    }
 
   private lazy val qualityModelCtes: String = {
     val feat = s"""d AS (SELECT doc_id,

@@ -1576,25 +1576,6 @@ object Dedup extends QueryModule {
     out
   }
 
-  /** Memoized PPJoin result per data dir (the thetaCache/pcaCache
-    * pattern): the result set is O(dup pairs) — tiny at the declared
-    * thresholds — so it is collected once and replayed as a local
-    * relation for the two downstream consumers, saving two full
-    * re-executions of the exact-join pipeline per session. Corpus-scale
-    * callers with large outputs should use the streaming-friendly
-    * un-memoized pipeline directly. */
-  private val ppjoinCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Long, Double)]]()
-
-  /** Cache holds at most this many pairs; beyond it the memoization is
-    * skipped and callers pay the full pipeline per query — bounded driver
-    * memory beats a saved re-execution. */
-  private val ppjoinCacheCap = 200000
-
-  /** Content fingerprint of the documents table under `d`: every parquet
-    * part's (path, size, mtime). Regenerating the dataset in-session
-    * (tests, reruns) changes the key, so the cache can never serve stale
-    * pairs for a path whose bytes changed. */
   /** Maximal duplicated token spans over a (doc_id, text) relation — the
     * q_dedup_substring body (see that row's doc comment for the scale
     * argument). Emits (doc_id, start_tok, end_tok, span_toks), token
@@ -1629,47 +1610,14 @@ object Dedup extends QueryModule {
     out
   }
 
-  /** Stage-by-stage `explain("formatted")` of the PPJoin pipeline for
-    * the plan-dump tool ([[graft.examples.PpjoinPlanDump]]): the row's
-    * own explain is a localCheckpoint root, so plan evidence lives here. */
-  private[graft] def ppjoinPlanStages(s: SparkSession, d: String): Unit = {
-    println("==== stage: gram kernel (documents -> (doc_id, gram)) ====")
-    val gLazy = docs(s, d).select(col("doc_id"),
-      explode(TextHash.ngramHashes(toks(col("text")), 3)).as("gram"))
-    gLazy.explain("formatted")
-    val g = gLazy.localCheckpoint()
-    val docGrams = ppjoinDocGrams(g)
-    println("==== stage: candidates (prefix + positional filter) ====")
-    val candLazy = ppjoinCandidatesFromDocs(docGrams)
-    candLazy.explain("formatted")
-    val cand = candLazy.localCheckpoint()
-    println(s"candidates rows: ${cand.count()}")
-    println("==== stage: verify pipeline ====")
-    ppjoinVerifyFromDocs(docGrams, cand).explain("formatted")
-    Seq(g, docGrams, cand).foreach(graft.plans.Iterate.release)
-  }
-
-  private def docsFingerprint(d: String): String =
-    Tables.fingerprint(d, "documents")
-
-  private[operators] def ppjoinResult(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val key = docsFingerprint(d)
-    val cached = ppjoinCache.get(key)
-    if (cached != null) cached.toDF("doc_a", "doc_b", "jac").orderBy("doc_a", "doc_b")
-    else {
-      // computePpjoin localCheckpoints its result, so the cap probe and
-      // (on overflow) the direct return replay materialized partitions,
-      // not the whole pipeline
-      val df = computePpjoin(s, d)
-      val head = df.head(ppjoinCacheCap + 1)
-      if (head.length <= ppjoinCacheCap) {
-        val rows = head.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-        ppjoinCache.put(key, rows)
-        rows.toDF("doc_a", "doc_b", "jac").orderBy("doc_a", "doc_b")
-      } else df // un-memoized: result too large to pin on the driver
-    }
-  }
+  /** The PPJoin result, memoized: the result set is O(dup pairs) — tiny
+    * at the declared thresholds — so it is collected once and replayed
+    * for the two downstream consumers, saving two full re-executions of
+    * the exact-join pipeline per session. Corpus-scale callers with
+    * large outputs should use the un-memoized pipeline directly. */
+  private[operators] def ppjoinResult(s: SparkSession, d: String): DataFrame =
+    graft.Memo.frame(s, "ppjoin", d, "documents")(computePpjoin(s, d))
+      .orderBy("doc_a", "doc_b")
 
   /** brute-force similarity-join truth as a CTE chain ending in
     * `tpairs(doc_a, doc_b, jac)` — shared by the ppjoin row's oracle and

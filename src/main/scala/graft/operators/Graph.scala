@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Tables}
+import graft.{Memo, Q, QueryModule, Tables}
 import graft.plans.{Iterate, Pregel}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -506,34 +506,13 @@ object Graph extends QueryModule {
     out
   }
 
-  /** Uninterrupted declarative PageRank, memoized per (corpus
-    * fingerprint, iters) — the thetaCache/ppjoinCache pattern:
-    * `_parity` and `_resume` both compare against the SAME run, which
-    * used to execute twice per bench suite (~10 s at sf0.1, VERDICT r7
-    * item 5). Keyed by Tables.fingerprint so a regenerated dataset at
-    * the same path misses instead of replaying stale ranks, and capped:
-    * a graph too big to pin on the driver is returned DISTRIBUTED
-    * (localCheckpointed — consumers join it twice) instead of
-    * round-tripping every row through driver memory for nothing
-    * (ADVICE r8). The rounded ranks make the replayed relation
-    * bit-identical to a rerun. */
-  private val prCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Double)]]()
-  private val prCacheCap = 200000
-
-  private def pagerankShared(s: SparkSession, d: String, iters: Int): DataFrame = {
-    import s.implicits._
-    val key = s"${Tables.fingerprint(d, "orders")}#$iters"
-    val cached = prCache.get(key)
-    if (cached != null) return cached.toDF("v", "rank")
-    val pr = pagerank(s, d, iters).select("v", "rank").localCheckpoint()
-    val head = pr.head(prCacheCap + 1)
-    if (head.length <= prCacheCap) {
-      val rows = head.map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      prCache.put(key, rows)
-      rows.toDF("v", "rank")
-    } else pr // too large to pin: stay distributed
-  }
+  /** Uninterrupted declarative PageRank: `_parity` and `_resume` both
+    * compare against the SAME run, which used to execute twice per bench
+    * suite (~10 s at sf0.1, VERDICT r7 item 5). The rounded ranks make
+    * the replayed relation bit-identical to a rerun. */
+  private def pagerankShared(s: SparkSession, d: String, iters: Int): DataFrame =
+    Memo.frame(s, s"pagerank#$iters", d, "orders")(
+      pagerank(s, d, iters).select("v", "rank").localCheckpoint())
 
   /** ENGINE-PARITY check: the same PageRank (fixed supersteps, damping
     * 0.85) run on BOTH execution paths — the declarative Iterate loop
@@ -940,31 +919,12 @@ object Graph extends QueryModule {
     betweennessLevels(e, levels, scale, outCol)
   }
 
-  /** The all-sources BFS relation over the derived orders graph,
-    * memoized per corpus fingerprint (the pagerankShared pattern):
-    * exact betweenness, eccentricity and harmonic centrality are three
-    * VIEWS of this one (s, v, d, sigma) relation — it used to be
-    * recomputed three times per suite (~8 s at sf0.1). O(V²) = 40k
-    * rows at N = 200, far below the cap; a graph too big to pin is
-    * returned distributed, uncached. */
-  private val bfsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Long, Int, Long)]]()
-  private val bfsCacheCap = 500000
-
-  private def bfsSigmaShared(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val key = Tables.fingerprint(d, "orders")
-    val cached = bfsCache.get(key)
-    if (cached != null) return cached.toDF("s", "v", "d", "sigma")
-    val (reached, _) = bfsSigma(edges(s, d).select("src", "dst"))
-    val head = reached.head(bfsCacheCap + 1)
-    if (head.length <= bfsCacheCap) {
-      val rows = head.map(r =>
-        (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSeq
-      bfsCache.put(key, rows)
-      rows.toDF("s", "v", "d", "sigma")
-    } else reached // too large to pin: stay distributed
-  }
+  /** The all-sources BFS relation over the derived orders graph: exact
+    * betweenness, eccentricity and harmonic centrality are three VIEWS
+    * of this one (s, v, d, sigma) relation — it used to be recomputed
+    * three times per suite (~8 s at sf0.1). O(V²) = 40k rows at N = 200. */
+  private def bfsSigmaShared(s: SparkSession, d: String): DataFrame =
+    Memo.frame(s, "bfsSigma", d, "orders")(bfsSigma(edges(s, d).select("src", "dst"))._1)
 
   /** A frontier level is exactly the reached rows at distance l (every
     * row enters `reached` at its own BFS level), so a memoized reached
@@ -1190,23 +1150,14 @@ object Graph extends QueryModule {
     (fp.out.select("v", "k", "mask"), fp.iters, nf.toSeq, curve)
   }
 
-  /** converged ANF registers + per-round curve over the derived orders
-    * graph, memoized per corpus fingerprint (the bfsSigmaShared pattern
-    * — five declared rows read this one relation). V·K = 1,600 register
-    * rows and V·(rounds+1) curve rows at gate scale. */
-  private val anfCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(Long, Int, Long)], Int, Seq[Double], Seq[(Long, Double, Long)])]()
-  private val anfCacheCap = 500000
-
   /** Warm register state covering e's FULL vertex set: the existing
     * masks plus fresh init rows for vertices they don't cover — the
     * entry point both incremental (q_graph_anf_incremental) and
-    * STREAMING (q_stream_live_anf) summary maintenance share. */
-  /** Carry-over masks plus fresh registers for vertices the sketch has
-    * not seen. `k` MUST match the width the carried masks were built at —
-    * a production sketch maintained at K=64 that warm-started new
-    * vertices at the default 8 would silently mix register widths and
-    * skew every downstream estimate, so the width is a parameter here
+    * STREAMING (q_stream_live_anf) summary maintenance share. `k` MUST
+    * match the width the carried masks were built at — a production
+    * sketch maintained at K=64 that warm-started new vertices at the
+    * default 8 would silently mix register widths and skew every
+    * downstream estimate, so the width is a parameter here
     * (same knob as anfInit/anfSketch, VERDICT r10 #5). */
   private[graft] def anfWarm(masks: DataFrame, e: DataFrame,
       k: Int = anfK): DataFrame =
@@ -1466,24 +1417,16 @@ object Graph extends QueryModule {
     (fin, rounds, stats)
   }
 
+  /** converged ANF registers + per-round curve over the derived orders
+    * graph — five declared rows read this one relation. V·K = 1,600
+    * register rows and V·(rounds+1) curve rows at gate scale. */
   private[graft] def anfShared(s: SparkSession, d: String)
       : (DataFrame, Int, Seq[Double], DataFrame) = {
-    import s.implicits._
-    val key = Tables.fingerprint(d, "orders")
-    val cached = anfCache.get(key)
-    if (cached != null)
-      return (cached._1.toDF("v", "k", "mask"), cached._2, cached._3,
-        cached._4.toDF("v", "reach_est", "r"))
-    val (m, rounds, nf, curve) = anfSketch(edges(s, d).select("src", "dst"))
-    val head = m.head(anfCacheCap + 1)
-    val curveHead = curve.head(anfCacheCap + 1)
-    if (head.length <= anfCacheCap && curveHead.length <= anfCacheCap) {
-      val rows = head.map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-      val cRows = curveHead.map(r =>
-        (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
-      anfCache.put(key, (rows, rounds, nf, cRows))
-      (rows.toDF("v", "k", "mask"), rounds, nf, cRows.toDF("v", "reach_est", "r"))
-    } else (m, rounds, nf, curve) // too large to pin: stay distributed
+    val (Seq(m, curve), (rounds, nf)) = Memo.frames(s, "anf", d, "orders") {
+      val (m, rounds, nf, curve) = anfSketch(edges(s, d).select("src", "dst"))
+      (Seq(m, curve), (rounds, nf))
+    }
+    (m, rounds, nf, curve)
   }
 
   /** first two CTEs of [[bfsSigmaSql]] (simple directed edge relation +
@@ -3048,28 +2991,15 @@ object Graph extends QueryModule {
   // Unrolling too little fails loudly as a rounds-column mismatch.
   private def trussOracleUnroll: Int = 8
 
-  /** per-edge triangle support within the CURRENT oriented (a<b) edge
-    * set: enumerate triangles (a<b<c triple join), explode each onto its
-    * three edges, count per edge. */
-  /** LPA fixpoint over the derived orders graph, memoized per corpus
-    * fingerprint — the labels are consumed by BOTH q_graph_lpa and
-    * q_graph_modularity, which used to run the whole fixpoint twice
-    * per suite. O(V) rows, capped like the other memos. */
-  private val lpaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[(Long, Long)], Int)]()
-
+  /** LPA fixpoint over the derived orders graph — the labels are
+    * consumed by BOTH q_graph_lpa and q_graph_modularity, which used to
+    * run the whole fixpoint twice per suite. */
   private def lpaShared(s: SparkSession, d: String): (DataFrame, Int) = {
-    import s.implicits._
-    val key = Tables.fingerprint(d, "orders")
-    val cached = lpaCache.get(key)
-    if (cached != null) return (cached._1.toDF("v", "lbl"), cached._2)
-    val (out, iters) = lpaFixpoint(undirected(edges(s, d)))
-    val head = out.head(prCacheCap + 1)
-    if (head.length <= prCacheCap) {
-      val rows = head.map(r => (r.getLong(0), r.getLong(1))).toSeq
-      lpaCache.put(key, (rows, iters))
-      (rows.toDF("v", "lbl"), iters)
-    } else (out, iters)
+    val (Seq(lbl), iters) = Memo.frames(s, "lpa", d, "orders") {
+      val (out, iters) = lpaFixpoint(undirected(edges(s, d)))
+      (Seq(out), iters)
+    }
+    (lbl, iters)
   }
 
   /** Synchronous label propagation to the DISCOVERED fixpoint
@@ -3153,6 +3083,9 @@ object Graph extends QueryModule {
     (fp.out, fp.iters)
   }
 
+  /** per-edge triangle support within the CURRENT oriented (a<b) edge
+    * set: enumerate triangles (a<b<c triple join), explode each onto its
+    * three edges, count per edge. */
   private def trussSupport(ed: DataFrame): DataFrame = {
     val tri = ed.as("e1").join(ed.as("e2"), col("e1.b") === col("e2.a"))
       .select(col("e1.a").as("wa"), col("e1.b").as("wb"), col("e2.b").as("wc"))

@@ -1833,14 +1833,11 @@ object ML extends QueryModule {
 
   /** shared by q_ml_pca / q_ml_pca_project: one distributed covariance
     * pass, then the driver-local power iteration; returns the
-    * sign-canonicalized component and its eigenvalue. Memoized per data
-    * dir so materializing both PCA rows in one session runs the O(n)
-    * covariance pass once (the ivfIndexDir sharing pattern). */
-  private val pcaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Double], Double)]()
-
+    * sign-canonicalized component and its eigenvalue. Memoized so
+    * materializing both PCA rows in one session runs the O(n)
+    * covariance pass once. */
   private def pcaComponent(s: SparkSession, d: String): (Array[Double], Double) =
-    pcaCache.computeIfAbsent(d, dir => computePcaComponent(s, dir))
+    graft.Memo(s, "pca", d, "embeddings")(computePcaComponent(s, d))
 
   private def computePcaComponent(s: SparkSession, d: String): (Array[Double], Double) = {
     val dim = 64

@@ -338,26 +338,26 @@ object Similarity extends QueryModule {
   private def pqCodesAndLut(s: SparkSession, d: String): (DataFrame, DataFrame) =
     pqCodesAndLutVs(s, d, pqSeedCb(s, d))
 
+  /** Fingerprint ([[graft.Memo.fingerprint]]) of the corpus the on-disk
+    * PQ index currently serves: ONE slot for the one index dir per JVM (a
+    * keyed memo would wrongly hit corpus A after builds of A, B, A), so a
+    * dataset regenerated at the same path rebuilds instead of serving a
+    * stale index. An APPEND clears it, so the next build call
+    * reconstructs a clean index (PqPersistSpec's append test relies on
+    * rebuild clearing appended vectors). */
+  private val pqBuiltFor =
+    new java.util.concurrent.atomic.AtomicReference[Option[String]](None)
+
   /** BUILD phase of the persisted PQ index (VERDICT r7 item 3 — the
     * build-once/query-many deployment the compute-only PQ rows lacked):
     * every candidate's pqM one-byte codes, tagged with its IVF cell and
     * written PARTITIONED BY CELL, plus the codebook as a small side
     * relation. At corpus scale the index is 16× smaller than the raw
-    * vectors and encoding runs ONCE, not per query batch. */
-  /** Memo: CONTENT fingerprint (Tables.fingerprint — path, sizes,
-    * mtimes) of the corpus the on-disk PQ index currently serves, so a
-    * dataset regenerated at the same path rebuilds instead of serving
-    * a stale index (ADVICE r8). Build is idempotent per corpus per
-    * JVM — exactly the build-once contract the rows gate — and an
-    * APPEND invalidates it, so the next build call reconstructs a
-    * clean index (PqPersistSpec's append test relies on rebuild
-    * clearing appended vectors). */
-  private val pqBuiltFor =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
+    * vectors and encoding runs ONCE per corpus per JVM, not per query
+    * batch. */
   private[graft] def pqPersistBuild(s: SparkSession, d: String): Unit = {
-    val fp = Tables.fingerprint(d, "embeddings")
-    if (pqBuiltFor.get == fp) return
+    val fp = graft.Memo.fingerprint(s, d, Seq("embeddings"))
+    if (fp.nonEmpty && pqBuiltFor.get == fp) return
     val emb = Tables(s, d, "embeddings")
     val cen = emb.filter(col("vec_id") < 4)
       .select(col("vec_id").as("c_id"), col("embedding").as("cemb"))
@@ -384,7 +384,7 @@ object Similarity extends QueryModule {
     * and rebuild only on drift). */
   private[graft] def pqPersistAppend(s: SparkSession, d: String,
       newEmb: DataFrame): Unit = {
-    pqBuiltFor.set(null) // the index diverges from a clean build
+    pqBuiltFor.set(None) // the index diverges from a clean build
     val emb = Tables(s, d, "embeddings")
     val cen = emb.filter(col("vec_id") < 4)
       .select(col("vec_id").as("c_id"), col("embedding").as("cemb"))
@@ -2062,42 +2062,21 @@ object Similarity extends QueryModule {
               WHERE t.dim < 64 GROUP BY t.dim ORDER BY dim"""))
   )
 
+  /** Seed-quantizer DBSCAN roles, memoized (optimization r15): THREE
+    * declared rows consume this exact clustering — q_ml_dbscan itself
+    * and the sizes/eval readouts, which compose the declared row and
+    * previously re-ran the whole ~70-job clustering each. */
+  private def dbscanSeedShared(s: SparkSession, d: String): DataFrame =
+    graft.Memo.frame(s, "dbscanSeed", d, "embeddings") {
+      val cen = Tables(s, d, "embeddings").filter(col("vec_id") < 4)
+        .select(col("vec_id").as("c_id"), col("embedding").as("cemb"))
+      dbscanRun(s, d, cen)
+    }
+
   /** Cell-blocked DBSCAN dataflow shared by q_ml_dbscan (seed centroids)
     * and q_ml_dbscan_trained (trained centroids): ε-edges are exact
     * cosine ≥ dbscanEps computed only WITHIN a cell of `cen`'s argmax
     * assignment, roles/labels per the declared row's contract. */
-  /** Memoized seed-quantizer DBSCAN roles per corpus fingerprint (the
-    * ppjoinCache/lpaShared pattern, optimization r15): THREE declared
-    * rows consume this exact clustering — q_ml_dbscan itself and the
-    * sizes/eval readouts, which compose the declared row and previously
-    * re-ran the whole ~70-job clustering each. The O(vectors) role
-    * relation is collected once (capped — beyond the cap callers pay
-    * the full pipeline, bounded driver memory beats a saved
-    * re-execution) and replayed as a local relation. Keyed by the
-    * embeddings parquet's content fingerprint, so a regenerated dataset
-    * can never serve stale roles. */
-  private val dbscanCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, String, Option[Long])]]()
-  private val dbscanCacheCap = 200000
-
-  private def dbscanSeedShared(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val key = Tables.fingerprint(d, "embeddings")
-    val cached = dbscanCache.get(key)
-    if (cached != null) return cached.toDF("vec_id", "role", "cluster")
-    val emb = Tables(s, d, "embeddings")
-    val cen = emb.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("c_id"), col("embedding").as("cemb"))
-    val out = dbscanRun(s, d, cen)
-    val head = out.head(dbscanCacheCap + 1)
-    if (head.length <= dbscanCacheCap) {
-      val rows = head.map(r => (r.getLong(0), r.getString(1),
-        if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSeq
-      dbscanCache.put(key, rows)
-      rows.toDF("vec_id", "role", "cluster")
-    } else out
-  }
-
   private def dbscanRun(s: SparkSession, d: String,
       cen: DataFrame): DataFrame = {
         val emb = Tables(s, d, "embeddings")

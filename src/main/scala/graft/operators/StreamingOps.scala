@@ -69,134 +69,122 @@ object StreamingOps extends QueryModule {
     *     state; b3's own (+30 h) likewise.
     * maxFilesPerTrigger=1 + staged mtimes make the batch order
     * deterministic. Returns the flat directory to stream — staged ONCE
-    * per data dir and shared by the left- and full-outer rows (the
+    * per dataset and shared by the left- and full-outer rows (the
     * replay is read-only input; re-staging it per row wasted ~3 s). */
-  private val stagedReplayCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedOuterReplay(s: SparkSession, d: String): String =
-    stagedReplayCache.computeIfAbsent(d, dir => stageOuterReplay(s, dir))
+    graft.Memo(s, "outerReplay", d, "events") {
+      import s.implicits._
+      val ev = Tables(s, d, "events")
+      val maxTs = ev.agg(max(col("ts"))).head.getAs[java.time.LocalDateTime](0)
+      def sentinels(rows: (Long, Long, Long, String)*): DataFrame =
+        rows.map { case (id, plusH, user, typ) => (id, maxTs.plusHours(plusH), user, typ, 0.0, "") }
+          .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      stageOrderedParts("graft-outer", "graft-outer-flat", Seq(ev,
+        sentinels((-1L, 20L, 10000001L, "click"), (-2L, 20L, 10000002L, "purchase")),
+        sentinels((-3L, 30L, 10000002L, "purchase"))))
+    }
 
-  /** events staged ONCE per data dir as three range-split parquet files —
+  /** events staged ONCE per dataset as three range-split parquet files —
     * the read-only replay input shared by the upsert/transformWithState
     * live rows (r6 verdict #5: each row re-staged its own copy, ~3
     * redundant write rounds per suite; state dirs stay per-row, only the
     * immutable input is shared). */
-  private val rangeSplitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedRangeSplit(s: SparkSession, d: String): String =
-    rangeSplitCache.computeIfAbsent(d, dir => {
+    graft.Memo(s, "rangeSplit", d, "events") {
       val stage = graft.GraftSession.tempDirCleanedOnExit("graft-rsplit-in").toString
-      Tables(s, dir, "events")
+      Tables(s, d, "events")
         .repartitionByRange(3, col("event_id"))
         .write.parquet(s"$stage/in")
       s"$stage/in"
-    })
+    }
 
-  /** events staged ONCE per data dir as the DETERMINISTIC event_id % 3
+  /** events staged ONCE per dataset as the DETERMINISTIC event_id % 3
     * split with ascending mtimes (batch k = residue k under
     * maxFilesPerTrigger=1) — shared by the history/merge/changelog rows
     * whose oracles aggregate over `event_id % 3 <= version`. */
-  private val modSplitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedModSplit(s: SparkSession, d: String): String =
-    modSplitCache.computeIfAbsent(d, dir => {
-      import java.nio.file.{Files, Paths}
-      val scratch = graft.GraftSession.tempDirCleanedOnExit("graft-msplit-raw").toString
-      val stage = graft.GraftSession.tempDirCleanedOnExit("graft-msplit-in").toString
-      val ev = Tables(s, dir, "events")
-      for (m <- 0 to 2) {
-        ev.filter(pmod(col("event_id"), lit(3)) === m)
-          .coalesce(1).write.parquet(s"$scratch/b$m")
-        val f = new java.io.File(s"$scratch/b$m").listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        Files.copy(f.toPath, Paths.get(f"$stage/part$m%02d.parquet"))
-        new java.io.File(f"$stage/part$m%02d.parquet")
-          .setLastModified(1000000L * (m + 1)): Unit
-      }
-      stage
-    })
+    graft.Memo(s, "modSplit", d, "events") {
+      val ev = Tables(s, d, "events")
+      stageOrderedParts("graft-msplit-raw", "graft-msplit-in",
+        (0 to 2).map(m => ev.filter(pmod(col("event_id"), lit(3)) === m)))
+    }
 
-  /** documents staged ONCE per data dir as the incremental-dedup split:
-    * batch 0 = the corpus (doc_id % 10 != 7), batch 1 = the delta
-    * (doc_id % 10 == 7), ascending mtimes under maxFilesPerTrigger=1 —
-    * so the near-dup ingest stream probes a store that holds exactly
-    * the corpus when the delta arrives, reproducing
-    * q_dedup_incremental's relation batch-by-batch. */
-  private val nearDupSplitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The `.parquet` files directly under `dir`, by name. */
+  private def parquetFiles(dir: String): Seq[java.io.File] =
+    new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+      .sortBy(_.getName).toSeq
+
+  /** Copy `files` into a fresh stage dir as part00, part01, … with
+    * ascending mtimes — the deterministic replay input every staged live
+    * row feeds through maxFilesPerTrigger=1. The ONE implementation of
+    * the copy/setLastModified ritual, so an mtime fix lands once. */
+  private def stageFiles(stageTag: String, files: Seq[java.io.File]): String = {
+    import java.nio.file.{Files, Paths}
+    val stage = graft.GraftSession.tempDirCleanedOnExit(stageTag).toString
+    files.zipWithIndex.foreach { case (f, i) =>
+      Files.copy(f.toPath, Paths.get(f"$stage/part$i%02d.parquet"))
+      new java.io.File(f"$stage/part$i%02d.parquet")
+        .setLastModified(1000000L * (i + 1)): Unit
+    }
+    stage
+  }
+
+  /** Stage a sequence of finite batches, each written as ONE parquet
+    * file, through [[stageFiles]]. */
+  private def stageOrderedParts(scratchTag: String, stageTag: String,
+      parts: Seq[DataFrame]): String = {
+    val scratch = graft.GraftSession.tempDirCleanedOnExit(scratchTag).toString
+    stageFiles(stageTag, parts.zipWithIndex.map { case (df, m) =>
+      df.coalesce(1).write.parquet(s"$scratch/b$m")
+      parquetFiles(s"$scratch/b$m").head
+    })
+  }
+
+  /** events staged as THREE mod-split shipments (event_id % 3,
+    * mtime-ordered) — EXPLICIT batch boundaries an oracle can restate,
+    * unlike the range-sampled time split below. */
+  private def stagedShipmentSplit(s: SparkSession, d: String): String =
+    graft.Memo(s, "shipmentSplit", d, "events") {
+      val ev = Tables(s, d, "events")
+      stageOrderedParts("graft-shipsplit-raw", "graft-shipsplit-in",
+        (0 to 2).map(m => ev.filter(col("event_id") % 3 === m)))
+    }
 
   /** TRAIN embeddings (vec_id >= 50, the eval set excluded at the
     * source) staged as two mtime-ordered parquet files (vec_id parity
     * split) — two micro-batches under maxFilesPerTrigger=1 for the
     * decontamination ingest row. */
-  private val vecSplitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Stage a sequence of finite batches as mtime-ordered single parquet
-    * files — the deterministic replay input every staged live row feeds
-    * through maxFilesPerTrigger=1. ONE implementation of the
-    * write-coalesce/copy/setLastModified ritual (it appeared per-split
-    * before; an mtime-granularity fix now lands once). */
-  private def stageOrderedParts(scratchTag: String, stageTag: String,
-      parts: Seq[DataFrame]): String = {
-    import java.nio.file.{Files, Paths}
-    val scratch = graft.GraftSession.tempDirCleanedOnExit(scratchTag).toString
-    val stage = graft.GraftSession.tempDirCleanedOnExit(stageTag).toString
-    parts.zipWithIndex.foreach { case (df, m) =>
-      df.coalesce(1).write.parquet(s"$scratch/b$m")
-      val f = new java.io.File(s"$scratch/b$m").listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      Files.copy(f.toPath, Paths.get(f"$stage/part$m%02d.parquet"))
-      new java.io.File(f"$stage/part$m%02d.parquet")
-        .setLastModified(1000000L * (m + 1)): Unit
-    }
-    stage
-  }
-
-  /** events staged as THREE mod-split shipments (event_id % 3,
-    * mtime-ordered) — EXPLICIT batch boundaries an oracle can restate,
-    * unlike the range-sampled time split above. */
-  private val shipmentSplitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def stagedShipmentSplit(s: SparkSession, d: String): String =
-    shipmentSplitCache.computeIfAbsent(d, dir => {
-      val ev = Tables(s, dir, "events")
-      stageOrderedParts("graft-shipsplit-raw", "graft-shipsplit-in",
-        (0 to 2).map(m => ev.filter(col("event_id") % 3 === m)))
-    })
-
   private def stagedVecSplit(s: SparkSession, d: String): String =
-    vecSplitCache.computeIfAbsent(d, dir => {
-      val train = Tables(s, dir, "embeddings").filter(col("vec_id") >= 50)
+    graft.Memo(s, "vecSplit", d, "embeddings") {
+      val train = Tables(s, d, "embeddings").filter(col("vec_id") >= 50)
       stageOrderedParts("graft-vecsplit-raw", "graft-vecsplit-in",
         Seq(0, 1).map(m => train.filter(col("vec_id") % 2 === m)))
-    })
+    }
 
+  /** documents staged ONCE per dataset as the incremental-dedup split:
+    * batch 0 = the corpus (doc_id % 10 != 7), batch 1 = the delta
+    * (doc_id % 10 == 7), ascending mtimes under maxFilesPerTrigger=1 —
+    * so the near-dup ingest stream probes a store that holds exactly
+    * the corpus when the delta arrives, reproducing
+    * q_dedup_incremental's relation batch-by-batch. */
   private def stagedNearDupSplit(s: SparkSession, d: String): String =
-    nearDupSplitCache.computeIfAbsent(d, dir => {
-      val docs = Tables(s, dir, "documents")
+    graft.Memo(s, "nearDupSplit", d, "documents") {
+      val docs = Tables(s, d, "documents")
       stageOrderedParts("graft-ndsplit-raw", "graft-ndsplit-in", Seq(
         docs.filter(col("doc_id") % 10 =!= 7),
         docs.filter(col("doc_id") % 10 === 7)))
-    })
+    }
 
   /** documents staged as THREE mod-split shipments (doc_id % 3,
     * mtime-ordered) — the crawl-drop replay the reservoir row streams. */
-  private val docModSplitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedDocModSplit(s: SparkSession, d: String): String =
-    docModSplitCache.computeIfAbsent(d, dir => {
-      val docs = Tables(s, dir, "documents")
+    graft.Memo(s, "docModSplit", d, "documents") {
+      val docs = Tables(s, d, "documents")
       stageOrderedParts("graft-docmod-raw", "graft-docmod-in",
         (0 to 2).map(m => docs.filter(col("doc_id") % 3 === m)))
-    })
+    }
 
-  /** events staged ONCE per data dir in EVENT-TIME ORDER (3 ts-range
+  /** events staged ONCE per dataset in EVENT-TIME ORDER (3 ts-range
     * files, ascending mtimes) plus a far-future sentinel batch (user
     * 10000001 at max ts + 20 h) — the replay shape event-time TIMERS
     * need: the watermark only ever moves past data already processed,
@@ -204,62 +192,20 @@ object StreamingOps extends QueryModule {
     * batches already delivered every qualifying event, and the sentinel
     * pushes the final watermark (delay 1 h → max + 19 h) past every
     * real timer while its own (+28 h) never fires. */
-  private val timeSplitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedTimeSplit(s: SparkSession, d: String): String =
-    timeSplitCache.computeIfAbsent(d, dir => {
-      import java.nio.file.{Files, Paths}
+    graft.Memo(s, "timeSplit", d, "events") {
       import s.implicits._
       val scratch = graft.GraftSession.tempDirCleanedOnExit("graft-tsplit-raw").toString
-      val stage = graft.GraftSession.tempDirCleanedOnExit("graft-tsplit-in").toString
-      val ev = Tables(s, dir, "events")
+      val ev = Tables(s, d, "events")
       ev.repartitionByRange(3, col("ts"), col("event_id"))
         .write.parquet(s"$scratch/real")
       val maxTs = ev.agg(max(col("ts"))).head.getAs[java.time.LocalDateTime](0)
       Seq((-10L, maxTs.plusHours(20), 10000001L, "click", 0.0, ""))
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.parquet(s"$scratch/sentinel")
-      val parts = new java.io.File(s"$scratch/real").listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName) ++
-        new java.io.File(s"$scratch/sentinel").listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-      parts.zipWithIndex.foreach { case (f, i) =>
-        Files.copy(f.toPath, Paths.get(f"$stage/part$i%02d.parquet"))
-        new java.io.File(f"$stage/part$i%02d.parquet")
-          .setLastModified(1000000L * (i + 1)): Unit
-      }
-      stage
-    })
-
-  private def stageOuterReplay(s: SparkSession, d: String): String = {
-    import java.nio.file.{Files, Paths}
-    import s.implicits._
-    val ev = Tables(s, d, "events")
-    val dir = graft.GraftSession.tempDirCleanedOnExit("graft-outer").toString
-    ev.coalesce(1).write.parquet(s"$dir/b1")
-    val maxTs = ev.agg(max(col("ts"))).head.getAs[java.time.LocalDateTime](0)
-    def evRow(id: Long, plusH: Long, user: Long, typ: String) =
-      (id, maxTs.plusHours(plusH), user, typ, 0.0, "")
-    Seq(evRow(-1L, 20L, 10000001L, "click"),
-        evRow(-2L, 20L, 10000002L, "purchase"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.parquet(s"$dir/b2")
-    Seq(evRow(-3L, 30L, 10000002L, "purchase"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.parquet(s"$dir/b3")
-    val flat = graft.GraftSession.tempDirCleanedOnExit("graft-outer-flat").toString
-    var i = 0
-    for (sub <- Seq("b1", "b2", "b3")) {
-      val f = new java.io.File(s"$dir/$sub").listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      Files.copy(f.toPath, Paths.get(f"$flat/part$i%02d.parquet"))
-      new java.io.File(f"$flat/part$i%02d.parquet")
-        .setLastModified(1000000L * (i + 1)): Unit
-      i += 1
+      stageFiles("graft-tsplit-in",
+        parquetFiles(s"$scratch/real") ++ parquetFiles(s"$scratch/sentinel"))
     }
-    flat
-  }
 
   override val defs: Seq[Q] = Seq(
 

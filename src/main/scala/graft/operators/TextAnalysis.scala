@@ -2386,22 +2386,21 @@ object TextAnalysis extends QueryModule {
   private def termBucket(c: org.apache.spark.sql.Column) =
     pmod(xxhash64(c), lit(bm25Buckets)).cast("int")
 
+  /** Fingerprint ([[graft.Memo.fingerprint]]) of the corpus the on-disk
+    * postings currently serve: one slot for the one index dir per JVM,
+    * the same contract as the PQ index's, so a dataset regenerated at
+    * the same path rebuilds instead of serving a stale index. */
+  private val bm25BuiltFor =
+    new java.util.concurrent.atomic.AtomicReference[Option[String]](None)
+
   /** BUILD the on-disk lexical index: postings (tok, doc_id, tf, len)
     * PARTITIONED BY TERM-HASH BUCKET, plus the df table and corpus
     * stats as small side relations — the build-once/query-many shape
     * the persisted IVF/PQ rows already have, for BM25. At corpus scale
     * the index build is one tokenize + two hash aggregates, run once. */
-  /** Memo: CONTENT fingerprint of the corpus the on-disk postings
-    * currently serve (build-once per JVM, same contract as the PQ
-    * index's memo) — keyed by Tables.fingerprint, not the raw dir, so
-    * a dataset regenerated at the same path rebuilds instead of
-    * serving a stale index (ADVICE r8). */
-  private val bm25BuiltFor =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   private[graft] def bm25PersistBuild(s: SparkSession, d: String): Unit = {
-    val fp = Tables.fingerprint(d, "documents")
-    if (bm25BuiltFor.get == fp) return
+    val fp = graft.Memo.fingerprint(s, d, Seq("documents"))
+    if (fp.nonEmpty && bm25BuiltFor.get == fp) return
     val cd = toks(s, d).filter(col("doc_id") >= 5)
     val tf = cd.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
     val dl = cd.groupBy("doc_id").agg(count(lit(1)).cast("double").as("len"))

@@ -20,7 +20,7 @@ object Streams {
     * task launch + store load/commit per store. The gate inputs are
     * small, so a core-count store fleet is pure per-batch overhead
     * (measured: the 3-batch stateful floor runs 2x faster at 8 stores
-    * than at 32 — `examples/StreamKnobProbe`); at 100 TB the byte-derived
+    * than at 32 — OPTIMIZATION_r14.md §1); at 100 TB the byte-derived
     * count saturates at the session's `spark.sql.shuffle.partitions`,
     * so cluster behaviour is unchanged. Knobs: [[graft.GraftConf]]. */
   def statePartitions(spark: SparkSession, paths: Seq[String]): Int = {
@@ -660,9 +660,13 @@ object Streams {
     spark.read.parquet(cur.getPath)
   }
 
-  /** Per-user running totals maintained as a [[TxLog]]-backed MERGE
-    * table — the lake-scale form of [[runUpsertTotals]]: each
-    * micro-batch key-replaces into the serving state and commits
+  /** Per-user totals of ONE call, key-replaced into a [[TxLog]]-backed
+    * MERGE table — the lake-scale form of [[runUpsertTotals]]. Each call
+    * is a fresh stream whose aggregate accumulates `n_events`/`total`
+    * over that call's micro-batches only, and each micro-batch
+    * key-replaces the user's row: after the call, a user it carried
+    * holds this call's totals, NOT a sum with earlier calls' totals
+    * (users it did not carry keep their rows). Each micro-batch commits
     * `{adds: [new part], removes: [old parts]}` atomically to the
     * versioned log. Readers replay the log (snapshot isolation), any
     * version stays addressable ([[readMergeTable]] time travel), a

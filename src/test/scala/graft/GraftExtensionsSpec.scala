@@ -37,6 +37,14 @@ class GraftExtensionsSpec extends AnyFunSuite {
     docs.unpersist()
   }
 
+  test("DESCRIBE FUNCTION vec_dot states the common-prefix and null-element rules") {
+    GraftFunctions.register(spark)
+    val usage = spark.sql("DESCRIBE FUNCTION vec_dot").collect().map(_.getString(0))
+      .mkString("\n")
+    assert(usage.contains("COMMON PREFIX") && usage.contains("null elements count as 0"),
+      usage)
+  }
+
   test("non-literal hash knobs fail loudly at analysis, not silently at run") {
     GraftFunctions.register(spark)
     val e = intercept[Exception] {

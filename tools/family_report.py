@@ -1,12 +1,13 @@
 #!/usr/bin/env python3
 """Family-level bench comparison with live-row FLOOR ADJUSTMENT
 (VERDICT r8 item 7): the 27 q_stream_live_* rows each pay a fixed
-micro-batch + state-store harness floor (StreamFloorProbe: ~2.3 s/row
-steady), which is ~25% of the whole suite and drowns operator drift in
-round-over-round comparisons. This report prints, per family, the raw
-total and geomean ratio AND the floor-adjusted ones (each live row's
-time minus the measured floor, clamped at a 0.05 s residue), so a
-family ratio reads operator cost directly.
+micro-batch + state-store harness floor (~2.3 s/row steady; BASELINE.md,
+"Streaming per-row warm-up floor, measured"), which is ~25% of the whole
+suite and drowns operator drift in round-over-round comparisons. This
+report prints, per family, the raw total and geomean ratio AND the
+floor-adjusted ones (each live row's time minus the measured floor,
+clamped at a 0.05 s residue), so a family ratio reads operator cost
+directly.
 
 Usage: python3 tools/family_report.py BENCH_LAST_prev.json BENCH_LAST_cur.json [floor_sec]
 (Accepts the driver's BENCH_r{N}.json too — falls back to parsing the
