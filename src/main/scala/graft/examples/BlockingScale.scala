@@ -25,15 +25,16 @@ object BlockingScale {
 
     // hashed grams — the representation the timed pipeline runs on, so
     // the corpus stats and candidate counts below describe ITS stages
-    val g = Tables(spark, sfDir, "documents")
+    def grams = Tables(spark, sfDir, "documents")
       .select(col("doc_id"),
         explode(TextHash.ngramHashes(TextExprs.toks(col("text")), 3)).as("gram"))
-      .cache()
     val nDocs = Tables(spark, sfDir, "documents").count()
-    val nGrams = g.count() // materialize before timing
-    val brutePairs = g.groupBy("gram").agg(count(lit(1)).as("df"))
+    val g0 = grams.cache()
+    val nGrams = g0.count()
+    val brutePairs = g0.groupBy("gram").agg(count(lit(1)).as("df"))
       .agg(sum(col("df") * (col("df") - 1) / 2)).head.getDouble(0).toLong
-    // keep g cached: the candidate-count re-derivation below reads it
+    // nothing of the harness stays cached through the timed section
+    g0.unpersist(blocking = true)
 
     val t0 = System.nanoTime()
     val result = SparkEntry.queries("q_dedup_ppjoin")(spark, sfDir)
@@ -44,6 +45,7 @@ object BlockingScale {
     // runs (the production ppjoinDocGrams helper over the hashed grams —
     // an inline string-gram copy here would count the stages of a
     // different global order than the pipeline being timed)
+    val g = grams.cache()
     val docGrams = graft.operators.Dedup.ppjoinDocGrams(g)
     val prefix = docGrams.select(col("doc_id"), col("n"),
         posexplode(expr("slice(gs, 1, plen)")))

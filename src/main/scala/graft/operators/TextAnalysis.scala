@@ -270,6 +270,28 @@ object TextAnalysis extends QueryModule {
   private[graft] def bpeCorpusToksForSpec(enc: DataFrame): Long =
     BpeTrain.corpusToks(enc)
 
+  /** Misra-Gries heavy-hitter sketch of one partition's tokens: at most
+    * `k` counters, and every token whose share of the partition exceeds
+    * 1/(k+1) is among the returned candidates. */
+  private[graft] def misraGries(it: Iterator[String], k: Int = 512): Iterator[String] = {
+    val m = new java.util.HashMap[String, Long](k * 2)
+    it.foreach { t =>
+      if (m.containsKey(t)) m.put(t, m.get(t) + 1L)
+      else if (m.size < k) m.put(t, 1L)
+      else { // decrement-all step (amortized O(1): fires <= n/k times)
+        val del = new java.util.ArrayList[String]()
+        val e = m.entrySet().iterator()
+        while (e.hasNext) {
+          val kv = e.next()
+          if (kv.getValue == 1L) del.add(kv.getKey)
+          else kv.setValue(kv.getValue - 1L)
+        }
+        del.forEach(x => { m.remove(x): Unit })
+      }
+    }
+    scala.jdk.CollectionConverters.IteratorHasAsScala(m.keySet().iterator()).asScala
+  }
+
   override val defs: Seq[Q] = Seq(
 
     // HEAVY HITTERS (vocabulary head) via Misra-Gries sketch + exact
@@ -288,27 +310,8 @@ object TextAnalysis extends QueryModule {
       (s, d) => {
         import s.implicits._
         val tk = toks(s, d).select(col("tok"))
-        val cands = tk.as[String].mapPartitions { it =>
-          val k = 512
-          val m = new java.util.HashMap[String, Long](k * 2)
-          it.foreach { t =>
-            val cur = m.get(t)
-            if (cur != null) m.put(t, cur + 1L)
-            else if (m.size < k) m.put(t, 1L)
-            else { // decrement-all step (amortized O(1): fires <= n/k times)
-              val del = new java.util.ArrayList[String]()
-              val e = m.entrySet().iterator()
-              while (e.hasNext) {
-                val kv = e.next()
-                if (kv.getValue == 1L) del.add(kv.getKey)
-                else kv.setValue(kv.getValue - 1L)
-              }
-              del.forEach(x => { m.remove(x): Unit })
-            }
-          }
-          scala.jdk.CollectionConverters.IteratorHasAsScala(
-            m.keySet().iterator()).asScala
-        }.toDF("tok").distinct()
+        val cands = tk.as[String].mapPartitions(misraGries(_))
+          .toDF("tok").distinct()
         // total WITHOUT the explode: sum of per-doc token counts
         val total = docs(s, d)
           .agg(sum(size(TextExprs.toks(col("text"))))).head.getLong(0)

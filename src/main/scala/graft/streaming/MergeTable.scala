@@ -16,6 +16,13 @@ import java.nio.file.{Files, Paths}
   *
   * (The streaming `runMergeTotals` full-rewrite is the degenerate
   * K=1 case; this is the shape a real lakehouse MERGE takes.)
+  *
+  * Every writer of a table after its [[load]] (which commits version 0
+  * once) runs one protocol: snapshot → stage → commit → on conflict
+  * delete the staged adds and retry. [[TxLog.commitRetrying]] runs that
+  * loop and [[writeParts]] stages the data files. The writers on it are
+  * [[mergeInto]], [[deleteKeys]], [[append]], [[appendWithBloom]],
+  * [[compact]], [[optimizeZorder]] and `Streams.runMergeTotals`.
   */
 object MergeTable {
 
@@ -27,13 +34,7 @@ object MergeTable {
   def load(spark: SparkSession, table: String, df: DataFrame,
       keyCol: String, buckets: Int): Long = {
     Files.createDirectories(Paths.get(table))
-    val written = writeBuckets(spark, table, df, keyCol, buckets,
-      (0 until buckets).toSeq, version = 0L)
-    val adds = (0 until buckets).map { k =>
-      written.getOrElse(k,
-        writeBucket(spark, table, df.filter(pmod(col(keyCol), lit(buckets)) === k),
-          k, version = 0L))
-    }
+    val adds = writeBuckets(table, df, keyCol, buckets, version = 0L, 0 until buckets)
     TxLog.commit(table, adds, Seq.empty, expectedCurrent = -1L, schema = df.schema)
       .getOrElse(sys.error(s"initial load conflict on $table"))
   }
@@ -49,21 +50,16 @@ object MergeTable {
   def mergeInto(spark: SparkSession, table: String, updates: DataFrame,
       keyCol: String, buckets: Int,
       primitive: CommitPrimitive = TxLog.LocalFs,
-      checkpointEvery: Int = 10): (Long, Seq[Int]) = {
-    var result: Option[(Long, Seq[Int])] = None
-    while (result.isEmpty) {
-      val snap = TxLog.snapshot(table)
+      checkpointEvery: Int = 10): (Long, Seq[Int]) =
+    TxLog.commitRetrying(table, primitive) { snap =>
       val byBucket = snap.files.groupBy(bucketOfFile)
       val touched = updates
         .select(pmod(col(keyCol), lit(buckets)).cast("int").as("__b"))
         .distinct().collect().map(_.getInt(0)).sorted.toSeq
-      val next = snap.version + 1
       // ONE read of every touched bucket's files + ONE partitionBy write
       // for every touched bucket — job count per merge is O(1), not
-      // O(touched buckets) (the per-bucket write loop measured 48 s for
-      // the 3-batch streaming gate row at sf0.1; this shape runs it in
-      // one pass). Buckets are key-disjoint, so the global anti-join is
-      // exactly the per-bucket key replacement.
+      // O(touched buckets). Buckets are key-disjoint, so the global
+      // anti-join is exactly the per-bucket key replacement.
       val oldFiles = touched.flatMap(k => byBucket.getOrElse(k, Seq.empty))
       val old =
         if (oldFiles.nonEmpty) TxLog.read(spark, table, snap, oldFiles)
@@ -74,23 +70,13 @@ object MergeTable {
       // table needs across application versions
       val merged = old.join(updates.select(keyCol), Seq(keyCol), "left_anti")
         .unionByName(updates, allowMissingColumns = true)
-      val written = writeBuckets(spark, table, merged, keyCol, buckets, touched, next)
-      val adds = touched.map(k => written.getOrElse(k,
-        writeBucket(spark, table,
-          merged.filter(pmod(col(keyCol), lit(buckets)) === k), k, next)))
-      val removes = touched.flatMap(k => byBucket.getOrElse(k, Seq.empty))
-      TxLog.commit(table, adds, removes, expectedCurrent = snap.version,
-          primitive = primitive, schema = merged.schema) match {
-        case Some(v) =>
-          if (checkpointEvery > 0 && v > 0 && v % checkpointEvery == 0)
-            TxLog.writeCheckpoint(table, primitive): Unit
-          result = Some((v, touched))
-        case None => // lost the race: orphan our files, re-read, retry
-          adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
-      }
+      val adds = writeBuckets(table, merged, keyCol, buckets, snap.version + 1, touched)
+      Right(TxLog.Staged(adds, oldFiles, merged.schema) { v =>
+        if (checkpointEvery > 0 && v > 0 && v % checkpointEvery == 0)
+          TxLog.writeCheckpoint(table, primitive): Unit
+        (v, touched)
+      })
     }
-    result.get
-  }
 
   def read(spark: SparkSession, table: String, asOf: Option[Long] = None): DataFrame =
     Streams.readMergeTable(spark, table, asOf)
@@ -104,35 +90,22 @@ object MergeTable {
     * rewritten buckets). */
   def deleteKeys(spark: SparkSession, table: String, keys: DataFrame,
       keyCol: String, buckets: Int,
-      primitive: CommitPrimitive = TxLog.LocalFs): (Long, Seq[Int]) = {
-    var result: Option[(Long, Seq[Int])] = None
-    while (result.isEmpty) {
-      val snap = TxLog.snapshot(table)
+      primitive: CommitPrimitive = TxLog.LocalFs): (Long, Seq[Int]) =
+    TxLog.commitRetrying(table, primitive) { snap =>
       val byBucket = snap.files.groupBy(bucketOfFile)
       val touched = keys
         .select(pmod(col(keyCol), lit(buckets)).cast("int").as("__b"))
         .distinct().collect().map(_.getInt(0)).sorted.toSeq
         .filter(byBucket.contains) // a key in an empty bucket deletes nothing
-      if (touched.isEmpty) return (snap.version, Seq.empty)
-      val oldFiles = touched.flatMap(byBucket)
-      val old = TxLog.read(spark, table, snap, oldFiles)
-      val remaining = old.join(keys.select(keyCol), Seq(keyCol), "left_anti")
-      val written = writeBuckets(spark, table, remaining, keyCol, buckets,
-        touched, snap.version + 1)
-      val adds = touched.map(k => written.getOrElse(k,
-        // bucket fully emptied by the delete: it still needs one
-        // schema-bearing file for lookup()
-        writeBucket(spark, table,
-          remaining.filter(pmod(col(keyCol), lit(buckets)) === k),
-          k, snap.version + 1)))
-      TxLog.commit(table, adds, oldFiles, expectedCurrent = snap.version,
-          primitive = primitive, schema = remaining.schema) match {
-        case Some(v) => result = Some((v, touched))
-        case None => adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
+      if (touched.isEmpty) Left((snap.version, Seq.empty[Int]))
+      else {
+        val oldFiles = touched.flatMap(byBucket)
+        val remaining = TxLog.read(spark, table, snap, oldFiles)
+          .join(keys.select(keyCol), Seq(keyCol), "left_anti")
+        val adds = writeBuckets(table, remaining, keyCol, buckets, snap.version + 1, touched)
+        Right(TxLog.Staged(adds, oldFiles, remaining.schema)(v => (v, touched)))
       }
     }
-    result.get
-  }
 
   /** CHANGE DATA FEED between two committed versions (the Delta CDF
     * read path): row-level changes derived from the log's file-level
@@ -191,31 +164,28 @@ object MergeTable {
       keyCol: String, buckets: Int,
       primitive: CommitPrimitive = TxLog.LocalFs,
       statsCols: Seq[String] = Seq.empty): Long =
-    appendStaged(spark, table, rows, keyCol, buckets, primitive,
-      batchMeta(rows, keyCol, buckets, statsCols, bloomCol = None)._1)
+    appendStaged(table, rows, keyCol, buckets, primitive,
+      batchMeta(rows, keyCol, buckets, statsCols, bloomCol = None)._1)._1
 
   /** ONE metadata pass per ingest batch (optimization r15, VERDICT r14
     * #6): per-bucket column stats and — for bloom appends — sidecar bit
-    * positions come from a SINGLE groupBy job over the batch, where the
-    * old shape scanned the batch once per concern (stats aggregate,
-    * bloom-bit aggregate, touched-bucket distinct). The touched-bucket
-    * set is no longer collected at all: [[writeBuckets]] discovers it
-    * from the staged partition directories its own (mandatory) write
-    * produced. Determinism contract unchanged: `rows` is scanned once
-    * here and once by the write, so it must be deterministic across
-    * re-evaluation — the same contract every writer here already places
-    * on its input (a batch that changed between scans could record
-    * stats, or a bloom filter, that miss a written value).
+    * positions come from a SINGLE groupBy job over the batch. The
+    * touched-bucket set is not collected at all: the staged write
+    * discovers it from the partition directories it produced. `rows` is
+    * scanned once here and once by the write, so it must be
+    * deterministic across re-evaluation — the same contract every
+    * writer here places on its input (a batch that changed between
+    * scans could record stats, or a bloom filter, that miss a written
+    * value).
     *
-    * Stats semantics are identical to the old two-pass shape: when a
-    * bloom column is present the batch is exploded ×k (one row per
-    * bloom probe position) BEFORE the aggregate, which leaves min/max
-    * untouched (duplication never moves an extremum) and feeds
-    * collect_set exactly the per-bucket position multiset it deduped
-    * before. try_cast, not cast: under ANSI a malformed value must mean
-    * "no interval for this column" (always read), never a failed
-    * ingest; a column whose long-cast produced only nulls records NO
-    * interval — the file is then always read, never wrongly pruned. */
+    * When a bloom column is present the batch is exploded ×k (one row
+    * per bloom probe position) BEFORE the aggregate, which leaves
+    * min/max untouched (duplication never moves an extremum) and feeds
+    * collect_set each bucket's probe positions. try_cast, not cast:
+    * under ANSI a malformed value must mean "no interval for this
+    * column" (always read), never a failed ingest; a column whose
+    * long-cast produced only nulls records NO interval — the file is
+    * then always read, never wrongly pruned. */
   private def batchMeta(rows: DataFrame, keyCol: String, buckets: Int,
       statsCols: Seq[String], bloomCol: Option[String])
       : (Map[Int, Map[String, (Long, Long)]], Map[Int, Seq[Int]]) = {
@@ -246,32 +216,19 @@ object MergeTable {
     (stats, bits)
   }
 
-  /** The append commit loop shared by [[append]] and
-    * [[appendWithBloom]]: stage one file per non-empty touched bucket
-    * (the touched set falls out of the staged write itself), commit
-    * adds-only with the precomputed per-bucket stats attached to this
-    * attempt's files. */
-  private def appendStaged(spark: SparkSession, table: String,
-      rows: DataFrame, keyCol: String, buckets: Int,
-      primitive: CommitPrimitive,
-      bucketStats: Map[Int, Map[String, (Long, Long)]]): Long = {
-    var result: Option[Long] = None
-    while (result.isEmpty) {
-      val snap = TxLog.snapshot(table)
-      val next = snap.version + 1
-      val written =
-        writeBuckets(spark, table, rows, keyCol, buckets, next)
-      val adds = written.keys.toSeq.sorted.map(written)
+  /** The append attempt shared by [[append]] and [[appendWithBloom]]:
+    * stage one file per non-empty touched bucket, commit adds-only with
+    * the precomputed per-bucket stats attached to this attempt's files.
+    * Returns the committed version and its files. */
+  private def appendStaged(table: String, rows: DataFrame, keyCol: String,
+      buckets: Int, primitive: CommitPrimitive,
+      bucketStats: Map[Int, Map[String, (Long, Long)]]): (Long, Seq[String]) =
+    TxLog.commitRetrying(table, primitive) { snap =>
+      val adds = writeBuckets(table, rows, keyCol, buckets, snap.version + 1)
       val stats = adds.flatMap(f =>
         bucketStats.get(bucketOfFile(f)).map(f -> _)).toMap
-      TxLog.commit(table, adds, Seq.empty, expectedCurrent = snap.version,
-          primitive = primitive, stats = stats, schema = rows.schema) match {
-        case Some(v) => result = Some(v)
-        case None => adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
-      }
+      Right(TxLog.Staged(adds, Seq.empty, rows.schema, stats)(v => (v, adds)))
     }
-    result.get
-  }
 
   // ---- per-file BLOOM sidecars: point-lookup skipping on a NON-key
   // column (the Delta bloom-filter-index analogue). The filter is an
@@ -343,23 +300,17 @@ object MergeTable {
       keyCol: String, buckets: Int, bloomCol: String,
       primitive: CommitPrimitive = TxLog.LocalFs,
       statsCols: Seq[String] = Seq.empty): Long = {
-    // stats + bloom bits in ONE batch scan ([[batchMeta]]) — the old
-    // shape paid three metadata jobs per streaming append (bloom,
-    // stats, touched-buckets), a fixed per-micro-batch tax
     val (bucketStats, bits) =
       batchMeta(rows, keyCol, buckets, statsCols, Some(bloomCol))
-    val v = appendStaged(spark, table, rows, keyCol, buckets, primitive,
+    val (v, adds) = appendStaged(table, rows, keyCol, buckets, primitive,
       bucketStats)
-    // sidecars for the files THIS commit added (their names carry v)
-    TxLog.snapshot(table).files
-      .filter(f => f.contains(s"-v$v-"))
-      .foreach { f =>
-        bits.get(bucketOfFile(f)).foreach { ps =>
-          val arr = new Array[Byte](bloomBits / 8)
-          ps.foreach(p => arr(p / 8) = (arr(p / 8) | (1 << (p % 8))).toByte)
-          writeSidecar(table, f, bloomCol, arr)
-        }
+    adds.foreach { f =>
+      bits.get(bucketOfFile(f)).foreach { ps =>
+        val arr = new Array[Byte](bloomBits / 8)
+        ps.foreach(p => arr(p / 8) = (arr(p / 8) | (1 << (p % 8))).toByte)
+        writeSidecar(table, f, bloomCol, arr)
       }
+    }
     v
   }
 
@@ -457,23 +408,15 @@ object MergeTable {
     * no bucket met the threshold. */
   def compact(spark: SparkSession, table: String, keyCol: String,
       buckets: Int, minFiles: Int = 2,
-      primitive: CommitPrimitive = TxLog.LocalFs): Option[(Long, Seq[Int])] = {
-    var result: Option[Option[(Long, Seq[Int])]] = None
-    while (result.isEmpty) {
-      val snap = TxLog.snapshot(table)
+      primitive: CommitPrimitive = TxLog.LocalFs): Option[(Long, Seq[Int])] =
+    TxLog.commitRetrying(table, primitive) { snap =>
       val byBucket = snap.files.groupBy(bucketOfFile)
       val todo = byBucket.filter(_._2.size >= minFiles).keys.toSeq.sorted
-      if (todo.isEmpty) result = Some(None)
+      if (todo.isEmpty) Left(None)
       else {
-        val next = snap.version + 1
         val oldFiles = todo.flatMap(byBucket)
         val df = TxLog.read(spark, table, snap, oldFiles)
-        val written = writeBuckets(spark, table, df, keyCol, buckets, todo, next)
-        val adds = todo.map(k => written.getOrElse(k,
-          // bucket whose live files hold zero rows: partitionBy made no
-          // dir; it still needs one schema-bearing file for lookup()
-          writeBucket(spark, table,
-            df.filter(pmod(col(keyCol), lit(buckets)) === k), k, next)))
+        val adds = writeBuckets(table, df, keyCol, buckets, snap.version + 1, todo)
         // folded stats, PER COLUMN: a column's union interval survives
         // the fold only when ALL constituents carry an interval for
         // that column (a file without one is unbounded on it, so the
@@ -490,18 +433,12 @@ object MergeTable {
             c -> (ivs.map(_._1).min, ivs.map(_._2).max)
           }.toMap)
         }.toMap
-        TxLog.commit(table, adds, oldFiles, expectedCurrent = snap.version,
-            primitive = primitive, stats = stats, schema = df.schema) match {
-          case Some(v) =>
-            adds.foreach(f => foldSidecars(table, f, byBucket(bucketOfFile(f))))
-            result = Some(Some((v, todo)))
-          case None => // lost to a concurrent merge: orphan ours, retry
-            adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
-        }
+        Right(TxLog.Staged(adds, oldFiles, df.schema, stats) { v =>
+          adds.foreach(f => foldSidecars(table, f, byBucket(bucketOfFile(f))))
+          Some((v, todo))
+        })
       }
     }
-    result.get
-  }
 
   /** The stats-map key a z-order rewrite records its curve interval
     * under: encoding the COLUMN PAIR AND BIT WIDTH in the key means a
@@ -538,75 +475,69 @@ object MergeTable {
       buckets: Int, xCol: String, yCol: String, bits: Int, chunks: Int,
       primitive: CommitPrimitive = TxLog.LocalFs): (Long, Seq[Int]) = {
     import org.apache.spark.sql.expressions.Window
-    var result: Option[(Long, Seq[Int])] = None
-    while (result.isEmpty) {
-      val snap = TxLog.snapshot(table)
-      if (snap.files.isEmpty) return (snap.version, Seq.empty)
-      val byBucket = snap.files.groupBy(bucketOfFile)
-      val todo = byBucket.keys.toSeq.sorted
-      val next = snap.version + 1
-      val df = TxLog.read(spark, table, snap, snap.files)
-      val zd = df
-        .withColumn("__b", pmod(col(keyCol), lit(buckets)).cast("int"))
-        .withColumn("__z", Zorder.zvalue(col(xCol), col(yCol), bits))
-        .withColumn("__c",
-          ntile(chunks).over(Window.partitionBy("__b").orderBy("__z")))
-        .drop("__z")
-      val written = writeChunks(spark, table, zd, next)
-      val adds = written.values.toSeq.sorted ++
-        // a bucket whose live files hold zero rows still needs one
-        // schema-bearing file for lookup()
-        todo.filterNot(k => written.keys.exists(_._1 == k)).map(k =>
-          writeBucket(spark, table, df.limit(0), k, next))
-      // stats from the WRITTEN bytes (one job over the new files), so the
-      // recorded intervals provably cover what each file holds — immune to
-      // any nondeterminism in the rank's tie-breaking between passes. The
-      // same pass carries the coordinate-domain check: zvalue()'s masks
-      // silently alias out-of-range coords, so fail loudly BEFORE the
-      // commit rather than record intervals of the aliased curve.
-      val stats: Map[String, Map[String, (Long, Long)]] =
-        if (written.isEmpty) Map.empty
-        else {
-          val zk = zStatsKey(xCol, yCol, bits)
-          val rows = TxLog.read(spark, table, snap, written.values.toSeq)
-            .withColumn("__z", Zorder.zvalue(col(xCol), col(yCol), bits))
-            .groupBy(input_file_name().as("__f"))
-            .agg(min("__z").as("zlo"), max("__z").as("zhi"),
-              min(col(xCol).cast("long")).as("xlo"), max(col(xCol).cast("long")).as("xhi"),
-              min(col(yCol).cast("long")).as("ylo"), max(col(yCol).cast("long")).as("yhi"))
-            .collect()
-          val lim = 1L << bits
-          rows.find(r => !(r.getLong(3) >= 0 && r.getLong(4) < lim &&
-              r.getLong(5) >= 0 && r.getLong(6) < lim)).foreach { r =>
-            // orphan the staged files (vacuum-sweepable) before failing:
-            // nothing is committed, the table is untouched
-            adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
-            sys.error(
-              s"optimizeZorder: $xCol/$yCol values outside [0, $lim) — " +
-                s"x[${r.getLong(3)},${r.getLong(4)}] y[${r.getLong(5)},${r.getLong(6)}] " +
-                "would alias on the curve; widen `bits` or pre-clamp")
+    TxLog.commitRetrying(table, primitive) { snap =>
+      if (snap.files.isEmpty) Left((snap.version, Seq.empty[Int]))
+      else {
+        val byBucket = snap.files.groupBy(bucketOfFile)
+        val todo = byBucket.keys.toSeq.sorted
+        val df = TxLog.read(spark, table, snap, snap.files)
+        val zd = df
+          .withColumn("__b", pmod(col(keyCol), lit(buckets)).cast("int"))
+          .withColumn("__z", Zorder.zvalue(col(xCol), col(yCol), bits))
+          .withColumn("__c",
+            ntile(chunks).over(Window.partitionBy("__b").orderBy("__z")))
+          .drop("__z")
+        // chunk files parse through bucketOfFile like any bucket file, so
+        // every reader (merge, compact, CDF, lookup) sees ordinary parts
+        val staged = writeParts(table, zd, Seq("__b", "__c"),
+          bucketFile(snap.version + 1), todo, _ => df.limit(0))
+        val written = staged.filter(_._1.length == 2)
+        val adds = staged.values.toSeq.sorted
+        // stats from the WRITTEN bytes (one job over the new files), so the
+        // recorded intervals provably cover what each file holds — immune to
+        // any nondeterminism in the rank's tie-breaking between passes. The
+        // same pass carries the coordinate-domain check: zvalue()'s masks
+        // silently alias out-of-range coords, so fail loudly BEFORE the
+        // commit rather than record intervals of the aliased curve.
+        val stats: Map[String, Map[String, (Long, Long)]] =
+          if (written.isEmpty) Map.empty
+          else {
+            val zk = zStatsKey(xCol, yCol, bits)
+            val rows = TxLog.read(spark, table, snap, written.values.toSeq)
+              .withColumn("__z", Zorder.zvalue(col(xCol), col(yCol), bits))
+              .groupBy(input_file_name().as("__f"))
+              .agg(min("__z").as("zlo"), max("__z").as("zhi"),
+                min(col(xCol).cast("long")).as("xlo"), max(col(xCol).cast("long")).as("xhi"),
+                min(col(yCol).cast("long")).as("ylo"), max(col(yCol).cast("long")).as("yhi"))
+              .collect()
+            val lim = 1L << bits
+            rows.find(r => !(r.getLong(3) >= 0 && r.getLong(4) < lim &&
+                r.getLong(5) >= 0 && r.getLong(6) < lim)).foreach { r =>
+              // orphan the staged files (vacuum-sweepable) before failing:
+              // nothing is committed, the table is untouched
+              adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
+              sys.error(
+                s"optimizeZorder: $xCol/$yCol values outside [0, $lim) — " +
+                  s"x[${r.getLong(3)},${r.getLong(4)}] y[${r.getLong(5)},${r.getLong(6)}] " +
+                  "would alias on the curve; widen `bits` or pre-clamp")
+            }
+            rows.map { r =>
+              r.getString(0).split('/').last -> Map(
+                zk -> (r.getLong(1), r.getLong(2)),
+                xCol -> (r.getLong(3), r.getLong(4)),
+                yCol -> (r.getLong(5), r.getLong(6)))
+            }.toMap
           }
-          rows.map { r =>
-            r.getString(0).split('/').last -> Map(
-              zk -> (r.getLong(1), r.getLong(2)),
-              xCol -> (r.getLong(3), r.getLong(4)),
-              yCol -> (r.getLong(5), r.getLong(6)))
-          }.toMap
-        }
-      TxLog.commit(table, adds, snap.files, expectedCurrent = snap.version,
-          primitive = primitive, stats = stats, schema = df.schema) match {
-        case Some(v) =>
+        Right(TxLog.Staged(adds, snap.files, df.schema, stats) { v =>
           // fold bloom sidecars per bucket (buckets are key-disjoint, so
           // a chunk's rows come only from its own bucket's files)
-          written.foreach { case ((k, _), f) =>
-            foldSidecars(table, f, byBucket.getOrElse(k, Seq.empty))
+          written.foreach { case (leaf, f) =>
+            foldSidecars(table, f, byBucket.getOrElse(leaf.head, Seq.empty))
           }
-          result = Some((v, todo))
-        case None =>
-          adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
+          (v, todo)
+        })
       }
     }
-    result.get
   }
 
   /** 2-D box scan with Z-ORDER FILE SKIPPING: prunes live files whose
@@ -682,103 +613,69 @@ object MergeTable {
   private def bucketOfFile(name: String): Int =
     name.stripPrefix("b").takeWhile(_.isDigit).toInt
 
-  /** Write every requested bucket's rows in ONE partitionBy("__b") job;
-    * returns bucket → committed file name for the buckets that produced
-    * a partition dir (buckets with zero rows produce none — callers
-    * fall back to [[writeBucket]] for those). `repartition(__b)` puts
-    * each bucket in exactly one task, so each partition dir holds one
-    * file. */
-  private def writeBuckets(spark: SparkSession, table: String, df: DataFrame,
-      keyCol: String, buckets: Int, wanted: Seq[Int],
-      version: Long): Map[Int, String] =
-    writeBucketsImpl(spark, table, df, keyCol, buckets, Some(wanted), version)
+  /** Table file name of a staged part: `b<k>-v<version>-<part>` for
+    * bucket `k`, `b<k>-v<version>-zc<c>-<part>` for z-chunk `c` of it. */
+  private def bucketFile(version: Long)(leaf: Seq[Int], part: String): String =
+    s"b${leaf.head}-v$version${leaf.tail.map(c => s"-zc$c").mkString}-$part"
 
-  /** [[writeBuckets]] discovering the touched-bucket set from the staged
-    * partition directories (every distinct `__b` the write produced) —
-    * append ingest needs no separate distinct-collect job over the batch
-    * just to learn which buckets it wrote (optimization r15). */
-  private def writeBuckets(spark: SparkSession, table: String, df: DataFrame,
-      keyCol: String, buckets: Int, version: Long): Map[Int, String] =
-    writeBucketsImpl(spark, table, df, keyCol, buckets, None, version)
+  /** [[writeParts]] for a table hash-bucketed on `keyCol`: one file per
+    * bucket holding rows, plus one per `wanted` bucket holding none (its
+    * filtered, empty `df`). Returns the files in bucket order. */
+  private def writeBuckets(table: String, df: DataFrame, keyCol: String,
+      buckets: Int, version: Long, wanted: Seq[Int] = Seq.empty): Seq[String] = {
+    val bucket = pmod(col(keyCol), lit(buckets))
+    writeParts(table, df.withColumn("__b", bucket.cast("int")), Seq("__b"),
+        bucketFile(version), wanted, k => df.filter(bucket === k))
+      .toSeq.sortBy(_._1.head).map(_._2)
+  }
 
-  private def writeBucketsImpl(spark: SparkSession, table: String, df: DataFrame,
-      keyCol: String, buckets: Int, wanted: Option[Seq[Int]],
-      version: Long): Map[Int, String] = {
+  /** The staged-part writer behind every table write: write `df` into a
+    * temp stage dir — `coalesce(1)` when `partCols` is empty, else
+    * `repartition` + `partitionBy` on `partCols` (each leaf in one task,
+    * so one part per leaf) — and move each leaf's part into `table` as
+    * `name(leaf values, part file suffix)`. A `wanted` first-column value
+    * with no leaf (partitionBy makes no dir for a value without rows)
+    * gets `empty(value)` written as its one part instead: every bucket
+    * keeps a schema-bearing file for lookup(). Moved parts stay
+    * invisible orphans until a commit names them; the stage dir goes in
+    * a `finally`, so a long-running sink leaves no temp tree behind per
+    * micro-batch. Returns leaf values → table file name. */
+  private[streaming] def writeParts(table: String, df: DataFrame,
+      partCols: Seq[String], name: (Seq[Int], String) => String,
+      wanted: Seq[Int] = Seq.empty,
+      empty: Int => DataFrame = k => sys.error(s"no empty frame for leaf $k"))
+      : Map[Seq[Int], String] = {
     val stage = Files.createTempDirectory("graft-mergetbl")
-    try {
-      df.withColumn("__b", pmod(col(keyCol), lit(buckets)).cast("int"))
-        .repartition(col("__b"))
-        .write.partitionBy("__b").mode(SaveMode.Overwrite).parquet(stage.toString)
-      val staged = wanted.getOrElse(
-        Option(new java.io.File(stage.toString).listFiles())
-          .getOrElse(Array.empty).toSeq
-          .filter(d => d.isDirectory && d.getName.startsWith("__b="))
-          .map(_.getName.stripPrefix("__b=").toInt).sorted)
-      staged.flatMap { k =>
-        val dir = new java.io.File(s"$stage/__b=$k")
-        Option(dir.listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.endsWith(".parquet")).toSeq match {
+    val written = try {
+      val w =
+        if (partCols.isEmpty) df.coalesce(1).write
+        else df.repartition(partCols.map(col): _*).write.partitionBy(partCols: _*)
+      w.mode(SaveMode.Overwrite).parquet(stage.toString)
+      def leaves(dir: java.io.File, cols: Seq[String],
+          at: Seq[Int]): Seq[(Seq[Int], java.io.File)] = cols match {
+        case Seq() => Seq(at -> dir)
+        case c +: rest =>
+          dir.listFiles().toSeq.filter(d => d.isDirectory && d.getName.startsWith(s"$c="))
+            .flatMap { d =>
+              val v = d.getName.stripPrefix(s"$c=").toIntOption
+                .getOrElse(sys.error(s"$table: cannot stage a null $c (${d.getName})"))
+              leaves(d, rest, at :+ v)
+            }
+      }
+      leaves(stage.toFile, partCols, Seq.empty).map { case (leaf, dir) =>
+        dir.listFiles().filter(_.getName.endsWith(".parquet")).toSeq match {
           case Seq(part) =>
-            val name = s"b$k-v$version-${part.getName.stripPrefix("part-")}"
-            Files.move(part.toPath, Paths.get(table, name))
-            Some(k -> name)
-          case Seq() => None
-          case many => // hash-collision split across tasks: keep them all?
-            // repartition by __b guarantees one task per value; if Spark
-            // ever changes that, fail loudly rather than lose files
-            sys.error(s"bucket $k split into ${many.size} files")
+            val f = name(leaf, part.getName.stripPrefix("part-"))
+            Files.move(part.toPath, Paths.get(table, f))
+            leaf -> f
+          case parts =>
+            sys.error(s"$table: leaf ${leaf.mkString(",")} staged ${parts.size} parts")
         }
       }.toMap
-    } finally deleteRecursively(stage) // a long-running merge stream
-    // stages once per micro-batch; leaving the _SUCCESS marker and
-    // partition dirs behind accrues one orphan temp tree per batch
-  }
-
-  /** Write z-chunked rows (`__b`, `__c` columns present) in ONE
-    * partitionBy job; returns (bucket, chunk) → committed file name.
-    * Chunk files parse through [[bucketOfFile]] like any bucket file, so
-    * every existing reader (merge, compact, CDF, lookup) sees them as
-    * ordinary per-bucket parts. */
-  private def writeChunks(spark: SparkSession, table: String, df: DataFrame,
-      version: Long): Map[(Int, Int), String] = {
-    val stage = Files.createTempDirectory("graft-mergetbl")
-    try {
-      df.repartition(col("__b"), col("__c"))
-        .write.partitionBy("__b", "__c").mode(SaveMode.Overwrite)
-        .parquet(stage.toString)
-      val out = scala.collection.mutable.Map.empty[(Int, Int), String]
-      Option(new java.io.File(stage.toString).listFiles()).getOrElse(Array.empty)
-        .filter(d => d.isDirectory && d.getName.startsWith("__b=")).foreach { bd =>
-          val k = bd.getName.stripPrefix("__b=").toInt
-          Option(bd.listFiles()).getOrElse(Array.empty)
-            .filter(d => d.isDirectory && d.getName.startsWith("__c=")).foreach { cd =>
-              val c = cd.getName.stripPrefix("__c=").toInt
-              cd.listFiles().filter(_.getName.endsWith(".parquet")).toSeq match {
-                case Seq(part) =>
-                  val name = s"b$k-v$version-zc$c-${part.getName.stripPrefix("part-")}"
-                  Files.move(part.toPath, Paths.get(table, name))
-                  out((k, c)) = name
-                case Seq() => ()
-                case many =>
-                  sys.error(s"chunk ($k,$c) split into ${many.size} files")
-              }
-            }
-        }
-      out.toMap
     } finally deleteRecursively(stage)
-  }
-
-  private def writeBucket(spark: SparkSession, table: String, df: DataFrame,
-      bucket: Int, version: Long): String = {
-    val stage = Files.createTempDirectory("graft-mergetbl")
-    try {
-      df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage.toString)
-      val part = new java.io.File(stage.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val name = s"b$bucket-v$version-${part.getName.stripPrefix("part-")}"
-      Files.move(part.toPath, Paths.get(table, name))
-      name
-    } finally deleteRecursively(stage)
+    written ++ wanted.filterNot(k => written.keys.exists(_.head == k)).map { k =>
+      Seq(k) -> writeParts(table, empty(k), Seq.empty, (_, p) => name(Seq(k), p)).values.head
+    }
   }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit =

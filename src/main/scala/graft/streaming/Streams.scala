@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -50,7 +50,7 @@ object Streams {
     * byte-derived state partitioning above, and without the trailing
     * no-data micro-batch: every live gate row advances/evicts on DATA
     * batches by design (the staged sentinel replays exist precisely
-    * because `processAllAvailable` does not guarantee a no-data batch),
+    * because a [[drain]] does not guarantee a no-data batch),
     * so the extra batch is one more full offset-log + state-commit round
     * that buys nothing. Both confs restore in a finally; with empty
     * `paths` the partition override is skipped (nothing to size from). */
@@ -76,6 +76,21 @@ object Streams {
       restore(ndKey, prevNd)
     }
   }
+
+  /** Run `df` as a `foreachBatch` query in `mode` until every input
+    * available at start has gone through `batchFn`, then stop it. */
+  private def drain(df: DataFrame, mode: OutputMode)(
+      batchFn: (Dataset[Row], Long) => Unit): Unit = {
+    val q = df.writeStream.outputMode(mode).foreachBatch(batchFn).start()
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  /** Per-user event count and value total of an events stream. */
+  private def userTotals(spark: SparkSession, eventsPath: String,
+      options: Map[String, String]): DataFrame =
+    events(spark, eventsPath, options)
+      .groupBy("user_id")
+      .agg(count(lit(1)).as("n_events"), sum("value").as("total"))
 
   /** events schema as streamed; `ts` is filled per the stored encoding
     * (see [[events]]). */
@@ -188,27 +203,21 @@ object Streams {
     import org.apache.spark.sql.expressions.Window
     var state: Option[DataFrame] = None
     val sizes = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = documents(spark, docsPath, options)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // the batch contract's salted permutation, spelled ONCE
-        // (Relational.reservoirHk — ADVICE r12)
-        val cand = batch.select(col("source"), col("doc_id"),
-          graft.operators.Relational.reservoirHk.as("hk"))
-        val merged = state.map(_.unionByName(cand)).getOrElse(cand)
-        val w = Window.partitionBy("source").orderBy(asc("hk"), asc("doc_id"))
-        // state-size gate observed during the pin itself (optimization
-        // r15 §12 — the Iterate.pinCountAll shape): one job per batch
-        // instead of checkpoint + count
-        val (next, n) = graft.plans.Iterate.pinCountAll(
-          merged.withColumn("rn", row_number().over(w))
-            .filter(col("rn") <= k).drop("rn"))
-        state.foreach(graft.plans.Iterate.release)
-        state = Some(next)
-        sizes += n: Unit
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    drain(documents(spark, docsPath, options), OutputMode.Append()) { (batch, _) =>
+      // the batch contract's salted permutation, spelled ONCE
+      // (Relational.reservoirHk — ADVICE r12)
+      val cand = batch.select(col("source"), col("doc_id"),
+        graft.operators.Relational.reservoirHk.as("hk"))
+      val merged = state.map(_.unionByName(cand)).getOrElse(cand)
+      val w = Window.partitionBy("source").orderBy(asc("hk"), asc("doc_id"))
+      // state-size gate observed during the pin itself: one job per batch
+      val (next, n) = graft.plans.Iterate.pinCountAll(
+        merged.withColumn("rn", row_number().over(w))
+          .filter(col("rn") <= k).drop("rn"))
+      state.foreach(graft.plans.Iterate.release)
+      state = Some(next)
+      sizes += n: Unit
+    }
     (state.getOrElse(spark.emptyDataFrame), sizes.toSeq)
   }
 
@@ -259,55 +268,50 @@ object Streams {
     val stats = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val ref = refShares.localCheckpoint() // (event_type, band, p_ref) grid
-    val q = events(spark, eventsPath, Map("maxFilesPerTrigger" -> "1"))
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val fp = CommitMarkers.fingerprint(batch)
-        if (!CommitMarkers.isCommitted(outDir, batchId, fp)) {
-          val counts = batch
-            .select(col("event_type"), expr(bandSql).as("band"))
-            .groupBy("event_type", "band").agg(count(lit(1)).as("c"))
-            .localCheckpoint()
-          val tot = counts.groupBy("event_type").agg(sum("c").as("n"))
-          val known = ref
-            .join(broadcast(tot), "event_type") // types present in batch
-            .join(counts, Seq("event_type", "band"), "left")
-            .select(col("event_type"), col("n"), col("p_ref"),
-              ((coalesce(col("c"), lit(0L)) + 0.5) / (col("n") + 5.0)).as("p_cur"))
-            .groupBy("event_type")
-            .agg(min("n").as("n_batch"),
-              round(sum((col("p_cur") - col("p_ref")) *
-                log(col("p_cur") / col("p_ref"))), 6).as("psi"))
-            .select(lit(batchId).as("batch_id"), col("event_type"),
-              col("n_batch"), col("psi"),
-              (col("psi") > psiThreshold).as("drifted"))
-          // batch types with NO reference profile: PSI is undefined
-          // against an absent distribution, but the break is certain —
-          // emit (psi = NULL, drifted = true) rather than drop the row
-          val novel = tot
-            .join(broadcast(ref.select("event_type").distinct()),
-              Seq("event_type"), "left_anti")
-            .select(lit(batchId).as("batch_id"), col("event_type"),
-              col("n").as("n_batch"),
-              lit(null).cast("double").as("psi"), lit(true).as("drifted"))
-          // accounting count observed during the WRITE itself
-          // (optimization r15 §12): the old shape paid a localCheckpoint
-          // + the write + a count — three jobs per batch where one
-          // materialization suffices (the write is the only consumer;
-          // `counts` stays pinned because tot and the band join both
-          // read it)
-          val obs = org.apache.spark.sql.Observation()
-          known.unionByName(novel).observe(obs, count(lit(1)).as("rows"))
-            .write.mode(SaveMode.Overwrite)
-            .parquet(s"$outDir/ingest_batch=$batchId")
-          CommitMarkers.commit(outDir, batchId, fp)
-          stats.put(batchId,
-            obs.get.get("rows").map(_.asInstanceOf[Long]).getOrElse(0L)): Unit
-          graft.plans.Iterate.release(counts)
-        }
+    drain(events(spark, eventsPath, Map("maxFilesPerTrigger" -> "1")),
+        OutputMode.Append()) { (batch, batchId) =>
+      val fp = CommitMarkers.fingerprint(batch)
+      if (!CommitMarkers.isCommitted(outDir, batchId, fp)) {
+        val counts = batch
+          .select(col("event_type"), expr(bandSql).as("band"))
+          .groupBy("event_type", "band").agg(count(lit(1)).as("c"))
+          .localCheckpoint()
+        val tot = counts.groupBy("event_type").agg(sum("c").as("n"))
+        val known = ref
+          .join(broadcast(tot), "event_type") // types present in batch
+          .join(counts, Seq("event_type", "band"), "left")
+          .select(col("event_type"), col("n"), col("p_ref"),
+            ((coalesce(col("c"), lit(0L)) + 0.5) / (col("n") + 5.0)).as("p_cur"))
+          .groupBy("event_type")
+          .agg(min("n").as("n_batch"),
+            round(sum((col("p_cur") - col("p_ref")) *
+              log(col("p_cur") / col("p_ref"))), 6).as("psi"))
+          .select(lit(batchId).as("batch_id"), col("event_type"),
+            col("n_batch"), col("psi"),
+            (col("psi") > psiThreshold).as("drifted"))
+        // batch types with NO reference profile: PSI is undefined
+        // against an absent distribution, but the break is certain —
+        // emit (psi = NULL, drifted = true) rather than drop the row
+        val novel = tot
+          .join(broadcast(ref.select("event_type").distinct()),
+            Seq("event_type"), "left_anti")
+          .select(lit(batchId).as("batch_id"), col("event_type"),
+            col("n").as("n_batch"),
+            lit(null).cast("double").as("psi"), lit(true).as("drifted"))
+        // accounting count observed during the WRITE itself: the write
+        // is the only consumer, so one materialization suffices
+        // (`counts` stays pinned because tot and the band join both
+        // read it)
+        val obs = org.apache.spark.sql.Observation()
+        known.unionByName(novel).observe(obs, count(lit(1)).as("rows"))
+          .write.mode(SaveMode.Overwrite)
+          .parquet(s"$outDir/ingest_batch=$batchId")
+        CommitMarkers.commit(outDir, batchId, fp)
+        stats.put(batchId,
+          obs.get.get("rows").map(_.asInstanceOf[Long]).getOrElse(0L)): Unit
+        graft.plans.Iterate.release(counts)
       }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    }
     graft.plans.Iterate.release(ref)
     import scala.jdk.CollectionConverters._
     stats.keySet().asScala.toSeq.sorted
@@ -333,35 +337,31 @@ object Streams {
     val ev = evalVecs
       .select(col("vec_id").as("eval_id"), col("embedding").as("eemb"))
       .localCheckpoint()
-    val q = embeddings(spark, vecsPath, Map("maxFilesPerTrigger" -> "1"))
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val fp = CommitMarkers.fingerprint(batch)
-        if (!CommitMarkers.isCommitted(outDir, batchId, fp)) {
-          // accounting count observed during the WRITE itself
-          // (optimization r15 §12: checkpoint + write + count -> one
-          // materialization; the write is the verdicts' only consumer)
-          val obs = org.apache.spark.sql.Observation()
-          batch.crossJoin(broadcast(ev))
-            .select(col("vec_id"), col("eval_id"),
-              round(graft.functions.VecOps.cosine(col("embedding"), col("eemb")), 6)
-                .as("sim"))
-            .groupBy("vec_id")
-            .agg(max(col("sim")).as("max_sim"),
-              max_by(col("eval_id"), struct(col("sim"), -col("eval_id")))
-                .as("nearest_eval"))
-            .select(col("vec_id"), col("max_sim"), col("nearest_eval"),
-              (col("max_sim") >= simThr).as("contaminated"))
-            .observe(obs, count(lit(1)).as("rows"))
-            .write.mode(SaveMode.Overwrite)
-            .parquet(s"$outDir/ingest_batch=$batchId")
-          CommitMarkers.commit(outDir, batchId, fp)
-          stats.put(batchId,
-            obs.get.get("rows").map(_.asInstanceOf[Long]).getOrElse(0L)): Unit
-        }
+    drain(embeddings(spark, vecsPath, Map("maxFilesPerTrigger" -> "1")),
+        OutputMode.Append()) { (batch, batchId) =>
+      val fp = CommitMarkers.fingerprint(batch)
+      if (!CommitMarkers.isCommitted(outDir, batchId, fp)) {
+        // accounting count observed during the WRITE itself (the
+        // write is the verdicts' only consumer)
+        val obs = org.apache.spark.sql.Observation()
+        batch.crossJoin(broadcast(ev))
+          .select(col("vec_id"), col("eval_id"),
+            round(graft.functions.VecOps.cosine(col("embedding"), col("eemb")), 6)
+              .as("sim"))
+          .groupBy("vec_id")
+          .agg(max(col("sim")).as("max_sim"),
+            max_by(col("eval_id"), struct(col("sim"), -col("eval_id")))
+              .as("nearest_eval"))
+          .select(col("vec_id"), col("max_sim"), col("nearest_eval"),
+            (col("max_sim") >= simThr).as("contaminated"))
+          .observe(obs, count(lit(1)).as("rows"))
+          .write.mode(SaveMode.Overwrite)
+          .parquet(s"$outDir/ingest_batch=$batchId")
+        CommitMarkers.commit(outDir, batchId, fp)
+        stats.put(batchId,
+          obs.get.get("rows").map(_.asInstanceOf[Long]).getOrElse(0L)): Unit
       }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    }
     graft.plans.Iterate.release(ev)
     import scala.jdk.CollectionConverters._
     stats.asScala.toSeq.sortBy(_._1)
@@ -529,6 +529,10 @@ object Streams {
     * replaceWhere over key partitions) — the streaming side is unchanged,
     * which is the point of the hook. Returns the final state.
     */
+  def runUpsertTotals(spark: SparkSession, eventsPath: String,
+      stateDir: String, options: Map[String, String] = Map.empty): DataFrame =
+    upsertTotals(spark, eventsPath, stateDir, options, changelog = false)
+
   /** [[runUpsertTotals]] plus a CHANGE DATA FEED: each micro-batch also
     * writes a changelog partition `changes/v<batchId>` of (user_id,
     * old_n, new_n, new_total) for exactly the keys it updated — old_n
@@ -538,17 +542,20 @@ object Streams {
     * bounded join per batch and downstream consumers can subscribe to
     * deltas without diffing snapshots (the Delta CDF shape). */
   def runUpsertTotalsWithChangelog(spark: SparkSession, eventsPath: String,
-      stateDir: String, options: Map[String, String] = Map.empty): DataFrame = {
+      stateDir: String, options: Map[String, String] = Map.empty): DataFrame =
+    upsertTotals(spark, eventsPath, stateDir, options, changelog = true)
+
+  private def upsertTotals(spark: SparkSession, eventsPath: String,
+      stateDir: String, options: Map[String, String],
+      changelog: Boolean): DataFrame = {
     import org.apache.spark.sql.SaveMode
-    val agg = events(spark, eventsPath, options)
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_events"), sum("value").as("total"))
+    val agg = userTotals(spark, eventsPath, options)
     val cur = new java.io.File(stateDir, "current")
-    recoverUpsertState(stateDir)
+    recoverUpsertState(stateDir) // repair any interrupted swap before serving
     withLiveTuning(spark, Seq(eventsPath)) {
-      val q = agg.writeStream.outputMode(OutputMode.Update())
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          recoverUpsertState(stateDir)
+      drain(agg, OutputMode.Update()) { (batch, batchId) =>
+        recoverUpsertState(stateDir)
+        if (changelog) {
           val old =
             if (cur.exists())
               spark.read.parquet(cur.getPath)
@@ -559,18 +566,18 @@ object Streams {
               round(col("total"), 2).as("new_total"))
             .coalesce(1).write.mode(SaveMode.Overwrite)
             .parquet(s"$stateDir/changes/v$batchId")
-          val merged =
-            if (cur.exists()) {
-              val state = spark.read.parquet(cur.getPath)
-              state.join(batch.select("user_id"), Seq("user_id"), "left_anti")
-                .unionByName(batch)
-            } else batch
-          val next = new java.io.File(stateDir, s"v$batchId")
-          merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(next.getPath)
-          promote(new java.io.File(stateDir), cur, next, batchId)
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        val merged =
+          if (cur.exists()) {
+            val state = spark.read.parquet(cur.getPath)
+            state.join(batch.select("user_id"), Seq("user_id"), "left_anti")
+              .unionByName(batch)
+          } else batch
+        val next = new java.io.File(stateDir, s"v$batchId")
+        merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(next.getPath)
+        // atomic swap: retire old state, promote the new version (checked)
+        promote(new java.io.File(stateDir), cur, next, batchId)
+      }
     }
     spark.read.parquet(cur.getPath)
   }
@@ -631,35 +638,6 @@ object Streams {
       sys.error(s"upsert sink: failed to sweep $f")
   }
 
-  def runUpsertTotals(spark: SparkSession, eventsPath: String,
-      stateDir: String, options: Map[String, String] = Map.empty): DataFrame = {
-    import org.apache.spark.sql.SaveMode
-    val agg = events(spark, eventsPath, options)
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_events"), sum("value").as("total"))
-    val cur = new java.io.File(stateDir, "current")
-    recoverUpsertState(stateDir) // repair any interrupted swap before serving
-    withLiveTuning(spark, Seq(eventsPath)) {
-      val q = agg.writeStream.outputMode(OutputMode.Update())
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          recoverUpsertState(stateDir)
-          val merged =
-            if (cur.exists()) {
-              val state = spark.read.parquet(cur.getPath)
-              state.join(batch.select("user_id"), Seq("user_id"), "left_anti")
-                .unionByName(batch)
-            } else batch
-          val next = new java.io.File(stateDir, s"v$batchId")
-          merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(next.getPath)
-          // atomic swap: retire old state, promote the new version (checked)
-          promote(new java.io.File(stateDir), cur, next, batchId)
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.read.parquet(cur.getPath)
-  }
-
   /** Per-user totals of ONE call, key-replaced into a [[TxLog]]-backed
     * MERGE table — the lake-scale form of [[runUpsertTotals]]. Each call
     * is a fresh stream whose aggregate accumulates `n_events`/`total`
@@ -668,64 +646,44 @@ object Streams {
     * holds this call's totals, NOT a sum with earlier calls' totals
     * (users it did not carry keep their rows). Each micro-batch commits
     * `{adds: [new part], removes: [old parts]}` atomically to the
-    * versioned log. Readers replay the log (snapshot isolation), any
-    * version stays addressable ([[readMergeTable]] time travel), a
-    * crash before the log rename leaves only invisible orphans
-    * (TxLog.vacuum sweeps them), and a concurrent-writer conflict
-    * surfaces as a failed rename → re-read + retry, never a lost
+    * versioned log through [[TxLog.commitRetrying]]. Readers replay the
+    * log (snapshot isolation), any version stays addressable
+    * ([[readMergeTable]] time travel), a crash before the commit leaves
+    * only invisible orphans (TxLog.vacuum sweeps them), and a
+    * concurrent-writer conflict re-reads and retries, never a lost
     * update. Returns the final snapshot. */
   def runMergeTotals(spark: SparkSession, eventsPath: String,
       tableDir: String, options: Map[String, String] = Map.empty,
       primitive: CommitPrimitive = TxLog.LocalFs): DataFrame = {
-    import org.apache.spark.sql.SaveMode
-    import java.nio.file.{Files, Paths}
-    val agg = events(spark, eventsPath, options)
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_events"), sum("value").as("total"))
-    Files.createDirectories(Paths.get(tableDir))
+    val agg = userTotals(spark, eventsPath, options)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tableDir))
     withLiveTuning(spark, Seq(eventsPath)) {
-      val q = agg.writeStream.outputMode(OutputMode.Update())
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          // the batch (a stateful aggregate) is evaluated ONCE, into the
-          // driver: one micro-batch's per-user rows, the side a join would
-          // broadcast anyway. Its keys then filter the state, which is
-          // only scanned, never shuffled; a null key is replaced like any
-          // other (`IN` never matches null, so it is tested apart)
-          lazy val rows = batch.collect()
-          var committed = false
-          var attempt = 0
-          while (!committed) {
-            val snap = TxLog.snapshot(tableDir)
-            val merged =
-              if (snap.files.nonEmpty) {
-                val keys = rows.map(_.getAs[Any]("user_id"))
-                val nullKey = keys.contains(null)
-                TxLog.read(spark, tableDir, snap, snap.files)
-                  .filter(coalesce(
-                    not(col("user_id").isInCollection(keys.filter(_ != null))),
-                    lit(!nullKey)))
-                  .unionByName(spark.createDataFrame(
-                    java.util.Arrays.asList(rows: _*), batch.schema))
-              } else batch
-            // stage the new part OUTSIDE the log, then move it in: until
-            // the commit entry lands, the file is an invisible orphan
-            val stage = Files.createTempDirectory("graft-merge-stage").toString
-            merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage)
-            val part = new java.io.File(stage).listFiles()
-              .filter(_.getName.endsWith(".parquet")).head
-            val name = s"part-b$batchId-a$attempt-${part.getName.stripPrefix("part-")}"
-            Files.move(part.toPath, Paths.get(tableDir, name))
-            committed = TxLog.commit(tableDir, Seq(name), snap.files,
-              expectedCurrent = snap.version, primitive = primitive,
-              schema = merged.schema).isDefined
-            if (!committed) { // conflict: orphan our part, re-read, retry
-              Files.deleteIfExists(Paths.get(tableDir, name)): Unit
-            }
-            attempt += 1
-          }
+      drain(agg, OutputMode.Update()) { (batch, batchId) =>
+        // the batch (a stateful aggregate) is evaluated ONCE and
+        // collected: one micro-batch's per-user rows, the side a join
+        // would broadcast anyway. Its keys then filter the state, which is
+        // only scanned, never shuffled; a null key is replaced like any
+        // other (`IN` never matches null, so it is tested apart)
+        lazy val rows = batch.collect()
+        var attempt = 0
+        TxLog.commitRetrying(tableDir, primitive) { snap =>
+          val merged =
+            if (snap.files.nonEmpty) {
+              val keys = rows.map(_.getAs[Any]("user_id"))
+              val nullKey = keys.contains(null)
+              TxLog.read(spark, tableDir, snap, snap.files)
+                .filter(coalesce(
+                  not(col("user_id").isInCollection(keys.filter(_ != null))),
+                  lit(!nullKey)))
+                .unionByName(spark.createDataFrame(
+                  java.util.Arrays.asList(rows: _*), batch.schema))
+            } else batch
+          val adds = MergeTable.writeParts(tableDir, merged, Seq.empty,
+            (_, part) => s"part-b$batchId-a$attempt-$part").values.toSeq
+          attempt += 1
+          Right(TxLog.Staged(adds, snap.files, merged.schema)(_ => ()))
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      }
     }
     readMergeTable(spark, tableDir)
   }
@@ -746,13 +704,10 @@ object Streams {
         hour(col("ts")).cast("long").as("hr"))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tableDir))
     withLiveTuning(spark, Seq(eventsPath)) {
-      val q = src.writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          MergeTable.appendWithBloom(spark, tableDir, batch, "user_id", buckets,
-            bloomCol, statsCols = Seq("hr")): Unit
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      drain(src, OutputMode.Append()) { (batch, _) =>
+        MergeTable.appendWithBloom(spark, tableDir, batch, "user_id", buckets,
+          bloomCol, statsCols = Seq("hr")): Unit
+      }
     }
     readMergeTable(spark, tableDir)
   }
@@ -912,109 +867,104 @@ object Streams {
     val stats = new java.util.concurrent.ConcurrentHashMap[Long, NearDupBatchStat]()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(storeDir))
     pinSigBuckets(storeDir, sigBuckets) // layout contract: fail loudly on width drift
-    val q = documents(spark, docsPath, Map("maxFilesPerTrigger" -> "1"))
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val fp = CommitMarkers.fingerprint(batch)
-        if (!CommitMarkers.isCommitted(storeDir, batchId, fp)) {
-          // retry of a fully-committed batch: skip.
-          // The probe's (band, sig_bucket) cell set is OBSERVED during
-          // the sigs pin itself (optimization r15 §12): the old shape
-          // paid a separate distinct+collect job per batch on top of
-          // the checkpoint
-          val (sigs, cellsM) = graft.plans.Iterate.pinObserved(
-            nearDupSigs(batch, sigBuckets),
-            collect_set(struct(col("band"), col("sig_bucket"))))
-          // a MISSING metric is a mechanism failure, not an empty batch
-          // (collect_set over zero rows yields an empty array, not null):
-          // silently probing zero cells would commit every doc as
-          // not-a-dup — fail loudly instead
-          val batchCells = cellsM match {
-            case Some(rows) => rows.asInstanceOf[Seq[org.apache.spark.sql.Row]]
-              .map(r => (r.getLong(0), r.getLong(1)))
-            case None => sys.error(
-              s"near-dup ingest batch $batchId: observed cell-set metric missing")
-          }
-          val (matches, probeFiles, storeFiles, cells) =
-            probeNearDupStore(spark, storeDir, sigs, batchId,
-              knownCells = Some(batchCells))
-          batch.select(col("doc_id"))
-            .join(matches, Seq("doc_id"), "left")
-            .select(col("doc_id"),
-              coalesce(col("n_corpus_matches"), lit(0L)).as("n_corpus_matches"),
-              col("first_match"),
-              col("first_match").isNotNull.as("is_dup"))
-            .write.mode(SaveMode.Overwrite)
-            .parquet(s"$outDir/ingest_batch=$batchId")
-          // probe-then-append: a batch must never match ITSELF (the
-          // incremental contract — within-delta dups are a different
-          // query), so the store append strictly follows the probe.
-          // Repartition on the cell key first: each cell then lands in
-          // exactly one task → ONE file per cell per subtree, not one
-          // per (cell × writing task) — the file-count term the probe's
-          // listing pays forever
-          sigs.repartition(col("band"), col("sig_bucket"))
-            .write.mode(SaveMode.Overwrite)
-            .partitionBy("band", "sig_bucket")
-            .parquet(s"$storeDir/ingest_batch=$batchId")
-          CommitMarkers.commit(storeDir, batchId, fp)
-          stats.put(batchId,
-            NearDupBatchStat(batchId, storeFiles, probeFiles, cells)): Unit
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-            // TIERED fold (the LSM shape): normally fold only the
-            // per-batch subtrees into ONE new fold — an O(recent
-            // batches) rewrite, NOT O(corpus); when the fold chain
-            // itself exceeds maxFolds, merge everything (rare: every
-            // compactEvery × maxFolds batches, amortized O(corpus /
-            // (compactEvery × maxFolds)) per batch). A store folded
-            // whole every cycle would rewrite 100 TB every k batches —
-            // the verdict-r10 scan problem moved from reads to writes.
-            val live = nearDupBatchDirs(storeDir)
-            val folds = live.filter(
-              _.getName.stripPrefix("ingest_batch=").toLong < 0)
-            val singles = live.filterNot(folds.contains)
-            val toFold =
-              if (folds.length >= maxFolds) live
-              else if (singles.length > 1) singles
-              else Array.empty[java.io.File]
-            if (toFold.length > 1) {
-              // a batch of all-too-short docs leaves a DATALESS subtree
-              // (its Overwrite wrote only _SUCCESS); reading a source
-              // list with no parquet files at all would throw on schema
-              // inference — fold only the subtrees carrying data, but
-              // drop every folded-away dir either way
-              val withData = toFold.filter(parquetFilesUnder(_) > 0)
-              if (withData.nonEmpty) {
-                // store-derived fold id (ADVICE r13 high, same hazard
-                // as the ANF edge store): one below the smallest live
-                // fold id is fresh under any resume history, still
-                // negative so it never collides with a real
-                // (non-negative) batch's exclude filter
-                val nextFoldId = live
-                  .map(_.getName.stripPrefix("ingest_batch=").toLong)
-                  .filter(_ < 0).minOption.getOrElse(0L) - 1
-                val foldDir = s"$storeDir/ingest_batch=$nextFoldId"
-                spark.read.option("basePath", storeDir)
-                  .parquet(withData.map(_.getPath).toIndexedSeq: _*)
-                  .select("doc_id", "band_sig", "band", "sig_bucket")
-                  .distinct()
-                  .repartition(col("band"), col("sig_bucket"))
-                  .write.mode(SaveMode.Overwrite)
-                  .partitionBy("band", "sig_bucket").parquet(foldDir)
+    drain(documents(spark, docsPath, Map("maxFilesPerTrigger" -> "1")),
+        OutputMode.Append()) { (batch, batchId) =>
+      val fp = CommitMarkers.fingerprint(batch)
+      if (!CommitMarkers.isCommitted(storeDir, batchId, fp)) {
+        // retry of a fully-committed batch: skip.
+        // The probe's (band, sig_bucket) cell set is OBSERVED during
+        // the sigs pin itself, with no job of its own
+        val (sigs, cellsM) = graft.plans.Iterate.pinObserved(
+          nearDupSigs(batch, sigBuckets),
+          collect_set(struct(col("band"), col("sig_bucket"))))
+        // a MISSING metric is a mechanism failure, not an empty batch
+        // (collect_set over zero rows yields an empty array, not null):
+        // silently probing zero cells would commit every doc as
+        // not-a-dup — fail loudly instead
+        val batchCells = cellsM match {
+          case Some(rows) => rows.asInstanceOf[Seq[org.apache.spark.sql.Row]]
+            .map(r => (r.getLong(0), r.getLong(1)))
+          case None => sys.error(
+            s"near-dup ingest batch $batchId: observed cell-set metric missing")
+        }
+        val (matches, probeFiles, storeFiles, cells) =
+          probeNearDupStore(spark, storeDir, sigs, batchId,
+            knownCells = Some(batchCells))
+        batch.select(col("doc_id"))
+          .join(matches, Seq("doc_id"), "left")
+          .select(col("doc_id"),
+            coalesce(col("n_corpus_matches"), lit(0L)).as("n_corpus_matches"),
+            col("first_match"),
+            col("first_match").isNotNull.as("is_dup"))
+          .write.mode(SaveMode.Overwrite)
+          .parquet(s"$outDir/ingest_batch=$batchId")
+        // probe-then-append: a batch must never match ITSELF (the
+        // incremental contract — within-delta dups are a different
+        // query), so the store append strictly follows the probe.
+        // Repartition on the cell key first: each cell then lands in
+        // exactly one task → ONE file per cell per subtree, not one
+        // per (cell × writing task) — the file-count term the probe's
+        // listing pays forever
+        sigs.repartition(col("band"), col("sig_bucket"))
+          .write.mode(SaveMode.Overwrite)
+          .partitionBy("band", "sig_bucket")
+          .parquet(s"$storeDir/ingest_batch=$batchId")
+        CommitMarkers.commit(storeDir, batchId, fp)
+        stats.put(batchId,
+          NearDupBatchStat(batchId, storeFiles, probeFiles, cells)): Unit
+        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
+          // TIERED fold (the LSM shape): normally fold only the
+          // per-batch subtrees into ONE new fold — an O(recent
+          // batches) rewrite, NOT O(corpus); when the fold chain
+          // itself exceeds maxFolds, merge everything (rare: every
+          // compactEvery × maxFolds batches, amortized O(corpus /
+          // (compactEvery × maxFolds)) per batch). A store folded
+          // whole every cycle would rewrite 100 TB every k batches —
+          // the verdict-r10 scan problem moved from reads to writes.
+          val live = nearDupBatchDirs(storeDir)
+          val folds = live.filter(
+            _.getName.stripPrefix("ingest_batch=").toLong < 0)
+          val singles = live.filterNot(folds.contains)
+          val toFold =
+            if (folds.length >= maxFolds) live
+            else if (singles.length > 1) singles
+            else Array.empty[java.io.File]
+          if (toFold.length > 1) {
+            // a batch of all-too-short docs leaves a DATALESS subtree
+            // (its Overwrite wrote only _SUCCESS); reading a source
+            // list with no parquet files at all would throw on schema
+            // inference — fold only the subtrees carrying data, but
+            // drop every folded-away dir either way
+            val withData = toFold.filter(parquetFilesUnder(_) > 0)
+            if (withData.nonEmpty) {
+              // store-derived fold id (ADVICE r13 high, same hazard
+              // as the ANF edge store): one below the smallest live
+              // fold id is fresh under any resume history, still
+              // negative so it never collides with a real
+              // (non-negative) batch's exclude filter
+              val nextFoldId = live
+                .map(_.getName.stripPrefix("ingest_batch=").toLong)
+                .filter(_ < 0).minOption.getOrElse(0L) - 1
+              val foldDir = s"$storeDir/ingest_batch=$nextFoldId"
+              spark.read.option("basePath", storeDir)
+                .parquet(withData.map(_.getPath).toIndexedSeq: _*)
+                .select("doc_id", "band_sig", "band", "sig_bucket")
+                .distinct()
+                .repartition(col("band"), col("sig_bucket"))
+                .write.mode(SaveMode.Overwrite)
+                .partitionBy("band", "sig_bucket").parquet(foldDir)
+            }
+            toFold.foreach { d => // fold committed: drop the sources
+              def rm(f: java.io.File): Unit = {
+                if (f.isDirectory) f.listFiles().foreach(rm)
+                f.delete(): Unit
               }
-              toFold.foreach { d => // fold committed: drop the sources
-                def rm(f: java.io.File): Unit = {
-                  if (f.isDirectory) f.listFiles().foreach(rm)
-                  f.delete(): Unit
-                }
-                rm(d)
-              }
+              rm(d)
             }
           }
         }
       }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    }
     import scala.jdk.CollectionConverters._
     stats.values.asScala.toSeq.sortBy(_.batchId)
   }
@@ -1245,112 +1195,108 @@ object Streams {
           toFold.foreach(rmTree)
         }
       }
-    val q = src.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val fp = CommitMarkers.fingerprint(batch)
-        if (CommitMarkers.isCommitted(regDir, batchId, fp)) {
-          // replay of a fully-committed batch: skip
-          rounds += 0
+    drain(src, OutputMode.Append()) { (batch, batchId) =>
+      val fp = CommitMarkers.fingerprint(batch)
+      if (CommitMarkers.isCommitted(regDir, batchId, fp)) {
+        // replay of a fully-committed batch: skip
+        rounds += 0
+        roundStats += Seq.empty: Unit
+      } else {
+      // Δ-side hygiene only: dedup THIS batch's edges, drop self-loops
+      // (bit_or makes cross-batch duplicates harmless, so the full
+      // relation is never re-distincted). Emptiness gate observed
+      // during the pin, with no job of its own
+      val (dE, nDE) = graft.plans.Iterate.pinCountAll(
+        batch.select("src", "dst")
+          .filter(col("src") =!= col("dst")).distinct())
+      if (nDE == 0) {
+        graft.plans.Iterate.release(dE)
+        rounds += 0
+        roundStats += Seq.empty: Unit
+      } else {
+        // per-batch subtree, Overwrite: a replayed crashed batch lands
+        // byte-identically instead of Append-doubling its edges.
+        // Repartition on the bucket key first — one file per touched
+        // bucket per subtree, not one per (bucket × writing task)
+        dE.withColumn("db", pmod(hash(col("dst")), lit(nB)))
+          .repartition(col("db"))
+          .write.mode(SaveMode.Overwrite).partitionBy("db")
+          .parquet(s"$storeDir/ingest_batch=$batchId")
+        if (!seeded) { // cold start on the first batch's own edges
+          val (m0, r, _, curve) = graft.operators.Graph.anfSketch(dE)
+          m0.withColumn("vb", pmod(hash(col("v")), lit(rB)))
+            .repartition(col("vb"))
+            .write.mode(SaveMode.Overwrite).partitionBy("vb")
+            .parquet(s"$regDir/commit=$batchId")
+          // pinned returns are dead once the store holds them — the
+          // per-round curve included (one V×(rounds+1) checkpoint)
+          Seq(m0, curve).foreach(graft.plans.Iterate.release)
+          seeded = true
+          rounds += r
           roundStats += Seq.empty: Unit
         } else {
-        // Δ-side hygiene only: dedup THIS batch's edges, drop self-loops
-        // (bit_or makes cross-batch duplicates harmless, so the full
-        // relation is never re-distincted). Emptiness gate observed
-        // during the pin (optimization r15 §12: pin + head(1) -> one job)
-        val (dE, nDE) = graft.plans.Iterate.pinCountAll(
-          batch.select("src", "dst")
-            .filter(col("src") =!= col("dst")).distinct())
-        if (nDE == 0) {
-          graft.plans.Iterate.release(dE)
-          rounds += 0
-          roundStats += Seq.empty: Unit
-        } else {
-          // per-batch subtree, Overwrite: a replayed crashed batch lands
-          // byte-identically instead of Append-doubling its edges.
-          // Repartition on the bucket key first — one file per touched
-          // bucket per subtree, not one per (bucket × writing task)
-          dE.withColumn("db", pmod(hash(col("dst")), lit(nB)))
-            .repartition(col("db"))
-            .write.mode(SaveMode.Overwrite).partitionBy("db")
-            .parquet(s"$storeDir/ingest_batch=$batchId")
-          if (!seeded) { // cold start on the first batch's own edges
-            val (m0, r, _, curve) = graft.operators.Graph.anfSketch(dE)
-            m0.withColumn("vb", pmod(hash(col("v")), lit(rB)))
+          val base = anfRegView(spark, regDir)
+          val acc = spark.read.option("basePath", storeDir)
+            .parquet(anfEdgeDirs(storeDir).map(_.getPath): _*)
+            .select("src", "dst", "db")
+          val (up, r, st) = graft.operators.Graph.anfDeltaRows(base, acc, dE,
+            dstBuckets = nB, regBuckets = rB)
+          // one narrow collect serves BOTH the emptiness gate and the
+          // touched-bucket set (every upsert row has a bucket, so bks
+          // nonEmpty iff up nonEmpty)
+          val bks = up.select(pmod(hash(col("v")), lit(rB)).as("vb"))
+            .distinct().collect().map(_.getInt(0)).toSeq
+          if (bks.nonEmpty) {
+            // versioned bucket rewrite: merge the touched buckets'
+            // survivors with the new rows into a FRESH commit subtree
+            // — the write never replaces the files it reads, so no
+            // defensive materialization and no crash window over the
+            // committed view
+            base.filter(col("vb").isin(bks: _*))
+              .select("v", "k", "mask")
+              .join(up.select("v", "k"), Seq("v", "k"), "left_anti")
+              .unionAll(up)
+              .withColumn("vb", pmod(hash(col("v")), lit(rB)))
               .repartition(col("vb"))
               .write.mode(SaveMode.Overwrite).partitionBy("vb")
               .parquet(s"$regDir/commit=$batchId")
-            // pinned returns are dead once the store holds them — the
-            // per-round curve included (one V×(rounds+1) checkpoint)
-            Seq(m0, curve).foreach(graft.plans.Iterate.release)
-            seeded = true
-            rounds += r
-            roundStats += Seq.empty: Unit
-          } else {
-            val base = anfRegView(spark, regDir)
-            val acc = spark.read.option("basePath", storeDir)
-              .parquet(anfEdgeDirs(storeDir).map(_.getPath): _*)
-              .select("src", "dst", "db")
-            val (up, r, st) = graft.operators.Graph.anfDeltaRows(base, acc, dE,
-              dstBuckets = nB, regBuckets = rB)
-            // one narrow collect serves BOTH the emptiness gate and the
-            // touched-bucket set (optimization r15 §12: every upsert row
-            // has a bucket, so bks nonEmpty iff up nonEmpty — the old
-            // shape paid a head(1) job plus this collect)
-            val bks = up.select(pmod(hash(col("v")), lit(rB)).as("vb"))
-              .distinct().collect().map(_.getInt(0)).toSeq
-            if (bks.nonEmpty) {
-              // versioned bucket rewrite: merge the touched buckets'
-              // survivors with the new rows into a FRESH commit subtree
-              // — the write never replaces the files it reads, so no
-              // defensive materialization and no crash window over the
-              // committed view
-              base.filter(col("vb").isin(bks: _*))
-                .select("v", "k", "mask")
-                .join(up.select("v", "k"), Seq("v", "k"), "left_anti")
-                .unionAll(up)
-                .withColumn("vb", pmod(hash(col("v")), lit(rB)))
-                .repartition(col("vb"))
-                .write.mode(SaveMode.Overwrite).partitionBy("vb")
-                .parquet(s"$regDir/commit=$batchId")
-            }
-            graft.plans.Iterate.release(up)
-            rounds += r
-            roundStats += st: Unit
           }
-          graft.plans.Iterate.release(dE)
-          // commit point: the batch is visible (census-folded past the
-          // bound — replay-skip consults markers AND watermark)
-          CommitMarkers.commit(regDir, batchId, fp, markerFoldAt)
-          // GC superseded register leaves (marker is down, so readers
-          // already prefer this commit's buckets); drop commit dirs
-          // left empty so the listing stays O(buckets)
-          val thisCommit = new java.io.File(regDir, s"commit=$batchId")
-          val mine = Option(thisCommit.listFiles()).getOrElse(Array.empty)
-            .filter(g => g.isDirectory && g.getName.startsWith("vb="))
-            .map(_.getName).toSet
-          for {
-            c <- Option(new java.io.File(regDir).listFiles()).getOrElse(Array.empty)
-            if c.isDirectory && c.getName.startsWith("commit=")
-            if c.getName.stripPrefix("commit=").toLong < batchId
-            vb <- Option(c.listFiles()).getOrElse(Array.empty)
-            if vb.isDirectory && mine.contains(vb.getName)
-          } rmTree(vb)
-          // an emptied commit DIR goes; its marker STAYS — the marker is
-          // also the batch's processed-record, and deleting it would
-          // make a replay recompute a fully-committed batch
-          for {
-            c <- Option(new java.io.File(regDir).listFiles()).getOrElse(Array.empty)
-            if c.isDirectory && c.getName.startsWith("commit=")
-            if !Option(c.listFiles()).getOrElse(Array.empty)
-              .exists(g => g.isDirectory && g.getName.startsWith("vb="))
-          } rmTree(c)
+          graft.plans.Iterate.release(up)
+          rounds += r
+          roundStats += st: Unit
         }
-        }
-        maybeFold(batchId)
-        storeFiles += parquetFiles(new java.io.File(storeDir)): Unit
+        graft.plans.Iterate.release(dE)
+        // commit point: the batch is visible (census-folded past the
+        // bound — replay-skip consults markers AND watermark)
+        CommitMarkers.commit(regDir, batchId, fp, markerFoldAt)
+        // GC superseded register leaves (marker is down, so readers
+        // already prefer this commit's buckets); drop commit dirs
+        // left empty so the listing stays O(buckets)
+        val thisCommit = new java.io.File(regDir, s"commit=$batchId")
+        val mine = Option(thisCommit.listFiles()).getOrElse(Array.empty)
+          .filter(g => g.isDirectory && g.getName.startsWith("vb="))
+          .map(_.getName).toSet
+        for {
+          c <- Option(new java.io.File(regDir).listFiles()).getOrElse(Array.empty)
+          if c.isDirectory && c.getName.startsWith("commit=")
+          if c.getName.stripPrefix("commit=").toLong < batchId
+          vb <- Option(c.listFiles()).getOrElse(Array.empty)
+          if vb.isDirectory && mine.contains(vb.getName)
+        } rmTree(vb)
+        // an emptied commit DIR goes; its marker STAYS — the marker is
+        // also the batch's processed-record, and deleting it would
+        // make a replay recompute a fully-committed batch
+        for {
+          c <- Option(new java.io.File(regDir).listFiles()).getOrElse(Array.empty)
+          if c.isDirectory && c.getName.startsWith("commit=")
+          if !Option(c.listFiles()).getOrElse(Array.empty)
+            .exists(g => g.isDirectory && g.getName.startsWith("vb="))
+        } rmTree(c)
       }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      }
+      maybeFold(batchId)
+      storeFiles += parquetFiles(new java.io.File(storeDir)): Unit
+    }
     val masks =
       if (seeded) anfRegView(spark, regDir).select("v", "k", "mask")
       else spark.emptyDataFrame
@@ -1374,19 +1320,16 @@ object Streams {
         hour(col("ts")).cast("long").as("hr"))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tableDir))
     withLiveTuning(spark, Seq(eventsPath)) {
-      val q = src.writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          if (TxLog.versions(tableDir).isEmpty)
-            MergeTable.load(spark, tableDir, batch, "user_id", buckets): Unit
-          else
-            MergeTable.append(spark, tableDir, batch, "user_id", buckets,
-              statsCols = Seq("hr")): Unit
-          val v = TxLog.snapshot(tableDir).version
-          if (compactEvery > 0 && v > 0 && v % compactEvery == 0)
-            MergeTable.compact(spark, tableDir, "user_id", buckets): Unit
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      drain(src, OutputMode.Append()) { (batch, _) =>
+        if (TxLog.versions(tableDir).isEmpty)
+          MergeTable.load(spark, tableDir, batch, "user_id", buckets): Unit
+        else
+          MergeTable.append(spark, tableDir, batch, "user_id", buckets,
+            statsCols = Seq("hr")): Unit
+        val v = TxLog.snapshot(tableDir).version
+        if (compactEvery > 0 && v > 0 && v % compactEvery == 0)
+          MergeTable.compact(spark, tableDir, "user_id", buckets): Unit
+      }
     }
     readMergeTable(spark, tableDir)
   }
@@ -1402,22 +1345,17 @@ object Streams {
   def runMergeBucketed(spark: SparkSession, eventsPath: String,
       tableDir: String, buckets: Int = 8,
       options: Map[String, String] = Map.empty): DataFrame = {
-    val agg = events(spark, eventsPath, options)
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_events"), sum("value").as("total"))
+    val agg = userTotals(spark, eventsPath, options)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tableDir))
     withLiveTuning(spark, Seq(eventsPath)) {
-      val q = agg.writeStream.outputMode(OutputMode.Update())
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          // update mode hands exactly the changed keys with their NEW
-          // cumulative values — precisely mergeInto's key-replacement input
-          if (TxLog.versions(tableDir).isEmpty)
-            MergeTable.load(spark, tableDir, batch, "user_id", buckets): Unit
-          else
-            MergeTable.mergeInto(spark, tableDir, batch, "user_id", buckets): Unit
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      drain(agg, OutputMode.Update()) { (batch, _) =>
+        // update mode hands exactly the changed keys with their NEW
+        // cumulative values — precisely mergeInto's key-replacement input
+        if (TxLog.versions(tableDir).isEmpty)
+          MergeTable.load(spark, tableDir, batch, "user_id", buckets): Unit
+        else
+          MergeTable.mergeInto(spark, tableDir, batch, "user_id", buckets): Unit
+      }
     }
     readMergeTable(spark, tableDir)
   }

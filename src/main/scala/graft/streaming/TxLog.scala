@@ -121,7 +121,7 @@ object TxLog {
 
   /** Data files younger than this survive [[vacuum]] by default: a
     * concurrent writer stages bucket/part files BEFORE its commit entry
-    * lands (MergeTable.writeBucket, runMergeTotals), so an age-blind
+    * lands (MergeTable.writeParts), so an age-blind
     * sweep could delete files an in-flight commit is about to reference.
     * 10 minutes comfortably exceeds any single commit's write window;
     * pass `minAgeMs = 0` only when no writer can be live (tests, offline
@@ -329,7 +329,8 @@ object TxLog {
 
   /** Atomically commit `version` = current + 1 through `primitive`.
     * Returns the committed version, or None on a CONFLICT (someone else
-    * committed that version first — re-read the snapshot and retry).
+    * committed that version first — [[commitRetrying]] re-reads the
+    * snapshot and retries).
     * File names are relative to the table root; names containing `"` or
     * `,` would corrupt the regex replay, so they are rejected HERE, at
     * write time, instead of corrupting every later read. `schema` is the
@@ -366,6 +367,37 @@ object TxLog {
     if (primitive.createExclusive(d.resolve(s"$next.json"), entry.getBytes("UTF-8")))
       Some(next)
     else None
+  }
+
+  /** What one attempt of [[commitRetrying]] commits: the data files it
+    * staged in the table (`adds`, deleted again if the commit loses the
+    * race), the files it supersedes, the adds' schema and stats, and
+    * `after`, run once on the committed version to give the result. */
+  final case class Staged[+T](adds: Seq[String], removes: Seq[String],
+      schema: StructType, stats: Map[String, Map[String, (Long, Long)]] = Map.empty)(
+      val after: Long => T)
+
+  /** The optimistic commit loop every writer of a table runs: read the
+    * snapshot, run `attempt` on it, [[commit]] what it staged on top of
+    * that snapshot's version, and on a conflict delete the attempt's
+    * staged adds and start over from a fresh snapshot. An attempt
+    * returns `Left(result)` when it has nothing to commit (and staged
+    * nothing), else `Right(staged)`; the loop returns `staged.after` of
+    * the version that landed. */
+  @scala.annotation.tailrec
+  def commitRetrying[T](table: String, primitive: CommitPrimitive = LocalFs)(
+      attempt: Snapshot => Either[T, Staged[T]]): T = {
+    val snap = snapshot(table)
+    attempt(snap) match {
+      case Left(result) => result
+      case Right(s) =>
+        commit(table, s.adds, s.removes, snap.version, s.schema, primitive, s.stats) match {
+          case Some(v) => s.after(v)
+          case None =>
+            s.adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
+            commitRetrying(table, primitive)(attempt)
+        }
+    }
   }
 
   /** Commit wall-clock time of a version, for timestamp time travel:

@@ -35,6 +35,12 @@ class ContainmentPrefixSpec extends AnyFunSuite {
       .filter(col("cont") >= t)
   }
 
+  /** String grams, independent of the gram-hash kernel. */
+  private def stringGrams(docsDf: DataFrame): DataFrame =
+    docsDf.select(col("doc_id"),
+      explode(functions.TextHash.distinctNGrams(
+        operators.TextExprs.toks(col("text")), 3)).as("gram"))
+
   /** Seeded corpus with (a) a boilerplate sentence in EVERY doc — one
     * hot gram family shared by all n docs — and (b) injected subset
     * duplication: every 7th doc is a shorter doc's text wrapped in
@@ -109,5 +115,19 @@ class ContainmentPrefixSpec extends AnyFunSuite {
       s"candidates $nCand should be far below all-pairs $allPairs")
     assert(nCand <= math.max(50L, nTrue * 20),
       s"candidates $nCand should stay near true pairs $nTrue")
+  }
+
+  test("hashed pipeline equals brute force on string grams") {
+    // truth built on the gram strings themselves, so a hash kernel that
+    // merged or dropped grams would show here as a pair-set difference
+    val docsDf = skewedCorpus(150, seed = 43)
+    val truth = brute(stringGrams(docsDf), 0.8).select("doc_a", "doc_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val got = operators.Dedup.containmentPairs(grams(docsDf).localCheckpoint(), 0.8)
+      .select(least(col("contained"), col("container")),
+        greatest(col("contained"), col("container")))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(truth.nonEmpty, "corpus must contain injected containment pairs")
+    assert(got == truth)
   }
 }

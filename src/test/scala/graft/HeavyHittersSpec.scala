@@ -38,27 +38,16 @@ class HeavyHittersSpec extends AnyFunSuite {
       .filter(col("cnt") * 200 > total)
       .collect().map(_.getString(0)).toSet
     assert(truth == (0 until 5).map(i => s"heavy$i").toSet)
-    // run the same MG pipeline shape the row uses, over this corpus
-    val cands = tk.as[String].mapPartitions { it =>
-      val k = 512
-      val m = new java.util.HashMap[String, Long](k * 2)
-      it.foreach { t =>
-        val cur = m.get(t)
-        if (cur != null) m.put(t, cur + 1L)
-        else if (m.size < k) m.put(t, 1L)
-        else {
-          val del = new java.util.ArrayList[String]()
-          val e = m.entrySet().iterator()
-          while (e.hasNext) {
-            val kv = e.next()
-            if (kv.getValue == 1L) del.add(kv.getKey)
-            else kv.setValue(kv.getValue - 1L)
-          }
-          del.forEach(x => { m.remove(x): Unit })
-        }
-      }
-      scala.jdk.CollectionConverters.IteratorHasAsScala(m.keySet().iterator()).asScala
-    }.collect().toSet
+    // the row's own sketch, over this corpus
+    val cands = tk.as[String].mapPartitions(operators.TextAnalysis.misraGries(_))
+      .collect().toSet
+    // the k = 512 bound holds: a sketch that never evicts would keep
+    // each partition's ~5,000 distinct tail tokens
+    val perPartition = tk.as[String]
+      .mapPartitions(it => Iterator(operators.TextAnalysis.misraGries(it).size))
+      .collect()
+    assert(perPartition.length == 8 && perPartition.forall(_ <= 512),
+      s"candidates per partition: ${perPartition.mkString(",")}")
     assert(truth.subsetOf(cands), s"MG lost ${truth.diff(cands)}")
   }
 }

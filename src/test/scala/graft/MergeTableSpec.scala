@@ -354,4 +354,76 @@ class MergeTableSpec extends AnyFunSuite {
     assert(TxLog.vacuum(table, minAgeMs = 0L) === Seq.empty,
       "compaction's conflicted first attempt must self-clean")
   }
+
+  /** A primitive that runs `race` once, just before delegating the
+    * first commit attempt it sees: that attempt then loses its version. */
+  private def racingOnce(race: => Unit) = {
+    val raced = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val primitive = new graft.streaming.CommitPrimitive {
+      def createExclusive(target: java.nio.file.Path, content: Array[Byte]): Boolean = {
+        if (raced.compareAndSet(false, true)) race
+        TxLog.LocalFs.createExclusive(target, content)
+      }
+    }
+    (primitive, raced)
+  }
+
+  test("concurrent append: the retried commit's files carry the stats and sidecars") {
+    val table = GraftSession.tempDirCleanedOnExit("spec-mergetbl-append-race").toString
+    MergeTable.load(spark, table,
+      (0L until 8L).map(i => (i, i, 0.0)).toDF("k", "hr", "v"), "k", buckets = 2)
+    val rows = (100L until 140L).map(i => (i, i % 5, 1.0)).toDF("k", "hr", "v")
+    val (plain, plainRaced) = racingOnce(
+      MergeTable.mergeInto(spark, table, Seq((1L, 1L, -1.0)).toDF("k", "hr", "v"),
+        "k", buckets = 2): Unit)
+    val v1 = MergeTable.append(spark, table, rows, "k", buckets = 2,
+      primitive = plain, statsCols = Seq("hr"))
+    assert(plainRaced.get && v1 === 2L, "append read v0, lost v1, committed v2")
+    val (bloomed, bloomRaced) = racingOnce(
+      MergeTable.mergeInto(spark, table, Seq((2L, 2L, -2.0)).toDF("k", "hr", "v"),
+        "k", buckets = 2): Unit)
+    val v2 = MergeTable.appendWithBloom(spark, table,
+      (200L until 240L).map(i => (i, 10 + i % 5, 2.0)).toDF("k", "hr", "v"),
+      "k", buckets = 2, bloomCol = "hr", primitive = bloomed, statsCols = Seq("hr"))
+    assert(bloomRaced.get && v2 === 4L, "appendWithBloom read v2, lost v3, committed v4")
+    Seq((2L, 0L, 4L), (4L, 10L, 14L)).foreach { case (v, lo, hi) =>
+      val snap = TxLog.snapshot(table, Some(v))
+      val added = snap.files.filter(_.contains(s"-v$v-"))
+      assert(added.length === 2, s"v$v adds one file per bucket")
+      assert(added.forall(f => snap.stats(f)("hr")._1 >= lo && snap.stats(f)("hr")._2 <= hi),
+        s"v$v files carry this batch's hr stats: ${added.map(snap.stats.get)}")
+    }
+    TxLog.snapshot(table).files.filter(_.contains("-v4-")).foreach { f =>
+      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(table, f + ".bloom")),
+        s"retried file $f carries its sidecar")
+    }
+    assert(MergeTable.scanPoint(spark, table, "hr", lit(12L)).count() === 8L)
+    assert(MergeTable.read(spark, table).count() === 88L)
+    assert(TxLog.vacuum(table, minAgeMs = 0L) === Seq.empty,
+      "each append's conflicted first attempt must self-clean")
+  }
+
+  test("concurrent optimizeZorder: the retried files carry z-intervals; the lost attempt is clean") {
+    val table = GraftSession.tempDirCleanedOnExit("spec-mergetbl-zorder-race").toString
+    val bits = 4
+    val rows = (0L until 200L).map(i => (i, i % 16, (i / 16) % 16)).toDF("k", "x", "y")
+    MergeTable.load(spark, table, rows, "k", buckets = 2)
+    val (racing, raced) = racingOnce(
+      MergeTable.mergeInto(spark, table, Seq((3L, 15L, 15L)).toDF("k", "x", "y"),
+        "k", buckets = 2): Unit)
+    val (v, rewritten) = MergeTable.optimizeZorder(spark, table, "k", buckets = 2,
+      "x", "y", bits, chunks = 4, primitive = racing)
+    assert(raced.get && v === 2L && rewritten === Seq(0, 1))
+    val snap = TxLog.snapshot(table)
+    assert(snap.files.length === 8 && snap.files.forall(_.contains("-v2-zc")))
+    assert(snap.files.forall(f => snap.stats(f).contains(s"__z:x:y:$bits")),
+      "every retried chunk file records its z-interval")
+    assert(MergeTable.read(spark, table).filter(col("k") === 3L)
+      .select("x", "y").as[(Long, Long)].collect().toSeq === Seq((15L, 15L)),
+      "the retry rewrote the winner's state")
+    assert(MergeTable.scanBox(spark, table, "x", "y", 15, 15, 15, 15, bits)
+      .count() === rows.filter(col("x") === 15 && col("y") === 15).count() + 1)
+    assert(TxLog.vacuum(table, minAgeMs = 0L) === Seq.empty,
+      "the lost attempt's chunk files must self-clean")
+  }
 }

@@ -466,4 +466,45 @@ class TxLogSpec extends AnyFunSuite {
     assert(TxLog.vacuum(table, minAgeMs = 0L) === Seq.empty,
       "conflicted attempts must self-clean their staged parts")
   }
+
+  test("the table writers leave no stage dir behind, a lost commit included") {
+    import spark.implicits._
+    def stageDirs(): Set[String] =
+      Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+        .getOrElse(Array.empty[String]).filter(_.startsWith("graft-merge")).toSet
+    val before = stageDirs()
+    // the merge sink, with its version-1 commit rejected once (the
+    // object-store primitive above): 3 micro-batches, 4 attempts
+    val claimed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val rejectedOnce = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val objectStore = new streaming.CommitPrimitive {
+      def createExclusive(target: java.nio.file.Path, content: Array[Byte]): Boolean = {
+        if (target.getFileName.toString == "1.json" &&
+          rejectedOnce.compareAndSet(false, true)) false
+        else if (!claimed.add(target.toString)) false
+        else if (Files.exists(target)) { claimed.remove(target.toString); false }
+        else { Files.write(target, content); true }
+      }
+    }
+    val in = freshTable("leak-in")
+    landEvents(in, Seq(Seq((Some(1L), 1.0)), Seq((Some(2L), 2.0)), Seq((Some(1L), 3.0))))
+    val sink = freshTable("leak-sink")
+    streaming.Streams.runMergeTotals(spark, in, sink,
+      Map("maxFilesPerTrigger" -> "1"), primitive = objectStore)
+    assert(rejectedOnce.get, "the forced conflict must have been exercised")
+    assert(TxLog.versions(sink) === Seq(0L, 1L, 2L))
+    // every bucketed writer: load, append, merge, compact, z-order
+    val t = freshTable("leak-bucketed")
+    streaming.MergeTable.load(spark, t,
+      (0L until 20L).map(i => (i, i % 8, i / 8)).toDF("k", "x", "y"), "k", buckets = 2)
+    streaming.MergeTable.append(spark, t, Seq((20L, 1L, 1L)).toDF("k", "x", "y"),
+      "k", buckets = 2)
+    streaming.MergeTable.mergeInto(spark, t, Seq((3L, 7L, 7L)).toDF("k", "x", "y"),
+      "k", buckets = 2)
+    assert(streaming.MergeTable.compact(spark, t, "k", buckets = 2).isDefined)
+    streaming.MergeTable.optimizeZorder(spark, t, "k", buckets = 2, "x", "y",
+      bits = 3, chunks = 2)
+    assert(TxLog.versions(t) === Seq(0L, 1L, 2L, 3L, 4L))
+    assert((stageDirs() -- before).isEmpty, s"leaked: ${stageDirs() -- before}")
+  }
 }
