@@ -12,14 +12,17 @@ object GraftSession {
     * helper, shared by the warehouse below and Sources' sink round-trips. */
   def tempDirCleanedOnExit(prefix: String): java.nio.file.Path = {
     val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(p.toFile)
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(p.toFile): Unit))
     p
+  }
+
+  /** Deletes `f` and everything under it — the one recursive delete for
+    * temp and store trees. Returns whether `f` is gone afterwards (true
+    * for a path that never existed); callers that must not strand a tree
+    * fail loudly on false. */
+  def deleteTree(f: java.io.File): Boolean = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete() || !f.exists()
   }
 
   /** saveAsTable target (bucketed tables): per-JVM scratch, removed on

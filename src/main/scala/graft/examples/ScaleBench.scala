@@ -49,7 +49,7 @@ object ScaleBench {
     // ---- convergence-honest fixpoints (VERDICT r1 item 8) ----------------
     // The declared CC/SSSP queries pin their round counts so a SQL oracle
     // can unroll them; here the SAME loop shapes run via
-    // Iterate.untilFixpoint on the 600k-edge graph to evidence that the
+    // Iterate.untilFixpointChecked on the 600k-edge graph to evidence that the
     // loops actually converge when rounds aren't pinned — and in how many.
 
     // CC, pointer-jumping (the q_graph_cc formulation)
@@ -62,7 +62,7 @@ object ScaleBench {
     // checkpoint/release handled IN the step: each round materializes its
     // output and frees the intermediate + the previous round's blocks, so
     // block-store usage stays O(1) in rounds instead of O(rounds)
-    val (ccOut, ccRounds) = Iterate.untilFixpoint(ccInit, maxIter = 30, checkpointEvery = 0) {
+    val cc = Iterate.untilFixpointChecked(ccInit, maxIter = 30, checkpointEvery = 0) {
       (c, _) =>
         val p = c.as("cc").join(euPlus.as("ee"), col("cc.v") === col("ee.src"))
           .groupBy(col("ee.dst").as("v"))
@@ -76,7 +76,8 @@ object ScaleBench {
         Iterate.release(p)
         Iterate.release(c) // no-op on round 0 (init isn't a checkpoint root)
         (next, changed)
-    }
+    }.requireConverged("cc_fixpoint")
+    val (ccOut, ccRounds) = (cc.out, cc.iters)
     val nComponents = ccOut.select(countDistinct(col("lbl"))).collect()(0).getLong(0)
     val ccSecs = (System.nanoTime() - tCc) / 1e9
     println(f"""{"metric":"cc_fixpoint","value":$ccSecs%.3f,"unit":"sec","rounds":$ccRounds,""" +
@@ -94,7 +95,7 @@ object ScaleBench {
     ewPlus.count()
     val tSp = System.nanoTime()
     val spInit = vs.select(col("v"), when(col("v") === 0, 0L).otherwise(INF).as("dist"))
-    val (spOut, spRounds) = Iterate.untilFixpoint(spInit, maxIter = 50, checkpointEvery = 0) {
+    val sp = Iterate.untilFixpointChecked(spInit, maxIter = 50, checkpointEvery = 0) {
       (dist, _) =>
         val next = dist.as("dd").join(ewPlus.as("ee"), col("dd.v") === col("ee.src"))
           .groupBy(col("ee.dst").as("v"))
@@ -104,7 +105,8 @@ object ScaleBench {
           .filter(col("n.dist") < col("o.dist")).count()
         Iterate.release(dist) // previous round's blocks; no-op on round 0
         (next, changed)
-    }
+    }.requireConverged("sssp_fixpoint")
+    val (spOut, spRounds) = (sp.out, sp.iters)
     val reached = spOut.filter(col("dist") < INF).count()
     val spSecs = (System.nanoTime() - tSp) / 1e9
     println(f"""{"metric":"sssp_fixpoint","value":$spSecs%.3f,"unit":"sec","rounds":$spRounds,""" +

@@ -1178,7 +1178,7 @@ object Dedup extends QueryModule {
           .unionAll(vs.select(col("v").as("src"), col("v").as("dst")))
           .localCheckpoint()
         val init = vs.select(col("v"), col("v").as("lbl"))
-        val (out, _) = graft.plans.Iterate.untilFixpoint(init,
+        val fp = graft.plans.Iterate.untilFixpointChecked(init,
             maxIter = 1000, checkpointEvery = 0) { (c, _) =>
           // changed-count observed during the checkpoint job (r15):
           // ePlus includes every vertex's self-loop, so next.lbl =
@@ -1187,16 +1187,14 @@ object Dedup extends QueryModule {
           // folds INTO the round's plan (one join against the carried
           // state) and the count rides the checkpoint: one job per
           // round instead of two.
-          val (next, changed) = graft.plans.Iterate.pinCountTrue(
+          graft.plans.Iterate.advance(c,
             c.as("cc").join(ePlus.as("ee"), col("cc.v") === col("ee.src"))
               .groupBy(col("ee.dst").as("v")).agg(min(col("cc.lbl")).as("nl"))
               .join(c.select(col("v"), col("lbl").as("ol")), Seq("v"))
               .select(col("v"), col("nl").as("lbl"), (col("nl") < col("ol")).as("chg")),
             col("chg"))
-          graft.plans.Iterate.release(c)
-          (next, changed)
-        }
-        val res = out.select(col("v").as("doc_id"), col("lbl").as("cluster"))
+        }.requireConverged("q_dedup_exact_clusters")
+        val res = fp.out.select(col("v").as("doc_id"), col("lbl").as("cluster"))
           .orderBy("doc_id").localCheckpoint()
         graft.plans.Iterate.release(ePlus)
         graft.plans.Iterate.release(edges)

@@ -632,7 +632,7 @@ object Graph extends QueryModule {
   }
 
   /** SSSP run to TRUE convergence: the same Bellman-Ford relax loop as
-    * [[sssp]] but via Iterate.untilFixpoint — the round count is
+    * [[sssp]] but via Iterate.untilFixpointChecked — the round count is
     * DISCOVERED by the changed-distance counter hitting zero, the Spark
     * re-expression of the reference's updated-flag halt
     * (`examples/src/main/java/org/apache/hama/examples/SSSP.java:41-88`,
@@ -662,7 +662,7 @@ object Graph extends QueryModule {
     // it last improved).
     val init = s.range(1)
       .select(lit(0L).as("v"), lit(0L).as("dist"), lit(true).as("chg"))
-    val (outRaw, _) = Iterate.untilFixpoint(init, maxIter = N, checkpointEvery = 0) {
+    val fp = Iterate.untilFixpointChecked(init, maxIter = N, checkpointEvery = 0) {
       (dist, _) =>
         val cand = dist.filter(col("chg")).as("f")
           .join(e.as("ee"), col("f.v") === col("ee.src"))
@@ -671,7 +671,7 @@ object Graph extends QueryModule {
         // changed-count observed during the checkpoint job itself —
         // one Spark job per round, not two (optimization r15,
         // Iterate.pinCountTrue)
-        val (next, changed) = Iterate.pinCountTrue(
+        Iterate.advance(dist,
           dist.as("o").join(cand.as("c"), Seq("v"), "full_outer")
             .select(col("v"),
               least(coalesce(col("dist"), lit(Long.MaxValue)),
@@ -679,10 +679,8 @@ object Graph extends QueryModule {
               (coalesce(col("nd"), lit(Long.MaxValue)) <
                 coalesce(col("dist"), lit(Long.MaxValue))).as("chg")),
           col("chg"))
-        Iterate.release(dist)
-        (next, changed)
-    }
-    val out = outRaw.select(col("v"), col("dist"))
+    }.requireConverged("ssspFixpoint")
+    val out = fp.out.select(col("v"), col("dist"))
     e.unpersist()
     out.orderBy("v")
   }
@@ -704,7 +702,7 @@ object Graph extends QueryModule {
        SELECT v, MIN(dist) AS dist FROM walks GROUP BY v ORDER BY v"""
 
   /** Connected components run to TRUE convergence: plain min-label
-    * propagation via Iterate.untilFixpoint (MindistSearch's
+    * propagation via Iterate.untilFixpointChecked (MindistSearch's
     * updated-flag halt, `examples/src/main/java/org/apache/hama/examples/
     * MindistSearch.java:47-117`) — rounds discovered, not declared; the
     * oracle is the reachability closure's MIN label per vertex. */
@@ -722,22 +720,20 @@ object Graph extends QueryModule {
     // the previous improved-set bookkeeping, minus its extra checkpoint
     // and the anti-join+union state rebuild per round.
     val init = vs.select(col("v"), col("v").as("lbl"), lit(true).as("chg"))
-    val (outRaw, _) = Iterate.untilFixpoint(init, maxIter = N, checkpointEvery = 0) {
+    val fp = Iterate.untilFixpointChecked(init, maxIter = N, checkpointEvery = 0) {
       (c, _) =>
         val cand = c.filter(col("chg")).as("f")
           .join(eu.as("ee"), col("f.v") === col("ee.src"))
           .groupBy(col("ee.dst").as("v")).agg(min(col("f.lbl")).as("nl"))
         // changed-count observed during the checkpoint job (r15)
-        val (next, changed) = Iterate.pinCountTrue(
+        Iterate.advance(c,
           c.as("o").join(cand.as("n"), Seq("v"), "left")
             .select(col("v"),
               least(col("lbl"), coalesce(col("nl"), lit(Long.MaxValue))).as("lbl"),
               (coalesce(col("nl"), lit(Long.MaxValue)) < col("lbl")).as("chg")),
           col("chg"))
-        Iterate.release(c)
-        (next, changed)
-    }
-    val out = outRaw.select(col("v"), col("lbl"))
+    }.requireConverged("ccFixpoint")
+    val out = fp.out.select(col("v"), col("lbl"))
     Seq(vs, eu).foreach(_.unpersist())
     out.orderBy("v")
   }
@@ -761,14 +757,9 @@ object Graph extends QueryModule {
 
   /** [[ccStar]] over an arbitrary (src, dst) relation — the spec entry. */
   private[graft] def ccStarOn(e0: DataFrame): DataFrame = {
-    val s = e0.sparkSession
-    def pin(df: DataFrame): DataFrame = {
-      val ck = df.localCheckpoint()
-      s.createDataFrame(ck.rdd, ck.schema)
-    }
-    val vs = pin(nodes(e0))
-    var cur = pin(e0.select(col("src").as("u"), col("dst").as("v"))
-      .filter(col("u") =!= col("v")).distinct())
+    val vs = Iterate.pin(nodes(e0), freshIds = true)
+    val init = Iterate.pin(e0.select(col("src").as("u"), col("dst").as("v"))
+      .filter(col("u") =!= col("v")).distinct(), freshIds = true)
     def largeStar(e: DataFrame): DataFrame = {
       val nb = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
       val m = nb.groupBy("u").agg(least(min(col("v")), col("u")).as("m"))
@@ -789,19 +780,16 @@ object Graph extends QueryModule {
         .select(col("a").as("u"), col("m").as("v"))
         .distinct()
     }
-    var rounds = 0
-    var stable = false
-    while (!stable) {
-      rounds += 1
-      require(rounds <= 50, // O(log² V) with huge headroom at any gate SF
-        s"ccStar: star contraction did not stabilize in 50 LS+SS rounds")
-      val next = pin(smallStar(largeStar(cur)))
-      val diff = next.as("n").join(cur.as("o"),
-          col("n.u") === col("o.u") && col("n.v") === col("o.v"), "full")
-        .filter(col("n.u").isNull || col("o.u").isNull).count()
-      if (diff == 0L) { stable = true; Iterate.release(next) }
-      else { Iterate.release(cur); cur = next }
-    }
+    // 50 LS+SS rounds: O(log² V) with huge headroom at any gate SF
+    val cur = Iterate.untilFixpointChecked(init, maxIter = 50, checkpointEvery = 0) {
+      (prev, _) =>
+        val next = Iterate.pin(smallStar(largeStar(prev)), freshIds = true)
+        val diff = next.as("n").join(prev.as("o"),
+            col("n.u") === col("o.u") && col("n.v") === col("o.v"), "full")
+          .filter(col("n.u").isNull || col("o.u").isNull).count()
+        Iterate.release(prev)
+        (next, diff)
+    }.requireConverged("ccStar: star contraction").out
     // terminal star forest: one parent per non-minimum vertex (min-fold
     // defensively, though convergence guarantees uniqueness)
     val out = vs.join(cur.groupBy("u").agg(min(col("v")).as("p")),
@@ -854,15 +842,12 @@ object Graph extends QueryModule {
     * partial-combined aggregate per level; levels = graph diameter. */
   private[graft] def bfsSigma(e0: DataFrame,
       sources: Option[DataFrame] = None): (DataFrame, Seq[DataFrame]) = {
-    val s = e0.sparkSession
-    def pin(df: DataFrame): DataFrame = {
-      val ck = df.localCheckpoint()
-      s.createDataFrame(ck.rdd, ck.schema)
-    }
-    val e = pin(e0.select("src", "dst").filter(col("src") =!= col("dst")).distinct())
-    val srcs = sources.map(df => pin(df.select("v"))).getOrElse(pin(nodes(e)))
-    var reached = pin(srcs.select(col("v").as("s"), col("v"),
-      lit(0).as("d"), lit(1L).as("sigma")))
+    val e = Iterate.pin(e0.select("src", "dst").filter(col("src") =!= col("dst"))
+      .distinct(), freshIds = true)
+    val srcs = Iterate.pin(sources.map(_.select("v")).getOrElse(nodes(e)),
+      freshIds = true)
+    var reached = Iterate.pin(srcs.select(col("v").as("s"), col("v"),
+      lit(0).as("d"), lit(1L).as("sigma")), freshIds = true)
     val levels = scala.collection.mutable.ArrayBuffer[DataFrame](reached)
     var frontier = reached
     var lvl = 0
@@ -909,12 +894,8 @@ object Graph extends QueryModule {
   private[graft] def betweennessOn(e0: DataFrame,
       sources: Option[DataFrame] = None, scale: Double = 1.0,
       outCol: String = "bc"): DataFrame = {
-    val s = e0.sparkSession
-    def pin(df: DataFrame): DataFrame = {
-      val ck = df.localCheckpoint()
-      s.createDataFrame(ck.rdd, ck.schema)
-    }
-    val e = pin(e0.select("src", "dst").filter(col("src") =!= col("dst")).distinct())
+    val e = Iterate.pin(e0.select("src", "dst").filter(col("src") =!= col("dst"))
+      .distinct(), freshIds = true)
     val (_, levels) = bfsSigma(e, sources)
     betweennessLevels(e, levels, scale, outCol)
   }
@@ -939,15 +920,11 @@ object Graph extends QueryModule {
 
   private def betweennessLevels(e: DataFrame, levels: Seq[DataFrame],
       scale: Double, outCol: String): DataFrame = {
-    val s = e.sparkSession
-    def pin(df: DataFrame): DataFrame = {
-      val ck = df.localCheckpoint()
-      s.createDataFrame(ck.rdd, ck.schema)
-    }
     val ns = nodes(e)
     val maxLvl = levels.length - 1
     if (maxLvl == 0) return ns.select(col("v"), lit(0.0).as(outCol)).orderBy("v")
-    var curDelta = pin(levels(maxLvl).select(col("s"), col("v"), lit(0.0).as("delta")))
+    var curDelta = Iterate.pin(
+      levels(maxLvl).select(col("s"), col("v"), lit(0.0).as("delta")), freshIds = true)
     // the accumulated deltas are a LAZY union of the per-level pins
     // (r15): only the final bc aggregate consumes them, so the old
     // per-level re-pin of the whole accumulation bought nothing
@@ -959,11 +936,11 @@ object Graph extends QueryModule {
         .select(col("ws"), col("w"), col("sw"),
           coalesce(col("dw0"), lit(0.0)).as("dw"))
       val vprev = levels(l - 1).select(col("s").as("vs"), col("v"), col("sigma").as("sv"))
-      curDelta = pin(vprev
+      curDelta = Iterate.pin(vprev
         .join(e, col("v") === col("src"))
         .join(w, col("vs") === col("ws") && col("dst") === col("w"))
         .groupBy(col("vs").as("s"), col("v"))
-        .agg(sum(col("sv") * (lit(1.0) + col("dw")) / col("sw")).as("delta")))
+        .agg(sum(col("sv") * (lit(1.0) + col("dw")) / col("sw")).as("delta")), freshIds = true)
       deltas += curDelta
     }
     val acc = deltas.reduce(_ unionAll _)
@@ -1069,13 +1046,9 @@ object Graph extends QueryModule {
       warm: Option[DataFrame] = None, k: Int = anfK,
       broadcastBound: Long = anfBroadcastRows)
       : (DataFrame, Int, Seq[Double], DataFrame) = {
-    val s = e0.sparkSession
-    def pin(df: DataFrame): DataFrame = {
-      val ck = df.localCheckpoint()
-      s.createDataFrame(ck.rdd, ck.schema)
-    }
-    val e = pin(e0.select("src", "dst").filter(col("src") =!= col("dst")).distinct())
-    val init = pin(warm.getOrElse(anfInit(nodes(e), k)))
+    val e = Iterate.pin(e0.select("src", "dst").filter(col("src") =!= col("dst"))
+      .distinct(), freshIds = true)
+    val init = Iterate.pin(warm.getOrElse(anfInit(nodes(e), k)), freshIds = true)
     val nf = scala.collection.mutable.ArrayBuffer.empty[Double]
     // per-round estimates accumulate as PINS and union into the curve
     // ONCE after the loop (optimization r14): the old per-round
@@ -1084,7 +1057,7 @@ object Graph extends QueryModule {
     // O(V) rows; all are released once the final curve owns its blocks.
     val curveParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def record(masks: DataFrame, r: Int): Unit = {
-      val est = pin(anfEstimate(masks).withColumn("r", lit(r.toLong)))
+      val est = Iterate.pin(anfEstimate(masks).withColumn("r", lit(r.toLong)), freshIds = true)
       nf += est.agg(round(sum("reach_est"), 2)).head.getDouble(0)
       curveParts += est: Unit
     }
@@ -1118,7 +1091,7 @@ object Graph extends QueryModule {
     // monotone fixpoint: new mask = old | contributions, changed ⇔ the
     // contribution carries a bit the old mask lacks.
     var lastChanged = Long.MaxValue // round-1 frontier = full init
-    val initChg = pin(init.withColumn("chg", lit(true)))
+    val initChg = Iterate.pin(init.withColumn("chg", lit(true)), freshIds = true)
     Iterate.release(init) // initChg owns its blocks now
     val fp = Iterate.untilFixpointChecked(initChg, maxIter = maxIter,
       checkpointEvery = 0) { (m, i) =>
@@ -1131,8 +1104,8 @@ object Graph extends QueryModule {
       val contrib = nbr.groupBy("v", "k")
         .agg(expr("bit_or(mask)").as("cand"))
       // changed-count observed during the checkpoint job (r15); fresh
-      // attribute ids for the same reason as pin()
-      val (next, changed) = Iterate.pinCountTrue(
+      // attribute ids, as every pin here
+      val (next, changed) = Iterate.advance(m,
         m.as("o").join(contrib.as("n"), Seq("v", "k"), "left")
           .select(col("v"), col("k"),
             col("mask").bitwiseOR(coalesce(col("cand"), lit(0L))).as("mask"),
@@ -1140,12 +1113,11 @@ object Graph extends QueryModule {
               .bitwiseAND(bitwise_not(col("mask"))) =!= lit(0L)).as("chg")),
         col("chg"), freshIds = true)
       record(next, i + 1)
-      Iterate.release(m)
       lastChanged = changed
       (next, changed)
     }.requireConverged("anfSketch")
     Iterate.release(e) // dead once the fixpoint's final pin exists
-    val curve = pin(curveParts.reduce(_ unionAll _))
+    val curve = Iterate.pin(curveParts.reduce(_ unionAll _), freshIds = true)
     curveParts.foreach(Iterate.release)
     (fp.out.select("v", "k", "mask"), fp.iters, nf.toSeq, curve)
   }
@@ -1251,13 +1223,8 @@ object Graph extends QueryModule {
       broadcastBound: Long = anfBroadcastRows,
       dstBuckets: Int = anfDstBuckets, regBuckets: Int = anfRegBuckets)
       : (DataFrame, Int, Seq[AnfDeltaRound]) = {
-    val s = baseMasks.sparkSession
-    def pin(df: DataFrame): DataFrame = {
-      val ck = df.localCheckpoint()
-      s.createDataFrame(ck.rdd, ck.schema)
-    }
-    val dE = pin(newEdges.select("src", "dst")
-      .filter(col("src") =!= col("dst")).distinct()) // Δ-sized, not O(E)
+    val dE = Iterate.pin(newEdges.select("src", "dst")
+      .filter(col("src") =!= col("dst")).distinct(), freshIds = true) // Δ-sized, not O(E)
     // bucket counts are LAYOUT decisions pinned when the stores were
     // created (runAnfMaintain's `_layout` metadata, the near-dup
     // sigBuckets discipline) — the caller passes the stored widths, and
@@ -1278,11 +1245,11 @@ object Graph extends QueryModule {
     // fresh init rows for vertices only the delta introduces: every
     // edge touching a brand-new vertex IS a dE edge, so nodes(dE)
     // covers them — and only dE's buckets of the store need consulting
-    val dEv = pin(nodes(dE))
+    val dEv = Iterate.pin(nodes(dE), freshIds = true)
     val known = (if (rBuckets == 0) baseMasks
         else baseMasks.filter(col("vb").isin(bksOf(dEv): _*)))
       .select("v").distinct()
-    val fresh = pin(anfInit(dEv, k).join(known, Seq("v"), "left_anti"))
+    val fresh = Iterate.pin(anfInit(dEv, k).join(known, Seq("v"), "left_anti"), freshIds = true)
     val stats = scala.collection.mutable.ArrayBuffer.empty[AnfDeltaRound]
     // changed-register pins, one per converged round — the Δ-overlay is
     // their LAZY union (optimization r15, VERDICT r14 #4): a round-r
@@ -1356,37 +1323,38 @@ object Graph extends QueryModule {
     val dstT = dE.select(col("dst").as("v")).distinct()
     val (seedPush, seedRows) = Iterate.pinCountAll(
       curFor(dstT, if (rBuckets == 0) null else bksOf(dstT)), freshIds = true)
-    var (frontier, fRows) = step(dE, seedPush, seedRows)
-    Iterate.release(seedPush)
-    var rounds = 1
-    while (fRows > 0) {
-      require(rounds < maxIter,
-        s"anfDelta: guard exhausted after $rounds rounds without convergence")
-      frontiers += frontier // joins the lazy overlay; released at the end
-      val fbks = // partition-pruned probe: only the frontier's buckets
-        if (eBuckets == 0) accEdges
+    var fRows = seedRows
+    val fp = Iterate.untilFixpointChecked(seedPush, maxIter = maxIter,
+      checkpointEvery = 0) { (frontier, i) =>
+      val fbks =
+        if (i == 0) dE
         else {
-          val bs = frontier
-            .select(pmod(hash(col("v")), lit(eBuckets)).as("db")).distinct()
-            .collect().map(_.getInt(0)).toSeq
-          accEdges.filter(col("db").isin(bs: _*))
+          frontiers += frontier // joins the lazy overlay; released at the end
+          if (eBuckets == 0) accEdges
+          else { // partition-pruned probe: only the frontier's buckets
+            val bs = frontier
+              .select(pmod(hash(col("v")), lit(eBuckets)).as("db")).distinct()
+              .collect().map(_.getInt(0)).toSeq
+            accEdges.filter(col("db").isin(bs: _*))
+          }
         }
       val (nf, nfRows) = step(fbks, frontier, fRows)
-      frontier = nf
+      if (i == 0) Iterate.release(seedPush)
       fRows = nfRows
-      rounds += 1
-    }
-    Iterate.release(frontier) // the final, empty one
+      (nf, nfRows)
+    }.requireConverged("anfDelta")
+    Iterate.release(fp.out) // the final, empty frontier
+    val rounds = fp.iters
     // upserts = fresh rows not superseded by a change, plus the changes
     // (merged ONCE here — the per-round overlay stayed a lazy union)
     val upserts =
       if (frontiers.isEmpty) fresh
       else {
-        val merged = pin(delta.groupBy("v", "k")
-          .agg(expr("bit_or(mask)").as("mask")))
+        val merged = Iterate.pin(delta.groupBy("v", "k")
+          .agg(expr("bit_or(mask)").as("mask")), freshIds = true)
         frontiers.foreach(Iterate.release)
-        val u = pin(fresh.join(merged.select("v", "k"), Seq("v", "k"), "left_anti")
-          .unionAll(merged))
+        val u = Iterate.pin(fresh.join(merged.select("v", "k"), Seq("v", "k"), "left_anti")
+          .unionAll(merged), freshIds = true)
         Seq(fresh, merged).foreach(Iterate.release)
         u
       }
@@ -1403,16 +1371,11 @@ object Graph extends QueryModule {
       newEdges: DataFrame, maxIter: Int = 64, k: Int = anfK,
       broadcastBound: Long = anfBroadcastRows)
       : (DataFrame, Int, Seq[AnfDeltaRound]) = {
-    val s = baseMasks.sparkSession
-    def pin(df: DataFrame): DataFrame = {
-      val ck = df.localCheckpoint()
-      s.createDataFrame(ck.rdd, ck.schema)
-    }
     val (up, rounds, stats) =
       anfDeltaRows(baseMasks, accEdges, newEdges, maxIter, k, broadcastBound)
-    val fin = pin(baseMasks.select("v", "k", "mask")
+    val fin = Iterate.pin(baseMasks.select("v", "k", "mask")
       .join(up.select("v", "k"), Seq("v", "k"), "left_anti")
-      .unionAll(up))
+      .unionAll(up), freshIds = true)
     Iterate.release(up)
     (fin, rounds, stats)
   }
@@ -1477,24 +1440,17 @@ object Graph extends QueryModule {
         AS DOUBLE))) / $anfPhi, 4) AS reach_est FROM $m GROUP BY v"""
 
   private[graft] def sccTrimOn(edgesDf: DataFrame): DataFrame = {
-    val s = edgesDf.sparkSession
-    // materialize AND mint fresh attribute ids: the peel loop repeatedly
+    // every pin here mints fresh attribute ids: the peel loop repeatedly
     // joins/unions descendants of the same relations, and checkpointed
     // plans keep ancestor ids, which trips Catalyst's union constraint
-    // rewrite on the second peel (key-not-found on a stale id). Building
-    // a new DataFrame over the checkpointed RDD severs the lineage AND
-    // the ids — no recompute, the blocks are already materialized.
-    def pin(df: DataFrame): DataFrame = {
-      val ck = df.localCheckpoint()
-      s.createDataFrame(ck.rdd, ck.schema)
-    }
-    val eAll = pin(edgesDf)
+    // rewrite on the second peel (key-not-found on a stale id).
+    val eAll = Iterate.pin(edgesDf, freshIds = true)
     // every gate count below is OBSERVED during the pin that produced
     // the relation (Iterate.pinCountAll, r15) — the peel loop previously
     // paid a limit(1).count job per gate per round on top of each pin
     val (allNodes, nAll) =
       Iterate.pinCountAll(nodes(eAll), freshIds = true)
-    val e0 = pin(eAll.filter(col("src") =!= col("dst")))
+    val e0 = Iterate.pin(eAll.filter(col("src") =!= col("dst")), freshIds = true)
     var residualNodes = allNodes
     var residualCount = nAll
     var residualEdges = e0
@@ -1518,16 +1474,16 @@ object Graph extends QueryModule {
           .distinct(), freshIds = true)
         if (nTrimmed > 0) {
           val settled = trimmed.select(col("v"), col("v").as("scc"))
-          done = pin(done.unionAll(settled))
+          done = Iterate.pin(done.unionAll(settled), freshIds = true)
           val tv = trimmed.select(col("v").as("__settled_v"))
           val (rNodes, rCount) = Iterate.pinCountAll(residualNodes
             .join(tv, col("v") === col("__settled_v"), "left_anti"),
             freshIds = true)
           residualNodes = rNodes
           residualCount = rCount
-          residualEdges = pin(residualEdges
+          residualEdges = Iterate.pin(residualEdges
             .join(tv, col("src") === col("__settled_v"), "left_anti")
-            .join(tv, col("dst") === col("__settled_v"), "left_anti"))
+            .join(tv, col("dst") === col("__settled_v"), "left_anti"), freshIds = true)
         }
       }
       val rn = residualNodes
@@ -1544,23 +1500,20 @@ object Graph extends QueryModule {
       // just-checkpointed blocks.
       def minReach(ed: DataFrame): DataFrame = {
         val init = rn.select(col("v"), col("v").as("lbl"), lit(true).as("chg"))
-        val (out, _) = Iterate.untilFixpoint(init, maxIter = N, checkpointEvery = 0) {
+        Iterate.untilFixpointChecked(init, maxIter = N, checkpointEvery = 0) {
           (c, _) =>
             val relax = c.filter(col("chg")).as("cc")
               .join(ed.as("ee"), col("cc.v") === col("ee.dst"))
               .groupBy(col("ee.src").as("v")).agg(min(col("cc.lbl")).as("cand"))
             // changed-count observed during the checkpoint job (r15);
             // fresh ids: the peel loop re-joins descendants of this state
-            val (next, changed) = Iterate.pinCountTrue(
+            Iterate.advance(c,
               c.as("o").join(relax.as("r"), Seq("v"), "left")
                 .select(col("v"),
                   least(col("lbl"), coalesce(col("cand"), lit(Long.MaxValue))).as("lbl"),
                   (coalesce(col("cand"), lit(Long.MaxValue)) < col("lbl")).as("chg")),
               col("chg"), freshIds = true)
-            Iterate.release(c)
-            (next, changed)
-        }
-        out.select(col("v"), col("lbl"))
+        }.requireConverged("sccTrim minReach").out.select(col("v"), col("lbl"))
       }
       // Orzan coloring peel: F (forward min) partitions the residual
       // into classes that each CONTAIN their root's SCC (F is constant
@@ -1571,7 +1524,7 @@ object Graph extends QueryModule {
       // is what consumes a dense ascending DAG residual in one peel —
       // the plain F/B core settled one component per peel and measured
       // 26.5 s on the condensation row at sf0.1.
-      val f = pin(minReach(residualEdges))
+      val f = Iterate.pin(minReach(residualEdges), freshIds = true)
       val f1 = f.select(col("v").as("__fv1"), col("lbl").as("__fl1"))
       val f2 = f.select(col("v").as("__fv2"), col("lbl").as("__fl2"))
       val classEdgesRev = residualEdges
@@ -1580,10 +1533,10 @@ object Graph extends QueryModule {
         .filter(col("__fl1") === col("__fl2"))
         .select(col("dst").as("src"), col("src").as("dst"))
       val b = minReach(classEdgesRev)
-      val settled = pin(f.as("f").join(b.as("b"), col("f.v") === col("b.v"))
+      val settled = Iterate.pin(f.as("f").join(b.as("b"), col("f.v") === col("b.v"))
         .filter(col("f.lbl") === col("b.lbl"))
-        .select(col("f.v").as("v"), col("f.lbl").as("scc")))
-      done = pin(done.unionAll(settled))
+        .select(col("f.v").as("v"), col("f.lbl").as("scc")), freshIds = true)
+      done = Iterate.pin(done.unionAll(settled), freshIds = true)
       // fresh alias on the settled key set: localCheckpoint keeps the
       // ancestor's attribute ids, so an anti-join of residualNodes
       // against its own descendant would hit ambiguous-attribute
@@ -1594,9 +1547,9 @@ object Graph extends QueryModule {
         freshIds = true)
       residualNodes = rNodes
       residualCount = rCount
-      residualEdges = pin(residualEdges
+      residualEdges = Iterate.pin(residualEdges
         .join(settledV, col("src") === col("__settled_v"), "left_anti")
-        .join(settledV, col("dst") === col("__settled_v"), "left_anti"))
+        .join(settledV, col("dst") === col("__settled_v"), "left_anti"), freshIds = true)
       }
     }
     // fail LOUDLY if the peel guard exhausted with residual vertices
@@ -1666,22 +1619,20 @@ object Graph extends QueryModule {
     // shuffle per round) collapses into a narrow count over the
     // just-checkpointed blocks: 2 materialized joins/round -> 1.
     val init = comps.select(col("c"), lit(0L).as("lvl"), lit(true).as("chg"))
-    val (outRaw, _) = Iterate.untilFixpoint(init, maxIter = N, checkpointEvery = 0) {
+    val fp = Iterate.untilFixpointChecked(init, maxIter = N, checkpointEvery = 0) {
       (lv, _) =>
         val relax = lv.filter(col("chg")).as("l")
           .join(ce.as("ee"), col("l.c") === col("ee.src"))
           .groupBy(col("ee.dst").as("c")).agg((max(col("l.lvl")) + 1L).as("cand"))
         // changed-count observed during the checkpoint job (r15)
-        val (next, changed) = Iterate.pinCountTrue(
+        Iterate.advance(lv,
           lv.as("o").join(relax.as("r"), Seq("c"), "left")
             .select(col("c"),
               greatest(col("lvl"), coalesce(col("cand"), lit(0L))).as("lvl"),
               (coalesce(col("cand"), lit(Long.MinValue)) > col("lvl")).as("chg")),
           col("chg"))
-        Iterate.release(lv)
-        (next, changed)
-    }
-    val out = outRaw.select(col("c"), col("lvl"))
+    }.requireConverged("condensation")
+    val out = fp.out.select(col("c"), col("lvl"))
     val sizes = sccMap.groupBy(col("scc")).agg(count(lit(1)).as("n_vertices"))
     out.join(sizes, col("c") === col("scc"))
       .select(col("scc"), col("lvl"), col("n_vertices"))
@@ -1726,14 +1677,14 @@ object Graph extends QueryModule {
     // blocks).
     val init = nodes(e).filter(col("v") < 5)
       .select(col("v").as("q"), col("v"), lit(0L).as("dist"), lit(true).as("chg"))
-    val (dist, _) = Iterate.untilFixpoint(init, maxIter = N, checkpointEvery = 0) {
+    val dist = Iterate.untilFixpointChecked(init, maxIter = N, checkpointEvery = 0) {
       (st, _) =>
         val relax = st.filter(col("chg")).as("ss")
           .join(e.as("ee"), col("ss.v") === col("ee.src"))
           .groupBy(col("ss.q"), col("ee.dst").as("v"))
           .agg(min(col("ss.dist") + 1L).as("cand"))
         // changed-count observed during the checkpoint job (r15)
-        val (next, changed) = Iterate.pinCountTrue(
+        Iterate.advance(st,
           st.as("o").join(relax.as("r"), Seq("q", "v"), "full_outer")
             .select(col("q"), col("v"),
               least(coalesce(col("dist"), lit(Long.MaxValue)),
@@ -1741,9 +1692,7 @@ object Graph extends QueryModule {
               (coalesce(col("cand"), lit(Long.MaxValue)) <
                 coalesce(col("dist"), lit(Long.MaxValue))).as("chg")),
           col("chg"))
-        Iterate.release(st)
-        (next, changed)
-    }
+    }.requireConverged("closeness").out
     dist.groupBy(col("q").as("src"))
       .agg((count(lit(1)) - 1).as("n_reached"), sum("dist").as("sum_dist"),
         max("dist").as("ecc"),
@@ -1895,10 +1844,7 @@ object Graph extends QueryModule {
       // per round instead of checkpoint + a next-vs-old diff join (r15);
       // est is monotone non-increasing, so "any row lowered" is exactly
       // the old row-diff count.
-      val (next, changed) =
-        Iterate.pinCountTrue(kcoreStep(eu, k, sharded), col("chg"))
-      Iterate.release(k)
-      (next, changed)
+      Iterate.advance(k, kcoreStep(eu, k, sharded), col("chg"))
     }.requireConverged("kcoreFixpoint")
     (fp.out.select("v", "est"), fp.iters)
   }
@@ -2416,13 +2362,8 @@ object Graph extends QueryModule {
           .select((col("o_orderkey") % midN).as("src"),
             (col("o_custkey") % midN).as("dst"))
           .distinct()
-        val s2 = e0.sparkSession
-        def pin(df: DataFrame): DataFrame = {
-          val ck = df.localCheckpoint()
-          s2.createDataFrame(ck.rdd, ck.schema)
-        }
-        val e = pin(e0.filter(col("src") =!= col("dst")))
-        val init = pin(anfInit(nodes(e)))
+        val e = Iterate.pin(e0.filter(col("src") =!= col("dst")), freshIds = true)
+        val init = Iterate.pin(anfInit(nodes(e)), freshIds = true)
         // fixed 4 rounds: each references the loop state twice (self ∪
         // neighbor pull), so pin per round to keep plan growth linear
         val out = Iterate(init, 4, checkpointEvery = 1) { (m, _) =>
@@ -3040,13 +2981,11 @@ object Graph extends QueryModule {
       // column rides in the carried state and is stripped at return;
       // set (in)equality per vertex is exactly what the old diff join
       // counted, label by label.
-      val (next, changed) = Iterate.pinCountTrue(
+      Iterate.advance(lbl,
         vs.join(best, Seq("v"), "left").join(lbl.select("v", "lbl"), Seq("v"))
           .select(col("v"), coalesce(col("newl"), col("lbl")).as("lbl"),
             (coalesce(col("newl"), col("lbl")) =!= col("lbl")).as("chg")),
         col("chg"))
-      Iterate.release(lbl)
-      (next, changed)
     }
     require(fp.converged,
       s"lpaFixpoint: guard exhausted after ${fp.iters} rounds — oscillation or " +
@@ -3072,12 +3011,11 @@ object Graph extends QueryModule {
     var prevEdges = ori.count()
     val fp = Iterate.untilFixpointChecked(ori, maxIter = maxIter,
       checkpointEvery = 0) { (ed, _) =>
-      val (next, n) = Iterate.pinCountAll(
+      val (next, n) = Iterate.advance(ed,
         ed.join(trussSupport(ed), Seq("a", "b"))
-          .filter(col("supp") >= 2).select("a", "b"))
+          .filter(col("supp") >= 2).select("a", "b"), lit(true))
       val changed = prevEdges - n
       prevEdges = n
-      Iterate.release(ed)
       (next, changed)
     }.requireConverged("ktrussFixpoint")
     (fp.out, fp.iters)

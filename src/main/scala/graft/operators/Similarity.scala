@@ -2107,35 +2107,28 @@ object Similarity extends QueryModule {
         // identical to the previous full re-propagation, while each
         // round joins O(frontier degree) and the old next-vs-previous
         // join collapses into a narrow count over checkpointed blocks.
-        var lab = core.select(col("v"), col("v").as("lab"), lit(true).as("chg"))
+        val init = core.select(col("v"), col("v").as("lab"), lit(true).as("chg"))
           .localCheckpoint()
-        var rounds = 0
-        var changed = 1L
-        while (changed > 0) {
-          rounds += 1
-          // +1: the final iteration only CONFIRMS changed == 0 — data
-          // needing exactly dbscanCcRounds productive rounds still
-          // matches the oracle's unroll (propagation is idempotent at
-          // the fixpoint), and must not trip the guard
-          require(rounds <= dbscanCcRounds + 1,
-            s"DBSCAN label propagation needs > $dbscanCcRounds rounds; " +
-              "the oracle unrolls exactly that many — raise both together")
+        // +1: the final round only CONFIRMS changed == 0 — data needing
+        // exactly dbscanCcRounds productive rounds still matches the
+        // oracle's unroll (propagation is idempotent at the fixpoint),
+        // and must not trip the guard
+        val lab = graft.plans.Iterate.untilFixpointChecked(init,
+            maxIter = dbscanCcRounds + 1, checkpointEvery = 0) { (lab, _) =>
           val prop = cedges.join(
               lab.filter(col("chg")).select(col("v").as("nv"), col("lab").as("nl")),
               col("n") === col("nv"))
             .groupBy("v").agg(min("nl").as("cand"))
           // changed-count observed during the checkpoint job (r15):
           // one job per round instead of two
-          val (next, nChanged) = graft.plans.Iterate.pinCountTrue(
+          graft.plans.Iterate.advance(lab,
             lab.select("v", "lab").join(prop, Seq("v"), "left")
               .select(col("v"),
                 least(col("lab"), coalesce(col("cand"), lit(Long.MaxValue))).as("lab"),
                 (coalesce(col("cand"), lit(Long.MaxValue)) < col("lab")).as("chg")),
             col("chg"))
-          changed = nChanged
-          graft.plans.Iterate.release(lab)
-          lab = next
-        }
+        }.requireConverged(s"DBSCAN label propagation (the oracle unrolls exactly " +
+          s"$dbscanCcRounds rounds — raise both together)").out
         val border = edges
           .join(core.withColumnRenamed("v", "cv"), col("v") === col("cv"), "left_anti")
           .join(lab.withColumnRenamed("v", "nv"), col("n") === col("nv"))

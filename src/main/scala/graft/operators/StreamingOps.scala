@@ -39,10 +39,9 @@ object StreamingOps extends QueryModule {
                       sizePaths: Seq[String] = Nil): DataFrame =
     graft.streaming.Streams.withLiveTuning(s, sizePaths) {
       val name = "live_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = stream.writeStream.format("memory").queryName(name)
-        .outputMode(mode).start()
       try {
-        try q.processAllAvailable() finally q.stop()
+        graft.streaming.Streams.drain(
+          stream.writeStream.format("memory").queryName(name).outputMode(mode))
         val cast = ntzCols.foldLeft(s.table(name)) { (df, c) =>
           df.withColumn(c, col(c).cast("timestamp_ntz"))
         }
@@ -1527,16 +1526,18 @@ object StreamingOps extends QueryModule {
     // so the gate checks the durable artifact, not the in-memory result.
     Q("q_stream_live_sink",
       (s, d) => {
-        val base = java.nio.file.Files.createTempDirectory("graft-sink").toString
-        val q = graft.streaming.Streams.dedup(
-            graft.streaming.Streams.events(s, s"$d/events.parquet"))
-          .select(col("user_id"), col("event_type"))
-          .writeStream.format("parquet")
-          .option("path", s"$base/out").option("checkpointLocation", s"$base/chk")
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-        s.read.parquet(s"$base/out")
-          .orderBy("user_id", "event_type").localCheckpoint()
+        val base = java.nio.file.Files.createTempDirectory("graft-sink")
+        // the eager localCheckpoint owns the rows before the sink dir goes
+        try {
+          graft.streaming.Streams.drain(graft.streaming.Streams.dedup(
+              graft.streaming.Streams.events(s, s"$d/events.parquet"))
+            .select(col("user_id"), col("event_type"))
+            .writeStream.format("parquet")
+            .option("path", s"$base/out").option("checkpointLocation", s"$base/chk")
+            .outputMode("append"))
+          s.read.parquet(s"$base/out")
+            .orderBy("user_id", "event_type").localCheckpoint()
+        } finally graft.GraftSession.deleteTree(base.toFile): Unit
       },
       Some("""SELECT DISTINCT user_id, event_type FROM events
               ORDER BY user_id, event_type""")),

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 
 /** Driver-side superstep loop: the Spark shape of Hama's BSP barrier
   * (`core/src/main/java/org/apache/hama/bsp/BSPPeerImpl.java:390-452` —
@@ -9,6 +9,17 @@ import org.apache.spark.sql.{Column, DataFrame}
   * physical obligation Hama never had with its mutable in-memory vertices
   * (SURVEY.md §4): without it, plan depth grows linearly with supersteps
   * and analysis/codegen time dominates at high iteration counts.
+  *
+  * ONE loop body runs every superstep loop: [[apply]] (declared rounds),
+  * [[untilFixpointChecked]] (rounds discovered by a changed-count halt)
+  * and [[SuperstepPipeline]] (staged rounds with a resume offset) all
+  * delegate to [[loop]], so a round begins and ends at one site. Every
+  * pin here — the loop's cadence checkpoint, [[pin]] and the observed
+  * pins built on it — is eager, and every pin-and-swap keeps one rule:
+  * a superseded state is released only after the next pin has
+  * materialized, because until then the new state's plan still reads the
+  * old blocks. [[advance]] is that rule for a step that pins its own
+  * state.
   */
 object Iterate {
 
@@ -22,32 +33,34 @@ object Iterate {
     * no-ops otherwise: scanning the whole plan for LogicalRDDs would also
     * destroy checkpoints a caller merely DERIVED from — truncated lineage
     * means those blocks are the only copy (ADVICE r1). */
-  def release(ds: org.apache.spark.sql.Dataset[_]): Unit =
+  def release(ds: Dataset[_]): Unit =
     ds.queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
       case _ => ()
     }
 
-  /** localCheckpoint with a scalar metric OBSERVED during the
-    * materializing job itself (optimization r15, guide §1/§5): every
-    * discovered-fixpoint loop here used to pay one checkpoint job plus
-    * one narrow count/max job per round for its halt condition; a
-    * `Dataset.observe` metric is collected by the checkpoint's own
-    * action, so the round costs ONE job. Returns (pinned frame, metric
-    * value — None for an all-null aggregate, e.g. sum over zero rows).
-    * The observed column never lands in the schema, so downstream plan
-    * shapes are untouched. */
+  /** Eager localCheckpoint of `df`. `freshIds` re-roots the checkpointed
+    * blocks under NEW attribute ids (zero recompute — same RDD): loops
+    * that repeatedly join/union descendants of their own state need this
+    * to dodge Catalyst's stale-id traps; [[release]] still works because
+    * the plan root stays a LogicalRDD over the same rdd. */
+  def pin(df: DataFrame, freshIds: Boolean = false): DataFrame = {
+    val ck = df.localCheckpoint()
+    if (freshIds) df.sparkSession.createDataFrame(ck.rdd, ck.schema) else ck
+  }
+
+  /** [[pin]] with a scalar metric OBSERVED during the materializing job
+    * itself (optimization r15, guide §1/§5): every discovered-fixpoint
+    * loop here used to pay one checkpoint job plus one narrow count/max
+    * job per round for its halt condition; a `Dataset.observe` metric is
+    * collected by the checkpoint's own action, so the round costs ONE
+    * job. Returns (pinned frame, metric value — None for an all-null
+    * aggregate, e.g. sum over zero rows). The observed column never lands
+    * in the schema, so downstream plan shapes are untouched. */
   def pinObserved(df: DataFrame, metric: Column,
       freshIds: Boolean = false): (DataFrame, Option[Any]) = {
     val obs = org.apache.spark.sql.Observation()
-    val ck = df.observe(obs, metric.as("m")).localCheckpoint()
-    // freshIds: re-root the checkpointed blocks under NEW attribute ids
-    // (zero recompute — same RDD): loops that repeatedly join/union
-    // descendants of their own state need this to dodge Catalyst's
-    // stale-id traps (see sccTrimOn/anfSketch pin()); release() still
-    // works because the plan root stays a LogicalRDD over the same rdd.
-    val pinned =
-      if (freshIds) df.sparkSession.createDataFrame(ck.rdd, ck.schema) else ck
+    val pinned = pin(df.observe(obs, metric.as("m")), freshIds)
     (pinned, Option(obs.get.getOrElse("m", null)))
   }
 
@@ -69,32 +82,57 @@ object Iterate {
     (pinned, m.map(_.asInstanceOf[Long]).getOrElse(0L))
   }
 
-  /** `reliable = true` swaps the executor-local checkpoint for Spark's
-    * reliable `Dataset.checkpoint()` (files under `sc.setCheckpointDir` —
-    * HDFS on a cluster): blocks lost with an executor are recomputed from
-    * the checkpoint FILES instead of killing the job — the analogue of the
-    * reference's superstep checkpoint recovery
-    * (`core/.../bsp/ft/AsyncRcvdMsgCheckpointImpl.java:69-260`). Costs one
-    * filesystem write of the loop state per cadence; cadence × state size
-    * is the knob (BASELINE.md records the measured overhead). */
-  def apply(init: DataFrame, maxIter: Int, checkpointEvery: Int = 10,
-      reliable: Boolean = false)(
-      step: (DataFrame, Int) => DataFrame): DataFrame = {
+  /** One fixpoint round's pin-and-swap: [[pinCountTrue]] on `next`, then
+    * [[release]] of the superseded state `prev`. Returns (pinned next,
+    * changed count) — the shape an [[untilFixpointChecked]] step returns. */
+  def advance(prev: Dataset[_], next: DataFrame, flag: Column,
+      freshIds: Boolean = false): (DataFrame, Long) = {
+    val pinned = pinCountTrue(next, flag, freshIds)
+    release(prev)
+    pinned
+  }
+
+  /** The superstep loop. Runs `step` for rounds `start` until `maxIter`,
+    * stopping early after a round that reports halt. After a round that
+    * leaves the count of rounds run a multiple of `checkpointEvery`, with
+    * rounds still ahead and no halt, the state is checkpointed and the
+    * previous cadence checkpoint released. Returns (state, rounds run,
+    * halted) — the round count includes `start` and the halting round. */
+  private[plans] def loop[T](init: Dataset[T], start: Int, maxIter: Int,
+      checkpointEvery: Int, reliable: Boolean)(
+      step: (Dataset[T], Int) => (Dataset[T], Boolean)): (Dataset[T], Int, Boolean) = {
     var cur = init
-    var prevCkpt: DataFrame = null
-    var i = 0
-    while (i < maxIter) {
-      cur = step(cur, i)
+    var prevCkpt: Dataset[T] = null
+    var i = start
+    var halted = false
+    while (i < maxIter && !halted) {
+      val (next, halt) = step(cur, i)
+      cur = next
+      halted = halt
       i += 1
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < maxIter) {
-        // eager either way: materialized before old blocks go
+      if (!halted && checkpointEvery > 0 && i % checkpointEvery == 0 && i < maxIter) {
         cur = if (reliable) cur.checkpoint() else cur.localCheckpoint()
         if (prevCkpt != null) release(prevCkpt)
         prevCkpt = cur
       }
     }
-    cur
+    (cur, i, halted)
   }
+
+  /** `maxIter` declared rounds. `reliable = true` swaps the
+    * executor-local checkpoint for Spark's reliable `Dataset.checkpoint()`
+    * (files under `sc.setCheckpointDir` — HDFS on a cluster): blocks lost
+    * with an executor are recomputed from the checkpoint FILES instead of
+    * killing the job — the analogue of the reference's superstep
+    * checkpoint recovery
+    * (`core/.../bsp/ft/AsyncRcvdMsgCheckpointImpl.java:69-260`). Costs one
+    * filesystem write of the loop state per cadence; cadence × state size
+    * is the knob (BASELINE.md records the measured overhead). */
+  def apply(init: DataFrame, maxIter: Int, checkpointEvery: Int = 10,
+      reliable: Boolean = false)(
+      step: (DataFrame, Int) => DataFrame): DataFrame =
+    loop(init, 0, maxIter, checkpointEvery, reliable)(
+      (df, i) => (step(df, i), false))._1
 
   /** Result of a discovered-fixpoint loop: `converged` is the EXPLICIT
     * halt flag — callers guarding against exhaustion must require it, not
@@ -114,36 +152,14 @@ object Iterate {
     * analogue of Hama's global `updated` flag + aggregator-driven halt,
     * `graph/src/main/java/org/apache/hama/graph/GraphJobRunner.java:163-181`).
     * `step` returns (next, changedCount); halts when changedCount == 0.
-    * Returns (final, itersRun) — itersRun counts the confirming round.
-    * Callers that must distinguish convergence from exhaustion use
-    * [[untilFixpointChecked]] and its explicit flag. */
-  def untilFixpoint(init: DataFrame, maxIter: Int, checkpointEvery: Int = 10,
-      reliable: Boolean = false)(
-      step: (DataFrame, Int) => (DataFrame, Long)): (DataFrame, Int) = {
-    val fp = untilFixpointChecked(init, maxIter, checkpointEvery, reliable)(step)
-    (fp.out, fp.iters)
-  }
-
-  /** [[untilFixpoint]] returning the explicit [[Fixpoint]] record. */
-  def untilFixpointChecked(init: DataFrame, maxIter: Int, checkpointEvery: Int = 10,
-      reliable: Boolean = false)(
+    * `iters` counts the confirming round. */
+  def untilFixpointChecked(init: DataFrame, maxIter: Int, checkpointEvery: Int = 10)(
       step: (DataFrame, Int) => (DataFrame, Long)): Fixpoint = {
-    var cur = init
-    var prevCkpt: DataFrame = null
-    var i = 0
-    var done = false
-    while (i < maxIter && !done) {
-      val (next, changed) = step(cur, i)
-      cur = next
-      i += 1
-      if (changed == 0) done = true
-      else if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < maxIter) {
-        // eager either way: materialized before old blocks go
-        cur = if (reliable) cur.checkpoint() else cur.localCheckpoint()
-        if (prevCkpt != null) release(prevCkpt) // same hygiene as apply()
-        prevCkpt = cur
+    val (out, iters, converged) =
+      loop(init, 0, maxIter, checkpointEvery, reliable = false) { (df, i) =>
+        val (next, changed) = step(df, i)
+        (next, changed == 0)
       }
-    }
-    Fixpoint(cur, i, done)
+    Fixpoint(out, iters, converged)
   }
 }

@@ -9,6 +9,8 @@ import org.apache.spark.sql.Dataset
   * round-robin, each able to halt the computation, with recovery-style
   * resume supported by starting at any (round, stage) offset — the
   * equivalent of `attempt.superstep` fast-forward (`SuperstepBSP.java:61-77`).
+  * The rounds run on [[Iterate]]'s loop, with its checkpoint cadence and
+  * release of superseded checkpoints.
   */
 final class SuperstepPipeline[S](
     stages: Seq[(Dataset[S], Int) => (Dataset[S], Boolean)],
@@ -19,17 +21,8 @@ final class SuperstepPipeline[S](
   /** Run up to `maxSupersteps` stage executions starting from
     * `startSuperstep` (for resume); superstep i runs stage (i % stages.size). */
   def run(init: Dataset[S], maxSupersteps: Int, startSuperstep: Int = 0): (Dataset[S], Int) = {
-    var cur = init
-    var i = startSuperstep
-    var halted = false
-    while (!halted && i < maxSupersteps) {
-      val (next, halt) = stages(i % stages.size)(cur, i)
-      cur = next
-      halted = halt
-      i += 1
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && !halted)
-        cur = cur.localCheckpoint()
-    }
-    (cur, i)
+    val (out, steps, _) = Iterate.loop(init, startSuperstep, maxSupersteps,
+      checkpointEvery, reliable = false)((ds, i) => stages(i % stages.size)(ds, i))
+    (out, steps)
   }
 }

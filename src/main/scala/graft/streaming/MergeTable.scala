@@ -672,16 +672,9 @@ object MergeTable {
             sys.error(s"$table: leaf ${leaf.mkString(",")} staged ${parts.size} parts")
         }
       }.toMap
-    } finally deleteRecursively(stage)
+    } finally graft.GraftSession.deleteTree(stage.toFile): Unit
     written ++ wanted.filterNot(k => written.keys.exists(_.head == k)).map { k =>
       Seq(k) -> writeParts(table, empty(k), Seq.empty, (_, p) => name(Seq(k), p)).values.head
     }
   }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (Files.exists(p))
-      scala.util.Using.resource(Files.walk(p)) { st =>
-        st.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(q => Files.deleteIfExists(q))
-      }
 }

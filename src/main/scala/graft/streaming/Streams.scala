@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface (SURVEY.md §2.9): the reference has no
@@ -77,13 +77,18 @@ object Streams {
     }
   }
 
-  /** Run `df` as a `foreachBatch` query in `mode` until every input
-    * available at start has gone through `batchFn`, then stop it. */
-  private def drain(df: DataFrame, mode: OutputMode)(
-      batchFn: (Dataset[Row], Long) => Unit): Unit = {
-    val q = df.writeStream.outputMode(mode).foreachBatch(batchFn).start()
+  /** Start `writer`'s query, run it until every input available at start
+    * has gone through its sink, then stop it — the one finite-stream
+    * drain. */
+  private[graft] def drain(writer: DataStreamWriter[Row]): Unit = {
+    val q = writer.start()
     try q.processAllAvailable() finally q.stop()
   }
+
+  /** [[drain]] of `df` as a `foreachBatch` query in `mode`. */
+  private def drain(df: DataFrame, mode: OutputMode)(
+      batchFn: (Dataset[Row], Long) => Unit): Unit =
+    drain(df.writeStream.outputMode(mode).foreachBatch(batchFn))
 
   /** Per-user event count and value total of an events stream. */
   private def userTotals(spark: SparkSession, eventsPath: String,
@@ -605,7 +610,7 @@ object Streams {
     // RECURSIVE — a mid-write crash typically leaves a _temporary/ tree
     // inside v<k>, which a flat listFiles().delete() would silently skip,
     // stranding the stale dir forever (ADVICE r6)
-    stale.foreach(deleteRecursively)
+    stale.foreach(sweep)
     val cur = new java.io.File(root, "current")
     complete.sortBy(_.getName.drop(1).toLong).foreach { v =>
       val k = v.getName.drop(1).toLong
@@ -624,7 +629,7 @@ object Streams {
       v: java.io.File, k: Long): Unit = {
     if (cur.exists()) {
       val trash = new java.io.File(root, s"old$k")
-      if (trash.exists()) deleteRecursively(trash)
+      if (trash.exists()) sweep(trash)
       if (!cur.renameTo(trash))
         sys.error(s"upsert sink: failed to retire $cur -> $trash")
     }
@@ -632,11 +637,9 @@ object Streams {
       sys.error(s"upsert sink: failed to promote $v -> $cur")
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    if (!f.delete() && f.exists())
+  private def sweep(f: java.io.File): Unit =
+    if (!graft.GraftSession.deleteTree(f))
       sys.error(s"upsert sink: failed to sweep $f")
-  }
 
   /** Per-user totals of ONE call, key-replaced into a [[TxLog]]-backed
     * MERGE table — the lake-scale form of [[runUpsertTotals]]. Each call
@@ -768,12 +771,11 @@ object Streams {
     else None
   }
 
-  private def parquetFilesUnder(dir: java.io.File): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory) f.listFiles().map(walk).sum
-      else if (f.getName.endsWith(".parquet")) 1L else 0L
-    walk(dir)
-  }
+  /** Number of parquet data files anywhere under `dir`. */
+  private def parquetFilesUnder(dir: java.io.File): Long =
+    if (dir.isDirectory)
+      Option(dir.listFiles()).getOrElse(Array.empty).map(parquetFilesUnder).sum
+    else if (dir.getName.endsWith(".parquet")) 1L else 0L
 
   /** Total parquet data files across a band store's live subtrees. */
   def nearDupStoreFiles(storeDir: String): Long =
@@ -954,13 +956,8 @@ object Streams {
                 .write.mode(SaveMode.Overwrite)
                 .partitionBy("band", "sig_bucket").parquet(foldDir)
             }
-            toFold.foreach { d => // fold committed: drop the sources
-              def rm(f: java.io.File): Unit = {
-                if (f.isDirectory) f.listFiles().foreach(rm)
-                f.delete(): Unit
-              }
-              rm(d)
-            }
+            // fold committed: drop the sources
+            toFold.foreach(graft.GraftSession.deleteTree)
           }
         }
       }
@@ -1130,16 +1127,6 @@ object Streams {
     pinAnfLayout(storeDir, dstBuckets, regBuckets)
     val nB = dstBuckets
     val rB = regBuckets
-    def parquetFiles(dir: java.io.File): Long = {
-      def walk(g: java.io.File): Long =
-        if (g.isDirectory) Option(g.listFiles()).getOrElse(Array.empty).map(walk).sum
-        else if (g.getName.endsWith(".parquet")) 1L else 0L
-      walk(dir)
-    }
-    def rmTree(g: java.io.File): Unit = {
-      if (g.isDirectory) Option(g.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-      g.delete(): Unit
-    }
     // resume: the store already holds a committed view iff any marker
     // exists (the restart path — committed batches will replay and skip)
     var seeded = anfRegLeafDirs(regDir).nonEmpty
@@ -1167,7 +1154,7 @@ object Streams {
           else if (singles.length > 1) singles
           else Seq.empty[java.io.File]
         if (toFold.length > 1) {
-          val withData = toFold.filter(parquetFiles(_) > 0)
+          val withData = toFold.filter(parquetFilesUnder(_) > 0)
           if (withData.nonEmpty) {
             // the fold id comes from the STORE, not the batch counter
             // (ADVICE r13 high): -(batchId+1) is unique only within one
@@ -1192,7 +1179,7 @@ object Streams {
           // fold committed: drop the sources (a crash HERE leaves
           // duplicate edges, which bit_or absorbs and the next
           // full merge's distinct retires)
-          toFold.foreach(rmTree)
+          toFold.foreach(graft.GraftSession.deleteTree)
         }
       }
     drain(src, OutputMode.Append()) { (batch, batchId) =>
@@ -1282,7 +1269,7 @@ object Streams {
           if c.getName.stripPrefix("commit=").toLong < batchId
           vb <- Option(c.listFiles()).getOrElse(Array.empty)
           if vb.isDirectory && mine.contains(vb.getName)
-        } rmTree(vb)
+        } graft.GraftSession.deleteTree(vb)
         // an emptied commit DIR goes; its marker STAYS — the marker is
         // also the batch's processed-record, and deleting it would
         // make a replay recompute a fully-committed batch
@@ -1291,11 +1278,11 @@ object Streams {
           if c.isDirectory && c.getName.startsWith("commit=")
           if !Option(c.listFiles()).getOrElse(Array.empty)
             .exists(g => g.isDirectory && g.getName.startsWith("vb="))
-        } rmTree(c)
+        } graft.GraftSession.deleteTree(c)
       }
       }
       maybeFold(batchId)
-      storeFiles += parquetFiles(new java.io.File(storeDir)): Unit
+      storeFiles += parquetFilesUnder(new java.io.File(storeDir)): Unit
     }
     val masks =
       if (seeded) anfRegView(spark, regDir).select("v", "k", "mask")

@@ -34,12 +34,41 @@ class IterateSpec extends AnyFunSuite {
 
   test("untilFixpoint halts when no rows change and reports rounds") {
     val init = Seq(0, 3, 7, 12).toDF("x")
-    val (out, iters) = Iterate.untilFixpoint(init, maxIter = 50)(
+    val fp = Iterate.untilFixpointChecked(init, maxIter = 50)(
       (df, _) => {
         val next = df.withColumn("x", least(col("x") + 5, lit(20)))
         (next, next.filter(col("x") =!= 20).count())
       })
-    assert(out.select("x").as[Int].collect().forall(_ == 20))
-    assert(iters === 4) // slowest start 0 needs 4 increments; that round reports 0 changed
+    assert(fp.converged)
+    assert(fp.out.select("x").as[Int].collect().forall(_ == 20))
+    assert(fp.iters === 4) // slowest start 0 needs 4 increments; that round reports 0 changed
+  }
+
+  /** Runs `body`, materializes its result, and returns the ids of the
+    * block-store RDDs it left behind that were not there before. */
+  private def newPinsLeftBy(body: => org.apache.spark.sql.Dataset[_]): Set[Int] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    body.count()
+    sc.getPersistentRDDs.keySet.diff(before).toSet
+  }
+
+  test("a 25-round loop at cadence 10 keeps only its last checkpoint") {
+    val left = newPinsLeftBy(Iterate((1 to 20).toDF("x"), maxIter = 25,
+      checkpointEvery = 10)((df, _) => df.withColumn("x", col("x") + 1)))
+    assert(left.size === 1, s"checkpoints left behind: $left")
+  }
+
+  test("a 25-superstep pipeline at cadence 10 keeps only its last checkpoint") {
+    val pipeline = new graft.plans.SuperstepPipeline[Long](
+      Seq((ds, _) => (ds.map(_ + 1), false)), checkpointEvery = 10)
+    var steps = 0
+    val left = newPinsLeftBy {
+      val (out, n) = pipeline.run((1L to 20L).toDS(), maxSupersteps = 25)
+      steps = n
+      out
+    }
+    assert(steps === 25)
+    assert(left.size === 1, s"checkpoints left behind: $left")
   }
 }

@@ -166,8 +166,7 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("batched mapPartitions decode parses real bytes across batch splits") {
-    val meta = Multimodal.decodeImages(spark, Multimodal.imagePayloads(spark, TestSpark.sf0),
-        batchSize = 7) // odd batch size to exercise the grouping
+    val meta = Multimodal.decodeImages(spark, Multimodal.imagePayloads(spark, TestSpark.sf0))
       .collect().map(m => m.doc_id -> m).toMap
     assert(meta.size === 500)
     for (id <- Seq(0L, 17L, 499L)) {
@@ -175,8 +174,8 @@ class MultimodalSpec extends AnyFunSuite {
       assert(meta(id).height === MediaFixture.bmpHeight(id).toLong)
       assert(meta(id).bpp === 24L)
     }
-    val audio = Multimodal.decodeAudio(spark, Multimodal.audioPayloads(spark, TestSpark.sf0),
-        batchSize = 7).collect().map(m => m.doc_id -> m).toMap
+    val audio = Multimodal.decodeAudio(spark, Multimodal.audioPayloads(spark, TestSpark.sf0))
+      .collect().map(m => m.doc_id -> m).toMap
     assert(audio.size === 500)
     for (id <- Seq(0L, 17L, 499L)) {
       assert(audio(id).sample_rate === MediaFixture.wavRate(id).toLong)

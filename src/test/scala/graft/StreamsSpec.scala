@@ -403,4 +403,14 @@ class StreamsSpec extends AnyFunSuite {
     assert(spark.read.parquet(out)
       .filter(col("is_dup")).count() >= docs.count())
   }
+
+  test("q_stream_live_sink deletes its sink dir after reading it back") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def sinkDirs = Option(tmp.list()).getOrElse(Array.empty[String])
+      .filter(_.startsWith("graft-sink")).toSet
+    val before = sinkDirs
+    val rows = SparkEntry.queries("q_stream_live_sink")(spark, TestSpark.sf0).count()
+    assert(rows > 0)
+    assert((sinkDirs -- before).isEmpty, s"left behind: ${sinkDirs -- before}")
+  }
 }

@@ -9,11 +9,20 @@ floor-adjusted ones (each live row's time minus the measured floor,
 clamped at a 0.05 s residue), so a family ratio reads operator cost
 directly.
 
+It then lists every row whose Spark job count differs between the two
+files (both need the `jobs` map that graft.Bench writes), marking the rows
+whose count is known to wobble between runs of the same code.
+
 Usage: python3 tools/family_report.py BENCH_LAST_prev.json BENCH_LAST_cur.json [floor_sec]
 (Accepts the driver's BENCH_r{N}.json too — falls back to parsing the
 "queries" map out of the "tail" field.)
 """
 import json, math, re, sys
+
+# Rows whose job count changes between graft.Bench runs of the SAME code
+# (CHANGES.md FOUND line on q_ml_dbscan / q_rel_tpch_q7): a difference there
+# needs isolated reruns of both sides before it counts.
+JOB_WOBBLE = {"q_ml_dbscan", "q_ml_dbscan_trained", "q_rel_tpch_q7"}
 
 
 def load(path):
@@ -27,6 +36,24 @@ def load(path):
     if not qs:
         sys.exit(f"{path}: no queries found")
     return qs
+
+
+def load_jobs(path):
+    return json.load(open(path)).get("jobs", {})
+
+
+def jobs_report(prev_path, cur_path):
+    prev, cur = load_jobs(prev_path), load_jobs(cur_path)
+    if not prev or not cur:
+        print("jobs: no `jobs` map in both files; job counts not compared")
+        return
+    shared = sorted(set(prev) & set(cur))
+    diff = [q for q in shared if prev[q] != cur[q]]
+    print(f"jobs: {len(shared)} shared rows, {len(diff)} differ "
+          f"({sum(q not in JOB_WOBBLE for q in diff)} outside the wobble rows)")
+    for q in diff:
+        mark = "  (known wobble)" if q in JOB_WOBBLE else ""
+        print(f"  {q} {prev[q]} -> {cur[q]}{mark}")
 
 
 def family(name):
@@ -79,6 +106,7 @@ def main():
                    reverse=True)[:8]
     print("worst ratios: " + ", ".join(
         f"{q} {prev[q]:.2f}->{cur[q]:.2f}" for q in worst))
+    jobs_report(sys.argv[1], sys.argv[2])
 
 
 if __name__ == "__main__":
