@@ -15,4 +15,10 @@ final case class Q(
 
 trait QueryModule {
   def defs: Seq[Q]
+
+  /** `x` rounded to `scale` decimals half-up, like SQL ROUND (DuckDB and
+    * Spark round ties away from zero), NOT Math.rint's half-even: a value
+    * computed in Scala must round exactly like its oracle's ROUND. */
+  protected final def halfUp(x: Double, scale: Int): Double =
+    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
 }

@@ -618,17 +618,16 @@ object Analytics extends QueryModule {
           .select("ft", "tt", "p")
           .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
         val types = p.keys.flatMap(k => Seq(k._1, k._2)).toSeq.distinct.sorted
-        def r9(x: Double) = BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
         var pi = types.map(_ => 1.0 / types.length)
         for (_ <- 1 to 20) {
           pi = types.map { to =>
-            r9(types.zip(pi).map { case (from, v) =>
+            halfUp(types.zip(pi).map { case (from, v) =>
               v * p.getOrElse((from, to), 0.0)
-            }.sum)
+            }.sum, 9)
           }
         }
         types.zip(pi).map { case (t, v) =>
-          (t, BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+          (t, halfUp(v, 6))
         }.toDF("event_type", "pi").orderBy("event_type")
       },
       Some {

@@ -432,8 +432,6 @@ object Curation extends QueryModule {
     * driver. */
   private def trainedThetas(s: SparkSession, d: String): (Double, Double, Double) =
     graft.Memo(s, "thetas", d, "documents") {
-      def r9(v: Double): Double =
-        BigDecimal(v).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
       val data = qualityFeatures(s, d).cache()
       val m = data.count().toDouble
       var (th0, th1, th2) = (0.0, 0.0, 0.0)
@@ -443,9 +441,9 @@ object Curation extends QueryModule {
         val r = data.agg(sum(h - col("y")).as("g0"),
           sum((h - col("y")) * col("x1")).as("g1"),
           sum((h - col("y")) * col("x2")).as("g2")).collect()(0)
-        th0 = r9(th0 - r.getDouble(0) / m)
-        th1 = r9(th1 - r.getDouble(1) / m)
-        th2 = r9(th2 - r.getDouble(2) / m)
+        th0 = halfUp(th0 - r.getDouble(0) / m, 9)
+        th1 = halfUp(th1 - r.getDouble(1) / m, 9)
+        th2 = halfUp(th2 - r.getDouble(2) / m, 9)
       }
       data.unpersist()
       (th0, th1, th2)

@@ -217,15 +217,11 @@ object Graph extends QueryModule {
         sum(col("y") * col("y")))
       if (prev != null) Iterate.release(prev)
       prev = y
-      val nrm = r9g(math.sqrt(ssOpt.get.asInstanceOf[Double]))
+      val nrm = halfUp(math.sqrt(ssOpt.get.asInstanceOf[Double]), 9)
       x = y.select(col("v"), (col("y") / nrm).as("x"))
     }
     x.select(col("v"), round(col("x"), 9).as("score")).orderBy("v")
   }
-
-  /** round half-up like SQL ROUND — the ML.r9 lattice, local copy */
-  private def r9g(v: Double): Double =
-    BigDecimal(v).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   private def eigenvectorSql(iters: Int): String = {
     val steps = (0 until iters).map { i =>
@@ -1994,7 +1990,7 @@ object Graph extends QueryModule {
         val total = e.count()
         import s.implicits._
         Seq((total, mutual,
-          BigDecimal(mutual.toDouble / total).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
+          halfUp(mutual.toDouble / total, 6)))
           .toDF("n_edges", "n_mutual", "reciprocity")
       },
       Some(s"""WITH $edgesSql,

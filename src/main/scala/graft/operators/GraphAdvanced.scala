@@ -192,8 +192,7 @@ object GraphAdvanced extends QueryModule {
     semiClusterRaw(s, d, supersteps).map { case (id, v) =>
       val best = v.clusters.headOption
       (id, best.map(_.size).getOrElse(0),
-        BigDecimal(best.map(scScore).getOrElse(0.0))
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
+        halfUp(best.map(scScore).getOrElse(0.0), 6),
         best.map(scKey).getOrElse(""))
     }.toDF("v", "best_size", "best_score", "members").orderBy("v")
   }

@@ -165,8 +165,7 @@ object ML extends QueryModule {
     // per-cluster count + member-id checksum (pins the full assignment) +
     // rounded centroid norm (pins the centers)
     val norms = cen.map { case (c, cv) =>
-      (c, BigDecimal(math.sqrt(cv.map(x => x * x).sum))
-        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      (c, halfUp(math.sqrt(cv.map(x => x * x).sum), 4))
     }
     val out = assign.groupBy("c")
       .agg(count(lit(1)).as("cnt"), sum("vec_id").as("id_sum"))
@@ -243,20 +242,14 @@ object ML extends QueryModule {
       (col("l_quantity") / 50.0).as("x"),
       (col("l_extendedprice") / 100000.0).as("y"))
 
-  /** Round half-up like SQL ROUND (DuckDB/Spark round away from zero on ties),
-    * NOT Math.rint's half-even — driver-side model values must re-round
-    * exactly like the oracle's per-iteration ROUND(…, 9). */
-  private def r9(v: Double): Double =
-    BigDecimal(v).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** the 3-step GD loop on cached data → round-9 (th0, th1). */
   private def linregThetas(data: DataFrame, m: Double): (Double, Double) = {
     var (th0, th1) = (0.0, 0.0)
     for (_ <- 1 to 3) {
       val err = lit(th0) + lit(th1) * col("x") - col("y")
       val r = data.agg(sum(err).as("g0"), sum(err * col("x")).as("g1")).collect()(0)
-      th0 = r9(th0 - 0.5 * r.getDouble(0) / m)
-      th1 = r9(th1 - 0.5 * r.getDouble(1) / m)
+      th0 = halfUp(th0 - 0.5 * r.getDouble(0) / m, 9)
+      th1 = halfUp(th1 - 0.5 * r.getDouble(1) / m, 9)
     }
     (th0, th1)
   }
@@ -364,9 +357,9 @@ object ML extends QueryModule {
       val (sg, sgx, sgx2) = (r.getDouble(0), r.getDouble(1), r.getDouble(2))
       val (sh, shx, shx2, n) =
         (r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getDouble(6))
-      p = r9(sg / n)
-      mu1 = r9(sgx / sg); v1 = r9(sgx2 / sg - (sgx / sg) * (sgx / sg))
-      mu2 = r9(shx / sh); v2 = r9(shx2 / sh - (shx / sh) * (shx / sh))
+      p = halfUp(sg / n, 9)
+      mu1 = halfUp(sgx / sg, 9); v1 = halfUp(sgx2 / sg - (sgx / sg) * (sgx / sg), 9)
+      mu2 = halfUp(shx / sh, 9); v2 = halfUp(shx2 / sh - (shx / sh) * (shx / sh), 9)
     }
     val out = weighted
       .agg(count(lit(1)).cast("long").as("n_docs"),
@@ -427,8 +420,8 @@ object ML extends QueryModule {
     for (_ <- 1 to 3) {
       val h = lit(1.0) / (lit(1.0) + exp(-(lit(th0) + lit(th1) * col("x"))))
       val r = data.agg(sum(h - col("y")).as("g0"), sum((h - col("y")) * col("x")).as("g1")).collect()(0)
-      th0 = r9(th0 - 1.0 * r.getDouble(0) / m)
-      th1 = r9(th1 - 1.0 * r.getDouble(1) / m)
+      th0 = halfUp(th0 - 1.0 * r.getDouble(0) / m, 9)
+      th1 = halfUp(th1 - 1.0 * r.getDouble(1) / m, 9)
     }
     data.unpersist() // result below is literal-only; cache is done
     s.range(1).select(round(lit(th0), 6).as("th0"), round(lit(th1), 6).as("th1"))
@@ -1139,7 +1132,7 @@ object ML extends QueryModule {
           val mind = if (dists.size == 1) dists.head else least(dists: _*)
           val inertia = emb.select(sum(mind).as("s")).head.getDouble(0)
           (k.toLong,
-            BigDecimal(inertia).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble)
+            halfUp(inertia, 2))
         }
         graft.plans.Iterate.release(emb)
         rows.toDF("k", "inertia").orderBy("k")

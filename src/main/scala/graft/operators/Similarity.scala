@@ -35,10 +35,12 @@ object Similarity extends QueryModule {
   // cell-blocked DBSCAN: ε as a cosine floor, minPts counting the point
   // itself (so core ⇔ ≥ minPts−1 neighbors), and the unroll depth of the
   // oracle's min-label propagation — the engine side runs to fixpoint and
-  // ASSERTS it converged within this many rounds (measured 8 at gate data)
+  // ASSERTS it converged within this many rounds (measured at sf0.01: 8
+  // productive rounds for q_ml_dbscan, 10 for q_ml_dbscan_trained; 12
+  // leaves headroom, and the loop halts on its own before the bound)
   private val dbscanEps = 0.30
   private val dbscanMinPts = 4
-  private val dbscanCcRounds = 10
+  private val dbscanCcRounds = 12
 
   /** l1..l{dbscanCcRounds} min-label CTEs over `cedges` (the oracle half
     * of the q_ml_dbscan fixpoint loop; Dedup.clustersSqlCtes shape,
@@ -1002,7 +1004,6 @@ object Similarity extends QueryModule {
         // 6-decimal sims), so rounding at 6 hits .5 half-boundaries
         // constantly and binary noise makes the half-round engine-divergent;
         // at 7 the nearest boundary is 5e-8 away — unambiguous
-        def r7(x: Double) = BigDecimal(x).setScale(7, BigDecimal.RoundingMode.HALF_UP).toDouble
         val out = candRows.groupBy(_._1).toSeq.flatMap { case (q, cs0) =>
           var remaining = cs0.map(c => (c._2, c._3)).toList
           var selected = List.empty[Long]
@@ -1010,7 +1011,7 @@ object Similarity extends QueryModule {
             val scored = remaining.map { case (cid, sim) =>
               val pen = if (selected.isEmpty) 0.0
                 else selected.map(sid => ccMap((q, cid, sid))).max
-              (cid, r7(0.7 * sim - 0.3 * pen))
+              (cid, halfUp(0.7 * sim - 0.3 * pen, 7))
             }
             val (bestId, bestScore) = scored.minBy { case (cid, sc) => (-sc, cid) }
             selected ::= bestId

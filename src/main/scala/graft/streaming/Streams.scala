@@ -523,126 +523,9 @@ object Streams {
       .orderBy(desc("total"), asc("user_id"))
       .limit(k)
 
-  /** UPSERT (merge) sink via foreachBatch: per-user running aggregates in
-    * UPDATE mode, each micro-batch's changed keys merged into a parquet
-    * state table — the "streaming aggregation maintains a serving table"
-    * deployment. The merge is key-replacement: state rows whose key is
-    * absent from the batch survive, batch rows win otherwise; the write
-    * goes to a fresh directory then an atomic rename swaps it in, so a
-    * reader never sees a half-written state. At lake scale the same
-    * foreachBatch body targets a MERGE-capable table format (or
-    * replaceWhere over key partitions) — the streaming side is unchanged,
-    * which is the point of the hook. Returns the final state.
-    */
-  def runUpsertTotals(spark: SparkSession, eventsPath: String,
-      stateDir: String, options: Map[String, String] = Map.empty): DataFrame =
-    upsertTotals(spark, eventsPath, stateDir, options, changelog = false)
-
-  /** [[runUpsertTotals]] plus a CHANGE DATA FEED: each micro-batch also
-    * writes a changelog partition `changes/v<batchId>` of (user_id,
-    * old_n, new_n, new_total) for exactly the keys it updated — old_n
-    * NULL on first appearance. Update-mode foreachBatch already hands
-    * over the new cumulative rows per changed key; the old values are a
-    * key-join against the pre-swap serving table, so the feed costs one
-    * bounded join per batch and downstream consumers can subscribe to
-    * deltas without diffing snapshots (the Delta CDF shape). */
-  def runUpsertTotalsWithChangelog(spark: SparkSession, eventsPath: String,
-      stateDir: String, options: Map[String, String] = Map.empty): DataFrame =
-    upsertTotals(spark, eventsPath, stateDir, options, changelog = true)
-
-  private def upsertTotals(spark: SparkSession, eventsPath: String,
-      stateDir: String, options: Map[String, String],
-      changelog: Boolean): DataFrame = {
-    import org.apache.spark.sql.SaveMode
-    val agg = userTotals(spark, eventsPath, options)
-    val cur = new java.io.File(stateDir, "current")
-    recoverUpsertState(stateDir) // repair any interrupted swap before serving
-    withLiveTuning(spark, Seq(eventsPath)) {
-      drain(agg, OutputMode.Update()) { (batch, batchId) =>
-        recoverUpsertState(stateDir)
-        if (changelog) {
-          val old =
-            if (cur.exists())
-              spark.read.parquet(cur.getPath)
-                .select(col("user_id"), col("n_events").as("old_n"))
-            else batch.select(col("user_id"), col("n_events").as("old_n")).limit(0)
-          batch.join(old, Seq("user_id"), "left")
-            .select(col("user_id"), col("old_n"), col("n_events").as("new_n"),
-              round(col("total"), 2).as("new_total"))
-            .coalesce(1).write.mode(SaveMode.Overwrite)
-            .parquet(s"$stateDir/changes/v$batchId")
-        }
-        val merged =
-          if (cur.exists()) {
-            val state = spark.read.parquet(cur.getPath)
-            state.join(batch.select("user_id"), Seq("user_id"), "left_anti")
-              .unionByName(batch)
-          } else batch
-        val next = new java.io.File(stateDir, s"v$batchId")
-        merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(next.getPath)
-        // atomic swap: retire old state, promote the new version (checked)
-        promote(new java.io.File(stateDir), cur, next, batchId)
-      }
-    }
-    spark.read.parquet(cur.getPath)
-  }
-
-  /** Crash recovery for the upsert sink's state directory. The commit
-    * protocol is: (1) write `v<k>` fully (the parquet writer drops a
-    * `_SUCCESS` marker on completion), (2) rename `current` → `old<k>`,
-    * (3) rename `v<k>` → `current`. Each rename is atomic, so a crash
-    * leaves exactly one of three states, all repairable:
-    *   - mid-write: a `v<k>` without `_SUCCESS` → swept (stale dir);
-    *   - after (1), before (2): complete `v<k>` + `current` → finish the
-    *     swap (retire current, promote v);
-    *   - between (2) and (3): complete `v<k>`, no `current` → promote v.
-    * After recovery `current` always exists (once any version committed)
-    * and always holds a COMPLETE version — a reader can never observe a
-    * half-swapped serving table. */
-  private[graft] def recoverUpsertState(stateDir: String): Unit = {
-    val root = new java.io.File(stateDir)
-    if (!root.exists()) return
-    val vDirs = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
-    val (complete, stale) =
-      vDirs.partition(f => new java.io.File(f, "_SUCCESS").exists())
-    // sweep half-written versions: they can never be promoted. The walk is
-    // RECURSIVE — a mid-write crash typically leaves a _temporary/ tree
-    // inside v<k>, which a flat listFiles().delete() would silently skip,
-    // stranding the stale dir forever (ADVICE r6)
-    stale.foreach(sweep)
-    val cur = new java.io.File(root, "current")
-    complete.sortBy(_.getName.drop(1).toLong).foreach { v =>
-      val k = v.getName.drop(1).toLong
-      promote(root, cur, v, k)
-    }
-  }
-
-  /** Atomic serving-table swap: retire `current` → `old<k>`, promote the
-    * complete `v` → `current` — CHECKING every rename (ADVICE r6: a
-    * silently failed retire leaves `current` in place, the promote then
-    * also fails silently, and the serving table goes stale while claiming
-    * the swap protocol holds). A pre-existing `old<k>` (streaming batch
-    * retry replaying a batch id, or re-recovery of the same version) is
-    * swept first so the retire cannot collide. */
-  private def promote(root: java.io.File, cur: java.io.File,
-      v: java.io.File, k: Long): Unit = {
-    if (cur.exists()) {
-      val trash = new java.io.File(root, s"old$k")
-      if (trash.exists()) sweep(trash)
-      if (!cur.renameTo(trash))
-        sys.error(s"upsert sink: failed to retire $cur -> $trash")
-    }
-    if (!v.renameTo(cur))
-      sys.error(s"upsert sink: failed to promote $v -> $cur")
-  }
-
-  private def sweep(f: java.io.File): Unit =
-    if (!graft.GraftSession.deleteTree(f))
-      sys.error(s"upsert sink: failed to sweep $f")
-
-  /** Per-user totals of ONE call, key-replaced into a [[TxLog]]-backed
-    * MERGE table — the lake-scale form of [[runUpsertTotals]]. Each call
+  /** UPSERT sink — the "streaming aggregation maintains a serving table"
+    * deployment: per-user totals of ONE call, key-replaced into a
+    * [[TxLog]]-backed MERGE table. Each call
     * is a fresh stream whose aggregate accumulates `n_events`/`total`
     * over that call's micro-batches only, and each micro-batch
     * key-replaces the user's row: after the call, a user it carried
@@ -741,34 +624,30 @@ object Streams {
       .withColumn("sig_bucket",
         pmod(xxhash64(col("band_sig")), lit(sigBuckets.toLong)))
 
-  /** The store's bucket width is LAYOUT, not a per-call knob: a probe
-    * built at a different width addresses cells that mostly don't exist
-    * and silently returns zero matches. The width is therefore persisted
-    * beside the data on first write and every later writer/prober must
-    * agree — a mismatch fails loudly instead of declaring dups unique. */
-  private def sigBucketsMetaFile(storeDir: String) =
-    new java.io.File(storeDir, "_sig_buckets")
-
-  private[streaming] def pinSigBuckets(storeDir: String, sigBuckets: Int): Unit = {
-    val f = sigBucketsMetaFile(storeDir)
-    if (f.exists()) {
-      val stored = new String(
-        java.nio.file.Files.readAllBytes(f.toPath)).trim.toInt
-      require(stored == sigBuckets,
-        s"band store $storeDir was built with sigBuckets=$stored; " +
-          s"refusing to operate on it at width $sigBuckets — probes " +
-          "across widths silently miss every match")
-    } else
-      java.nio.file.Files.write(f.toPath,
-        sigBuckets.toString.getBytes): Unit
-  }
-
-  /** Width recorded in the store's layout metadata (probe-side lookup). */
-  def storedSigBuckets(storeDir: String): Option[Int] = {
-    val f = sigBucketsMetaFile(storeDir)
-    if (f.exists())
-      Some(new String(java.nio.file.Files.readAllBytes(f.toPath)).trim.toInt)
-    else None
+  /** A store's LAYOUT pin, the file `storeDir/_layout`. Bucket widths
+    * are layout, not per-call knobs: a writer or prober at a different
+    * width addresses partitions that mostly do not exist and silently
+    * misses every match. So the first open writes `layout` beside the
+    * data, and every reopen must ask for the same one: a mismatch fails
+    * loudly instead of declaring dups unique or reading the wrong
+    * buckets. `layout = None` only reads. Returns the pinned layout. */
+  private[graft] def pinLayout(storeDir: String, store: String,
+      layout: Option[String]): Option[String] = {
+    val f = new java.io.File(storeDir, "_layout")
+    val stored =
+      if (f.exists()) Some(new String(java.nio.file.Files.readAllBytes(f.toPath)).trim)
+      else None
+    (stored, layout) match {
+      case (Some(was), Some(asked)) =>
+        require(was == asked,
+          s"$store $storeDir layout mismatch: built with '$was', refusing to " +
+            s"operate on it at '$asked' — bucket widths are fixed at creation, " +
+            "and probes across widths silently miss every match")
+      case (None, Some(asked)) =>
+        java.nio.file.Files.write(f.toPath, asked.getBytes): Unit
+      case _ =>
+    }
+    stored.orElse(layout)
   }
 
   /** Number of parquet data files anywhere under `dir`. */
@@ -868,7 +747,7 @@ object Streams {
     import org.apache.spark.sql.SaveMode
     val stats = new java.util.concurrent.ConcurrentHashMap[Long, NearDupBatchStat]()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(storeDir))
-    pinSigBuckets(storeDir, sigBuckets) // layout contract: fail loudly on width drift
+    pinLayout(storeDir, "band store", Some(s"sigBuckets=$sigBuckets")): Unit
     drain(documents(spark, docsPath, Map("maxFilesPerTrigger" -> "1")),
         OutputMode.Append()) { (batch, batchId) =>
       val fp = CommitMarkers.fingerprint(batch)
@@ -966,36 +845,6 @@ object Streams {
     stats.values.asScala.toSeq.sortBy(_.batchId)
   }
 
-  /** STREAMING ANF MAINTENANCE — the graph summary kept current over a
-    * live edge stream, DELTA-FRONTIER shape (VERDICT r11 #1; the
-    * reference's active-set superstep contract,
-    * `graph/.../GraphJobRunner.java:256-313`):
-    *
-    *   - the accumulated edge relation is an APPEND-ONLY parquet store
-    *     partitioned by dst bucket (`db = pmod(hash(dst), nB)`) — each
-    *     batch writes only its OWN edges (deduped Δ-side, never a
-    *     re-distinct of the full relation), and the propagation probe
-    *     prunes to the frontier's buckets (the near-dup band-store
-    *     recipe);
-    *   - the REGISTER state is likewise a parquet store partitioned by
-    *     v bucket: each delta round's state reads prune to the touched
-    *     vertices' buckets, and each batch rewrites ONLY the buckets
-    *     its upserts land in (dynamic-partition overwrite) — per-batch
-    *     state IO is O(changed buckets), never a V·K scan or rewrite;
-    *   - the first non-empty batch converges cold
-    *     ([[graft.operators.Graph.anfSketch]]); every later batch runs
-    *     [[graft.operators.Graph.anfDeltaRows]] — frontier seeded from
-    *     the NEW edges' endpoints, each round joining edges only
-    *     against registers that CHANGED last round, returning the
-    *     new-or-changed rows for the bucket rewrite.
-    *
-    * The OR-merge's monotone unique fixpoint makes every batch's output
-    * bit-identical to a cold run on the edges seen so far; steady-state
-    * per-batch work is O(Δ · affected in-degree + changed-bucket
-    * state), not O(E) or O(V·K) — measured by examples/AnfMaintainScale.
-    * Returns the final registers (read off the store), each batch's
-    * round count, and each batch's per-round frontier/joined row
-    * counts. */
   /** Edge-store subtrees (ingest batches + folds) under `storeDir`. */
   private def anfEdgeDirs(storeDir: String): Seq[java.io.File] =
     Option(new java.io.File(storeDir).listFiles()).getOrElse(Array.empty)
@@ -1029,24 +878,6 @@ object Streams {
     spark.read.option("basePath", regDir)
       .parquet(anfRegLeafDirs(regDir).map(_.getPath): _*)
       .select("v", "k", "mask", "vb")
-
-  /** Layout metadata pinned at store creation (the near-dup
-    * `pinSigBuckets` discipline, VERDICT r12 #5): bucket counts are a
-    * LAYOUT property of the store — a maintainer reopening the stores
-    * at a different width would write probes and partitions that
-    * silently miss each other, so reopen validates against the pin. */
-  private def pinAnfLayout(storeDir: String, dstBuckets: Int,
-      regBuckets: Int): Unit = {
-    val f = new java.io.File(storeDir, "_layout")
-    if (f.exists()) {
-      val stored = new String(java.nio.file.Files.readAllBytes(f.toPath)).trim
-      require(stored == s"db=$dstBuckets,vb=$regBuckets",
-        s"ANF store layout mismatch: store pinned '$stored', caller asked " +
-          s"'db=$dstBuckets,vb=$regBuckets' — bucket widths are fixed at creation")
-    } else
-      java.nio.file.Files.write(f.toPath,
-        s"db=$dstBuckets,vb=$regBuckets".getBytes): Unit
-  }
 
   /** STREAMING ANF MAINTENANCE — the graph summary kept current over a
     * live edge stream, DELTA-FRONTIER shape (VERDICT r11 #1; the
@@ -1124,7 +955,7 @@ object Streams {
       .tempDirCleanedOnExit("graft-anf-regstore").toString)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(storeDir))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(regDir))
-    pinAnfLayout(storeDir, dstBuckets, regBuckets)
+    pinLayout(storeDir, "ANF store", Some(s"db=$dstBuckets,vb=$regBuckets")): Unit
     val nB = dstBuckets
     val rB = regBuckets
     // resume: the store already holds a committed view iff any marker

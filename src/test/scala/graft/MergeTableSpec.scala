@@ -321,6 +321,30 @@ class MergeTableSpec extends AnyFunSuite {
     assert(cursor2 === 4L && feed2.count() === 0L)
   }
 
+  test("change data feed of a merge-sink table: a whole-table rewrite feeds exactly the batch's keys") {
+    val root = GraftSession.tempDirCleanedOnExit("spec-mergetbl-sinkcdf").toString
+    // one events file per micro-batch: user 3 appears only in batch 0,
+    // and user 4 first appears in batch 1
+    TestSpark.landEvents(s"$root/in", Seq(Seq(1L, 2L, 3L), Seq(2L, 4L), Seq(1L))
+      .map(_.map(u => (Some(u), 1.0))))
+    val table = s"$root/table"
+    streaming.Streams.runMergeTotals(spark, s"$root/in", table,
+      Map("maxFilesPerTrigger" -> "1"))
+    assert(TxLog.versions(table) === Seq(0L, 1L, 2L))
+    def feed(v: Long) = {
+      // each commit replaces every file: the users outside the batch are
+      // rewritten with identical rows and must cancel in the content diff
+      val (was, now) = (TxLog.snapshot(table, Some(v - 1)).files,
+        TxLog.snapshot(table, Some(v)).files)
+      assert(was.nonEmpty && was.intersect(now).isEmpty, "not a whole-table rewrite")
+      MergeTable.changes(spark, table, "user_id", v - 1, v)
+        .select("user_id", "n_events", "_change").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted.toSeq
+    }
+    assert(feed(1L) === Seq((2L, 2L, "update"), (4L, 1L, "insert")))
+    assert(feed(2L) === Seq((1L, 2L, "update")))
+  }
+
   test("concurrent compaction vs merge: compaction loses the version race and retries correctly") {
     val table = GraftSession.tempDirCleanedOnExit("spec-mergetbl-race").toString
     val base = (0L until 16L).map(i => (i, i * 1.0)).toDF("k", "v")

@@ -343,6 +343,15 @@ class StreamsSpec extends AnyFunSuite {
     assert(spark.read.parquet(out).orderBy("doc_id").collect().toSeq === rows1)
     assert(Streams.nearDupStoreFiles(store) === files1)
 
+    // the bucket width is the store's layout: a reopen at another width
+    // fails before it runs a batch, and the store keeps its pin
+    val e = intercept[IllegalArgumentException] {
+      Streams.runNearDupIngest(spark, stage, store, out, sigBuckets = 8, compactEvery = 2)
+    }
+    assert(e.getMessage.contains("layout mismatch") && e.getMessage.contains("sigBuckets=16"))
+    assert(Streams.pinLayout(store, "band store", None) === Some("sigBuckets=16"))
+    assert(Streams.nearDupStoreFiles(store) === files1)
+
     // a retried batch never meets its own partially-committed signatures:
     // the fold (compactEvery=2) merged the subtrees, so the exclusion
     // check needs an uncompacted store — rebuild without folding

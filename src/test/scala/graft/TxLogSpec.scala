@@ -2,12 +2,11 @@ package graft
 
 import graft.streaming.TxLog
 import org.apache.spark.scheduler.JobCounter
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
-import java.nio.file.attribute.FileTime
 
 /** The TxLog commit protocol: atomicity, conflict detection, snapshot
   * isolation, time travel, crash-orphan invisibility + vacuum. */
@@ -26,29 +25,7 @@ class TxLogSpec extends AnyFunSuite {
   private def writePart(table: String, name: String): Unit =
     Files.write(Paths.get(table, name), Array[Byte](80, 65, 82, 49)) // "PAR1"
 
-  /** Write `df` as ONE parquet file at `dir/name`. */
-  private def writeFile(df: DataFrame, dir: String, name: String): Unit = {
-    val stage = s"${GraftSession.tempDirCleanedOnExit("txlog-stage")}/out"
-    df.coalesce(1).write.parquet(stage)
-    val part = new java.io.File(stage).listFiles().filter(_.getName.endsWith(".parquet")).head
-    Files.createDirectories(Paths.get(dir))
-    Files.move(part.toPath, Paths.get(dir, name))
-  }
-
-  /** Land one events file per batch in `dir`, each batch a list of
-    * (user_id, value) events, with increasing modification times so a
-    * `maxFilesPerTrigger = 1` stream takes them in order. */
-  private def landEvents(dir: String, batches: Seq[Seq[(Option[Long], Double)]]): Unit = {
-    val schema = streaming.Streams.eventsFileSchema(TimestampType)
-    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    batches.zipWithIndex.foreach { case (evs, b) =>
-      val rows = evs.zipWithIndex.map { case ((u, v), i) =>
-        Row(b * 1000L + i, ts, u.map(Long.box).orNull, "view", v, "{}") }
-      val name = f"batch$b%03d.parquet"
-      writeFile(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema), dir, name)
-      Files.setLastModifiedTime(Paths.get(dir, name), FileTime.fromMillis(1000000L * (b + 1)))
-    }
-  }
+  import TestSpark.{landEvents, writeFile}
 
   test("commits replay to the expected file set; removes hide files") {
     val t = freshTable("replay")
@@ -389,6 +366,20 @@ class TxLogSpec extends AnyFunSuite {
       streaming.Streams.readMergeTable(spark, table, Some(v))
         .agg(sum("n_events")).head.getLong(0))
     assert(counts === counts.sorted, s"a later version lost events: $counts")
+  }
+
+  test("upsert history versions are monotone: counts only grow across versions") {
+    val h = SparkEntry.queries("q_stream_live_upsert_history")(spark, TestSpark.sf0)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val byUser = h.groupBy(_._1._2)
+    byUser.foreach { case (_, versions) =>
+      val counts = versions.toSeq.sortBy(_._1._1).map(_._2)
+      counts.sliding(2).foreach {
+        case Seq(a, b) => assert(b >= a, "a later version lost events")
+        case _ =>
+      }
+    }
+    assert(byUser.nonEmpty)
   }
 
   test("merge sink keeps one row per key across micro-batches, the null key included") {

@@ -3,25 +3,45 @@
 against the DuckDB oracle and compare per query.
 
 Usage: python3 tools/check.py <outDir> <sfDir> [query ...]
+       python3 tools/check.py <outDir> <otherOutDir> [query ...]
 (Verify must already have written <outDir>/<name>/ parquet + oracle_sql.json.)
+
+When the second argument is itself a Verify output dir (it holds an
+oracle_sql.json), each query's dump is compared row for row with that
+dir's dump of the same query instead of with DuckDB: the parent-vs-change
+compare for rows whose oracle does not fit in memory.
 """
 import sys, os, json, glob
-import duckdb
 import pandas as pd
 import numpy as np
 
-outdir, sfdir = sys.argv[1], sys.argv[2]
+outdir, refdir = sys.argv[1], sys.argv[2]
 only = set(sys.argv[3:])
-
-con = duckdb.connect()
-tables = ["region","nation","customer","supplier","part","orders",
-          "lineitem","events","documents","embeddings"]
-for t in tables:
-    p = f"{sfdir}/{t}.parquet"
-    if os.path.exists(p):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+dump_vs_dump = os.path.exists(f"{refdir}/oracle_sql.json")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+
+def read_dump(d: str, name: str):
+    files = glob.glob(f"{d}/{name}/*.parquet")
+    return pd.concat([pd.read_parquet(f) for f in sorted(files)]) if files else None
+
+if dump_vs_dump:
+    def expected(name, sql):
+        df = read_dump(refdir, name)
+        if df is None:
+            raise RuntimeError(f"no output in {refdir}")
+        return df
+else:
+    import duckdb
+    con = duckdb.connect()
+    tables = ["region","nation","customer","supplier","part","orders",
+              "lineitem","events","documents","embeddings"]
+    for t in tables:
+        p = f"{refdir}/{t}.parquet"
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    def expected(name, sql):
+        return con.execute(sql).fetchdf()
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df[sorted(df.columns)]
@@ -35,29 +55,18 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
             df[c] = df[c].astype("int64")
     return df.sort_values(by=list(df.columns), ignore_index=True)
 
-fails = 0
-for name, sql in sorted(oracle.items()):
-    if only and name not in only:
-        continue
-    files = glob.glob(f"{outdir}/{name}/*.parquet")
-    if not files:
-        print(f"FAIL {name}: no spark output"); fails += 1; continue
-    try:
-        got = canon(pd.concat([pd.read_parquet(f) for f in sorted(files)]))
-        want = canon(con.execute(sql).fetchdf())
-    except Exception as e:
-        print(f"FAIL {name}: {e}"); fails += 1; continue
+def mismatch(got: pd.DataFrame, want: pd.DataFrame):
+    """None when the canonical frames agree, else the first difference."""
     if list(got.columns) != list(want.columns):
-        print(f"FAIL {name}: cols {list(got.columns)} vs {list(want.columns)}"); fails += 1; continue
+        return f"cols {list(got.columns)} vs {list(want.columns)}"
     # driver hashes raw values incl. type: int64 20100 != float64 20100.0.
     # DuckDB HUGEINT (SUM of BIGINT) fetches as float64 — flag kind mismatches.
     kind_bad = [c for c in got.columns
                 if got[c].dtype.kind != want[c].dtype.kind]
     if kind_bad:
-        print(f"FAIL {name}: dtype-kind mismatch {[(c, str(got[c].dtype), str(want[c].dtype)) for c in kind_bad]}"); fails += 1; continue
+        return f"dtype-kind mismatch {[(c, str(got[c].dtype), str(want[c].dtype)) for c in kind_bad]}"
     if len(got) != len(want):
-        print(f"FAIL {name}: rows {len(got)} vs {len(want)}"); fails += 1; continue
-    bad = None
+        return f"rows {len(got)} vs {len(want)}"
     for c in got.columns:
         g, w = got[c].values, want[c].values
         if np.issubdtype(g.dtype, np.floating):
@@ -68,8 +77,22 @@ for name, sql in sorted(oracle.items()):
             neq = ~((pd.isna(g) & pd.isna(w)) | (g == w))
         if neq.any():
             i = int(np.argmax(neq))
-            bad = f"col {c} row {i}: spark={g[i]!r} oracle={w[i]!r} ({int(neq.sum())} diffs)"
-            break
+            return f"col {c} row {i}: spark={g[i]!r} oracle={w[i]!r} ({int(neq.sum())} diffs)"
+    return None
+
+fails = 0
+for name, sql in sorted(oracle.items()):
+    if only and name not in only:
+        continue
+    got = read_dump(outdir, name)
+    if got is None:
+        print(f"FAIL {name}: no spark output"); fails += 1; continue
+    try:
+        got = canon(got)
+        want = canon(expected(name, sql))
+    except Exception as e:
+        print(f"FAIL {name}: {e}"); fails += 1; continue
+    bad = mismatch(got, want)
     if bad:
         print(f"FAIL {name}: {bad}"); fails += 1
     else:
