@@ -11,16 +11,14 @@ object Bench {
     val only = (args ++ sys.env.get("SPARK_GRAFT_ONLY").toSeq.flatMap(_.split(',')))
       .filter(_.nonEmpty).toSet
     val spark = GraftSession.get()
-    // per-query Spark-job counter: inflation on this host is a fixed cost
+    // per-query Spark-job count: inflation on this host is a fixed cost
     // PER JOB (BASELINE.md), so jobs-per-query makes any future slow row
     // attributable (jobs × tax vs a genuine plan regression) without
-    // re-instrumenting (VERDICT r4 item 7)
-    val jobCount = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobCount.incrementAndGet(): Unit
-      }
-    })
+    // re-instrumenting (VERDICT r4 item 7). Read from the scheduler's own
+    // counter, exact when the query returns: a listener's events arrive
+    // later, so a row's last jobs could land in the next row's window
+    def jobsSubmitted(): Int =
+      org.apache.spark.scheduler.JobCounter.submitted(spark.sparkContext)
     // warm the JVM/session so per-query times measure the engine, not
     // startup: one scan-agg, one shuffle join, one window, one string-hash
     // pass compile the hot codegen/shuffle paths before any query is timed
@@ -51,7 +49,7 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => only.isEmpty || only(q._1))
       .map { case (name, fn) =>
-      val j0 = jobCount.get()
+      val j0 = jobsSubmitted()
       val t0 = System.nanoTime()
       // a query that throws is recorded as `failed` and kept out of the
       // total: its time-to-failure would otherwise read as a speedup
@@ -59,7 +57,7 @@ object Bench {
         try { fn(spark, sfDir).foreach(_ => ()); "ok" }
         catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); "failed" }
       val dt = (System.nanoTime() - t0) / 1e9
-      val jobs = jobCount.get() - j0
+      val jobs = jobsSubmitted() - j0
       // per-query isolation: each reference job ran in its own JVM; drop
       // caches so query N's leftover blocks can't tax query N+1
       spark.catalog.clearCache()

@@ -1,62 +1,40 @@
 package graft.examples
 
 import graft.{GraftSession, Tables}
+import graft.operators.Graph
 import graft.plans.Iterate
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Scale evidence for the k-truss loop: the SAME round shape as
-  * q_graph_ktruss (triangle enumeration → per-edge support → semi-join
-  * prune, per-round checkpoints) on the lineitem-derived graph three
-  * orders of magnitude larger than the declared query's 200 nodes. If
-  * per-round time tracks triangle volume rather than plan depth, the
-  * posture holds.
+/** Scale evidence for the k-truss loop: q_graph_ktruss's own fixpoint
+  * ([[graft.operators.Graph.ktrussFixpoint]]: triangle enumeration →
+  * per-edge support → semi-join prune, one checkpoint per round) on the
+  * lineitem-derived graph three orders of magnitude larger than the
+  * declared query's 200 nodes. If per-round time tracks triangle volume
+  * rather than plan depth, the posture holds.
   *
-  * Run: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.examples.TrussScale [nodeMod] [rounds]"
+  * Run: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.examples.TrussScale [nodeMod] [maxRounds]"
   */
 object TrussScale {
   def main(args: Array[String]): Unit = {
     val n = args.lift(0).map(_.toLong).getOrElse(50000L)
-    val rounds = args.lift(1).map(_.toInt).getOrElse(4)
+    val maxRounds = args.lift(1).map(_.toInt).getOrElse(64)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.get()
 
-    def support(ed: DataFrame): DataFrame = {
-      val tri = ed.as("e1").join(ed.as("e2"), col("e1.b") === col("e2.a"))
-        .select(col("e1.a").as("wa"), col("e1.b").as("wb"), col("e2.b").as("wc"))
-        .join(ed.as("e3"), col("wa") === col("e3.a") && col("wc") === col("e3.b"))
-        .select("wa", "wb", "wc")
-      tri.select(explode(array(
-          struct(col("wa").as("a"), col("wb").as("b")),
-          struct(col("wa").as("a"), col("wc").as("b")),
-          struct(col("wb").as("a"), col("wc").as("b")))).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"))
-        .groupBy("a", "b").agg(count(lit(1)).as("supp"))
-    }
-
     // degree-bounded derived graph (the triangle-orientation segment's
     // construction): ~600 k undirected edges over ~n vertices at sf0.1
-    val e = Tables(spark, sfDir, "lineitem")
+    val (e, e0) = Iterate.pinCountAll(Tables(spark, sfDir, "lineitem")
       .select((col("l_orderkey") % n).as("x"),
         ((col("l_partkey") * 7 + col("l_suppkey")) % n).as("y"))
       .filter(col("x") =!= col("y"))
       .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
-      .distinct().localCheckpoint()
-    val e0 = e.count()
+      .distinct())
 
     val t0 = System.nanoTime()
-    var edges = e
-    val sizes = scala.collection.mutable.ArrayBuffer(e0)
-    for (_ <- 1 to rounds) {
-      val next = edges.join(support(edges), Seq("a", "b"))
-        .filter(col("supp") >= 2).select("a", "b").localCheckpoint()
-      if (edges ne e) Iterate.release(edges)
-      edges = next
-      sizes += edges.count()
-    }
+    val (truss, rounds) = Graph.ktrussFixpoint(e, maxRounds)
     val secs = (System.nanoTime() - t0) / 1e9
     println(s"""{"metric":"ktruss_scale","edges0":$e0,""" +
-      s""""sizes":[${sizes.mkString(",")}],"rounds":$rounds,""" +
+      s""""edges":${truss.count()},"rounds":$rounds,""" +
       f""""secs":$secs%.2f,"secs_per_round":${secs / rounds}%.2f}""")
     spark.stop()
   }

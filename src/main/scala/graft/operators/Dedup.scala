@@ -238,23 +238,19 @@ object Dedup extends QueryModule {
       .union(pairs.select(col("doc_b").as("v"), col("doc_a").as("n")))
       .localCheckpoint()
     graft.plans.Iterate.release(pairs)
-    var lab = Tables(s, d, "documents")
+    val init = Tables(s, d, "documents")
       .select(col("doc_id").as("v"), col("doc_id").as("lab"))
     // each round eagerly checkpoints its (doc, label) output and frees the
-    // previous round's blocks (the cc/Iterate hygiene pattern): without
-    // this, round k re-executes rounds 1..k-1 — 3× the label-prop work —
-    // and the final select re-derives the whole chain once more
-    var prev: DataFrame = null
-    for (_ <- 1 to clusterRounds) {
+    // previous round's blocks (Iterate.advance): without this, round k
+    // re-executes rounds 1..k-1 — 3× the label-prop work — and the final
+    // select re-derives the whole chain once more
+    val lab = graft.plans.Iterate(init, clusterRounds, checkpointEvery = 0) { (lab, _) =>
       val fromNeighbors = edges.join(lab.withColumnRenamed("v", "nv"),
           col("n") === col("nv"))
         .select(col("v"), col("lab"))
-      val next = lab.select(col("v"), col("lab")).unionByName(fromNeighbors)
-        .groupBy("v").agg(min("lab").as("lab"))
-        .localCheckpoint()
-      if (prev != null) graft.plans.Iterate.release(prev)
-      lab = next
-      prev = next
+      graft.plans.Iterate.advance(lab)(graft.plans.Iterate.pin(
+        lab.select(col("v"), col("lab")).unionByName(fromNeighbors)
+          .groupBy("v").agg(min("lab").as("lab"))))
     }
     // the final `lab` checkpoint is the only live dependency — free the
     // O(pairs) edge blocks now, not at the harness clearCache (ADVICE r3)

@@ -198,29 +198,33 @@ object Graph extends QueryModule {
     * engines walk the identical normalized sequence. One edge join + one
     * hash aggregate + one scalar collect per round — the same bounded
     * superstep as [[katz]]; each round's state is checkpointed because the
-    * norm already materialized it. */
+    * norm already materialized it. The loop state is the pinned raw
+    * vector y with its norm beside it, so each round releases the y it
+    * superseded; x⁰ is y⁰ = 1 over the norm 1, the same doubles. */
   private def eigenvector(s: SparkSession, d: String, iters: Int): DataFrame = {
-    val e = edges(s, d).select("src", "dst").localCheckpoint()
+    val e = Iterate.pin(edges(s, d).select("src", "dst"))
     val vs = nodes(e).cache()
-    var x = vs.select(col("v"), lit(1.0).as("x"))
-    var prev: DataFrame = null
-    for (_ <- 1 to iters) {
+    var nrm = 1.0
+    val y = Iterate(vs.select(col("v"), lit(1.0).as("y")), iters,
+        checkpointEvery = 0) { (yPrev, _) =>
+      val x = yPrev.select(col("v"), (col("y") / nrm).as("x"))
       // the squared-norm sum is OBSERVED during the checkpoint job
       // (r15): one job per round instead of checkpoint + a scalar agg —
       // identical double (same sum), so the round-9 lattice holds
-      val (y, ssOpt) = Iterate.pinObserved(
+      val (next, ss) = Iterate.advance(yPrev)(Iterate.pinObserved(
         vs.as("nn").join(
             e.as("ee").join(x.as("xx"), col("ee.src") === col("xx.v"))
               .groupBy(col("ee.dst").as("v")).agg(sum(col("xx.x")).as("m")),
             Seq("v"), "left")
           .select(col("v"), coalesce(col("m"), lit(0.0)).as("y")),
-        sum(col("y") * col("y")))
-      if (prev != null) Iterate.release(prev)
-      prev = y
-      val nrm = halfUp(math.sqrt(ssOpt.get.asInstanceOf[Double]), 9)
-      x = y.select(col("v"), (col("y") / nrm).as("x"))
+        sum(col("y") * col("y"))))
+      nrm = halfUp(math.sqrt(ss.get.asInstanceOf[Double]), 9)
+      next
     }
-    x.select(col("v"), round(col("x"), 9).as("score")).orderBy("v")
+    // the last pinned y is all the result reads
+    Iterate.release(e)
+    vs.unpersist()
+    y.select(col("v"), round(col("y") / nrm, 9).as("score")).orderBy("v")
   }
 
   private def eigenvectorSql(iters: Int): String = {
@@ -838,41 +842,40 @@ object Graph extends QueryModule {
     * partial-combined aggregate per level; levels = graph diameter. */
   private[graft] def bfsSigma(e0: DataFrame,
       sources: Option[DataFrame] = None): (DataFrame, Seq[DataFrame]) = {
-    val e = Iterate.pin(e0.select("src", "dst").filter(col("src") =!= col("dst"))
-      .distinct(), freshIds = true)
+    // the edge count bounds the levels: a shortest path of L hops uses L
+    // distinct edges, so at most E levels are non-empty and the (E + 1)th
+    // round confirms the empty frontier
+    val (e, eRows) = Iterate.pinCountAll(e0.select("src", "dst")
+      .filter(col("src") =!= col("dst")).distinct(), freshIds = true)
     val srcs = Iterate.pin(sources.map(_.select("v")).getOrElse(nodes(e)),
       freshIds = true)
-    var reached = Iterate.pin(srcs.select(col("v").as("s"), col("v"),
+    val start = Iterate.pin(srcs.select(col("v").as("s"), col("v"),
       lit(0).as("d"), lit(1L).as("sigma")), freshIds = true)
-    val levels = scala.collection.mutable.ArrayBuffer[DataFrame](reached)
-    var frontier = reached
-    var lvl = 0
+    Iterate.release(srcs)
     // ONE job per level (optimization r15): the new frontier's emptiness
     // check is OBSERVED during its own checkpoint (pinCountAll), and the
     // growing `reached` relation is a LAZY union of the level pins — the
     // old shape re-pinned the whole accumulated relation every level
-    // (O(levels × reached) block rewrites) plus a head(1) probe. The
-    // anti-join consumes the union of already-materialized level blocks
-    // either way; only the per-level rewrite and probe jobs disappear.
-    var frontierEmpty = frontier.head(1).isEmpty
-    while (!frontierEmpty && lvl < N) {
-      lvl += 1
+    // (O(levels × reached) block rewrites). The anti-join consumes the
+    // union of already-materialized level blocks; an empty start is
+    // confirmed by the first level's observed count.
+    val levels = scala.collection.mutable.ArrayBuffer[DataFrame](start)
+    val fp = Iterate.untilFixpointChecked(start,
+        maxIter = math.min(eRows + 1, Int.MaxValue.toLong).toInt,
+        checkpointEvery = 0) { (frontier, i) =>
       val expand = frontier.select(col("s"), col("v").as("u"), col("sigma"))
         .join(e, col("u") === col("src"))
         .groupBy(col("s"), col("dst")).agg(sum("sigma").as("sigma"))
-        .select(col("s"), col("dst").as("v"), lit(lvl).as("d"), col("sigma"))
+        .select(col("s"), col("dst").as("v"), lit(i + 1).as("d"), col("sigma"))
       val (nf, nfRows) = Iterate.pinCountAll(expand.join(
-        reached.select(col("s").as("rs"), col("v").as("rv")),
+        levels.reduce(_ unionAll _).select(col("s").as("rs"), col("v").as("rv")),
         col("s") === col("rs") && col("v") === col("rv"), "left_anti"),
         freshIds = true)
-      frontierEmpty = nfRows == 0
-      if (!frontierEmpty) {
-        reached = reached.unionAll(nf)
-        levels += nf
-      }
-      frontier = nf
-    }
-    (reached, levels.toSeq)
+      if (nfRows > 0) levels += nf
+      (nf, nfRows)
+    }.requireConverged("bfsSigma")
+    Seq(e, fp.out).foreach(Iterate.release) // fp.out: the final, empty frontier
+    (levels.reduce(_ unionAll _), levels.toSeq)
   }
 
   /** Betweenness centrality — Brandes restated as level-synchronous
@@ -1446,112 +1449,114 @@ object Graph extends QueryModule {
     // paid a limit(1).count job per gate per round on top of each pin
     val (allNodes, nAll) =
       Iterate.pinCountAll(nodes(eAll), freshIds = true)
-    val e0 = Iterate.pin(eAll.filter(col("src") =!= col("dst")), freshIds = true)
-    var residualNodes = allNodes
-    var residualCount = nAll
-    var residualEdges = e0
+    var residualEdges = Iterate.pin(eAll.filter(col("src") =!= col("dst")), freshIds = true)
+    Iterate.release(eAll)
     // start from an EMPTY (v, scc) frame, not null: an empty edge input
     // never enters the peel loop and must still return a valid relation
     var done: DataFrame = allNodes.filter(lit(false))
       .select(col("v"), col("v").as("scc"))
-    var guard = 0
-    while (residualCount > 0 && guard < N) {
-      guard += 1
+    // settle (v, scc) rows: fold them into `done` and out of the residual
+    // graph, releasing each superseded pin once its successor exists.
+    // Returns the residual vertex set with its observed count. The
+    // settled key set takes a fresh alias: localCheckpoint keeps the
+    // ancestor's attribute ids, so an anti-join of the residual against
+    // its own descendant would hit ambiguous-attribute resolution on the
+    // second peel.
+    def settle(residualNodes: DataFrame, settled: DataFrame): (DataFrame, Long) = {
+      done = Iterate.advance(done)(Iterate.pin(done.unionAll(settled), freshIds = true))
+      val settledV = settled.select(col("v").as("__settled_v"))
+      val residual = Iterate.advance(residualNodes)(Iterate.pinCountAll(residualNodes
+        .join(settledV, col("v") === col("__settled_v"), "left_anti"),
+        freshIds = true))
+      residualEdges = Iterate.advance(residualEdges)(Iterate.pin(residualEdges
+        .join(settledV, col("src") === col("__settled_v"), "left_anti")
+        .join(settledV, col("dst") === col("__settled_v"), "left_anti"), freshIds = true))
+      Iterate.release(settled)
+      residual
+    }
+    // FRONTIER min-propagation, one materialization per round
+    // (optimization r14, guide §2.4): labels are monotone
+    // non-increasing, so only a vertex whose label dropped last round
+    // can drop its in-neighbours' — relaxing from the changed set and
+    // least-merging into the carried state reaches the same unique
+    // fixpoint as the previous full re-relaxation over ed ∪ self-loops
+    // (the left join plays the self-loop's keep-own-label role), and
+    // the changed flag rides in the state row, so the old
+    // next-vs-previous join collapses into a narrow count over the
+    // just-checkpointed blocks. Returns the final pinned (v, lbl, chg).
+    def minReach(rn: DataFrame, ed: DataFrame): DataFrame = {
+      val init = rn.select(col("v"), col("v").as("lbl"), lit(true).as("chg"))
+      Iterate.untilFixpointChecked(init, maxIter = N, checkpointEvery = 0) {
+        (c, _) =>
+          val relax = c.filter(col("chg")).as("cc")
+            .join(ed.as("ee"), col("cc.v") === col("ee.dst"))
+            .groupBy(col("ee.src").as("v")).agg(min(col("cc.lbl")).as("cand"))
+          // changed-count observed during the checkpoint job (r15);
+          // fresh ids: the peel loop re-joins descendants of this state
+          Iterate.advance(c,
+            c.as("o").join(relax.as("r"), Seq("v"), "left")
+              .select(col("v"),
+                least(col("lbl"), coalesce(col("cand"), lit(Long.MaxValue))).as("lbl"),
+                (coalesce(col("cand"), lit(Long.MaxValue)) < col("lbl")).as("chg")),
+            col("chg"), freshIds = true)
+      }.requireConverged("sccTrim minReach").out
+    }
+    // the peel loop: rounds are discovered, each one's changed count the
+    // residual vertex count it leaves, so the loop halts once nothing is
+    // left unsettled
+    if (nAll == 0) {
+      Iterate.release(residualEdges)
+      return done.orderBy("v")
+    }
+    val peeled = Iterate.untilFixpointChecked(allNodes, maxIter = N,
+        checkpointEvery = 0) { (residualNodes, _) =>
       // ONE TRIM pass: a vertex with no incoming (or no outgoing)
       // residual edge is a singleton SCC — settled here with two cheap
       // anti-joins, which peels sparse tails without a fixpoint.
-      locally {
-        val srcs = residualEdges.select(col("src").as("__k")).distinct()
-        val dsts = residualEdges.select(col("dst").as("__k")).distinct()
-        val (trimmed, nTrimmed) = Iterate.pinCountAll(residualNodes
-          .join(srcs, col("v") === col("__k"), "left_anti")
-          .unionAll(residualNodes
-            .join(dsts, col("v") === col("__k"), "left_anti"))
-          .distinct(), freshIds = true)
-        if (nTrimmed > 0) {
-          val settled = trimmed.select(col("v"), col("v").as("scc"))
-          done = Iterate.pin(done.unionAll(settled), freshIds = true)
-          val tv = trimmed.select(col("v").as("__settled_v"))
-          val (rNodes, rCount) = Iterate.pinCountAll(residualNodes
-            .join(tv, col("v") === col("__settled_v"), "left_anti"),
-            freshIds = true)
-          residualNodes = rNodes
-          residualCount = rCount
-          residualEdges = Iterate.pin(residualEdges
-            .join(tv, col("src") === col("__settled_v"), "left_anti")
-            .join(tv, col("dst") === col("__settled_v"), "left_anti"), freshIds = true)
-        }
+      val srcs = residualEdges.select(col("src").as("__k")).distinct()
+      val dsts = residualEdges.select(col("dst").as("__k")).distinct()
+      val (trimmed, nTrimmed) = Iterate.pinCountAll(residualNodes
+        .join(srcs, col("v") === col("__k"), "left_anti")
+        .unionAll(residualNodes
+          .join(dsts, col("v") === col("__k"), "left_anti"))
+        .distinct(), freshIds = true)
+      val afterTrim =
+        if (nTrimmed == 0) None
+        else Some(settle(residualNodes, trimmed.select(col("v"), col("v").as("scc"))))
+      Iterate.release(trimmed)
+      afterTrim match {
+        case Some(empty @ (_, 0L)) => empty
+        case _ =>
+          val rn = afterTrim.fold(residualNodes)(_._1)
+          // Orzan coloring peel: F (forward min) partitions the residual
+          // into classes that each CONTAIN their root's SCC (F is constant
+          // on an SCC), so computing backward-min WITHIN each class settles
+          // SCC(root) for EVERY class simultaneously: B_class(u) = F(u) iff
+          // the class root reaches u through the class iff u ∈ SCC(root).
+          // Singleton classes settle trivially (B_class = self = F), which
+          // is what consumes a dense ascending DAG residual in one peel —
+          // the plain F/B core settled one component per peel and measured
+          // 26.5 s on the condensation row at sf0.1.
+          val fOut = minReach(rn, residualEdges)
+          val f = Iterate.advance(fOut)(
+            Iterate.pin(fOut.select(col("v"), col("lbl")), freshIds = true))
+          val f1 = f.select(col("v").as("__fv1"), col("lbl").as("__fl1"))
+          val f2 = f.select(col("v").as("__fv2"), col("lbl").as("__fl2"))
+          val classEdgesRev = residualEdges
+            .join(f1, col("src") === col("__fv1"))
+            .join(f2, col("dst") === col("__fv2"))
+            .filter(col("__fl1") === col("__fl2"))
+            .select(col("dst").as("src"), col("src").as("dst"))
+          val b = minReach(rn, classEdgesRev)
+          val settled = Iterate.pin(f.as("f").join(b.as("b"), col("f.v") === col("b.v"))
+            .filter(col("f.lbl") === col("b.lbl"))
+            .select(col("f.v").as("v"), col("f.lbl").as("scc")), freshIds = true)
+          Seq(f, b).foreach(Iterate.release)
+          settle(rn, settled)
       }
-      val rn = residualNodes
-      if (residualCount > 0) {
-      // FRONTIER min-propagation, one materialization per round
-      // (optimization r14, guide §2.4): labels are monotone
-      // non-increasing, so only a vertex whose label dropped last round
-      // can drop its in-neighbours' — relaxing from the changed set and
-      // least-merging into the carried state reaches the same unique
-      // fixpoint as the previous full re-relaxation over ed ∪ self-loops
-      // (the left join plays the self-loop's keep-own-label role), and
-      // the changed flag rides in the state row, so the old
-      // next-vs-previous join collapses into a narrow count over the
-      // just-checkpointed blocks.
-      def minReach(ed: DataFrame): DataFrame = {
-        val init = rn.select(col("v"), col("v").as("lbl"), lit(true).as("chg"))
-        Iterate.untilFixpointChecked(init, maxIter = N, checkpointEvery = 0) {
-          (c, _) =>
-            val relax = c.filter(col("chg")).as("cc")
-              .join(ed.as("ee"), col("cc.v") === col("ee.dst"))
-              .groupBy(col("ee.src").as("v")).agg(min(col("cc.lbl")).as("cand"))
-            // changed-count observed during the checkpoint job (r15);
-            // fresh ids: the peel loop re-joins descendants of this state
-            Iterate.advance(c,
-              c.as("o").join(relax.as("r"), Seq("v"), "left")
-                .select(col("v"),
-                  least(col("lbl"), coalesce(col("cand"), lit(Long.MaxValue))).as("lbl"),
-                  (coalesce(col("cand"), lit(Long.MaxValue)) < col("lbl")).as("chg")),
-              col("chg"), freshIds = true)
-        }.requireConverged("sccTrim minReach").out.select(col("v"), col("lbl"))
-      }
-      // Orzan coloring peel: F (forward min) partitions the residual
-      // into classes that each CONTAIN their root's SCC (F is constant
-      // on an SCC), so computing backward-min WITHIN each class settles
-      // SCC(root) for EVERY class simultaneously: B_class(u) = F(u) iff
-      // the class root reaches u through the class iff u ∈ SCC(root).
-      // Singleton classes settle trivially (B_class = self = F), which
-      // is what consumes a dense ascending DAG residual in one peel —
-      // the plain F/B core settled one component per peel and measured
-      // 26.5 s on the condensation row at sf0.1.
-      val f = Iterate.pin(minReach(residualEdges), freshIds = true)
-      val f1 = f.select(col("v").as("__fv1"), col("lbl").as("__fl1"))
-      val f2 = f.select(col("v").as("__fv2"), col("lbl").as("__fl2"))
-      val classEdgesRev = residualEdges
-        .join(f1, col("src") === col("__fv1"))
-        .join(f2, col("dst") === col("__fv2"))
-        .filter(col("__fl1") === col("__fl2"))
-        .select(col("dst").as("src"), col("src").as("dst"))
-      val b = minReach(classEdgesRev)
-      val settled = Iterate.pin(f.as("f").join(b.as("b"), col("f.v") === col("b.v"))
-        .filter(col("f.lbl") === col("b.lbl"))
-        .select(col("f.v").as("v"), col("f.lbl").as("scc")), freshIds = true)
-      done = Iterate.pin(done.unionAll(settled), freshIds = true)
-      // fresh alias on the settled key set: localCheckpoint keeps the
-      // ancestor's attribute ids, so an anti-join of residualNodes
-      // against its own descendant would hit ambiguous-attribute
-      // resolution on the second peel
-      val settledV = settled.select(col("v").as("__settled_v"))
-      val (rNodes, rCount) = Iterate.pinCountAll(residualNodes
-        .join(settledV, col("v") === col("__settled_v"), "left_anti"),
-        freshIds = true)
-      residualNodes = rNodes
-      residualCount = rCount
-      residualEdges = Iterate.pin(residualEdges
-        .join(settledV, col("src") === col("__settled_v"), "left_anti")
-        .join(settledV, col("dst") === col("__settled_v"), "left_anti"), freshIds = true)
-      }
-    }
-    // fail LOUDLY if the peel guard exhausted with residual vertices
-    // left — partial labels silently returned would be a wrong answer
-    require(residualCount == 0,
-      s"sccTrimOn: peel guard exhausted after $guard rounds with residual vertices remaining")
+    }.requireConverged("sccTrimOn peel")
+    // both empty now; `done` is all the result reads
+    Seq(peeled.out, residualEdges).foreach(Iterate.release)
     done.orderBy("v")
   }
 
@@ -1746,25 +1751,22 @@ object Graph extends QueryModule {
     // re-derives the whole propagate lineage and the plan doubles per
     // round. One materialization of the (tiny relative to edges) label
     // table per round is the price of halving the round count; superseded
-    // blocks are freed at the next barrier as usual.
-    var cur = init
-    var prevCkpt: DataFrame = null
-    var i = 0
-    while (i < rounds) {
-      val p = cur.as("cc").join(euPlus.as("ee"), col("cc.v") === col("ee.src"))
-        .groupBy(col("ee.dst").as("v"))
-        .agg(min(col("cc.lbl")).as("lbl"))
-        .localCheckpoint() // eager: materialized before the double reference
-      cur = p.as("c").join(p.as("p"), col("c.lbl") === col("p.v"))
+    // blocks are freed at the next barrier as usual. The loop state is the
+    // pinned propagation p; each round opens with the previous round's jump.
+    def jump(p: DataFrame): DataFrame =
+      p.as("c").join(p.as("p"), col("c.lbl") === col("p.v"))
         .select(col("c.v"), col("p.lbl").as("lbl"))
-      if (prevCkpt != null) Iterate.release(prevCkpt)
-      prevCkpt = p
-      i += 1
+    val last = Iterate(init, rounds, checkpointEvery = 0) { (p, i) =>
+      val cur = if (i == 0) p else jump(p)
+      Iterate.advance(p)(Iterate.pin( // eager: materialized before the double reference
+        cur.as("cc").join(euPlus.as("ee"), col("cc.v") === col("ee.src"))
+          .groupBy(col("ee.dst").as("v"))
+          .agg(min(col("cc.lbl")).as("lbl"))))
     }
     // eager final checkpoint (O(vertices), small), then free the edge and
     // node caches + the last round's blocks (ADVICE r2 cache hygiene)
-    val out = cur.orderBy("v").localCheckpoint()
-    if (prevCkpt != null) Iterate.release(prevCkpt)
+    val out = (if (rounds == 0) last else jump(last)).orderBy("v").localCheckpoint()
+    Iterate.release(last)
     euPlus.unpersist()
     vs.unpersist()
     out
@@ -2750,47 +2752,41 @@ object Graph extends QueryModule {
       (s, d) => {
         val eu = undirected(edges(s, d)).filter(col("src") =!= col("dst"))
           .localCheckpoint()
-        val all = nodes(eu).localCheckpoint()
-        var active = all
-        var mis: DataFrame = null
-        // superseded loop checkpoints are released as soon as their
-        // successor materializes (the Iterate hygiene pattern).
+        val all = Iterate.pin(nodes(eu))
         // Rounds are DISCOVERED: Luby retires winners + neighborhoods
         // until the active set EMPTIES (which is what MisSpec's
         // maximality proof certifies) — a declared round budget on a
         // 100×-deeper graph would silently return a non-maximal set.
         // Loud guard failure; discovered count re-derived by the oracle.
-        val spent = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        var rounds = 0
-        while (active.limit(1).count() > 0 && rounds < 16) {
-          rounds += 1
-          val act = active
+        // The loop state is the active set, its size OBSERVED during its
+        // own pin (the halt count); the MIS so far rides beside it, and
+        // each superseded pin is released once its successor exists.
+        var mis: DataFrame = null
+        val fp = Iterate.untilFixpointChecked(all, maxIter = 16,
+            checkpointEvery = 0) { (act, i) =>
           val nbMin = eu.join(act.withColumnRenamed("v", "src"), Seq("src"))
             .join(act.select(col("v").as("dst")), Seq("dst"))
             .groupBy("src").agg(min(md5(col("dst").cast("string"))).as("minp"))
             .withColumnRenamed("src", "v")
-          val newMis = act.join(nbMin, Seq("v"), "left")
+          val newMis = Iterate.pin(act.join(nbMin, Seq("v"), "left")
             .filter(col("minp").isNull || md5(col("v").cast("string")) < col("minp"))
-            .select("v").localCheckpoint()
-          val misNext =
-            if (mis == null) newMis else mis.unionAll(newMis).localCheckpoint()
-          if (mis != null) { spent += mis; spent += newMis }
-          mis = misNext
+            .select("v"))
+          mis = if (i == 0) newMis
+            else Iterate.advance(mis)(Iterate.pin(mis.unionAll(newMis)))
           val removed = newMis.unionAll(
             eu.join(newMis.withColumnRenamed("v", "src"), Seq("src"))
               .select(col("dst").as("v"))).distinct()
-          val actNext = act.join(removed, Seq("v"), "left_anti").localCheckpoint()
-          if (act ne all) spent += act
-          active = actNext
-        }
-        require(active.limit(1).count() == 0,
-          s"MIS guard exhausted after $rounds Luby rounds with active vertices left")
+          val next = Iterate.pinCountAll(act.join(removed, Seq("v"), "left_anti"))
+          // `all` stays pinned for the result; round 0's newMis IS the MIS
+          if (i > 0) Seq(act, newMis).foreach(Iterate.release)
+          next
+        }.requireConverged("MIS Luby rounds")
         val out = all.join(mis.withColumn("in_mis", lit(true)), Seq("v"), "left")
           .select(col("v"), coalesce(col("in_mis"), lit(false)).as("in_mis"),
-            lit(rounds.toLong).as("rounds"))
+            lit(fp.iters.toLong).as("rounds"))
           .orderBy("v")
           .localCheckpoint()
-        (spent ++ Seq(mis, active, all, eu)).foreach(graft.plans.Iterate.release)
+        Seq(mis, fp.out, all, eu).foreach(Iterate.release)
         out
       },
       Some(misSql(misOracleUnroll)))
@@ -2869,44 +2865,43 @@ object Graph extends QueryModule {
       (s, d) => {
         val e = edges(s, d).select("src", "dst").localCheckpoint()
         val vs = nodes(e).localCheckpoint()
-        var a = vs.select(col("v"), lit(1.0).as("auth"))
-        var h: DataFrame = null
-        val spent = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        // each half-step checkpoints the RAW scores FIRST, then collects
-        // the max from the materialized blocks and normalizes as a lazy
-        // narrow projection over the pin (optimization r15, VERDICT r14
-        // #5): the old shape ran the join+aggregate TWICE per half-step —
-        // once under the max collect, once under the normalized
-        // checkpoint. Same value lattice: round(raw/max, 6) with the
-        // identical max either way.
-        for (_ <- 1 to hitsIters) {
-          val hr = e.join(a.withColumnRenamed("v", "dst"), Seq("dst"))
-            .groupBy("src").agg(round(sum("auth"), 6).as("x"))
-          // the max is OBSERVED during the checkpoint job itself
-          // (Iterate.pinObserved, r15): one Spark job per half-step —
-          // the identical max either way, so the value lattice holds
-          val (hRaw, hmaxOpt) = graft.plans.Iterate.pinObserved(
-            vs.join(hr.withColumnRenamed("src", "v"), Seq("v"), "left")
-              .select(col("v"), coalesce(col("x"), lit(0.0)).as("hraw")),
-            max(col("hraw")))
-          val hmax = hmaxOpt.get.asInstanceOf[Double]
-          if (h != null) spent += h
-          h = hRaw.select(col("v"), round(col("hraw") / lit(hmax), 6).as("hub"))
-          spent += hRaw
-          val ar = e.join(h.withColumnRenamed("v", "src"), Seq("src"))
-            .groupBy("dst").agg(round(sum("hub"), 6).as("x"))
-          val (aRaw, amaxOpt) = graft.plans.Iterate.pinObserved(
-            vs.join(ar.withColumnRenamed("dst", "v"), Seq("v"), "left")
-              .select(col("v"), coalesce(col("x"), lit(0.0)).as("araw")),
-            max(col("araw")))
-          val amax = amaxOpt.get.asInstanceOf[Double]
-          spent += a
-          a = aRaw.select(col("v"), round(col("araw") / lit(amax), 6).as("auth"))
-          spent += aRaw
+        // one half-step: each vertex sums the other side's scores across
+        // its out-edges (toward a hub) or in-edges (toward an authority),
+        // each score normalized as round(raw/max, 6) by the max OBSERVED
+        // when its raw pin materialized (Iterate.pinObserved, r15): ONE
+        // job per half-step, with the raw scores checkpointed FIRST and
+        // normalized as a lazy narrow projection over the pin (VERDICT
+        // r14 #5 — the old shape ran the join+aggregate twice per
+        // half-step). Returns the pinned raw scores and their max.
+        def half(raw: DataFrame, rawMax: Double, toHub: Boolean): (DataFrame, Double) = {
+          val (from, to) = if (toHub) ("dst", "src") else ("src", "dst")
+          val sums = e.join(raw.select(col("v").as(from),
+              round(col("raw") / lit(rawMax), 6).as("score")), Seq(from))
+            .groupBy(to).agg(round(sum("score"), 6).as("x"))
+          val (next, m) = Iterate.pinObserved(
+            vs.join(sums.withColumnRenamed(to, "v"), Seq("v"), "left")
+              .select(col("v"), coalesce(col("x"), lit(0.0)).as("raw")),
+            max(col("raw")))
+          (next, m.get.asInstanceOf[Double])
         }
-        val out = h.join(a, Seq("v")).select(col("v"), col("hub"), col("auth"))
+        // the loop state is the latest raw pin, hub and authority in
+        // turn, from the all-ones authorities (raw 1 over max 1); it
+        // stops at the last hub pin, whose final authority half-step
+        // runs after it so both last pins are live for the result
+        var rawMax = 1.0
+        val hubRaw = Iterate(vs.select(col("v"), lit(1.0).as("raw")),
+            2 * hitsIters - 1, checkpointEvery = 0) { (raw, i) =>
+          val (next, m) = Iterate.advance(raw)(half(raw, rawMax, toHub = i % 2 == 0))
+          rawMax = m
+          next
+        }
+        val (authRaw, authMax) = half(hubRaw, rawMax, toHub = false)
+        val out = hubRaw.select(col("v"), round(col("raw") / lit(rawMax), 6).as("hub"))
+          .join(authRaw.select(col("v"), round(col("raw") / lit(authMax), 6).as("auth")),
+            Seq("v"))
+          .select(col("v"), col("hub"), col("auth"))
           .orderBy("v").localCheckpoint()
-        (spent ++ Seq(h, a, vs, e)).foreach(graft.plans.Iterate.release)
+        Seq(hubRaw, authRaw, vs, e).foreach(Iterate.release)
         out
       },
       Some(hitsSql(hitsIters)))

@@ -245,31 +245,31 @@ object Similarity extends QueryModule {
     // (two separate distTo(0) calls used to run the pass twice), and
     // each round's relation likewise computes once for both consumers
     val d0 = distTo(0L).localCheckpoint()
-    val spent = scala.collection.mutable.ArrayBuffer[DataFrame](d0)
+    // the per-center distance pins feed the assignment union read after
+    // the loop; the running minimum each round supersedes is released
+    // once its successor has materialized (round 2's minimum is d0
+    // renamed, which release leaves alone)
+    val dists = scala.collection.mutable.ArrayBuffer((0L, d0))
     var mind = d0.withColumnRenamed("dd", "mind")
-    var allD = d0.select(col("vec_id"), lit(0L).as("center"), col("dd"))
     val picks = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
     for (t <- 2L to 6L) {
       val p = mind.orderBy(desc("mind"), asc("vec_id")).limit(1).collect()(0)
       picks += ((t, p.getLong(0), p.getDouble(1)))
       val dNew = distTo(p.getLong(0)).localCheckpoint()
-      spent += dNew
-      allD = allD.unionByName(
-        dNew.select(col("vec_id"), lit(p.getLong(0)).as("center"), col("dd")))
-      val nextMind = mind.join(dNew, "vec_id")
+      dists += ((p.getLong(0), dNew))
+      mind = graft.plans.Iterate.advance(mind)(mind.join(dNew, "vec_id")
         .select(col("vec_id"), least(col("mind"), col("dd")).as("mind"))
-        .localCheckpoint() // bounded rounds; the argmax materialized it
-      if (t > 2L) spent += mind // t == 2's mind IS d0, already tracked
-      mind = nextMind
+        .localCheckpoint()) // bounded rounds; the argmax materialized it
     }
-    spent += mind
     // when requested, materialize the assignment relation BEFORE
     // dropping the cache — unpersisting first made the later consumer
     // recompute all six distance passes against the cold table — then
     // free the per-round pins it was built from
-    val out = if (withAssign) allD.localCheckpoint() else null
+    val out = if (!withAssign) null else dists
+      .map { case (c, dd) => dd.select(col("vec_id"), lit(c).as("center"), col("dd")) }
+      .reduce(_ unionByName _).localCheckpoint()
     emb.unpersist()
-    spent.foreach(graft.plans.Iterate.release)
+    (dists.map(_._2) :+ mind).foreach(graft.plans.Iterate.release)
     (picks.toSeq, out)
   }
 

@@ -635,10 +635,10 @@ object Sources extends QueryModule {
     // pair GET_PEER_INDEX / GET_PEER_COUNT
     // (`core/.../pipes/protocol/MessageType.java:26-29`) — so a
     // COMMUNICATING BSP program (the reference's own TestPipes matrix
-    // examples) can port. Engine mapping: the `plans.Bsp` peer engine
+    // examples) can port. Engine mapping: the `plans.Pregel` engine over peers
     // hosts the supersteps — each peer's [[MsgSumChild]] runs one
     // driveLoop exchange per superstep, its SEND_MSG emissions surface
-    // through `onSend`, the Bsp loop SHUFFLES them by destination
+    // through `onSend`, the Pregel loop SHUFFLES them by destination
     // between barriers (the engine's message exchange IS the delivery),
     // and the target peer's next exchange serves them via
     // GET_MSG/GET_MSG_COUNT. The program is the PiEstimator
@@ -663,7 +663,7 @@ object Sources extends QueryModule {
         import scala.jdk.CollectionConverters._
         val nPeers = 8
         val cmd = childJvmCmd("graft.operators.MsgSumChild")
-        // per-peer partial OUTSIDE the loop (the documented Bsp input
+        // per-peer partial OUTSIDE the loop (the documented BSP input
         // mapping: a Hama peer's input split summarizes into its
         // initial state), in exact pennies so double addition order
         // cannot move the total
@@ -674,8 +674,8 @@ object Sources extends QueryModule {
         val masterStats =
           s.sparkContext
             .collectionAccumulator[(Long, (Long, Int, Int, Int))]("msgMasterStats")
-        val fin = graft.plans.Bsp.run[Long, Array[Byte]](
-            s, peers, maxSupersteps = 4) { (idx, state, inbox, step) =>
+        val fin = graft.plans.Pregel.run[Long, Array[Byte], Unit](
+            s, peers, maxIter = 4) { (idx, state, inbox, step, _) =>
           val w = WorkerPool.get(cmd)
           val sends = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Byte])]
           var written: Option[Array[Byte]] = None
@@ -696,7 +696,8 @@ object Sources extends QueryModule {
               total
             case None => state
           }
-          graft.plans.Bsp.PeerResult(newState, sends.toSeq, halt = true)
+          graft.plans.Pregel.ComputeResult(newState, voteToHalt = true,
+            messages = sends.toSeq)
         }
         val finStates = fin.collect().toMap
         val sp = sendParts.value.asScala.toSet
@@ -740,7 +741,7 @@ object Sources extends QueryModule {
     // q_udf_pipe_messaging's master-collect (the reference's TestPipes
     // matrix programs communicate peer-to-peer, not hub-and-spoke):
     // every [[RingShiftChild]] sends its partial to its RIGHT NEIGHBOR
-    // (idx + 1) % n — 8 distinct (src → dst) routes through the Bsp
+    // (idx + 1) % n — 8 distinct (src → dst) routes through the Pregel
     // delivery shuffle, none to a single hub — and next superstep each
     // peer WRITEs the one message it received, stamped with the sender
     // index. The output is PER-PEER (8 rows), so the oracle checks the
@@ -761,8 +762,8 @@ object Sources extends QueryModule {
           s"q_udf_pipe_ring needs all $nPeers c_custkey residue classes populated")
         val peers = partials
           .map { case (p, c) => (p, (c, -1L)) } // state: (held cents, from)
-        val fin = graft.plans.Bsp.run[(Long, Long), Array[Byte]](
-            s, peers, maxSupersteps = 4) { (idx, state, inbox, step) =>
+        val fin = graft.plans.Pregel.run[(Long, Long), Array[Byte], Unit](
+            s, peers, maxIter = 4) { (idx, state, inbox, step, _) =>
           val w = WorkerPool.get(cmd)
           val sends = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Byte])]
           var written: Option[Array[Byte]] = None
@@ -781,7 +782,8 @@ object Sources extends QueryModule {
               (bb.getLong, bb.getInt.toLong)
             case None => state
           }
-          graft.plans.Bsp.PeerResult(newState, sends.toSeq, halt = true)
+          graft.plans.Pregel.ComputeResult(newState, voteToHalt = true,
+            messages = sends.toSeq)
         }
         val rows = fin.collect().toSeq.sortBy(_._1)
         require(rows.size == nPeers && rows.forall(_._2._2 >= 0L),

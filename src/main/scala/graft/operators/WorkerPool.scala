@@ -387,8 +387,8 @@ object WorkerPool {
       * each [[WorkerPool.OpSendMsg]] the child emits surfaces through
       * `onSend(dstPeer, payload)` — the CALLER shuffles those by
       * destination between exchanges and feeds them to the target
-      * peer's next `inbox` (the `plans.Bsp` engine is the natural
-      * host). [[WorkerPool.OpPeerInfo]] answers `peer` — the child's
+      * peer's next `inbox` (`plans.Pregel` over vertices keyed by peer
+      * index is the natural host). [[WorkerPool.OpPeerInfo]] answers `peer` — the child's
       * (index, count) in the exchange topology, Hama's
       * GET_PEER_INDEX / GET_PEER_COUNT. `onSend`'s default fails
       * loudly: a child that messages peers its caller never wired is

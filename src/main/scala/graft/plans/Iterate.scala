@@ -1,6 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.bridge
 
 /** Driver-side superstep loop: the Spark shape of Hama's BSP barrier
   * (`core/src/main/java/org/apache/hama/bsp/BSPPeerImpl.java:390-452` —
@@ -35,18 +37,23 @@ object Iterate {
     * means those blocks are the only copy (ADVICE r1). */
   def release(ds: Dataset[_]): Unit =
     ds.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
+      case l: LogicalRDD => l.rdd.unpersist(false)
       case _ => ()
     }
 
   /** Eager localCheckpoint of `df`. `freshIds` re-roots the checkpointed
     * blocks under NEW attribute ids (zero recompute — same RDD): loops
     * that repeatedly join/union descendants of their own state need this
-    * to dodge Catalyst's stale-id traps; [[release]] still works because
-    * the plan root stays a LogicalRDD over the same rdd. */
+    * to dodge Catalyst's stale-id traps. The new root scans the
+    * checkpointed RDD itself, not a row conversion over it, so
+    * [[release]] frees it. */
   def pin(df: DataFrame, freshIds: Boolean = false): DataFrame = {
     val ck = df.localCheckpoint()
-    if (freshIds) df.sparkSession.createDataFrame(ck.rdd, ck.schema) else ck
+    if (!freshIds) ck
+    else ck.queryExecution.analyzed match {
+      case l: LogicalRDD =>
+        bridge.frameOver(ck.sparkSession, l.output.map(_.newInstance()), l.rdd)
+    }
   }
 
   /** [[pin]] with a scalar metric OBSERVED during the materializing job
@@ -82,15 +89,22 @@ object Iterate {
     (pinned, m.map(_.asInstanceOf[Long]).getOrElse(0L))
   }
 
-  /** One fixpoint round's pin-and-swap: [[pinCountTrue]] on `next`, then
-    * [[release]] of the superseded state `prev`. Returns (pinned next,
-    * changed count) — the shape an [[untilFixpointChecked]] step returns. */
-  def advance(prev: Dataset[_], next: DataFrame, flag: Column,
-      freshIds: Boolean = false): (DataFrame, Long) = {
-    val pinned = pinCountTrue(next, flag, freshIds)
+  /** One round's pin-and-swap: evaluate `pinNext` (a [[pin]] or an
+    * observed pin of the state that supersedes `prev`), then [[release]]
+    * `prev` — in that order, since `pinNext`'s plan reads `prev`'s blocks
+    * until it has materialized. Returns what `pinNext` returned: the pin
+    * alone, or the pin with its observed count, max or sum. */
+  def advance[A](prev: Dataset[_])(pinNext: => A): A = {
+    val pinned = pinNext
     release(prev)
     pinned
   }
+
+  /** [[advance]] with [[pinCountTrue]] on `next`: returns (pinned next,
+    * changed count) — the shape an [[untilFixpointChecked]] step returns. */
+  def advance(prev: Dataset[_], next: DataFrame, flag: Column,
+      freshIds: Boolean = false): (DataFrame, Long) =
+    advance(prev)(pinCountTrue(next, flag, freshIds))
 
   /** The superstep loop. Runs `step` for rounds `start` until `maxIter`,
     * stopping early after a round that reports halt. After a round that

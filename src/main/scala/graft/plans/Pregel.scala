@@ -63,6 +63,23 @@ import scala.reflect.runtime.universe.TypeTag
   * (`core/.../bsp/ft/AsyncRcvdMsgCheckpointImpl.java:69-260`, fast-forward
   * `SuperstepBSP.java:61-77`) — and `resumeFrom(latestSnapshot(...))`
   * restarts the loop from the last committed superstep.
+  *
+  * BSP peers run on the same loop. The reference's core user surface is
+  * a `BSP<K1,V1,K2,V2,M>` program: N long-running peers, each holding
+  * local state, exchanging typed messages and meeting at a global barrier
+  * per superstep (`core/src/main/java/org/apache/hama/bsp/BSP.java:28-55`,
+  * `BSPPeer.java:34-205`: `send(peerName, msg)` / `getCurrentMessage()` /
+  * `sync()`). A peer is a vertex keyed by its peer index (the partition
+  * identity Hama derives from task ids, `BSPPeer.java:81-94`), `sync()` is
+  * the job boundary between supersteps, `send` is a `(dstPeer, msg)` entry
+  * of `ComputeResult.messages`, and a peer that votes to halt is
+  * reactivated by incoming messages, with Hama's unordered-delivery
+  * contract (`BSPPeer.java:38-39`). The input split a Hama peer reads
+  * (`peer.readNext`) maps to partition pre-aggregation OUTSIDE the loop:
+  * summarize each partition of the input into the peer's initial state,
+  * then message across supersteps — the shape of `PiEstimator`
+  * (`examples/.../PiEstimator.java:55-95`: local compute in `bsp()`, send
+  * to master, master sums in `cleanup`).
   */
 object Pregel {
 

@@ -36,4 +36,15 @@ class BetweennessSpec extends AnyFunSuite {
     val m = bc(Seq((1L, 2L), (2L, 3L), (7L, 8L)))
     assert(m(2L) === 1.0 && m(7L) === 0.0 && m(8L) === 0.0)
   }
+
+  test("BFS on a 205-vertex directed path reaches every vertex at its position") {
+    // deeper than the 200-level cap the level loop once stopped at
+    // silently: its guard now comes from the edge count
+    val path = (0L until 204L).map(v => (v, v + 1)).toDF("src", "dst")
+    val (reached, _) = operators.Graph.bfsSigma(path, Some(Seq(0L).toDF("v")))
+    val rows = reached.select("v", "d", "sigma").as[(Long, Int, Long)].collect()
+    assert(rows.length === 205)
+    assert(rows.map(_._1).toSet === (0L to 204L).toSet)
+    assert(rows.forall { case (v, d, sigma) => d == v && sigma == 1L })
+  }
 }

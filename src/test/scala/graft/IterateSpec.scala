@@ -71,4 +71,13 @@ class IterateSpec extends AnyFunSuite {
     assert(steps === 25)
     assert(left.size === 1, s"checkpoints left behind: $left")
   }
+
+  test("release frees the blocks of a fresh-id pin") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val p = Iterate.pin((1 to 10).toDF("x"), freshIds = true)
+    assert(sc.getPersistentRDDs.keySet.diff(before).size === 1)
+    Iterate.release(p)
+    assert(sc.getPersistentRDDs.keySet.diff(before).isEmpty)
+  }
 }

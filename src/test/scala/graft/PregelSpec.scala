@@ -8,6 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * its edge list, `graph/.../VertexInterface.java:38-135`). */
 case class SsspV(dist: Long, adj: Seq[(Long, Long)])
 case class SumV(value: Long)
+/** A BSP peer's state: its input split's summary and what it has summed. */
+case class PeerState(localHits: Long, total: Long)
 
 class PregelSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -226,5 +228,51 @@ class PregelSpec extends AnyFunSuite {
         else ComputeResult(SumV(v.value + msgs.sum), voteToHalt = true))
         .collect().toMap
     assert(go(Some(1)) === go(None))
+  }
+
+  // The reference's core BSP program shape, with peers as vertices keyed
+  // by peer index: PiEstimator-style master collection
+  // (`examples/src/main/java/org/apache/hama/examples/PiEstimator.java:55-95`
+  // — peers compute locally, send to the master peer, master sums in
+  // cleanup) + counter parity.
+  test("BSP peers message local results to the master peer which sums them") {
+    val nPeers = 8
+    // peer i's "input split summary": local hit count = (i+1)*10
+    val peers = (0L until nPeers.toLong).map(i => (i, PeerState((i + 1) * 10, 0L))).toDS()
+    val stats = scala.collection.mutable.ArrayBuffer.empty[Pregel.SuperstepStats]
+
+    val res = Pregel.run[PeerState, Long, Unit](spark, peers, maxIter = 4,
+      onSuperstep = stats += _) {
+      case (id, s, _, 0, _) => // superstep 0: everyone reports to master peer 0
+        ComputeResult(s, voteToHalt = true, messages = Seq((0L, s.localHits)))
+      case (id, s, msgs, _, _) if msgs.nonEmpty => // master reactivated by inbox
+        ComputeResult(s.copy(total = s.total + msgs.sum), voteToHalt = true)
+      case (_, s, _, _, _) => ComputeResult(s, voteToHalt = true)
+    }
+
+    val out = res.collect().toMap
+    assert(out(0L).total === (1 to nPeers).map(_ * 10).sum)
+    assert(out.values.count(_.total > 0) === 1, "only the master accumulated")
+
+    // counter parity: superstep 0 sent one message per peer, then quiesced.
+    // Counters are at-least-once (accumulators updated in a transformation;
+    // see SuperstepStats), so assert the lower bound, not exact equality —
+    // a task retry/speculative attempt may inflate them on a real cluster
+    assert(stats.head.messagesSent >= nPeers)
+    assert(stats.last.messagesSent === 0) // zero can't be inflated: quiesced
+    assert(stats.forall(_.seconds > 0))
+  }
+
+  test("BSP unordered delivery: result is order-insensitive (sum combiner optional)") {
+    val peers = (0L until 4L).map(i => (i, PeerState(i + 1, 0L))).toDS()
+    val combined = Pregel.run[PeerState, Long, Unit](spark, peers, maxIter = 3,
+      combiner = Some(_ + _)) {
+      case (_, s, _, 0, _) =>
+        ComputeResult(s, voteToHalt = true, messages = Seq((0L, s.localHits)))
+      case (_, s, msgs, _, _) if msgs.nonEmpty =>
+        ComputeResult(s.copy(total = s.total + msgs.sum), voteToHalt = true)
+      case (_, s, _, _, _) => ComputeResult(s, voteToHalt = true)
+    }
+    assert(combined.collect().toMap.apply(0L).total === 10L)
   }
 }

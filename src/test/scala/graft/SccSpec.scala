@@ -39,4 +39,23 @@ class SccSpec extends AnyFunSuite {
     // 1,3,7 all mutually reachable -> one SCC labeled 1
     assert(got === Map(1L->1L, 3L->1L, 7L->1L))
   }
+
+  test("a multi-peel run leaves no pin behind but the one its result reads") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // a chain 7→6→…→0 between a 2-cycle {0,100} and a 3-cycle {7,8,9}:
+    // each peel settles the chain's bottom layer (by trim or by the
+    // colouring pass), so the loop runs several peels down it
+    val edges = (0L until 7L).map(v => (v + 1, v)) ++
+      Seq((0L, 100L), (100L, 0L), (7L, 8L), (8L, 9L), (9L, 7L))
+    val out = operators.Graph.sccTrimOn(edges.toDF("src", "dst"))
+    val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === ((1L to 6L).map(v => v -> v) ++ Seq(0L -> 0L, 100L -> 0L,
+      7L -> 7L, 8L -> 7L, 9L -> 7L)).toMap)
+    val read = out.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.toSet
+    assert(read.size === 1)
+    assert(sc.getPersistentRDDs.keySet.diff(before).toSet === read)
+  }
 }

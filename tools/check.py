@@ -6,6 +6,9 @@ Usage: python3 tools/check.py <outDir> <sfDir> [query ...]
        python3 tools/check.py <outDir> <otherOutDir> [query ...]
 (Verify must already have written <outDir>/<name>/ parquet + oracle_sql.json.)
 
+Against DuckDB, the oracle connection is capped at a quarter of the host's
+MemTotal and spills to a temp dir removed at exit.
+
 When the second argument is itself a Verify output dir (it holds an
 oracle_sql.json), each query's dump is compared row for row with that
 dir's dump of the same query instead of with DuckDB: the parent-vs-change
@@ -32,8 +35,23 @@ if dump_vs_dump:
             raise RuntimeError(f"no output in {refdir}")
         return df
 else:
+    import atexit, shutil, tempfile
     import duckdb
+    # DuckDB's default cap is 80% of RAM, and an all-sources-BFS oracle
+    # (bfsSigmaSql's unrolled CTE chain) fills it on a shared host: cap it
+    # at a quarter of MemTotal and give it a spill dir. An oracle that
+    # still does not fit fails with out-of-memory, reported as a FAIL.
+    def mem_total_bytes() -> int:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) * 1024
+        raise RuntimeError("no MemTotal in /proc/meminfo")
+    spill = tempfile.mkdtemp(prefix="check-duckdb-")
+    atexit.register(shutil.rmtree, spill, True)
     con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{mem_total_bytes() // 4 // 2**20}MB'")
+    con.execute(f"SET temp_directory = '{spill}'")
     tables = ["region","nation","customer","supplier","part","orders",
               "lineitem","events","documents","embeddings"]
     for t in tables:
