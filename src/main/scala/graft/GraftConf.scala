@@ -27,13 +27,6 @@ object GraftConf {
         n
     }
 
-  /** Frontier-row bound under which the ANF active-set rounds hint
-    * `broadcast()` on the changed-register frontier — the rationale
-    * lives at [[graft.operators.Graph.anfBroadcastRows]]. 0 disables
-    * the hint entirely (every round shuffles). */
-  def anfBroadcastRows: Long =
-    long("spark.graft.anf.broadcastRows", 1000000L, 0L)
-
   /** Byte bound past which a REOPEN-able pipes exchange's replay
     * buffer spills to a framed side file
     * ([[graft.operators.WorkerPool]], VERDICT r13 #1). 0 spills every
@@ -47,17 +40,11 @@ object GraftConf {
     * streaming query pins one state store per shuffle partition per
     * stateful operator for its whole lifetime, so the store count should
     * follow the data, not the core count — `ceil(inputBytes / this)`,
-    * floored at [[streamStateMinPartitions]] and capped at the session's
+    * floored at `Streams.stateMinPartitions` and capped at the session's
     * `spark.sql.shuffle.partitions` (at 100 TB the cap always wins; at
     * gate scale the floor does, cutting per-micro-batch task-launch +
     * store-commit rounds measured 2x on the stateful floor probe —
     * OPTIMIZATION_r14.md §1). */
   def streamStateBytesPerPartition: Long =
     long("spark.graft.stream.stateBytesPerPartition", 64L << 20, 1L)
-
-  /** Floor for [[streamStateBytesPerPartition]]'s derived partition
-    * count — keeps a minimum of parallelism headroom however small the
-    * staged gate inputs are. */
-  def streamStateMinPartitions: Int =
-    long("spark.graft.stream.stateMinPartitions", 8L, 1L).toInt
 }

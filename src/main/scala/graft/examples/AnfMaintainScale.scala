@@ -1,7 +1,7 @@
 package graft.examples
 
 import graft.GraftSession
-import graft.streaming.Streams
+import graft.streaming.{Streams, TxLog}
 import org.apache.spark.sql.functions._
 
 /** Scale evidence for the DELTA-FRONTIER streaming ANF maintainer
@@ -165,13 +165,12 @@ object AnfMaintainScale {
 
     // FOLD-BOUND segment (VERDICT r12 missing #2 acceptance): ≥50
     // micro-batches against ONE store with tiered folds on — the edge
-    // store's parquet file count, measured after every batch, must stay
-    // bounded by the fold geometry (live subtrees ≤ compactEvery
-    // singles + maxFolds folds + 1, each ≤ dstBuckets files after its
-    // bucket-keyed repartition), while an unfolded store would grow one
-    // subtree per batch forever. The maintained registers must still
-    // land bit-identical to the cold fixpoint — folding is storage
-    // maintenance, never semantics.
+    // store's live snapshot files, counted after every batch, must stay
+    // bounded by the fold geometry (live commits ≤ compactEvery singles
+    // + maxFolds folds + 1, each ≤ dstBuckets files, one per bucket),
+    // while an unfolded store would grow one commit per batch forever.
+    // The maintained registers must still land bit-identical to the cold
+    // fixpoint — folding is storage maintenance, never semantics.
     val fBatches = sys.env.getOrElse("ANF_FOLD_BATCHES", "56").toInt
     val fEvery = 8
     val fMax = 4
@@ -197,11 +196,7 @@ object AnfMaintainScale {
     require(fFiles.max <= fBound,
       s"edge-store files must stay fold-bounded: max ${fFiles.max} > $fBound")
     val (fcold, _, _, fcurve) = graft.operators.Graph.anfSketch(
-      spark.read.option("basePath", fstore)
-        .parquet(new java.io.File(fstore).listFiles()
-          .filter(d => d.isDirectory && d.getName.startsWith("ingest_batch="))
-          .map(_.getPath).toIndexedSeq: _*)
-        .select("src", "dst"))
+      Streams.readMergeTable(spark, fstore).select("src", "dst"))
     val fdrift = fmasks.as("w").join(fcold.as("c"),
         col("w.v") === col("c.v") && col("w.k") === col("c.k"), "full")
       .filter(col("w.mask").isNull || col("c.mask").isNull ||
@@ -215,16 +210,15 @@ object AnfMaintainScale {
       f""""drift":$fdrift}""")
     graft.plans.Iterate.release(fcurve)
 
-    // MARKER-CENSUS segment (VERDICT r13 #3 acceptance): ≥100
-    // micro-batches against ONE register store — the commit-marker
-    // listing must stay O(censusBound) via the _committed_upto
-    // watermark (an unfolded ledger holds one marker file per batch
-    // forever — the O(batches) directory scan the data-side folds just
-    // eliminated, reintroduced through the side door), and a FULL
-    // REPLAY of all batches must skip every one across the watermark
-    // with zero recompute rounds and zero drift.
-    val cBatches = sys.env.getOrElse("ANF_CENSUS_BATCHES", "104").toInt
-    val cstage = GraftSession.tempDirCleanedOnExit("anfscale-census-in").toString
+    // LOG-RETENTION segment: ≥100 micro-batches against ONE pair of
+    // stores — each store's log must stay O(checkpoint cadence): every
+    // 10 commits a checkpoint carries the live files and batch records,
+    // and the entries and older checkpoints below it expire, so replay
+    // reads at most 10 entries however long the stream ran. A FULL
+    // REPLAY of all batches must then skip every one from the
+    // checkpointed records, with zero recompute rounds and zero drift.
+    val cBatches = sys.env.getOrElse("ANF_RETAIN_BATCHES", "104").toInt
+    val cstage = GraftSession.tempDirCleanedOnExit("anfscale-retain-in").toString
     val cOff = 4 * (baseEdges + nBatches * deltaEdges)
     for (b <- 0 until cBatches) {
       val lo = if (b == 0) cOff else cOff + 500 + (b - 1)
@@ -237,23 +231,23 @@ object AnfMaintainScale {
       new java.io.File(f"$cstage/part$b%04d.parquet")
         .setLastModified(1000000L * (b + 1)): Unit
     }
-    val cstore = GraftSession.tempDirCleanedOnExit("anfscale-census-store").toString
-    val creg = GraftSession.tempDirCleanedOnExit("anfscale-census-reg").toString
+    val cstore = GraftSession.tempDirCleanedOnExit("anfscale-retain-store").toString
+    val creg = GraftSession.tempDirCleanedOnExit("anfscale-retain-reg").toString
     val (cm1, cr1, _, _) = Streams.runAnfMaintain(spark, cstage,
       storeDir0 = Some(cstore), regDir0 = Some(creg))
     require(cr1.size == cBatches && cr1.head > 0)
     graft.plans.Iterate.release(cm1)
-    def censusOf(dir: String): Int = new java.io.File(dir).listFiles()
-      .count(f => f.isFile && f.getName.startsWith("_committed_"))
-    val census = censusOf(creg)
-    val cBound = graft.streaming.CommitMarkers.censusBound + 1
-    require(census <= cBound,
-      s"marker census must stay O(recent): $census files after $cBatches " +
-        s"batches, bound $cBound")
+    val logs = Seq(cstore, creg).map(d =>
+      (TxLog.versions(d).size, TxLog.checkpointVersions(d).size))
+    logs.foreach { case (entries, checkpoints) =>
+      require(entries <= 10 && checkpoints <= 1,
+        s"store logs must stay O(checkpoint cadence): $entries entries, " +
+          s"$checkpoints checkpoints after $cBatches batches")
+    }
     val (cm2, cr2, _, _) = Streams.runAnfMaintain(spark, cstage,
       storeDir0 = Some(cstore), regDir0 = Some(creg))
     require(cr2.size == cBatches && cr2.forall(_ == 0),
-      "a full replay must skip every batch across the watermark")
+      "a full replay must skip every batch from the checkpointed records")
     val (ccold, _, _, ccurve) = graft.operators.Graph.anfSketch(
       spark.read.parquet(cstage).select("src", "dst"))
     val cdrift = cm2.as("w").join(ccold.as("c"),
@@ -261,11 +255,11 @@ object AnfMaintainScale {
       .filter(col("w.mask").isNull || col("c.mask").isNull ||
         col("w.mask") =!= col("c.mask")).count()
     require(cdrift == 0L,
-      s"watermark-skipped replay must hold the fixpoint, $cdrift differ")
-    println(f"""{"metric":"anf_marker_census","batches":$cBatches,""" +
-      f""""marker_files":$census,"bound":$cBound,""" +
-      f""""unfolded_would_be":$cBatches,"replay_rounds":${cr2.sum},""" +
-      f""""drift":$cdrift}""")
+      s"a checkpoint-skipped replay must hold the fixpoint, $cdrift differ")
+    println(f"""{"metric":"anf_log_retention","batches":$cBatches,""" +
+      f""""edge_log":"${logs(0)._1} entries/${logs(0)._2} checkpoints",""" +
+      f""""register_log":"${logs(1)._1} entries/${logs(1)._2} checkpoints",""" +
+      f""""replay_rounds":${cr2.sum},"drift":$cdrift}""")
     graft.plans.Iterate.release(ccurve)
     spark.stop()
   }

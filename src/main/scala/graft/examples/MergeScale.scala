@@ -1,7 +1,7 @@
 package graft.examples
 
 import graft.{GraftSession, Tables}
-import graft.streaming.{MergeTable, TxLog}
+import graft.streaming.{MergeTable, Streams, TxLog}
 import org.apache.spark.sql.functions._
 
 /** Scale-posture check for the bucket-pruned MERGE INTO: a serving
@@ -46,7 +46,7 @@ object MergeScale {
       val t0 = System.nanoTime()
       val (_, touched) = MergeTable.mergeInto(spark, table, updates, "l_orderkey", k)
       val dt = (System.nanoTime() - t0) / 1e9
-      val got = MergeTable.read(spark, table)
+      val got = Streams.readMergeTable(spark, table)
         .agg(sum("n_items")).head.getLong(0)
       require(got == baseItems + nUpd, s"$tag merged state wrong: $got")
       (dt, touched.length)

@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   * Corpus: unique md5-derived bodies with every `dupEvery`-th doc
   * repeating an earlier body (a crawl's real shape — a few percent
   * dups, not all-dup) — so match volume is controlled and nonzero.
-  * Tiered compaction (`compactEvery`, maxFolds) bounds the store's
-  * subtree count; final file count is reported.
+  * Tiered compaction (`compactEvery`, maxFolds) bounds the live
+  * commits of the store's snapshot; its final live files are reported.
   *
   * Run: NEARDUP_BATCHES=100 sbt "runMain graft.examples.NearDupIngestScale"
   */
@@ -77,11 +77,14 @@ object NearDupIngestScale {
     val meanStore = probed.map(_.storeFiles).sum.toDouble / probed.size
     val lastQ = probed.takeRight(10) // steady state, post several folds
     val steadyRatio = lastQ.map(s => s.probeFiles.toDouble / s.storeFiles).sum / lastQ.size
-    val finalFiles = Streams.nearDupStoreFiles(store)
-    val subtrees = new java.io.File(store).listFiles()
-      .count(f => f.isDirectory && f.getName.startsWith("ingest_batch="))
-    val verdicts = spark.read.parquet(out).count()
-    val dups = spark.read.parquet(out).filter(col("is_dup")).count()
+    val finalFiles = graft.streaming.TxLog.snapshot(store).files.size
+    // live commits stay fold-bounded: at most compactEvery singles plus
+    // the default maxFolds (8) folds and the one fold a full merge leaves
+    val liveCommits = Streams.storeCommits(store).size
+    require(compactEvery == 0 || liveCommits <= compactEvery + 8 + 1,
+      s"tiered folds must bound the store's live commits: $liveCommits")
+    val verdicts = Streams.readMergeTable(spark, out).count()
+    val dups = Streams.readMergeTable(spark, out).filter(col("is_dup")).count()
     // the injection is deterministic: every dupEvery-th doc from the
     // dupSpan boundary on reuses an earlier batch's body, so the probe's
     // RECALL at scale is checkable exactly — any shortfall means the
@@ -95,7 +98,7 @@ object NearDupIngestScale {
       f""""compact_every":$compactEvery,"dup_every":$dupEvery,""" +
       f""""mean_probe_files":$meanProbe%.1f,"mean_store_files":$meanStore%.1f,""" +
       f""""steady_probe_to_store":$steadyRatio%.3f,""" +
-      f""""final_store_files":$finalFiles,"final_subtrees":$subtrees,""" +
+      f""""final_store_files":$finalFiles,"live_commits":$liveCommits,""" +
       f""""verdict_rows":$verdicts,"dup_rows":$dups,"secs":$secs%.1f}""")
 
     // POINT-probe workload: 20 single-doc membership probes against the
@@ -106,8 +109,7 @@ object NearDupIngestScale {
     val ratios = (1 to 20).map { i =>
       val one = docsAll.filter(col("doc_id") === i * 97L)
       val sigs = Streams.nearDupSigs(one, sigBuckets)
-      val (m, probedF, storeF, _) = Streams.probeNearDupStore(
-        spark, store, sigs, excludeBatch = Long.MaxValue)
+      val (m, probedF, storeF, _) = Streams.probeNearDupStore(spark, store, sigs)
       m.count(): Unit // execute the pruned join
       probedF.toDouble / storeF
     }

@@ -47,67 +47,26 @@ object ScaleBench {
       f""""edges_per_sec_per_iter":${edgeCount * iters / secs}%.0f}""")
 
     // ---- convergence-honest fixpoints (VERDICT r1 item 8) ----------------
-    // The declared CC/SSSP queries pin their round counts so a SQL oracle
-    // can unroll them; here the SAME loop shapes run via
-    // Iterate.untilFixpointChecked on the 600k-edge graph to evidence that the
-    // loops actually converge when rounds aren't pinned — and in how many.
-
-    // CC, pointer-jumping (the q_graph_cc formulation)
-    val eu = e.select(col("src"), col("dst"))
-      .unionAll(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-    val euPlus = eu.unionAll(vs.select(col("v").as("src"), col("v").as("dst"))).cache()
-    euPlus.count()
+    // The declared CC/SSSP fixpoint rows' own loops (Graph.ccFixpointOn /
+    // ssspFixpointOn, active-set, one job per round) on the 600k-edge
+    // graph: evidence that they converge when rounds aren't pinned — and
+    // in how many.
     val tCc = System.nanoTime()
-    val ccInit = vs.select(col("v"), col("v").as("lbl"))
-    // checkpoint/release handled IN the step: each round materializes its
-    // output and frees the intermediate + the previous round's blocks, so
-    // block-store usage stays O(1) in rounds instead of O(rounds)
-    val cc = Iterate.untilFixpointChecked(ccInit, maxIter = 30, checkpointEvery = 0) {
-      (c, _) =>
-        val p = c.as("cc").join(euPlus.as("ee"), col("cc.v") === col("ee.src"))
-          .groupBy(col("ee.dst").as("v"))
-          .agg(min(col("cc.lbl")).as("lbl"))
-          .localCheckpoint() // jump references it twice
-        val next = p.as("c").join(p.as("p"), col("c.lbl") === col("p.v"))
-          .select(col("c.v"), col("p.lbl").as("lbl"))
-          .localCheckpoint() // eager; round output materialized before frees
-        val changed = next.as("n").join(c.as("o"), col("n.v") === col("o.v"))
-          .filter(col("n.lbl") =!= col("o.lbl")).count()
-        Iterate.release(p)
-        Iterate.release(c) // no-op on round 0 (init isn't a checkpoint root)
-        (next, changed)
-    }.requireConverged("cc_fixpoint")
-    val (ccOut, ccRounds) = (cc.out, cc.iters)
+    val (ccOut, ccRounds) = graft.operators.Graph.ccFixpointOn(e, maxIter = 30)
     val nComponents = ccOut.select(countDistinct(col("lbl"))).collect()(0).getLong(0)
     val ccSecs = (System.nanoTime() - tCc) / 1e9
     println(f"""{"metric":"cc_fixpoint","value":$ccSecs%.3f,"unit":"sec","rounds":$ccRounds,""" +
       f""""vertices":${nv.toLong},"edges":$edgeCount,"components":$nComponents}""")
 
     // SSSP from vertex 0 (the q_graph_sssp min-plus formulation), weights 1-7
-    val INF = Long.MaxValue / 4
     val ew = Tables(spark, sfDir, "lineitem")
       .select((col("l_orderkey") % n).as("src"),
         ((col("l_partkey") * 7 + col("l_suppkey")) % n).as("dst"),
         (col("l_suppkey") % 7 + 1).as("w"))
       .groupBy("src", "dst").agg(min("w").as("w"))
-    val ewPlus = ew.unionAll(vs.select(col("v").as("src"), col("v").as("dst"), lit(0L).as("w")))
-      .cache()
-    ewPlus.count()
     val tSp = System.nanoTime()
-    val spInit = vs.select(col("v"), when(col("v") === 0, 0L).otherwise(INF).as("dist"))
-    val sp = Iterate.untilFixpointChecked(spInit, maxIter = 50, checkpointEvery = 0) {
-      (dist, _) =>
-        val next = dist.as("dd").join(ewPlus.as("ee"), col("dd.v") === col("ee.src"))
-          .groupBy(col("ee.dst").as("v"))
-          .agg(min(col("dd.dist") + col("ee.w")).as("dist"))
-          .localCheckpoint() // changed-count references it alongside dist
-        val changed = next.as("n").join(dist.as("o"), col("n.v") === col("o.v"))
-          .filter(col("n.dist") < col("o.dist")).count()
-        Iterate.release(dist) // previous round's blocks; no-op on round 0
-        (next, changed)
-    }.requireConverged("sssp_fixpoint")
-    val (spOut, spRounds) = (sp.out, sp.iters)
-    val reached = spOut.filter(col("dist") < INF).count()
+    val (spOut, spRounds) = graft.operators.Graph.ssspFixpointOn(ew, maxIter = 50)
+    val reached = spOut.count()
     val spSecs = (System.nanoTime() - tSp) / 1e9
     println(f"""{"metric":"sssp_fixpoint","value":$spSecs%.3f,"unit":"sec","rounds":$spRounds,""" +
       f""""vertices":${nv.toLong},"edges":$edgeCount,"reached":$reached}""")

@@ -701,7 +701,7 @@ object StreamingOps extends QueryModule {
         require(v1 == 1L && touched == expected,
           s"bucket pruning broken: rewrote $touched, expected $expected")
         Seq(0L, 1L).map { v =>
-          graft.streaming.MergeTable.read(s, table, Some(v))
+          graft.streaming.Streams.readMergeTable(s, table, Some(v))
             .select(lit(v).as("version"), col("user_id"), col("n_events"),
               round(col("total"), 2).as("total"))
         }.reduce(_ unionAll _).orderBy("version", "user_id").localCheckpoint()
@@ -772,7 +772,7 @@ object StreamingOps extends QueryModule {
         require(cps == Seq(3L, 6L), s"expected checkpoints 3,6, got $cps")
         val expired = graft.streaming.TxLog.expireEntriesBelowCheckpoint(table)
         require(expired.nonEmpty, "retention must delete pre-checkpoint entries")
-        graft.streaming.MergeTable.read(s, table)
+        graft.streaming.Streams.readMergeTable(s, table)
           .select(col("user_id"), col("n_events"), round(col("total"), 2).as("total"))
           .orderBy("user_id").localCheckpoint()
       },
@@ -812,19 +812,19 @@ object StreamingOps extends QueryModule {
             Seq((k.toLong * 10 + 1, -k.toLong, -k.toDouble))
               .toDF("user_id", "n_events", "total"),
             "user_id", buckets)
-        val pre = graft.streaming.MergeTable.read(s, table).localCheckpoint()
-        val preFiles = graft.streaming.MergeTable.read(s, table).inputFiles.length
+        val pre = graft.streaming.Streams.readMergeTable(s, table).localCheckpoint()
+        val preFiles = graft.streaming.Streams.readMergeTable(s, table).inputFiles.length
         val (_, compacted) =
           graft.streaming.MergeTable.compact(s, table, "user_id", buckets)
             .getOrElse(sys.error("compaction found nothing to fold"))
         require(compacted.nonEmpty, "no bucket compacted")
-        val post = graft.streaming.MergeTable.read(s, table).localCheckpoint()
-        val postFiles = graft.streaming.MergeTable.read(s, table).inputFiles.length
+        val post = graft.streaming.Streams.readMergeTable(s, table).localCheckpoint()
+        val postFiles = graft.streaming.Streams.readMergeTable(s, table).inputFiles.length
         require(postFiles < preFiles,
           s"compaction must reduce live files: $preFiles -> $postFiles")
         require(pre.exceptAll(post).isEmpty && post.exceptAll(pre).isEmpty,
           "snapshot content changed across the compaction commit")
-        val tt = graft.streaming.MergeTable.read(s, table, Some(0L))
+        val tt = graft.streaming.Streams.readMergeTable(s, table, Some(0L))
         require(tt.exceptAll(base).isEmpty && base.exceptAll(tt).isEmpty,
           "time travel below the compaction no longer replays v0")
         post.select(col("user_id"), col("n_events"),
@@ -911,13 +911,13 @@ object StreamingOps extends QueryModule {
     // cells its own signatures hash to (never the whole store), emits
     // per-doc verdicts, THEN appends its signatures (probe-before-
     // append = the batch never matches itself), folding the per-batch
-    // subtrees every 2 batches so the store's file count stays bounded.
+    // commits every 2 batches so the store's file count stays bounded.
     // Staged corpus→delta batches make the delta's store exactly the
     // corpus signatures, so the stream's delta verdicts must reproduce
     // the batch incremental-dedup relation — oracled by the SAME SQL as
     // q_dedup_incremental. Asserted in-row: ≥2 micro-batches, store
     // carry-over, every probe's files ≤ the store's files, compaction
-    // folded the subtrees to ONE, and a post-stream single-doc probe
+    // folded the commits to ONE, and a post-stream single-doc probe
     // opens a STRICT subset of the store (bounded by that doc's
     // distinct cells) while still finding its corpus dups.
     Q("q_stream_live_neardup",
@@ -942,15 +942,15 @@ object StreamingOps extends QueryModule {
             s"batch ${st.batchId}: probe must open a pruned, non-empty file set " +
               s"(opened ${st.probeFiles} of ${st.storeFiles})")
         }
-        // compaction folded every per-batch subtree into one
-        val subtrees = new java.io.File(store).listFiles()
-          .filter(f => f.isDirectory && f.getName.startsWith("ingest_batch="))
-        require(subtrees.length == 1,
-          s"compactEvery=2 over 2 batches must leave ONE folded subtree, " +
-            s"got ${subtrees.map(_.getName).mkString(",")}")
+        // compaction folded both batches' files into one fold commit
+        val commits = graft.streaming.Streams.storeCommits(store)
+        require(commits.size == 1 && commits.head._2,
+          s"compactEvery=2 over 2 batches must leave ONE fold commit live, " +
+            s"got (version, is fold) ${commits.mkString(",")}")
         // the store must carry BOTH batches' signatures after the run —
         // i.e. the append side of the loop is live, not just the probe
-        val carryRow = s.read.parquet(store).select("doc_id").distinct()
+        val carryRow = graft.streaming.Streams.readMergeTable(s, store)
+          .select("doc_id").distinct()
           .agg(sum(when(col("doc_id") % 10 =!= 7, 1L).otherwise(0L)),
             sum(when(col("doc_id") % 10 === 7, 1L).otherwise(0L))).head
         val (corpusDocs, deltaDocs) = (carryRow.getLong(0), carryRow.getLong(1))
@@ -960,14 +960,15 @@ object StreamingOps extends QueryModule {
         // document touches ≤ numBands cells, so its probe must open
         // strictly fewer files than the store holds — and still find
         // its dups (the prune never costs recall)
-        val dupRow = s.read.parquet(out)
+        val dupRow = graft.streaming.Streams.readMergeTable(s, out)
           .filter(col("is_dup") && col("doc_id") % 10 === 7)
           .orderBy("doc_id").limit(1).collect()
         val probeId =
           if (dupRow.nonEmpty) dupRow.head.getLong(0)
           // fallback must pick a doc the STORE holds signatures for —
           // a verdict row alone could be a too-short-to-shingle doc
-          else s.read.parquet(store).select("doc_id").orderBy("doc_id")
+          else graft.streaming.Streams.readMergeTable(s, store)
+            .select("doc_id").orderBy("doc_id")
             .limit(1).collect().head.getLong(0)
         val oneDoc = Tables(s, d, "documents").filter(col("doc_id") === probeId)
         // the layout metadata pins the width a prober must use
@@ -976,14 +977,14 @@ object StreamingOps extends QueryModule {
           s"store layout must record sigBuckets=$sigBuckets")
         val oneSigs = graft.streaming.Streams.nearDupSigs(oneDoc, sigBuckets)
         val (m1, probed1, store1, _) = graft.streaming.Streams
-          .probeNearDupStore(s, store, oneSigs, excludeBatch = Long.MaxValue)
+          .probeNearDupStore(s, store, oneSigs)
         require(probed1 > 0 && probed1 < store1,
           s"single-doc probe must open a strict subset ($probed1 of $store1 files)")
         if (dupRow.nonEmpty)
           require(m1.filter(col("doc_id") === probeId)
               .head.getAs[Long]("n_corpus_matches") > 0,
             "the pruned probe must still find the known dup's corpus matches")
-        s.read.parquet(out)
+        graft.streaming.Streams.readMergeTable(s, out)
           .filter(col("doc_id") % 10 === 7)
           .select(col("doc_id"), col("n_corpus_matches"),
             col("first_match"), col("is_dup"))
@@ -994,8 +995,8 @@ object StreamingOps extends QueryModule {
     // LIVE decontamination at ingest: the embedding-space hygiene scan
     // (q_dedup_decontaminate_semantic) run as a STREAM — train vectors
     // arrive in micro-batches, each batch is scored against the broadcast
-    // eval set and its verdicts land as an idempotent ingest_batch
-    // subtree. No cross-batch state by construction (the eval side is
+    // eval set and its verdicts land as one idempotent commit of a
+    // TxLog table. No cross-batch state by construction (the eval side is
     // static, every batch self-contained), so this is the one streaming
     // row whose state size is ZERO at any corpus scale — the shape a
     // crawl ingest wants for its eval-leakage gate. Declared checks: ≥ 2
@@ -1016,7 +1017,7 @@ object StreamingOps extends QueryModule {
         require(batches.map(_._2).sum == total,
           s"batches must cover the train corpus exactly once: " +
             s"${batches.map(_._2).sum} verdicts vs $total train vectors")
-        val verdicts = s.read.parquet(out)
+        val verdicts = graft.streaming.Streams.readMergeTable(s, out)
           .select("vec_id", "max_sim", "nearest_eval", "contaminated")
         require(verdicts.select("vec_id").distinct().count() == total,
           "a vector must get exactly one verdict across all batches")
@@ -1081,7 +1082,7 @@ object StreamingOps extends QueryModule {
         require(batches.size >= 3,
           s"the staged replay must deliver 3 shipments, got ${batches.size}")
         graft.plans.Iterate.release(counts)
-        s.read.parquet(out)
+        graft.streaming.Streams.readMergeTable(s, out)
           .select("batch_id", "event_type", "n_batch", "psi", "drifted")
           .orderBy("batch_id", "event_type")
       },
@@ -1187,7 +1188,7 @@ object StreamingOps extends QueryModule {
           vOf += (w, p) -> graft.streaming.MergeTable.appendWithBloom(
             s, table, part, "k", buckets, "event_type", statsCols = Seq("hr"))
         }
-        val full = graft.streaming.MergeTable.read(s, table).inputFiles.length
+        val full = graft.streaming.Streams.readMergeTable(s, table).inputFiles.length
         val hrScan = graft.streaming.MergeTable
           .scanRange(s, table, "hr", 16L, 23L).inputFiles.length
         val typeScan = graft.streaming.MergeTable
@@ -1207,7 +1208,7 @@ object StreamingOps extends QueryModule {
         // (bucket-folded) bloom sidecars in the same snapshot
         graft.streaming.MergeTable.optimizeZorder(
           s, table, "k", buckets, "hr", "ug", bits, chunks = 8)
-        val fullZ = graft.streaming.MergeTable.read(s, table).inputFiles.length
+        val fullZ = graft.streaming.Streams.readMergeTable(s, table).inputFiles.length
         val box = graft.streaming.MergeTable.scanBox(
           s, table, "hr", "ug", 16L, 23L, 0L, 15L, bits)
         require(box.inputFiles.length < fullZ,
@@ -1257,7 +1258,7 @@ object StreamingOps extends QueryModule {
         require(feed.filter(col("_change") === "delete").count() == 3L &&
           feed.count() == 3L,
           "the CDF must classify exactly the 3 dropped keys as deletes")
-        graft.streaming.MergeTable.read(s, table)
+        graft.streaming.Streams.readMergeTable(s, table)
           .select(col("user_id"), col("n_events"),
             round(col("total"), 2).as("total"))
           .orderBy("user_id")
@@ -1286,7 +1287,7 @@ object StreamingOps extends QueryModule {
           graft.streaming.MergeTable.appendWithBloom(s, table,
             e.filter(col("event_type") === t), "user_id", buckets, "event_type")
         }
-        val full = graft.streaming.MergeTable.read(s, table).inputFiles.length
+        val full = graft.streaming.Streams.readMergeTable(s, table).inputFiles.length
         val scan = graft.streaming.MergeTable.scanPoint(
           s, table, "event_type", lit("purchase"))
         require(scan.inputFiles.length < full,
@@ -1323,7 +1324,7 @@ object StreamingOps extends QueryModule {
         graft.streaming.MergeTable.load(s, table, rows, "k", buckets = 2)
         graft.streaming.MergeTable.optimizeZorder(
           s, table, "k", buckets = 2, "x", "y", bits, chunks = 8)
-        val full = graft.streaming.MergeTable.read(s, table).inputFiles.length
+        val full = graft.streaming.Streams.readMergeTable(s, table).inputFiles.length
         val scan = graft.streaming.MergeTable.scanBox(
           s, table, "x", "y", 6L, 17L, 8L, 23L, bits)
         require(scan.inputFiles.length < full,

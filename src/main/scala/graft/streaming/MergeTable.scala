@@ -22,7 +22,8 @@ import java.nio.file.{Files, Paths}
   * delete the staged adds and retry. [[TxLog.commitRetrying]] runs that
   * loop and [[writeParts]] stages the data files. The writers on it are
   * [[mergeInto]], [[deleteKeys]], [[append]], [[appendWithBloom]],
-  * [[compact]], [[optimizeZorder]] and `Streams.runMergeTotals`.
+  * [[compact]], [[optimizeZorder]], `Streams.runMergeTotals` and the
+  * streaming stores' batch commits and folds ([[TxLog.commitBatch]]).
   */
 object MergeTable {
 
@@ -77,9 +78,6 @@ object MergeTable {
         (v, touched)
       })
     }
-
-  def read(spark: SparkSession, table: String, asOf: Option[Long] = None): DataFrame =
-    Streams.readMergeTable(spark, table, asOf)
 
   /** Row-level DELETE (the third lakehouse verb beside mergeInto's
     * upsert and append's blind insert): drop every row whose key is in
@@ -633,7 +631,7 @@ object MergeTable {
     * temp stage dir — `coalesce(1)` when `partCols` is empty, else
     * `repartition` + `partitionBy` on `partCols` (each leaf in one task,
     * so one part per leaf) — and move each leaf's part into `table` as
-    * `name(leaf values, part file suffix)`. A `wanted` first-column value
+    * `name(leaf values, part file suffix)`, a table-relative path. A `wanted` first-column value
     * with no leaf (partitionBy makes no dir for a value without rows)
     * gets `empty(value)` written as its one part instead: every bucket
     * keeps a schema-bearing file for lookup(). Moved parts stay
@@ -666,6 +664,7 @@ object MergeTable {
         dir.listFiles().filter(_.getName.endsWith(".parquet")).toSeq match {
           case Seq(part) =>
             val f = name(leaf, part.getName.stripPrefix("part-"))
+            Files.createDirectories(Paths.get(table, f).getParent)
             Files.move(part.toPath, Paths.get(table, f))
             leaf -> f
           case parts =>

@@ -22,7 +22,8 @@ object Streams {
     * (measured: the 3-batch stateful floor runs 2x faster at 8 stores
     * than at 32 — OPTIMIZATION_r14.md §1); at 100 TB the byte-derived
     * count saturates at the session's `spark.sql.shuffle.partitions`,
-    * so cluster behaviour is unchanged. Knobs: [[graft.GraftConf]]. */
+    * so cluster behaviour is unchanged. The bytes-per-partition knob is
+    * [[graft.GraftConf.streamStateBytesPerPartition]]. */
   def statePartitions(spark: SparkSession, paths: Seq[String]): Int = {
     // size through each path's OWN Hadoop FileSystem (VERDICT r14 #1): a
     // java.io.File sizes any non-local URI (hdfs://, s3a://) as 0 bytes,
@@ -40,11 +41,14 @@ object Streams {
       } catch { case scala.util.control.NonFatal(_) => 0L }
     val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val per = graft.GraftConf.streamStateBytesPerPartition
-    val floor = graft.GraftConf.streamStateMinPartitions
     val bytes = paths.map(bytesOf).sum
     math.min(cap.toLong,
-      math.max(floor.toLong, (bytes + per - 1) / per)).toInt
+      math.max(stateMinPartitions.toLong, (bytes + per - 1) / per)).toInt
   }
+
+  /** Floor for [[statePartitions]]' derived count — keeps a minimum of
+    * parallelism headroom however small the staged gate inputs are. */
+  private[graft] val stateMinPartitions = 8
 
   /** Run `body` (construct + start + drain one live query) with the
     * byte-derived state partitioning above, and without the trailing
@@ -259,24 +263,24 @@ object Streams {
     * lands, not at the next offline audit. The reference is static
     * driver-side state (the training-time profile) and each batch is
     * self-contained, so cross-batch state is ZERO and a feed runs this
-    * forever at O(batch + types × bands) per trigger. Idempotent
-    * batchId-subtree writes (the runDecontamIngest recipe). Emits one
+    * forever at O(batch + types × bands) per trigger. Emits one
     * (batch_id, event_type, n_batch, psi, drifted) row per type PRESENT
     * in the batch — including types ABSENT from the reference profile (a
     * brand-new upstream type is the clearest distribution break the
     * monitor exists to catch): those emit with psi = NULL and
-    * drifted = true instead of being silently dropped by the join. */
+    * drifted = true instead of being silently dropped by the join. The
+    * verdicts are one TxLog table at `outDir`, each batch committed
+    * through [[TxLog.commitBatch]] (a replayed batch is skipped). Returns
+    * the batch ids this call committed. */
   def runDriftMonitor(spark: SparkSession, eventsPath: String,
       refShares: DataFrame, outDir: String,
       bandSql: String, psiThreshold: Double = 0.1): Seq[Long] = {
-    import org.apache.spark.sql.SaveMode
     val stats = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val ref = refShares.localCheckpoint() // (event_type, band, p_ref) grid
     drain(events(spark, eventsPath, Map("maxFilesPerTrigger" -> "1")),
         OutputMode.Append()) { (batch, batchId) =>
-      val fp = CommitMarkers.fingerprint(batch)
-      if (!CommitMarkers.isCommitted(outDir, batchId, fp)) {
+      TxLog.commitBatch(outDir, batchId, TxLog.fingerprint(batch)) { snap =>
         val counts = batch
           .select(col("event_type"), expr(bandSql).as("band"))
           .groupBy("event_type", "band").agg(count(lit(1)).as("c"))
@@ -308,14 +312,14 @@ object Streams {
         // (`counts` stays pinned because tot and the band join both
         // read it)
         val obs = org.apache.spark.sql.Observation()
-        known.unionByName(novel).observe(obs, count(lit(1)).as("rows"))
-          .write.mode(SaveMode.Overwrite)
-          .parquet(s"$outDir/ingest_batch=$batchId")
-        CommitMarkers.commit(outDir, batchId, fp)
-        stats.put(batchId,
-          obs.get.get("rows").map(_.asInstanceOf[Long]).getOrElse(0L)): Unit
+        val verdicts = known.unionByName(novel).observe(obs, count(lit(1)).as("rows"))
+        val adds = writeCells(outDir, verdicts, Seq.empty, snap.version + 1)
         graft.plans.Iterate.release(counts)
-      }
+        TxLog.Staged(adds, Seq.empty, verdicts.schema) { _ =>
+          stats.put(batchId,
+            obs.get.get("rows").map(_.asInstanceOf[Long]).getOrElse(0L)): Unit
+        }
+      }: Unit
     }
     graft.plans.Iterate.release(ref)
     import scala.jdk.CollectionConverters._
@@ -324,19 +328,16 @@ object Streams {
 
   /** Streaming DECONTAMINATION at ingest: every arriving train vector is
     * scored against the BROADCAST eval set (exact per-vector argmax — a
-    * hygiene scan that can miss is not hygiene), and the batch's verdicts
-    * land as an `ingest_batch=<id>` parquet subtree. No cross-batch
-    * state: the eval set is static driver-side input and each batch is
+    * hygiene scan that can miss is not hygiene). No cross-batch state:
+    * the eval set is static driver-side input and each batch is
     * self-contained, so a crawl ingest runs this forever at O(batch ×
-    * eval) per trigger. Idempotent under foreachBatch's at-least-once
-    * contract (the runNearDupIngest recipe): batchId-named Overwrite
-    * subtrees + commit markers, so a retried batch rewrites its own
-    * subtree and re-counts nothing. Returns (batchId, rows) per committed
-    * batch. */
+    * eval) per trigger. The verdicts are one TxLog table at `outDir`,
+    * each batch committed through [[TxLog.commitBatch]] (a replayed
+    * batch is skipped and re-counts nothing). Returns (batchId, rows) per
+    * batch this call committed. */
   def runDecontamIngest(spark: SparkSession, vecsPath: String,
       evalVecs: DataFrame, outDir: String,
       simThr: Double = 0.30): Seq[(Long, Long)] = {
-    import org.apache.spark.sql.SaveMode
     val stats = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val ev = evalVecs
@@ -344,12 +345,11 @@ object Streams {
       .localCheckpoint()
     drain(embeddings(spark, vecsPath, Map("maxFilesPerTrigger" -> "1")),
         OutputMode.Append()) { (batch, batchId) =>
-      val fp = CommitMarkers.fingerprint(batch)
-      if (!CommitMarkers.isCommitted(outDir, batchId, fp)) {
+      TxLog.commitBatch(outDir, batchId, TxLog.fingerprint(batch)) { snap =>
         // accounting count observed during the WRITE itself (the
         // write is the verdicts' only consumer)
         val obs = org.apache.spark.sql.Observation()
-        batch.crossJoin(broadcast(ev))
+        val verdicts = batch.crossJoin(broadcast(ev))
           .select(col("vec_id"), col("eval_id"),
             round(graft.functions.VecOps.cosine(col("embedding"), col("eemb")), 6)
               .as("sim"))
@@ -360,12 +360,12 @@ object Streams {
           .select(col("vec_id"), col("max_sim"), col("nearest_eval"),
             (col("max_sim") >= simThr).as("contaminated"))
           .observe(obs, count(lit(1)).as("rows"))
-          .write.mode(SaveMode.Overwrite)
-          .parquet(s"$outDir/ingest_batch=$batchId")
-        CommitMarkers.commit(outDir, batchId, fp)
-        stats.put(batchId,
-          obs.get.get("rows").map(_.asInstanceOf[Long]).getOrElse(0L)): Unit
-      }
+        TxLog.Staged(writeCells(outDir, verdicts, Seq.empty, snap.version + 1),
+            Seq.empty, verdicts.schema) { _ =>
+          stats.put(batchId,
+            obs.get.get("rows").map(_.asInstanceOf[Long]).getOrElse(0L)): Unit
+        }
+      }: Unit
     }
     graft.plans.Iterate.release(ev)
     import scala.jdk.CollectionConverters._
@@ -598,22 +598,87 @@ object Streams {
     readMergeTable(spark, tableDir)
   }
 
-  /** One micro-batch's probe IO accounting: how many parquet files the
-    * store held when the batch probed it, how many the pruned probe
-    * actually opened, and how many (band, sig_bucket) partition cells
-    * the batch's signatures touched (the prune key set — bounded by
-    * numBands × sigBuckets, NOT by batch size). */
+  /** One micro-batch's probe IO accounting: how many files the store's
+    * snapshot held when the batch probed it, how many the pruned probe
+    * actually opened, and how many (band, sig_bucket) cells the batch's
+    * signatures touched (the prune key set — bounded by numBands ×
+    * sigBuckets, NOT by batch size). */
   final case class NearDupBatchStat(batchId: Long, storeFiles: Long,
       probeFiles: Long, cells: Long)
 
-  /** List the live `ingest_batch=<id>` subtrees of a band store
-    * (compacted folds carry negative ids and are live like any other). */
-  private def nearDupBatchDirs(storeDir: String): Array[java.io.File] = {
-    val root = new java.io.File(storeDir)
-    if (!root.isDirectory) Array.empty
-    else root.listFiles().filter(f =>
-      f.isDirectory && f.getName.startsWith("ingest_batch="))
+  // ---- the streaming stores' file layout. Every store is a TxLog table
+  // whose files sit in one `key=value/` directory per key of their cell
+  // (none for an unkeyed table) and are named `v<version>-<kind>-<part>`:
+  // the version is the commit that added the file, and the kind is `i`
+  // for a batch's own files or `f` for a fold's. Readers pick a cell's
+  // files by name from the snapshot, with no directory listing.
+
+  private def storeFile(keys: Seq[String], version: Long, kind: Char)(
+      cell: Seq[Int], part: String): String =
+    keys.zip(cell).map { case (k, v) => s"$k=$v/" }.mkString + s"v$version-$kind-$part"
+
+  private def cellOf(file: String): Seq[Int] =
+    file.split('/').toSeq.init.map(d => d.substring(d.indexOf('=') + 1).toInt)
+
+  /** The commit that added a store file, as (version, is a fold). */
+  private def commitOf(file: String): (Long, Boolean) = {
+    val parts = file.split('/').last.split('-')
+    (parts(0).stripPrefix("v").toLong, parts(1) == "f")
   }
+
+  /** The commits whose files a store's snapshot holds, as (version, is a
+    * fold), ascending. */
+  private[graft] def storeCommits(table: String): Seq[(Long, Boolean)] =
+    TxLog.snapshot(table).files.map(commitOf).distinct.sorted
+
+  /** Stage `df` into `table` as commit `version`'s files of `kind`: one
+    * file per cell of `keys` (one in all when `keys` is empty). The
+    * files keep the key columns. Returns the staged file names. */
+  private def writeCells(table: String, df: DataFrame, keys: Seq[String],
+      version: Long, kind: Char = 'i'): Seq[String] = {
+    val copies = keys.map("__" + _)
+    val keyed = keys.zip(copies).foldLeft(df) { case (d, (k, c)) => d.withColumn(c, col(k)) }
+    MergeTable.writeParts(table, keyed, copies, storeFile(keys, version, kind))
+      .values.toSeq.sorted
+  }
+
+  /** A keyed store's snapshot read with its `key=value/` directories as
+    * partition columns, so a filter on a key opens only the matching
+    * cells' files. The store must hold files. */
+  private def bucketView(spark: SparkSession, table: String): DataFrame = {
+    val snap = TxLog.snapshot(table)
+    spark.read.schema(snap.schema.get).option("basePath", table)
+      .parquet(snap.files.map(f => s"$table/$f"): _*)
+  }
+
+  /** Tiered fold of an append store (the near-dup band store, the ANF
+    * edge store), checked on EVERY batch — an empty or replay-skipped
+    * batch at a fold boundary still folds, because the fold depends only
+    * on the store. At each `compactEvery` boundary the files of the
+    * batches appended since the last fold fold into one new fold, an
+    * O(recent batches) rewrite, NOT O(corpus); once `maxFolds` folds are
+    * live, everything folds (amortized O(corpus / (compactEvery ×
+    * maxFolds)) per batch). The fold is one commit that adds the folded
+    * files and removes their sources, so a crash leaves only invisible
+    * orphans; its distinct() is the one place cross-batch duplicate rows
+    * retire. */
+  private def foldStore(spark: SparkSession, table: String, batchId: Long,
+      compactEvery: Int, maxFolds: Int, keys: Seq[String]): Unit =
+    if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+      TxLog.commitRetrying(table) { snap =>
+        def commits(files: Seq[String]): Int = files.map(commitOf).distinct.size
+        val (folds, singles) = snap.files.partition(commitOf(_)._2)
+        val toFold =
+          if (commits(folds) >= maxFolds) snap.files
+          else if (commits(singles) > 1) singles
+          else Seq.empty
+        if (commits(toFold) < 2) Left(())
+        else {
+          val rows = TxLog.read(spark, table, snap, toFold).distinct()
+          Right(TxLog.Staged(writeCells(table, rows, keys, snap.version + 1, 'f'),
+            toFold, rows.schema)(TxLog.retain(table, _)))
+        }
+      }
 
   /** A document batch's band signatures WITH the store partition key:
     * `sig_bucket = xxhash64(band_sig) mod sigBuckets`. One formula,
@@ -650,37 +715,19 @@ object Streams {
     stored.orElse(layout)
   }
 
-  /** Number of parquet data files anywhere under `dir`. */
-  private def parquetFilesUnder(dir: java.io.File): Long =
-    if (dir.isDirectory)
-      Option(dir.listFiles()).getOrElse(Array.empty).map(parquetFilesUnder).sum
-    else if (dir.getName.endsWith(".parquet")) 1L else 0L
-
-  /** Total parquet data files across a band store's live subtrees. */
-  def nearDupStoreFiles(storeDir: String): Long =
-    nearDupBatchDirs(storeDir).map(parquetFilesUnder).sum
-
-  /** PRUNED probe of a partitioned band store: given a delta's band
-    * signatures (with `sig_bucket`), open ONLY the store's
-    * `band=<b>/sig_bucket=<k>` partition directories matching the
-    * delta's distinct cells — an O(cells) driver listing (cells ≤
+  /** PRUNED probe of a band store: given a delta's band signatures (with
+    * `sig_bucket`), open ONLY the store's snapshot files of the delta's
+    * distinct (band, sig_bucket) cells, picked by file name (cells ≤
     * numBands × sigBuckets, a constant independent of both batch and
-    * store size) followed by a scan of just those leaves. Subtrees
-    * named `ingest_batch=<excludeBatch>` are skipped so a RETRIED
-    * micro-batch never meets its own partially-committed signatures
-    * (the probe-before-append contract survives at-least-once
-    * delivery). Returns the per-doc match aggregate plus (files the
-    * probe opened, files the store holds) — the pruned ⊂ store
-    * evidence the caller asserts. Duplicate signature rows (a crashed
-    * compaction's window) are harmless by construction: the aggregate
-    * is countDistinct/min over corpus doc ids. Returns (matches,
-    * probeFiles, storeFiles, distinct cells probed). */
+    * store size). A batch's own signatures are invisible until its
+    * commit, so a retried batch never meets them. Returns (per-doc
+    * match aggregate, files the probe opened, files the store's
+    * snapshot holds, distinct cells probed) — the pruned ⊂ store
+    * evidence the caller asserts. */
   def probeNearDupStore(spark: SparkSession, storeDir: String,
-      sigs: DataFrame, excludeBatch: Long,
+      sigs: DataFrame,
       knownCells: Option[Seq[(Long, Long)]] = None): (DataFrame, Long, Long, Long) = {
-    val batchDirs = nearDupBatchDirs(storeDir)
-      .filterNot(_.getName == s"ingest_batch=$excludeBatch")
-    val storeFiles = batchDirs.map(parquetFilesUnder).sum
+    val snap = TxLog.snapshot(storeDir)
     // the ingest loop observes the cell set during the sigs pin
     // (optimization r15 §12) and passes it in; ad-hoc probers pay the
     // one distinct-collect job here
@@ -688,71 +735,56 @@ object Streams {
       sigs.select(col("band"), col("sig_bucket"))
         .distinct().collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq)
-    val leafDirs = for {
-      bd <- batchDirs
-      (band, bucket) <- cells
-      leaf = new java.io.File(bd, s"band=$band/sig_bucket=$bucket")
-      if leaf.isDirectory
-    } yield leaf.getPath
-    val empty = sigs.sparkSession.emptyDataFrame
-      .select(lit(0L).as("doc_id"), lit(0L).as("n_corpus_matches"),
-        lit(null).cast("long").as("first_match"))
-    if (leafDirs.isEmpty) (empty, 0L, storeFiles, cells.length.toLong)
-    else {
-      val pruned = spark.read.option("basePath", storeDir)
-        .parquet(leafDirs.toIndexedSeq: _*)
+    val wanted = cells.map { case (band, bucket) => Seq(band.toInt, bucket.toInt) }.toSet
+    val files = snap.files.filter(f => wanted(cellOf(f)))
+    val storeFiles = snap.files.size.toLong
+    if (files.isEmpty) {
+      val empty = spark.emptyDataFrame
+        .select(lit(0L).as("doc_id"), lit(0L).as("n_corpus_matches"),
+          lit(null).cast("long").as("first_match"))
+      (empty, 0L, storeFiles, cells.length.toLong)
+    } else {
+      val pruned = TxLog.read(spark, storeDir, snap, files)
       val matches = sigs.as("n").join(pruned.as("c"),
           col("n.band") === col("c.band") &&
             col("n.band_sig") === col("c.band_sig"))
         .groupBy(col("n.doc_id").as("doc_id"))
         .agg(countDistinct(col("c.doc_id")).as("n_corpus_matches"),
           min(col("c.doc_id")).as("first_match"))
-      (matches, pruned.inputFiles.length.toLong, storeFiles, cells.length.toLong)
+      (matches, files.size.toLong, storeFiles, cells.length.toLong)
     }
   }
 
-  /** STREAMING NEAR-DUP INGEST (VERDICT r9 missing #2; store layout
-    * re-architected per VERDICT r10 #1/#6) — the crawl front door that
-    * a batch re-dedup never is: each micro-batch of documents
-    * (1) computes its MinHash band signatures with the exact batch
-    * arithmetic ([[graft.operators.Dedup.bandsOf]]) plus a
-    * `sig_bucket = xxhash64(band_sig) mod sigBuckets` partition key,
-    * (2) PROBES the persisted store through [[probeNearDupStore]] —
-    * opening only the partition cells the batch's signatures hash to,
-    * never the whole store (the r10 `weak`: an unpruned O(corpus) scan
-    * per batch), (3) emits per-doc verdicts, (4) appends its own
-    * signatures partitioned by (band, sig_bucket), and (5) every
-    * `compactEvery` batches folds the accrued per-batch subtrees into
-    * one, tiered LSM-style (bounding the file-listing cost a
-    * thousand-batch crawl would otherwise accrue, without rewriting
-    * the corpus each fold). `sigBuckets` is the IVF-cell-count
-    * analogue (Similarity's by-cell layout): the probe reads at most
-    * `min(1, batch_distinct_sigs / (numBands × sigBuckets))` of the
-    * store, so size it well above the expected per-batch signature
-    * count — 16 suits the gate's corpus-sized batches; a production
-    * crawl with ~10³-sig micro-batches wants ≥4096 (measured in
-    * examples/NearDupIngestScale). Every write is idempotent under
-    * foreachBatch's
-    * at-least-once contract (ADVICE r10): verdicts and signatures land
-    * in batchId-named subtrees written with Overwrite, a retried batch
-    * whose commit marker exists is skipped entirely, and the probe
-    * excludes the batch's own subtree — so a retry after ANY partial
-    * state reproduces, not doubles. A crashed compaction (fold written,
-    * sources not yet deleted) leaves duplicate signature rows that the
-    * probe's countDistinct/min aggregate cancels, and the next fold's
-    * distinct removes. Returns per-batch probe IO stats. */
+  /** STREAMING NEAR-DUP INGEST — the crawl front door that a batch
+    * re-dedup never is: each micro-batch of documents (1) computes its
+    * MinHash band signatures with the exact batch arithmetic
+    * ([[graft.operators.Dedup.bandsOf]]) plus a `sig_bucket =
+    * xxhash64(band_sig) mod sigBuckets` cell key, (2) PROBES the band
+    * store through [[probeNearDupStore]] — opening only the cells the
+    * batch's signatures hash to, never the whole store, (3) commits its
+    * per-doc verdicts to the `outDir` table, (4) then commits its own
+    * signatures to the `storeDir` table, one file per cell, and (5)
+    * folds the store tiered LSM-style every `compactEvery` batches
+    * ([[foldStore]]). `sigBuckets` is the IVF-cell-count analogue: the
+    * probe reads at most `min(1, batch_distinct_sigs / (numBands ×
+    * sigBuckets))` of the store, so size it well above the expected
+    * per-batch signature count — 16 suits the gate's corpus-sized
+    * batches; a production crawl with ~10³-sig micro-batches wants ≥4096
+    * (measured in examples/NearDupIngestScale). Both commits go through
+    * [[TxLog.commitBatch]]: a batch the store records is skipped whole,
+    * and one that crashed between its two commits recommits only its
+    * signatures. Returns per-batch probe IO stats. */
   def runNearDupIngest(spark: SparkSession, docsPath: String,
       storeDir: String, outDir: String, sigBuckets: Int = 16,
       compactEvery: Int = 0, maxFolds: Int = 8): Seq[NearDupBatchStat] = {
-    import org.apache.spark.sql.SaveMode
     val stats = new java.util.concurrent.ConcurrentHashMap[Long, NearDupBatchStat]()
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(storeDir))
+    Seq(storeDir, outDir).foreach(d =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
     pinLayout(storeDir, "band store", Some(s"sigBuckets=$sigBuckets")): Unit
     drain(documents(spark, docsPath, Map("maxFilesPerTrigger" -> "1")),
         OutputMode.Append()) { (batch, batchId) =>
-      val fp = CommitMarkers.fingerprint(batch)
-      if (!CommitMarkers.isCommitted(storeDir, batchId, fp)) {
-        // retry of a fully-committed batch: skip.
+      val fp = TxLog.fingerprint(batch)
+      if (!TxLog.recordsBatch(storeDir, TxLog.snapshot(storeDir), batchId, fp)) {
         // The probe's (band, sig_bucket) cell set is OBSERVED during
         // the sigs pin itself, with no job of its own
         val (sigs, cellsM) = graft.plans.Iterate.pinObserved(
@@ -769,150 +801,58 @@ object Streams {
             s"near-dup ingest batch $batchId: observed cell-set metric missing")
         }
         val (matches, probeFiles, storeFiles, cells) =
-          probeNearDupStore(spark, storeDir, sigs, batchId,
-            knownCells = Some(batchCells))
-        batch.select(col("doc_id"))
-          .join(matches, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("n_corpus_matches"), lit(0L)).as("n_corpus_matches"),
-            col("first_match"),
-            col("first_match").isNotNull.as("is_dup"))
-          .write.mode(SaveMode.Overwrite)
-          .parquet(s"$outDir/ingest_batch=$batchId")
+          probeNearDupStore(spark, storeDir, sigs, knownCells = Some(batchCells))
+        TxLog.commitBatch(outDir, batchId, fp) { snap =>
+          val verdicts = batch.select(col("doc_id"))
+            .join(matches, Seq("doc_id"), "left")
+            .select(col("doc_id"),
+              coalesce(col("n_corpus_matches"), lit(0L)).as("n_corpus_matches"),
+              col("first_match"),
+              col("first_match").isNotNull.as("is_dup"))
+          TxLog.Staged(writeCells(outDir, verdicts, Seq.empty, snap.version + 1),
+            Seq.empty, verdicts.schema)(_ => ())
+        }: Unit
         // probe-then-append: a batch must never match ITSELF (the
         // incremental contract — within-delta dups are a different
-        // query), so the store append strictly follows the probe.
-        // Repartition on the cell key first: each cell then lands in
-        // exactly one task → ONE file per cell per subtree, not one
-        // per (cell × writing task) — the file-count term the probe's
-        // listing pays forever
-        sigs.repartition(col("band"), col("sig_bucket"))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("band", "sig_bucket")
-          .parquet(s"$storeDir/ingest_batch=$batchId")
-        CommitMarkers.commit(storeDir, batchId, fp)
+        // query), so the store commit strictly follows the probe
+        TxLog.commitBatch(storeDir, batchId, fp) { snap =>
+          TxLog.Staged(writeCells(storeDir, sigs, Seq("band", "sig_bucket"), snap.version + 1),
+            Seq.empty, sigs.schema)(_ => ())
+        }: Unit
+        graft.plans.Iterate.release(sigs)
         stats.put(batchId,
           NearDupBatchStat(batchId, storeFiles, probeFiles, cells)): Unit
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          // TIERED fold (the LSM shape): normally fold only the
-          // per-batch subtrees into ONE new fold — an O(recent
-          // batches) rewrite, NOT O(corpus); when the fold chain
-          // itself exceeds maxFolds, merge everything (rare: every
-          // compactEvery × maxFolds batches, amortized O(corpus /
-          // (compactEvery × maxFolds)) per batch). A store folded
-          // whole every cycle would rewrite 100 TB every k batches —
-          // the verdict-r10 scan problem moved from reads to writes.
-          val live = nearDupBatchDirs(storeDir)
-          val folds = live.filter(
-            _.getName.stripPrefix("ingest_batch=").toLong < 0)
-          val singles = live.filterNot(folds.contains)
-          val toFold =
-            if (folds.length >= maxFolds) live
-            else if (singles.length > 1) singles
-            else Array.empty[java.io.File]
-          if (toFold.length > 1) {
-            // a batch of all-too-short docs leaves a DATALESS subtree
-            // (its Overwrite wrote only _SUCCESS); reading a source
-            // list with no parquet files at all would throw on schema
-            // inference — fold only the subtrees carrying data, but
-            // drop every folded-away dir either way
-            val withData = toFold.filter(parquetFilesUnder(_) > 0)
-            if (withData.nonEmpty) {
-              // store-derived fold id (ADVICE r13 high, same hazard
-              // as the ANF edge store): one below the smallest live
-              // fold id is fresh under any resume history, still
-              // negative so it never collides with a real
-              // (non-negative) batch's exclude filter
-              val nextFoldId = live
-                .map(_.getName.stripPrefix("ingest_batch=").toLong)
-                .filter(_ < 0).minOption.getOrElse(0L) - 1
-              val foldDir = s"$storeDir/ingest_batch=$nextFoldId"
-              spark.read.option("basePath", storeDir)
-                .parquet(withData.map(_.getPath).toIndexedSeq: _*)
-                .select("doc_id", "band_sig", "band", "sig_bucket")
-                .distinct()
-                .repartition(col("band"), col("sig_bucket"))
-                .write.mode(SaveMode.Overwrite)
-                .partitionBy("band", "sig_bucket").parquet(foldDir)
-            }
-            // fold committed: drop the sources
-            toFold.foreach(graft.GraftSession.deleteTree)
-          }
-        }
       }
+      foldStore(spark, storeDir, batchId, compactEvery, maxFolds, Seq("band", "sig_bucket"))
     }
     import scala.jdk.CollectionConverters._
     stats.values.asScala.toSeq.sortBy(_.batchId)
   }
 
-  /** Edge-store subtrees (ingest batches + folds) under `storeDir`. */
-  private def anfEdgeDirs(storeDir: String): Seq[java.io.File] =
-    Option(new java.io.File(storeDir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("ingest_batch="))
-      .toSeq
-
-  /** Register-store LIVE leaf dirs: for every `vb` bucket, the NEWEST
-    * COMMITTED `commit=<id>` subtree carrying it — the reader view of
-    * the versioned bucket rewrites below. Superseded leaves are GC'd at
-    * batch end, so the listing here stays O(buckets), not O(batches). */
-  private def anfRegLeafDirs(regDir: String): Seq[java.io.File] = {
-    val root = new java.io.File(regDir)
-    val committed = CommitMarkers.committedIds(regDir)
-    val commits = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("commit="))
-      .filter(f => committed.contains(f.getName.stripPrefix("commit=").toLong))
-    val newest = scala.collection.mutable.Map.empty[String, (Long, java.io.File)]
-    for {
-      c <- commits
-      id = c.getName.stripPrefix("commit=").toLong
-      vb <- Option(c.listFiles()).getOrElse(Array.empty)
-      if vb.isDirectory && vb.getName.startsWith("vb=")
-      if newest.get(vb.getName).forall(_._1 < id)
-    } newest(vb.getName) = (id, vb)
-    newest.values.map(_._2).toSeq
-  }
-
-  /** The register store's committed view — (v, k, mask, vb), vb a real
-    * partition column so the delta rounds' bucket filters prune files. */
+  /** The register store's committed view — (v, k, mask, vb), vb a
+    * partition column ([[bucketView]]) so the delta rounds' bucket
+    * filters open only those buckets' files. */
   private[graft] def anfRegView(spark: SparkSession, regDir: String): DataFrame =
-    spark.read.option("basePath", regDir)
-      .parquet(anfRegLeafDirs(regDir).map(_.getPath): _*)
-      .select("v", "k", "mask", "vb")
+    bucketView(spark, regDir).select("v", "k", "mask", "vb")
 
   /** STREAMING ANF MAINTENANCE — the graph summary kept current over a
-    * live edge stream, DELTA-FRONTIER shape (VERDICT r11 #1; the
-    * reference's active-set superstep contract,
-    * `graph/.../GraphJobRunner.java:256-313`):
+    * live edge stream, DELTA-FRONTIER shape (the reference's active-set
+    * superstep contract, `graph/.../GraphJobRunner.java:256-313`). Two
+    * TxLog tables, each committing every batch through
+    * [[TxLog.commitBatch]]:
     *
-    *   - the accumulated edge relation is an APPEND-ONLY parquet store:
-    *     each batch writes its OWN deduped edges as an
-    *     `ingest_batch=<id>` subtree partitioned by dst bucket
-    *     (`db = pmod(hash(dst), nB)`), and the propagation probe prunes
-    *     to the frontier's buckets (the near-dup band-store recipe);
-    *     every `compactEvery` batches the per-batch subtrees FOLD,
-    *     tiered LSM-style (`ingest_batch=-(id+1)` folds; full merge
-    *     once the fold chain passes `maxFolds`) — bounding the
-    *     per-round file listing a thousand-batch crawl would otherwise
-    *     accrue (VERDICT r12 missing #2) without rewriting the corpus
-    *     each fold;
-    *   - the REGISTER state is a VERSIONED bucket store: each batch
-    *     writes the merged content of only the buckets its upserts
-    *     touch as a fresh `commit=<batchId>` subtree (never overwriting
-    *     the files it read), then makes it visible with a
-    *     `_committed_<batchId>` marker written LAST — the TxLog
-    *     commit discipline, so a crash anywhere in the window leaves
-    *     the previous committed view intact; superseded bucket leaves
-    *     are GC'd after the marker lands, keeping the reader listing
-    *     O(buckets); markers carry the batch's input fingerprint and
-    *     census-fold into a `_committed_upto` watermark past
-    *     `markerFoldAt` ([[CommitMarkers]]), so the marker listing is
-    *     O(recent), not O(batches), and a shifted file→batch mapping
-    *     on restart fails loudly instead of skipping the wrong data;
-    *   - a REPLAYED batch (foreachBatch's at-least-once contract) whose
-    *     marker exists is skipped whole; one crashed mid-window
-    *     reproduces — the edge subtree and the commit subtree both
-    *     rewrite byte-identically from the same inputs (asserted by
-    *     AnfStoreSpec's crash-window tests);
+    *   - the EDGE store (`storeDir`) is append-only: each batch commits
+    *     its OWN deduped edges, one file per dst bucket (`db =
+    *     pmod(hash(dst), nB)`), and the propagation probe reads only
+    *     the frontier's buckets ([[bucketView]]); it folds tiered
+    *     LSM-style every `compactEvery` batches ([[foldStore]]);
+    *   - the REGISTER store (`regDir`) holds one file set per vb bucket:
+    *     a batch's commit adds the merged content of only the buckets
+    *     its upserts touch and removes their old files, so a crash
+    *     anywhere before it leaves the previous view intact;
+    *   - a REPLAYED batch the register store records is skipped whole;
+    *     one that crashed after its edge commit recommits only its
+    *     registers;
     *   - the first non-empty batch converges cold
     *     ([[graft.operators.Graph.anfSketch]]); every later batch runs
     *     [[graft.operators.Graph.anfDeltaRows]] — frontier seeded from
@@ -929,19 +869,16 @@ object Streams {
     * crash-recovery path). Bucket counts are pinned into the store's
     * `_layout` at creation and validated on reopen. Returns (final
     * committed registers, per-batch round counts, per-batch round
-    * stats, per-batch edge-store parquet file counts measured AFTER
-    * that batch's fold — the listing-cost series the scale probe
-    * asserts stays bounded). */
+    * stats, per-batch edge-store live file counts measured AFTER that
+    * batch's fold). */
   def runAnfMaintain(spark: SparkSession, edgesPath: String,
       options: Map[String, String] = Map("maxFilesPerTrigger" -> "1"),
       storeDir0: Option[String] = None, regDir0: Option[String] = None,
       dstBuckets: Int = graft.operators.Graph.anfDstBuckets,
       regBuckets: Int = graft.operators.Graph.anfRegBuckets,
-      compactEvery: Int = 8, maxFolds: Int = 8,
-      markerFoldAt: Int = CommitMarkers.censusBound)
+      compactEvery: Int = 8, maxFolds: Int = 8)
       : (DataFrame, Seq[Int], Seq[Seq[graft.operators.Graph.AnfDeltaRound]],
          Seq[Long]) = {
-    import org.apache.spark.sql.SaveMode
     val schema = StructType(Seq(
       StructField("src", LongType), StructField("dst", LongType)))
     val f = new java.io.File(edgesPath)
@@ -958,64 +895,16 @@ object Streams {
     pinLayout(storeDir, "ANF store", Some(s"db=$dstBuckets,vb=$regBuckets")): Unit
     val nB = dstBuckets
     val rB = regBuckets
-    // resume: the store already holds a committed view iff any marker
-    // exists (the restart path — committed batches will replay and skip)
-    var seeded = anfRegLeafDirs(regDir).nonEmpty
+    // resume: the store already holds a committed view (the restart
+    // path — committed batches will replay and skip)
+    var seeded = TxLog.snapshot(regDir).files.nonEmpty
     val rounds = scala.collection.mutable.ArrayBuffer.empty[Int]
     val roundStats =
       scala.collection.mutable.ArrayBuffer.empty[Seq[graft.operators.Graph.AnfDeltaRound]]
     val storeFiles = scala.collection.mutable.ArrayBuffer.empty[Long]
-    // TIERED edge-store fold (the near-dup LSM shape), checked on EVERY
-    // batch — a fold-trigger batch that happens to be empty or
-    // replay-skipped must still compact (the fold depends only on the
-    // store, never on the batch's rows — review r13 #2): normally fold
-    // only the single-batch subtrees into ONE new fold — an O(recent
-    // batches) rewrite, NOT O(corpus); once the fold chain exceeds
-    // maxFolds, merge everything (amortized O(corpus / (compactEvery ×
-    // maxFolds)) per batch). distinct() here is the one place
-    // cross-batch duplicate edges retire.
-    def maybeFold(batchId: Long): Unit =
-      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-        val live = anfEdgeDirs(storeDir)
-        val folds = live.filter(
-          _.getName.stripPrefix("ingest_batch=").toLong < 0)
-        val singles = live.filterNot(folds.contains)
-        val toFold =
-          if (folds.length >= maxFolds) live
-          else if (singles.length > 1) singles
-          else Seq.empty[java.io.File]
-        if (toFold.length > 1) {
-          val withData = toFold.filter(parquetFilesUnder(_) > 0)
-          if (withData.nonEmpty) {
-            // the fold id comes from the STORE, not the batch counter
-            // (ADVICE r13 high): -(batchId+1) is unique only within one
-            // run — a restarted run's batch ids restart at 0, so its
-            // fold boundary N would Overwrite a prior run's
-            // ingest_batch=-(N+1) whose sources are long deleted
-            // (silent edge loss), and a full merge could select its own
-            // target among its read sources. One BELOW the smallest
-            // live fold id is fresh under any resume history — never a
-            // read source, never a prior fold, still negative so a
-            // replayed batch's own (non-negative) subtree can't collide
-            val nextFoldId = live
-              .map(_.getName.stripPrefix("ingest_batch=").toLong)
-              .filter(_ < 0).minOption.getOrElse(0L) - 1
-            spark.read.option("basePath", storeDir)
-              .parquet(withData.map(_.getPath): _*)
-              .select("src", "dst", "db").distinct()
-              .repartition(col("db"))
-              .write.mode(SaveMode.Overwrite).partitionBy("db")
-              .parquet(s"$storeDir/ingest_batch=$nextFoldId")
-          }
-          // fold committed: drop the sources (a crash HERE leaves
-          // duplicate edges, which bit_or absorbs and the next
-          // full merge's distinct retires)
-          toFold.foreach(graft.GraftSession.deleteTree)
-        }
-      }
     drain(src, OutputMode.Append()) { (batch, batchId) =>
-      val fp = CommitMarkers.fingerprint(batch)
-      if (CommitMarkers.isCommitted(regDir, batchId, fp)) {
+      val fp = TxLog.fingerprint(batch)
+      if (TxLog.recordsBatch(regDir, TxLog.snapshot(regDir), batchId, fp)) {
         // replay of a fully-committed batch: skip
         rounds += 0
         roundStats += Seq.empty: Unit
@@ -1032,20 +921,26 @@ object Streams {
         rounds += 0
         roundStats += Seq.empty: Unit
       } else {
-        // per-batch subtree, Overwrite: a replayed crashed batch lands
-        // byte-identically instead of Append-doubling its edges.
-        // Repartition on the bucket key first — one file per touched
-        // bucket per subtree, not one per (bucket × writing task)
-        dE.withColumn("db", pmod(hash(col("dst")), lit(nB)))
-          .repartition(col("db"))
-          .write.mode(SaveMode.Overwrite).partitionBy("db")
-          .parquet(s"$storeDir/ingest_batch=$batchId")
+        // the batch's edges, one file per dst bucket
+        TxLog.commitBatch(storeDir, batchId, fp) { snap =>
+          val rows = dE.withColumn("db", pmod(hash(col("dst")), lit(nB)))
+          TxLog.Staged(writeCells(storeDir, rows, Seq("db"), snap.version + 1),
+            Seq.empty, rows.schema)(_ => ())
+        }: Unit
+        // the register commit: `rows` hold the merged content of the
+        // `touched` buckets and replace those buckets' files
+        def commitRegisters(rows: DataFrame, touched: Set[Int]): Unit =
+          TxLog.commitBatch(regDir, batchId, fp) { snap =>
+            val withVb = rows.withColumn("vb", pmod(hash(col("v")), lit(rB)))
+            val adds =
+              if (touched.isEmpty) Seq.empty
+              else writeCells(regDir, withVb, Seq("vb"), snap.version + 1)
+            TxLog.Staged(adds, snap.files.filter(f => touched(cellOf(f).head)),
+              withVb.schema)(_ => ())
+          }: Unit
         if (!seeded) { // cold start on the first batch's own edges
           val (m0, r, _, curve) = graft.operators.Graph.anfSketch(dE)
-          m0.withColumn("vb", pmod(hash(col("v")), lit(rB)))
-            .repartition(col("vb"))
-            .write.mode(SaveMode.Overwrite).partitionBy("vb")
-            .parquet(s"$regDir/commit=$batchId")
+          commitRegisters(m0, (0 until rB).toSet)
           // pinned returns are dead once the store holds them — the
           // per-round curve included (one V×(rounds+1) checkpoint)
           Seq(m0, curve).foreach(graft.plans.Iterate.release)
@@ -1054,9 +949,7 @@ object Streams {
           roundStats += Seq.empty: Unit
         } else {
           val base = anfRegView(spark, regDir)
-          val acc = spark.read.option("basePath", storeDir)
-            .parquet(anfEdgeDirs(storeDir).map(_.getPath): _*)
-            .select("src", "dst", "db")
+          val acc = bucketView(spark, storeDir).select("src", "dst", "db")
           val (up, r, st) = graft.operators.Graph.anfDeltaRows(base, acc, dE,
             dstBuckets = nB, regBuckets = rB)
           // one narrow collect serves BOTH the emptiness gate and the
@@ -1064,56 +957,21 @@ object Streams {
           // nonEmpty iff up nonEmpty)
           val bks = up.select(pmod(hash(col("v")), lit(rB)).as("vb"))
             .distinct().collect().map(_.getInt(0)).toSeq
-          if (bks.nonEmpty) {
-            // versioned bucket rewrite: merge the touched buckets'
-            // survivors with the new rows into a FRESH commit subtree
-            // — the write never replaces the files it reads, so no
-            // defensive materialization and no crash window over the
-            // committed view
-            base.filter(col("vb").isin(bks: _*))
-              .select("v", "k", "mask")
-              .join(up.select("v", "k"), Seq("v", "k"), "left_anti")
-              .unionAll(up)
-              .withColumn("vb", pmod(hash(col("v")), lit(rB)))
-              .repartition(col("vb"))
-              .write.mode(SaveMode.Overwrite).partitionBy("vb")
-              .parquet(s"$regDir/commit=$batchId")
-          }
+          // the touched buckets' survivors merged with the new rows, in
+          // fresh files — the write never replaces the files it reads
+          commitRegisters(base.filter(col("vb").isin(bks: _*))
+            .select("v", "k", "mask")
+            .join(up.select("v", "k"), Seq("v", "k"), "left_anti")
+            .unionAll(up), bks.toSet)
           graft.plans.Iterate.release(up)
           rounds += r
           roundStats += st: Unit
         }
         graft.plans.Iterate.release(dE)
-        // commit point: the batch is visible (census-folded past the
-        // bound — replay-skip consults markers AND watermark)
-        CommitMarkers.commit(regDir, batchId, fp, markerFoldAt)
-        // GC superseded register leaves (marker is down, so readers
-        // already prefer this commit's buckets); drop commit dirs
-        // left empty so the listing stays O(buckets)
-        val thisCommit = new java.io.File(regDir, s"commit=$batchId")
-        val mine = Option(thisCommit.listFiles()).getOrElse(Array.empty)
-          .filter(g => g.isDirectory && g.getName.startsWith("vb="))
-          .map(_.getName).toSet
-        for {
-          c <- Option(new java.io.File(regDir).listFiles()).getOrElse(Array.empty)
-          if c.isDirectory && c.getName.startsWith("commit=")
-          if c.getName.stripPrefix("commit=").toLong < batchId
-          vb <- Option(c.listFiles()).getOrElse(Array.empty)
-          if vb.isDirectory && mine.contains(vb.getName)
-        } graft.GraftSession.deleteTree(vb)
-        // an emptied commit DIR goes; its marker STAYS — the marker is
-        // also the batch's processed-record, and deleting it would
-        // make a replay recompute a fully-committed batch
-        for {
-          c <- Option(new java.io.File(regDir).listFiles()).getOrElse(Array.empty)
-          if c.isDirectory && c.getName.startsWith("commit=")
-          if !Option(c.listFiles()).getOrElse(Array.empty)
-            .exists(g => g.isDirectory && g.getName.startsWith("vb="))
-        } graft.GraftSession.deleteTree(c)
       }
       }
-      maybeFold(batchId)
-      storeFiles += parquetFilesUnder(new java.io.File(storeDir)): Unit
+      foldStore(spark, storeDir, batchId, compactEvery, maxFolds, Seq("db"))
+      storeFiles += TxLog.snapshot(storeDir).files.size.toLong: Unit
     }
     val masks =
       if (seeded) anfRegView(spark, regDir).select("v", "k", "mask")

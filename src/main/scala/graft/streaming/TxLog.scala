@@ -38,6 +38,8 @@ trait CommitPrimitive {
   *     `StructType.json` (absent from entries written before the field
   *     existed);
   *   - `stats` (optional): per-file, per-column (min, max) intervals;
+  *   - `batch` (optional): the replay record `[batchId,"fingerprint"]`
+  *     of the streaming micro-batch the commit lands (see [[commitBatch]]);
   *   - `ts`: the writer's commit wall-clock time.
   *
   * Schema rule: a commit's schema is the previous version's schema plus
@@ -49,7 +51,7 @@ trait CommitPrimitive {
   * table on parquet footer inference (`mergeSchema`) for that version
   * and every later one: the log cannot vouch for those files' columns. A
   * checkpoint `<v>.checkpoint.json` holds `{version, files[], schema,
-  * stats}` of the replayed snapshot.
+  * stats, batches}` of the replayed snapshot.
   *
   * The CURRENT table state is the log replay — data files are never
   * read unless a committed entry references them, which gives:
@@ -85,10 +87,13 @@ object TxLog {
     * file without a matching interval is always kept (safe degradation
     * for pre-stats files, expired entries, and foreign columns).
     * `schema` is the table schema recorded at `version` (None for a log
-    * written without one: readers then infer it from the files). */
+    * written without one: readers then infer it from the files).
+    * `batches` maps every micro-batch id a commit up to `version`
+    * recorded to its input fingerprint ([[commitBatch]]). */
   final case class Snapshot(version: Long, files: Seq[String],
       stats: Map[String, Map[String, (Long, Long)]] = Map.empty,
-      schema: Option[StructType] = None)
+      schema: Option[StructType] = None,
+      batches: Map[Long, String] = Map.empty)
 
   /** Read `files` (table-relative, from `snap` or staged by a writer of
     * its table) with the schema the log recorded for `snap`, so building
@@ -173,6 +178,7 @@ object TxLog {
     val cp = base.map(v => text(table, s"$v.checkpoint.json"))
     var files = cp.fold(Vector.empty[String])(arr(_, "files").toVector)
     var stats = cp.fold(Map.empty[String, Map[String, (Long, Long)]])(parseStats)
+    var batches = cp.fold(Map.empty[Long, String])(parseBatches)
     var newest = cp // each entry holds the whole schema: only the newest counts
     val replay = upTo.filter(_ > fromV)
     // versions are always committed consecutively, so the replayed
@@ -186,14 +192,16 @@ object TxLog {
       val removes = arr(txt, "removes")
       files = files.filterNot(removes.toSet) ++ arr(txt, "adds")
       stats = (stats -- removes) ++ parseStats(txt)
+      batches = batches ++ parseBatch(txt)
       newest = Some(txt)
     }
     Snapshot(replay.lastOption.orElse(base).getOrElse(-1L), files, stats,
-      newest.flatMap(parseSchema))
+      newest.flatMap(parseSchema), batches)
   }
 
   /** Write a checkpoint of the CURRENT snapshot: one JSON file holding
-    * the fully-replayed live file set at that version. Idempotent and
+    * the fully-replayed live file set and batch records at that
+    * version. Idempotent and
     * concurrency-safe (create-exclusive through `primitive`; a loser
     * means someone else checkpointed the same version — fine). Returns
     * the checkpointed version, None if the table is empty or the
@@ -211,7 +219,7 @@ object TxLog {
     val entry =
       s"""{"version":${snap.version},"files":[${
         snap.files.map("\"" + _ + "\"").mkString(",")}]${
-        schemaJson(snap.schema)}${statsJson(snap.stats)}}"""
+        schemaJson(snap.schema)}${statsJson(snap.stats)}${batchesJson(snap.batches)}}"""
     val target = logDir(table).resolve(s"${snap.version}.checkpoint.json")
     if (primitive.createExclusive(target, entry.getBytes("UTF-8"))) Some(snap.version)
     else None
@@ -232,6 +240,25 @@ object TxLog {
       .map { case (k, lo, hi) => s""""$k":[$lo,$hi]""" }
       .mkString(""","stats":{""", ",", "}")
   }
+
+  /** `,"batches":{"<id>":"<fingerprint>",…}` — a checkpoint's batch
+    * records; empty string when there are none. Placed after `stats`,
+    * whose regex stops at its own closing brace. */
+  private def batchesJson(batches: Map[Long, String]): String =
+    if (batches.isEmpty) ""
+    else batches.toSeq.sorted.map { case (id, fp) => s""""$id":"$fp"""" }
+      .mkString(""","batches":{""", ",", "}")
+
+  private def parseBatches(txt: String): Map[Long, String] =
+    """"batches":\{([^}]*)\}""".r.findFirstMatchIn(txt).fold(Map.empty[Long, String]) { m =>
+      """"(-?\d+)":"(\w*)"""".r.findAllMatchIn(m.group(1))
+        .map(g => g.group(1).toLong -> g.group(2)).toMap
+    }
+
+  /** An entry's replay record; None on a commit that lands no batch. */
+  private def parseBatch(txt: String): Option[(Long, String)] =
+    """"batch":\[(-?\d+),"(\w*)"\]""".r.findFirstMatchIn(txt)
+      .map(m => m.group(1).toLong -> m.group(2))
 
   /** `,"schema":"<base64 of StructType.json>"` — empty string on a
     * schema-less log. Base64 holds no `"`, `,`, `]` or `}`, so the
@@ -337,11 +364,13 @@ object TxLog {
     * schema of the `adds` files (the written DataFrame's); the entry
     * records the table schema it implies under the rule in the object
     * doc, and a type clash fails here, before anything lands. On a log
-    * that already lacks schemas the entry records none either. */
+    * that already lacks schemas the entry records none either. `batch`
+    * is the `(batchId, fingerprint)` replay record of [[commitBatch]]. */
   def commit(table: String, adds: Seq[String], removes: Seq[String],
       expectedCurrent: Long, schema: StructType,
       primitive: CommitPrimitive = LocalFs,
-      stats: Map[String, Map[String, (Long, Long)]] = Map.empty): Option[Long] = {
+      stats: Map[String, Map[String, (Long, Long)]] = Map.empty,
+      batch: Option[(Long, String)] = None): Option[Long] = {
     (adds ++ removes).foreach { n =>
       require(!n.contains('"') && !n.contains(',') && !n.contains('|'),
         s"file name must not contain '\"', ',' or '|': $n")
@@ -352,6 +381,9 @@ object TxLog {
     }
     require(stats.keySet.subsetOf(adds.toSet),
       s"stats may only cover this commit's adds: ${stats.keySet -- adds.toSet}")
+    batch.foreach { case (_, fp) =>
+      require(fp.matches("\\w*"), s"batch fingerprint must be word characters only: $fp")
+    }
     val added = asNullable(schema).asInstanceOf[StructType]
     val tableSchema =
       if (expectedCurrent < 0) Some(added)
@@ -362,7 +394,8 @@ object TxLog {
     val entry =
       s"""{"version":$next,"adds":[${adds.map("\"" + _ + "\"").mkString(",")}],""" +
         s""""removes":[${removes.map("\"" + _ + "\"").mkString(",")}]""" +
-        s"""${schemaJson(tableSchema)}${statsJson(stats)},""" +
+        s"""${schemaJson(tableSchema)}${statsJson(stats)}""" +
+        batch.fold("") { case (id, fp) => s""","batch":[$id,"$fp"]""" } + "," +
         s""""ts":${System.currentTimeMillis()}}"""
     if (primitive.createExclusive(d.resolve(s"$next.json"), entry.getBytes("UTF-8")))
       Some(next)
@@ -371,10 +404,12 @@ object TxLog {
 
   /** What one attempt of [[commitRetrying]] commits: the data files it
     * staged in the table (`adds`, deleted again if the commit loses the
-    * race), the files it supersedes, the adds' schema and stats, and
+    * race), the files it supersedes, the adds' schema and stats, the
+    * replay record of the micro-batch it lands ([[commitBatch]]), and
     * `after`, run once on the committed version to give the result. */
   final case class Staged[+T](adds: Seq[String], removes: Seq[String],
-      schema: StructType, stats: Map[String, Map[String, (Long, Long)]] = Map.empty)(
+      schema: StructType, stats: Map[String, Map[String, (Long, Long)]] = Map.empty,
+      batch: Option[(Long, String)] = None)(
       val after: Long => T)
 
   /** The optimistic commit loop every writer of a table runs: read the
@@ -391,7 +426,8 @@ object TxLog {
     attempt(snap) match {
       case Left(result) => result
       case Right(s) =>
-        commit(table, s.adds, s.removes, snap.version, s.schema, primitive, s.stats) match {
+        commit(table, s.adds, s.removes, snap.version, s.schema, primitive, s.stats,
+            s.batch) match {
           case Some(v) => s.after(v)
           case None =>
             s.adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
@@ -399,6 +435,78 @@ object TxLog {
         }
     }
   }
+
+  /** Fingerprint of a micro-batch's input: SHA-256 over the sorted
+    * NAMES of the files it was planned from. Names, not paths: a staged
+    * replay of the same files from a relocated directory is the same
+    * batch. */
+  def fingerprint(batch: org.apache.spark.sql.Dataset[_]): String = {
+    val names = batch.inputFiles.map(p => new java.io.File(p).getName)
+      .sorted.mkString("\n")
+    val d = java.security.MessageDigest.getInstance("SHA-256")
+    d.digest(names.getBytes("UTF-8")).map("%02x".format(_)).mkString
+  }
+
+  /** Does `snap` record micro-batch `batchId` as committed? A record
+    * whose fingerprint differs from `fp` fails loudly: the source's
+    * file→batch mapping shifted, and skipping would drop data the table
+    * never saw. */
+  def recordsBatch(table: String, snap: Snapshot, batchId: Long, fp: String): Boolean =
+    snap.batches.get(batchId) match {
+      case None => false
+      case Some(recorded) =>
+        require(recorded == fp,
+          s"commit record mismatch for batch $batchId under $table: the " +
+            "recorded input fingerprint differs from the replay's — the " +
+            "source's file→batch mapping shifted (a late-arriving file " +
+            "sorting before a committed one?). New input files must sort " +
+            "strictly after all committed ones; reordered input needs a " +
+            "fresh store.")
+        true
+    }
+
+  /** The replay record of the idempotent streaming sinks (the Delta
+    * `txn` action's role). A `foreachBatch` sink runs without a
+    * streaming checkpoint, so every micro-batch can be delivered again,
+    * and the batchId→input mapping is only the file source's listing
+    * order. Each sink therefore lands micro-batch `batchId` through this
+    * loop: when the table's snapshot already records the id (with the
+    * same input [[fingerprint]] `fp`, else [[recordsBatch]] fails) the
+    * batch is skipped and the result is None; otherwise `stage`'s files
+    * commit in ONE entry that also records `(batchId, fp)`, and the
+    * result is its `after`. Until that commit the staged files are
+    * invisible orphans, so a crash anywhere before it leaves the table
+    * as it was and the redelivered batch reproduces. New input files
+    * must sort strictly after all committed ones. Every commit then runs
+    * the table's [[retain]] policy. */
+  def commitBatch[T](table: String, batchId: Long, fp: String)(
+      stage: Snapshot => Staged[T]): Option[T] =
+    commitRetrying(table) { snap =>
+      if (recordsBatch(table, snap, batchId, fp)) Left(None)
+      else {
+        val s = stage(snap)
+        Right(s.copy[Option[T]](batch = Some(batchId -> fp)) { v =>
+          val r = s.after(v)
+          retain(table, v)
+          Some(r)
+        })
+      }
+    }
+
+  /** Retention of a table only its newest snapshot serves (the
+    * streaming stores): every 10 commits (mergeInto's cadence),
+    * checkpoint, expire every entry and older checkpoint at or below
+    * it, then [[vacuum]] — so a stream that runs forever keeps its
+    * replay at O(commits since the checkpoint) and its disk at the live
+    * files plus whatever [[vacuum]]'s age guard still spares. */
+  def retain(table: String, v: Long): Unit =
+    if (v > 0 && v % 10 == 0) {
+      writeCheckpoint(table): Unit
+      expireEntriesBelowCheckpoint(table): Unit
+      checkpointVersions(table).dropRight(1).foreach(c =>
+        Files.deleteIfExists(logDir(table).resolve(s"$c.checkpoint.json")))
+      vacuum(table): Unit
+    }
 
   /** Commit wall-clock time of a version, for timestamp time travel:
     * the entry's recorded `ts` field, falling back to the entry FILE's
@@ -445,11 +553,13 @@ object TxLog {
     val root = Paths.get(table)
     if (!Files.exists(root)) return Seq.empty
     val cutoff = System.currentTimeMillis() - minAgeMs
-    val orphans = Using.resource(Files.list(root)) { st =>
+    // data files may sit in subdirectories (the streaming stores' bucket
+    // directories): names are root-relative paths, as in the log
+    val orphans = Using.resource(Files.walk(root)) { st =>
       st.iterator().asScala
         .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
         .filter(p => Files.getLastModifiedTime(p).toMillis <= cutoff)
-        .map(_.getFileName.toString)
+        .map(p => root.relativize(p).toString)
         .filterNot(referenced)
         .toSeq
     }

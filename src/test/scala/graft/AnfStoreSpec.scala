@@ -3,16 +3,16 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Lifecycle contract of the streaming ANF maintainer's two stores
-  * (VERDICT r12 missing #2 — the TxLog/near-dup commit discipline
-  * applied to the edge append log and the versioned register buckets):
-  * a REPLAYED committed batch is skipped whole (at-least-once delivery
-  * never doubles the stores), a batch crashed INSIDE its commit window
-  * reproduces byte-for-byte on replay (the marker is written last, so
-  * the previous committed view is never damaged), bucket widths are
-  * pinned at store creation and a mismatched reopen fails loudly, and
-  * a crashed edge fold's duplicate rows are absorbed by the bit_or
-  * merge — storage maintenance never moves the fixpoint. */
+/** Lifecycle contract of the streaming ANF maintainer's two stores, the
+  * edge append log and the versioned register buckets, each a TxLog
+  * table: a REPLAYED committed batch is skipped whole (at-least-once
+  * delivery never doubles the stores), a batch crashed before its
+  * register commit reproduces on replay (its staged files are
+  * invisible orphans, so the previous committed view is never
+  * damaged), replay-skip survives the stores' checkpoints and entry
+  * expiry, bucket widths are pinned at store creation and a mismatched
+  * reopen fails loudly, and duplicate edge rows are absorbed by the
+  * bit_or merge — storage maintenance never moves the fixpoint. */
 class AnfStoreSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
@@ -61,9 +61,22 @@ class AnfStoreSpec extends AnyFunSuite {
     assert(r1.size === 3 && r1.head > 0)
     val want = cold(batches)
     assert(drift(m1, want) === 0L)
+    // a bucket filter on the register view opens only that bucket's
+    // live files — the pruning the delta rounds' state reads rely on
+    val regFiles = streaming.TxLog.snapshot(reg).files
+    val bucketDir = regFiles.head.takeWhile(_ != '/')
+    val oneBucket = streaming.Streams.anfRegView(spark, reg)
+      .filter(col("vb") === bucketDir.stripPrefix("vb=").toInt)
+    oneBucket.collect(): Unit
+    val opened = oneBucket.queryExecution.executedPlan.collect {
+      case scan: org.apache.spark.sql.execution.FileSourceScanExec =>
+        scan.metrics("numFiles").value
+    }.sum
+    assert(opened === regFiles.count(_.startsWith(s"$bucketDir/")) &&
+      opened < regFiles.size, s"opened $opened of ${regFiles.size} register files")
     // second pass over the SAME stage and stores: every batch redelivers,
-    // every marker exists, so all three skip — zero recompute rounds,
-    // identical store file census, identical registers
+    // every batch record exists, so all three skip — zero recompute rounds,
+    // identical live store files, identical registers
     val (m2, r2, _, f2) = streaming.Streams.runAnfMaintain(spark, in,
       storeDir0 = Some(store), regDir0 = Some(reg))
     assert(r2 === Seq(0, 0, 0), "committed batches must be skipped on replay")
@@ -72,10 +85,23 @@ class AnfStoreSpec extends AnyFunSuite {
     Seq(m1, m2, want).foreach(plans.Iterate.release)
   }
 
+  /** Move the one part file `df` writes into `table` as `name` — a
+    * data file no log entry references. */
+  private def forgeFile(df: org.apache.spark.sql.DataFrame, table: String,
+      name: String): Unit = {
+    val raw = GraftSession.tempDirCleanedOnExit("spec-anfstore-forge").toString + "/p"
+    df.coalesce(1).write.parquet(raw)
+    val part = new java.io.File(raw).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val target = java.nio.file.Paths.get(table, name)
+    java.nio.file.Files.createDirectories(target.getParent)
+    java.nio.file.Files.move(part.toPath, target): Unit
+  }
+
   test("crash inside the commit window: the uncommitted batch reproduces on replay") {
-    // commit batches 0 and 1 for real, then FORGE batch 2's pre-marker
-    // window exactly as a crash leaves it: a (partial) edge subtree and
-    // an unmarked register commit on disk, marker absent, GC not run
+    // commit batches 0 and 1 for real, then FORGE batch 2's crash window:
+    // a staged edge file and a staged register file, named like the
+    // files its commits would add, with no log entry referencing them
     val store = GraftSession.tempDirCleanedOnExit("spec-anfstore-e2").toString
     val reg = GraftSession.tempDirCleanedOnExit("spec-anfstore-r2").toString
     val (m1, _, _, _) = streaming.Streams.runAnfMaintain(spark,
@@ -84,17 +110,19 @@ class AnfStoreSpec extends AnyFunSuite {
     plans.Iterate.release(m1)
     val nDb = graft.operators.Graph.anfDstBuckets
     val nVb = graft.operators.Graph.anfRegBuckets
-    Seq((8L, 9L)).toDF("src", "dst") // half of the batch's edges made it
+    val edge = Seq((8L, 9L)).toDF("src", "dst") // half of the batch's edges made it
       .withColumn("db", pmod(hash(col("dst")), lit(nDb)))
-      .write.partitionBy("db").parquet(s"$store/ingest_batch=2")
-    Seq((424242L, 0, 7L)).toDF("v", "k", "mask") // sentinel half-commit
+    val eNext = streaming.TxLog.snapshot(store).version + 1
+    forgeFile(edge, store, s"db=${edge.head.getInt(2)}/v$eNext-i-forged.parquet")
+    val sentinel = Seq((424242L, 0, 7L)).toDF("v", "k", "mask") // sentinel half-commit
       .withColumn("vb", pmod(hash(col("v")), lit(nVb)))
-      .write.partitionBy("vb").parquet(s"$reg/commit=2")
+    val rNext = streaming.TxLog.snapshot(reg).version + 1
+    forgeFile(sentinel, reg, s"vb=${sentinel.head.getInt(3)}/v$rNext-i-forged.parquet")
     val visible = streaming.Streams.anfRegView(spark, reg)
     assert(visible.filter(col("v") === 424242L).count() === 0L,
-      "an unmarked commit must be invisible to readers")
-    // full replay: 0 and 1 skip on their markers, 2 recomputes — its
-    // Overwrites replace both halves of the forged window
+      "a register file no commit references must be invisible to readers")
+    // full replay: 0 and 1 skip on their records, 2 recomputes and
+    // commits its own files; the forged ones stay orphans
     val (m2, r2, _, _) = streaming.Streams.runAnfMaintain(spark,
       stage("crash3", batches),
       storeDir0 = Some(store), regDir0 = Some(reg))
@@ -105,7 +133,7 @@ class AnfStoreSpec extends AnyFunSuite {
       "the replayed window must land on the same fixpoint")
     assert(streaming.Streams.anfRegView(spark, reg)
       .filter(col("v") === 424242L).count() === 0L,
-      "the forged half-commit must be overwritten, not merged")
+      "the forged half-commit must stay invisible, not merged")
     Seq(m2, want).foreach(plans.Iterate.release)
   }
 
@@ -142,12 +170,11 @@ class AnfStoreSpec extends AnyFunSuite {
     val (m, _, _, files) = streaming.Streams.runAnfMaintain(spark, in,
       storeDir0 = Some(store), regDir0 = Some(reg), compactEvery = 3)
     // after the empty boundary batch, singles 3 and 4 must have folded:
-    // zero single-batch subtrees remain
-    val live = new java.io.File(store).listFiles()
-      .filter(d => d.isDirectory && d.getName.startsWith("ingest_batch="))
+    // every live commit of the edge store is a fold
+    val live = streaming.Streams.storeCommits(store)
     assert(files.size === 6)
-    assert(live.count(_.getName.stripPrefix("ingest_batch=").toLong >= 0) === 0,
-      s"singles must fold at an empty boundary too, saw ${live.map(_.getName).toSeq}")
+    assert(live.nonEmpty && live.forall(_._2),
+      s"singles must fold at an empty boundary too, saw (version, is fold) $live")
     val want = cold(bs)
     assert(drift(m, want) === 0L)
     Seq(m, want).foreach(plans.Iterate.release)
@@ -157,11 +184,9 @@ class AnfStoreSpec extends AnyFunSuite {
     // run 1 folds b0+b1 into the store's first fold; run 2 (folding
     // off) leaves b2 and b3 as LIVE SINGLES; run 3 replays everything
     // with folding back on and hits fold boundary 1 with those leftover
-    // singles. Under batch-counter fold ids (-(batchId+1), ADVICE r13
-    // high) that fold lands on the SAME id run 1's boundary-1 fold
-    // took and Overwrites it — silently dropping b0+b1's edges, whose
-    // source subtrees are long deleted. Store-derived ids allocate
-    // below the live minimum instead, so the two folds coexist.
+    // singles. Fold files carry their commit's version, which the
+    // store's log hands out, so under any resume history the second
+    // fold can never land on (and drop) the first.
     val store = GraftSession.tempDirCleanedOnExit("spec-anfstore-e6").toString
     val reg = GraftSession.tempDirCleanedOnExit("spec-anfstore-r6").toString
     val bs4 = batches :+ Seq((1L, 7L))
@@ -180,10 +205,7 @@ class AnfStoreSpec extends AnyFunSuite {
     assert(r3 === Seq(0, 0, 0, 0), "a full replay must skip every batch")
     // the store still holds EVERY staged edge — the discriminator: a
     // reused fold id would have dropped b0+b1 here
-    val dirs = new java.io.File(store).listFiles()
-      .filter(d => d.isDirectory && d.getName.startsWith("ingest_batch="))
-    val stored = spark.read.option("basePath", store)
-      .parquet(dirs.map(_.getPath).toIndexedSeq: _*)
+    val stored = streaming.Streams.readMergeTable(spark, store)
       .select("src", "dst").distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(stored === bs4.flatten.toSet,
@@ -199,36 +221,32 @@ class AnfStoreSpec extends AnyFunSuite {
     Seq(m4, want).foreach(plans.Iterate.release)
   }
 
-  test("marker census folds into the watermark; replay-skip stays exact across it") {
-    // 5 batches with the fold bound forced to 2: the register store's
-    // commit markers must fold into ONE _committed_upto watermark
-    // (VERDICT r13 #3 — the marker listing is O(recent), not
-    // O(batches)), and a full replay must still skip every batch via
-    // the watermark with the committed registers intact
-    val bs5 = batches ++ Seq(Seq((3L, 6L)), Seq((7L, 1L)))
+  test("replay-skip stays exact across the stores' checkpoints and entry expiry") {
+    // 12 non-empty batches: both stores pass their 10th commit, so each
+    // log checkpoints and expires the entries below it — a full replay
+    // must still skip every batch from the checkpointed records, with
+    // the committed registers intact
+    val bs12 = (0L until 12L).map(i => Seq((i, i + 1), (i + 1, 2 * i + 3)))
     val store = GraftSession.tempDirCleanedOnExit("spec-anfstore-e7").toString
     val reg = GraftSession.tempDirCleanedOnExit("spec-anfstore-r7").toString
     val (m1, r1, _, _) = streaming.Streams.runAnfMaintain(spark,
-      stage("census1", bs5),
-      storeDir0 = Some(store), regDir0 = Some(reg), markerFoldAt = 2)
-    assert(r1.size === 5 && r1.head > 0)
+      stage("retain1", bs12), storeDir0 = Some(store), regDir0 = Some(reg))
+    assert(r1.size === 12 && r1.head > 0)
     plans.Iterate.release(m1)
-    val census = new java.io.File(reg).listFiles()
-      .filter(f => f.isFile && f.getName.startsWith("_committed_"))
-      .map(_.getName).toSeq.sorted
-    assert(census.contains("_committed_upto"),
-      s"5 commits past a fold bound of 2 must have written the watermark, saw $census")
-    assert(census.size <= 3,
-      s"marker census must stay O(bound), saw $census")
+    Seq(store, reg).foreach { t =>
+      val cps = streaming.TxLog.checkpointVersions(t)
+      assert(cps.size === 1, s"$t must hold one checkpoint, saw $cps")
+      assert(streaming.TxLog.versions(t).forall(_ > cps.head),
+        s"$t must have expired the entries at or below its checkpoint")
+    }
     val (m2, r2, _, f2) = streaming.Streams.runAnfMaintain(spark,
-      stage("census2", bs5),
-      storeDir0 = Some(store), regDir0 = Some(reg), markerFoldAt = 2)
-    assert(r2 === Seq(0, 0, 0, 0, 0),
-      "watermark-subsumed batches must replay-skip exactly like markers")
+      stage("retain2", bs12), storeDir0 = Some(store), regDir0 = Some(reg))
+    assert(r2 === Seq.fill(12)(0),
+      "checkpointed batches must replay-skip exactly like entry-backed ones")
     assert(f2.nonEmpty)
-    val want = cold(bs5)
+    val want = cold(bs12)
     assert(drift(m2, want) === 0L,
-      "the committed view must stay readable across the watermark fold")
+      "the committed view must stay readable across the checkpoint")
     Seq(m2, want).foreach(plans.Iterate.release)
   }
 
@@ -239,30 +257,26 @@ class AnfStoreSpec extends AnyFunSuite {
     val (m1, _, _, _) = streaming.Streams.runAnfMaintain(spark, in,
       storeDir0 = Some(store), regDir0 = Some(reg))
     plans.Iterate.release(m1)
-    // a fold that wrote its merged subtree but crashed before dropping
-    // the sources leaves every source row duplicated — fake that window
-    // by cloning a live subtree under a fold id, then deliver one more
-    // batch through the duplicated store
-    val src = new java.io.File(store).listFiles()
-      .filter(d => d.isDirectory && d.getName.startsWith("ingest_batch="))
-      .head
-    def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
-      java.nio.file.Files.walk(from).forEach { p =>
-        val t = to.resolve(from.relativize(p))
-        if (java.nio.file.Files.isDirectory(p))
-          java.nio.file.Files.createDirectories(t): Unit
-        else java.nio.file.Files.copy(p, t): Unit
-      }
+    // a fold is one commit, so a crashed one leaves its staged files as
+    // orphans; fake both that window (a copy of a live edge file no
+    // entry references) and committed duplicate rows (a second copy the
+    // log adds), then deliver one more batch through the store
+    val snap = streaming.TxLog.snapshot(store)
+    val src = java.nio.file.Paths.get(store, snap.files.head)
+    val cell = snap.files.head.takeWhile(_ != '/')
+    val v = snap.version + 1
+    Seq("f-orphan", "f-dup").foreach { tag =>
+      java.nio.file.Files.copy(src, java.nio.file.Paths.get(store, s"$cell/v$v-$tag.parquet")): Unit
     }
-    copyTree(src.toPath,
-      java.nio.file.Paths.get(store, "ingest_batch=-999"))
+    assert(streaming.TxLog.commit(store, Seq(s"$cell/v$v-f-dup.parquet"), Seq.empty,
+      snap.version, snap.schema.get) === Some(v))
     val extra = Seq(Seq((3L, 6L), (9L, 0L)))
     val in2 = stage("foldcrash2", batches ++ extra)
     val (m2, _, _, _) = streaming.Streams.runAnfMaintain(spark, in2,
       storeDir0 = Some(store), regDir0 = Some(reg))
     val want = cold(batches ++ extra)
     assert(drift(m2, want) === 0L,
-      "duplicate store rows from a crashed fold must be bit_or no-ops")
+      "duplicate store rows must be bit_or no-ops, orphans invisible")
     Seq(m2, want).foreach(plans.Iterate.release)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{MergeTable, TxLog}
+import graft.streaming.{MergeTable, Streams, TxLog}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -37,16 +37,16 @@ class BloomSkipSpec extends AnyFunSuite {
     val scan = MergeTable.scanPoint(spark, table, "tag", lit(203L))
     val opened = scan.inputFiles.length
     assert(opened < 10, s"bloom must skip some files, opened $opened")
-    val full = MergeTable.read(spark, table).filter(col("tag") === 203L)
+    val full = Streams.readMergeTable(spark, table).filter(col("tag") === 203L)
       .orderBy("k").collect().toSeq
     assert(scan.orderBy("k").collect().toSeq === full && full.nonEmpty)
 
     // no false negatives over EVERY distinct present tag
-    val tags = MergeTable.read(spark, table).select("tag").distinct()
+    val tags = Streams.readMergeTable(spark, table).select("tag").distinct()
       .collect().map(_.getLong(0))
     tags.foreach { t =>
       val got = MergeTable.scanPoint(spark, table, "tag", lit(t)).count()
-      val want = MergeTable.read(spark, table).filter(col("tag") === t).count()
+      val want = Streams.readMergeTable(spark, table).filter(col("tag") === t).count()
       assert(got === want, s"tag $t: $got != $want")
     }
     // an absent value skips every sidecar-carrying file
@@ -62,7 +62,7 @@ class BloomSkipSpec extends AnyFunSuite {
     val snap2 = TxLog.snapshot(table)
     tags.foreach { t =>
       val got = MergeTable.scanPoint(spark, table, "tag", lit(t)).count()
-      val want = MergeTable.read(spark, table).filter(col("tag") === t).count()
+      val want = Streams.readMergeTable(spark, table).filter(col("tag") === t).count()
       assert(got === want, s"post-compact tag $t: $got != $want")
     }
 

@@ -236,12 +236,12 @@ class DensityAssocSpec extends AnyFunSuite {
       .coalesce(1).write.mode("overwrite").parquet(staged)
     val first = graft.streaming.Streams.runDecontamIngest(spark, staged, eval, out)
     assert(first.nonEmpty && first.map(_._2).sum == 450)
-    val before = spark.read.parquet(out).orderBy("vec_id").collect()
+    val before = graft.streaming.Streams.readMergeTable(spark, out).orderBy("vec_id").collect()
     // a full replay (fresh stream, same out dir) must skip every
     // committed batch: zero new stats, byte-identical verdicts
     val second = graft.streaming.Streams.runDecontamIngest(spark, staged, eval, out)
     assert(second.isEmpty, s"replay re-committed batches: $second")
-    val after = spark.read.parquet(out).orderBy("vec_id").collect()
+    val after = graft.streaming.Streams.readMergeTable(spark, out).orderBy("vec_id").collect()
     assert(before.sameElements(after), "replay changed the verdict relation")
   }
 

@@ -153,28 +153,27 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("spark.graft.* session confs: validated defaults, overrides, loud failures") {
-    // VERDICT r13 #6 — the two scale knobs are session confs now; the
+    // VERDICT r13 #6 — the scale knobs are session confs; the
     // literal-knob discipline applies: bad values fail at READ time
     val spark = TestSpark.spark
     SparkSession.setActiveSession(spark)
+    val stateKey = "spark.graft.stream.stateBytesPerPartition"
     def clear(): Unit = {
-      spark.conf.unset("spark.graft.anf.broadcastRows")
+      spark.conf.unset(stateKey)
       spark.conf.unset("spark.graft.pipes.reopenSpillBytes")
     }
     clear()
     try {
-      assert(GraftConf.anfBroadcastRows === 1000000L)
-      assert(graft.operators.Graph.anfBroadcastRows === 1000000L,
-        "the ANF loop's default param must read the conf default")
+      assert(GraftConf.streamStateBytesPerPartition === (64L << 20))
       assert(GraftConf.reopenSpillBytes ===
         graft.operators.WorkerPool.defaultReopenSpillBytes)
-      spark.conf.set("spark.graft.anf.broadcastRows", "7")
+      spark.conf.set(stateKey, "7")
       spark.conf.set("spark.graft.pipes.reopenSpillBytes", "0")
-      assert(graft.operators.Graph.anfBroadcastRows === 7L)
+      assert(GraftConf.streamStateBytesPerPartition === 7L)
       assert(GraftConf.reopenSpillBytes === 0L)
-      spark.conf.set("spark.graft.anf.broadcastRows", "-1")
-      val e1 = intercept[IllegalArgumentException](GraftConf.anfBroadcastRows)
-      assert(e1.getMessage.contains("broadcastRows"))
+      spark.conf.set(stateKey, "0")
+      val e1 = intercept[IllegalArgumentException](GraftConf.streamStateBytesPerPartition)
+      assert(e1.getMessage.contains("stateBytesPerPartition"))
       spark.conf.set("spark.graft.pipes.reopenSpillBytes", "lots")
       val e2 = intercept[IllegalArgumentException](GraftConf.reopenSpillBytes)
       assert(e2.getMessage.contains("must be a long"))

@@ -25,7 +25,7 @@ class LiveTuningSpec extends AnyFunSuite {
     val prev = spark.conf.get(pKey)
     spark.conf.set(pKey, "32")
     try {
-      val floor = GraftConf.streamStateMinPartitions
+      val floor = Streams.stateMinPartitions
       val per = GraftConf.streamStateBytesPerPartition
       // tiny input → the floor wins
       assert(Streams.statePartitions(spark, Seq(writeBytes(1024))) === floor)
@@ -69,7 +69,7 @@ class LiveTuningSpec extends AnyFunSuite {
     // tiny input → floor, but never above the session cap (TestSpark
     // runs small, so the cap can undercut the floor — that IS the rule)
     assert(insideP ===
-      math.min(prevP.toInt, GraftConf.streamStateMinPartitions).toString)
+      math.min(prevP.toInt, Streams.stateMinPartitions).toString)
     assert(insideNd === "false")
     assert(spark.conf.get(pKey) === prevP)
     assert(spark.conf.getOption(ndKey) === prevNd,

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{MergeTable, TxLog}
+import graft.streaming.{MergeTable, Streams, TxLog}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -32,11 +32,11 @@ class MergeTableSpec extends AnyFunSuite {
     assert(snap0.files.toSet !== snap1.files.toSet)
 
     // values: merged keys replaced, others intact; v0 unchanged
-    val cur = MergeTable.read(spark, table).orderBy("k").collect()
+    val cur = Streams.readMergeTable(spark, table).orderBy("k").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toMap
     assert(cur(3L) === -1.0 && cur(11L) === -2.0 && cur(5L) === 50.0)
     assert(cur.size === 64)
-    val old = MergeTable.read(spark, table, Some(0L)).orderBy("k").collect()
+    val old = Streams.readMergeTable(spark, table, Some(0L)).orderBy("k").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toMap
     assert(old(3L) === 30.0 && old(11L) === 110.0)
   }
@@ -50,7 +50,7 @@ class MergeTableSpec extends AnyFunSuite {
     assert(hit.inputFiles.head.contains("b5-"), "13 % 8 = 5")
     assert(hit.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq === Seq((13L, 26.0)))
     // full read touches all 8 files — the pruning is real, not incidental
-    assert(MergeTable.read(spark, table).inputFiles.length === 8)
+    assert(Streams.readMergeTable(spark, table).inputFiles.length === 8)
   }
 
   test("schema evolution: an update batch with a NEW column null-fills old rows") {
@@ -60,7 +60,7 @@ class MergeTableSpec extends AnyFunSuite {
     // v carries over, NEW column tag appears only on the merged keys
     val updates = Seq((1L, 99.0, "new"), (2L, 98.0, "new")).toDF("k", "v", "tag")
     MergeTable.mergeInto(spark, table, updates, "k", buckets = 4)
-    val cur = MergeTable.read(spark, table)
+    val cur = Streams.readMergeTable(spark, table)
     assert(cur.columns.sorted === Array("k", "tag", "v"))
     val byK = cur.collect().map(r =>
       r.getLong(cur.columns.indexOf("k")) ->
@@ -71,7 +71,7 @@ class MergeTableSpec extends AnyFunSuite {
     // the log holds each version's schema: time travel reads the old one
     assert(TxLog.snapshot(table).schema.map(_.fieldNames.toSeq) ===
       Some(Seq("k", "v", "tag")))
-    assert(MergeTable.read(spark, table, Some(0L)).columns === Array("k", "v"))
+    assert(Streams.readMergeTable(spark, table, Some(0L)).columns === Array("k", "v"))
   }
 
   test("a column type clash fails the commit, and the table is untouched") {
@@ -81,7 +81,7 @@ class MergeTableSpec extends AnyFunSuite {
       MergeTable.append(spark, table, Seq((1L, "x")).toDF("k", "v"), "k", buckets = 2)
     }
     assert(TxLog.versions(table) === Seq(0L))
-    assert(MergeTable.read(spark, table).collect()
+    assert(Streams.readMergeTable(spark, table).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq === Seq((0L, 1.0)))
   }
 
@@ -100,10 +100,10 @@ class MergeTableSpec extends AnyFunSuite {
     val keepPrefixes = Set("b0-", "b2-")
     assert(snap0.files.filter(f => keepPrefixes.exists(f.startsWith)).toSet ===
       snap1.files.filter(f => keepPrefixes.exists(f.startsWith)).toSet)
-    val cur = MergeTable.read(spark, table).collect().map(_.getLong(0)).toSet
+    val cur = Streams.readMergeTable(spark, table).collect().map(_.getLong(0)).toSet
     assert(cur === (0L until 16L).toSet -- Set(5L, 13L, 7L))
     // time travel still sees the deleted rows
-    assert(MergeTable.read(spark, table, Some(0L)).count() === 16L)
+    assert(Streams.readMergeTable(spark, table, Some(0L)).count() === 16L)
 
     // empty an ENTIRE bucket (1's remaining keys 1, 9): lookup on it
     // must still resolve to a schema-bearing file with zero rows
@@ -124,7 +124,7 @@ class MergeTableSpec extends AnyFunSuite {
     val (_, touched) = MergeTable.mergeInto(spark, table,
       Seq((100L, 9.0)).toDF("k", "v"), "k", buckets = 4)
     assert(touched === Seq(0)) // 100 % 4 == 0
-    val cur = MergeTable.read(spark, table).collect()
+    val cur = Streams.readMergeTable(spark, table).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toMap
     assert(cur(100L) === 9.0 && cur.size === 9)
   }
@@ -153,13 +153,13 @@ class MergeTableSpec extends AnyFunSuite {
       "untouched buckets keep their exact files across the compaction")
 
     // content identical across the commit (appends keep DUPLICATE keys)
-    val cur = MergeTable.read(spark, table).collect()
+    val cur = Streams.readMergeTable(spark, table).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
     val want = ((0L until 16L).map(i => (i, i * 1.0)) ++
       (0 until 3).map(i => (5L + i * 4, 100.0 + i))).sorted
     assert(cur === want)
     // time travel below the compaction: v1 = base + first append only
-    val v1 = MergeTable.read(spark, table, Some(1L)).collect()
+    val v1 = Streams.readMergeTable(spark, table, Some(1L)).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
     assert(v1 === ((0L until 16L).map(i => (i, i * 1.0)) :+ (5L, 100.0)).sorted)
     // idempotence: nothing left to fold
@@ -212,7 +212,7 @@ class MergeTableSpec extends AnyFunSuite {
     val Some((_, _)) = MergeTable.compact(spark, t2, "k", buckets = 1)
     assert(TxLog.snapshot(t2).stats.values.toSeq === Seq(Map("t" -> (5L, 30L))),
       "folded file must carry the union interval of its constituents")
-    assert(MergeTable.read(spark, t2).collect()
+    assert(Streams.readMergeTable(spark, t2).collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq ===
       Seq((0L, 5L), (1L, 10L), (2L, 30L)))
 
@@ -244,7 +244,7 @@ class MergeTableSpec extends AnyFunSuite {
       MergeTable.append(spark, table, rows, "k", buckets = 1,
         statsCols = Seq("day", "region"))
     }
-    val full = MergeTable.read(spark, table).inputFiles.length
+    val full = Streams.readMergeTable(spark, table).inputFiles.length
     assert(full === 4)
     val dayOnly = MergeTable.scanWhere(spark, table, Seq(("day", 2L, 2L)))
     val regOnly = MergeTable.scanWhere(spark, table, Seq(("region", 10L, 10L)))
@@ -367,7 +367,7 @@ class MergeTableSpec extends AnyFunSuite {
     assert(raced.get, "the race must actually have been exercised")
     assert(v === 3L, "compaction read v1, lost v2 to the merge, committed v3")
     assert(compacted === Seq(1))
-    val cur = MergeTable.read(spark, table).collect()
+    val cur = Streams.readMergeTable(spark, table).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
     // the racing merge replaced key 10 (bucket 2); compaction's retry
     // folded bucket 1 over the post-merge snapshot, losing nothing
@@ -422,7 +422,7 @@ class MergeTableSpec extends AnyFunSuite {
         s"retried file $f carries its sidecar")
     }
     assert(MergeTable.scanPoint(spark, table, "hr", lit(12L)).count() === 8L)
-    assert(MergeTable.read(spark, table).count() === 88L)
+    assert(Streams.readMergeTable(spark, table).count() === 88L)
     assert(TxLog.vacuum(table, minAgeMs = 0L) === Seq.empty,
       "each append's conflicted first attempt must self-clean")
   }
@@ -442,7 +442,7 @@ class MergeTableSpec extends AnyFunSuite {
     assert(snap.files.length === 8 && snap.files.forall(_.contains("-v2-zc")))
     assert(snap.files.forall(f => snap.stats(f).contains(s"__z:x:y:$bits")),
       "every retried chunk file records its z-interval")
-    assert(MergeTable.read(spark, table).filter(col("k") === 3L)
+    assert(Streams.readMergeTable(spark, table).filter(col("k") === 3L)
       .select("x", "y").as[(Long, Long)].collect().toSeq === Seq((15L, 15L)),
       "the retry rewrote the winner's state")
     assert(MergeTable.scanBox(spark, table, "x", "y", 15, 15, 15, 15, bits)

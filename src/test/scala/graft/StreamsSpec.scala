@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.Streams
+import graft.streaming.{Streams, TxLog}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
@@ -331,17 +331,18 @@ class StreamsSpec extends AnyFunSuite {
     assert(delta.probeFiles > 0 && delta.probeFiles <= delta.storeFiles)
     // its prune key set is bounded by numBands × sigBuckets, not batch size
     assert(delta.cells <= 2L * 16L)
-    val rows1 = spark.read.parquet(out).orderBy("doc_id").collect().toSeq
-    val files1 = Streams.nearDupStoreFiles(store)
+    val rows1 = Streams.readMergeTable(spark, out).orderBy("doc_id").collect().toSeq
+    val files1 = TxLog.snapshot(store).files
 
     // REPLAY the whole stream over the same store/out dirs (a fresh
-    // checkpoint re-delivers batch ids 0 and 1): the commit markers must
-    // turn every batch into a no-op — at-least-once delivery can neither
-    // double verdicts nor re-append signatures (ADVICE r10)
+    // checkpoint re-delivers batch ids 0 and 1): the batch records in
+    // the stores' logs must turn every batch into a no-op —
+    // at-least-once delivery can neither double verdicts nor re-append
+    // signatures (ADVICE r10)
     val stats2 = Streams.runNearDupIngest(spark, stage, store, out, compactEvery = 2)
-    assert(stats2.isEmpty, "replayed batches must be skipped via commit markers")
-    assert(spark.read.parquet(out).orderBy("doc_id").collect().toSeq === rows1)
-    assert(Streams.nearDupStoreFiles(store) === files1)
+    assert(stats2.isEmpty, "replayed batches must be skipped via their batch records")
+    assert(Streams.readMergeTable(spark, out).orderBy("doc_id").collect().toSeq === rows1)
+    assert(TxLog.snapshot(store).files === files1)
 
     // the bucket width is the store's layout: a reopen at another width
     // fails before it runs a batch, and the store keeps its pin
@@ -350,34 +351,52 @@ class StreamsSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("layout mismatch") && e.getMessage.contains("sigBuckets=16"))
     assert(Streams.pinLayout(store, "band store", None) === Some("sigBuckets=16"))
-    assert(Streams.nearDupStoreFiles(store) === files1)
+    assert(TxLog.snapshot(store).files === files1)
+  }
 
-    // a retried batch never meets its own partially-committed signatures:
-    // the fold (compactEvery=2) merged the subtrees, so the exclusion
-    // check needs an uncompacted store — rebuild without folding
-    val store2 = Files.createTempDirectory("graft-ndspec-store2").toString + "/sigs"
-    val out2 = Files.createTempDirectory("graft-ndspec-out2").toString + "/res"
-    Streams.runNearDupIngest(spark, stage, store2, out2) // compactEvery = 0
-    val oneDelta = docs.filter(col("doc_id") % 10 === 7)
-      .orderBy("doc_id").limit(1).localCheckpoint()
-    val probeDocId = oneDelta.collect().head.getLong(0)
-    val sigs = Streams.nearDupSigs(oneDelta)
-    def nMatches(exclude: Long): Long = {
-      val (m, _, _, _) = Streams.probeNearDupStore(spark, store2, sigs, exclude)
+  test("an uncommitted batch's staged signatures are invisible to the probe") {
+    import org.apache.spark.sql.functions._
+    val stage = Files.createTempDirectory("graft-ndstaged-in").toString
+    val docs = Tables(spark, TestSpark.sf0, "documents").limit(40)
+      .select("doc_id", "text", "lang", "source", "n_chars").localCheckpoint()
+    val raw = Files.createTempDirectory("graft-ndstaged-raw").toString
+    docs.coalesce(1).write.parquet(s"$raw/b")
+    val f = new java.io.File(s"$raw/b").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    Files.copy(f.toPath, Paths.get(s"$stage/part00.parquet"))
+    val store = Files.createTempDirectory("graft-ndstaged-store").toString + "/sigs"
+    val out = Files.createTempDirectory("graft-ndstaged-out").toString + "/res"
+    Streams.runNearDupIngest(spark, stage, store, out)
+    val one = docs.orderBy("doc_id").limit(1).localCheckpoint()
+    val probeDocId = one.collect().head.getLong(0)
+    val sigs = Streams.nearDupSigs(one)
+    def nMatches(): Long = {
+      val (m, _, _, _) = Streams.probeNearDupStore(spark, store, sigs)
       m.filter(col("doc_id") === probeDocId).collect()
         .headOption.map(_.getAs[Long]("n_corpus_matches")).getOrElse(0L)
     }
-    // without exclusion the doc matches its OWN stored signatures (batch
-    // 1 holds them); excluding batch 1 must hide exactly that self-match
-    // plus any same-batch dups — strictly fewer matches
-    assert(nMatches(Long.MaxValue) >= nMatches(1L) + 1,
-      "excluding the doc's own batch must hide at least its self-match")
+    // the committed batch holds the doc's own signatures: it matches itself
+    val before = nMatches()
+    assert(before >= 1)
+    // a retried batch that staged its signatures and crashed before its
+    // commit: a copy of every live store file under the next version's
+    // name, which no log entry references — the probe must not see it
+    val snap = TxLog.snapshot(store)
+    snap.files.foreach { name =>
+      val (dir, file) = name.splitAt(name.lastIndexOf('/') + 1)
+      val staged = dir + s"v${snap.version + 1}" + file.dropWhile(_ != '-')
+      Files.copy(Paths.get(store, name), Paths.get(store, staged)): Unit
+    }
+    assert(nMatches() === before,
+      "staged signatures of an uncommitted batch must not reach the probe")
+    val (_, probed, storeFiles, _) = Streams.probeNearDupStore(spark, store, sigs)
+    assert(storeFiles === snap.files.size.toLong && probed <= storeFiles)
   }
 
   test("near-dup ingest survives a signatureless batch and still folds") {
     import org.apache.spark.sql.functions._
-    // batch 1 holds only a doc too short to shingle: its store subtree
-    // has NO parquet files, which the compaction fold must tolerate
+    // batch 1 holds only a doc too short to shingle: its store commit
+    // adds NO files, which the compaction fold must tolerate
     val stage = Files.createTempDirectory("graft-ndempty-in").toString
     val docs = Tables(spark, TestSpark.sf0, "documents").limit(20)
       .select("doc_id", "text", "lang", "source", "n_chars").localCheckpoint()
@@ -398,18 +417,17 @@ class StreamsSpec extends AnyFunSuite {
     val stats = Streams.runNearDupIngest(spark, stage, store, out, compactEvery = 3)
     assert(stats.size === 3)
     // the short doc got a verdict (zero matches), the stream completed,
-    // and the fold collapsed all three subtrees — including the dataless
-    // one — into a single fold
-    val verdicts = spark.read.parquet(out)
+    // and the fold collapsed both signature-bearing batches into a
+    // single fold (the dataless batch committed no files)
+    val verdicts = Streams.readMergeTable(spark, out)
     assert(verdicts.filter(col("doc_id") === 999999L).count() === 1)
     assert(verdicts.filter(col("doc_id") === 999999L && col("is_dup")).count() === 0)
-    val subtrees = new java.io.File(store).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("ingest_batch="))
-    assert(subtrees.length === 1 &&
-      subtrees.head.getName.stripPrefix("ingest_batch=").toLong < 0)
+    val commits = Streams.storeCommits(store)
+    assert(commits.size === 1 && commits.head._2,
+      s"the store must hold one live fold, saw (version, is fold) $commits")
     // batch 3 (a replay of batch 1's docs) must have matched batch 1's
     // stored signatures through the store
-    assert(spark.read.parquet(out)
+    assert(Streams.readMergeTable(spark, out)
       .filter(col("is_dup")).count() >= docs.count())
   }
 

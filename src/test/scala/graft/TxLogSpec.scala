@@ -195,7 +195,7 @@ class TxLogSpec extends AnyFunSuite {
       Seq((7L, 777L)).toDF("id", "v"), "id", buckets = 4, primitive = racing)
     assert(raced.get, "the race must actually have been exercised")
     assert(vA === 2L, "A read v0, lost v1 to B, retried and committed v2")
-    val fin = streaming.MergeTable.read(spark, t)
+    val fin = streaming.Streams.readMergeTable(spark, t)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fin(3L) === 999L, "B's update must survive A's retry")
     assert(fin(7L) === 777L, "A's update must land on retry")
@@ -227,7 +227,7 @@ class TxLogSpec extends AnyFunSuite {
     val (vD, touched) = streaming.MergeTable.deleteKeys(spark, t,
       Seq(2L, 6L).toDF("id"), "id", buckets = 4, primitive = racing)
     assert(raced.get && vD === 2L && touched === Seq(2))
-    val fin = streaming.MergeTable.read(spark, t)
+    val fin = streaming.Streams.readMergeTable(spark, t)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(!fin.contains(2L) && !fin.contains(6L), "deletes land after retry")
     assert(fin(0L) === 100L, "the winner's concurrent update survives")
@@ -281,12 +281,12 @@ class TxLogSpec extends AnyFunSuite {
         checkpointEvery = 5)
     }
     assert(streaming.TxLog.checkpointVersions(t) === Seq(5L, 10L))
-    val fin = streaming.MergeTable.read(spark, t)
+    val fin = streaming.Streams.readMergeTable(spark, t)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fin(3L) === 11L && fin(2L) === 10L && fin(0L) === 8L)
     // replay from the newest checkpoint alone (entries aged out)
     streaming.TxLog.expireEntriesBelowCheckpoint(t)
-    val fin2 = streaming.MergeTable.read(spark, t)
+    val fin2 = streaming.Streams.readMergeTable(spark, t)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fin2 === fin)
   }
@@ -301,10 +301,10 @@ class TxLogSpec extends AnyFunSuite {
       (0L until 6L).map(i => (i, i * 2)).toDF("id", "v"), "id", buckets = 2)
     val batch = Seq((1L, 100L), (4L, 400L)).toDF("id", "v")
     streaming.MergeTable.mergeInto(spark, t, batch, "id", buckets = 2)
-    val once = streaming.MergeTable.read(spark, t)
+    val once = streaming.Streams.readMergeTable(spark, t)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     streaming.MergeTable.mergeInto(spark, t, batch, "id", buckets = 2)
-    val twice = streaming.MergeTable.read(spark, t)
+    val twice = streaming.Streams.readMergeTable(spark, t)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(twice === once)
     assert(TxLog.versions(t) === Seq(0L, 1L, 2L),
@@ -341,7 +341,7 @@ class TxLogSpec extends AnyFunSuite {
       primitive = condPut, checkpointEvery = 1)
     assert(v1 === 1L)
     assert(streaming.TxLog.checkpointVersions(mt) === Seq(1L))
-    val got = streaming.MergeTable.read(spark, mt)
+    val got = streaming.Streams.readMergeTable(spark, mt)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got(2L) === 99L && got(5L) === 5L)
   }
@@ -497,5 +497,64 @@ class TxLogSpec extends AnyFunSuite {
       bits = 3, chunks = 2)
     assert(TxLog.versions(t) === Seq(0L, 1L, 2L, 3L, 4L))
     assert((stageDirs() -- before).isEmpty, s"leaked: ${stageDirs() -- before}")
+  }
+
+  /** Land micro-batch `id` with fingerprint `fp` as one placeholder
+    * part; Some(id) when it committed, None when the log already
+    * recorded it (the stage never ran). */
+  private def landBatch(t: String, id: Long, fp: String): Option[Long] =
+    TxLog.commitBatch(t, id, fp) { snap =>
+      val name = s"b$id-v${snap.version + 1}.parquet"
+      writePart(t, name)
+      TxLog.Staged(Seq(name), Seq.empty, kv)(_ => id)
+    }
+
+  test("a committed batch still skips after a checkpoint and after the expiry of the entries below it") {
+    val t = freshTable("batch-retain")
+    for (id <- 0L until 25L) assert(landBatch(t, id, s"fp$id") === Some(id))
+    // commits 10 and 20 ran the retention: one checkpoint (at 20) is
+    // left, and only the entries above it
+    assert(TxLog.checkpointVersions(t) === Seq(20L))
+    assert(TxLog.versions(t) === (21L to 24L))
+    val snap = TxLog.snapshot(t)
+    assert(snap.batches === (0L until 25L).map(id => id -> s"fp$id").toMap)
+    assert(snap.files.size === 25)
+    // every id replays as a skip — the checkpointed ones included — and
+    // the log does not grow
+    for (id <- 0L until 25L) assert(landBatch(t, id, s"fp$id") === None)
+    assert(TxLog.snapshot(t).version === 24L)
+    assert(landBatch(t, 25L, "fp25") === Some(25L))
+  }
+
+  test("a replayed batch id with a different fingerprint fails loudly") {
+    val t = freshTable("batch-shift")
+    assert(landBatch(t, 0L, "original") === Some(0L))
+    // an entry-backed record: the mismatch must throw, not skip
+    val e1 = intercept[IllegalArgumentException](landBatch(t, 0L, "shifted"))
+    assert(e1.getMessage.contains("mapping"))
+    // a checkpoint-backed record, its entry expired: same contract
+    assert(TxLog.writeCheckpoint(t) === Some(0L))
+    assert(TxLog.expireEntriesBelowCheckpoint(t) === Seq(0L))
+    val e2 = intercept[IllegalArgumentException](landBatch(t, 0L, "shifted"))
+    assert(e2.getMessage.contains("mapping"))
+    assert(TxLog.snapshot(t).files.size === 1, "a failed replay commits nothing")
+  }
+
+  test("a log written without the batch field replays with no records") {
+    val t = freshTable("batch-legacy")
+    writePart(t, "a.parquet"); writePart(t, "b.parquet")
+    assert(TxLog.commit(t, Seq("a.parquet"), Seq.empty, -1L, kv) === Some(0L))
+    assert(TxLog.writeCheckpoint(t) === Some(0L))
+    assert(TxLog.commit(t, Seq("b.parquet"), Seq.empty, 0L, kv) === Some(1L))
+    // neither the plain entries nor their checkpoint carry the field
+    Seq("0.json", "0.checkpoint.json", "1.json").foreach { f =>
+      val txt = new String(Files.readAllBytes(Paths.get(t, "_txlog", f)), "UTF-8")
+      assert(!txt.contains("batch"), s"$f must not carry a batch record: $txt")
+    }
+    assert(TxLog.snapshot(t).batches.isEmpty)
+    assert(TxLog.snapshot(t, Some(0L)).batches.isEmpty)
+    // so a batch id lands on it as new
+    assert(landBatch(t, 0L, "fp0") === Some(0L))
+    assert(TxLog.snapshot(t).batches === Map(0L -> "fp0"))
   }
 }

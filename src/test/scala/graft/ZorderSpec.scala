@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{MergeTable, TxLog, Zorder}
+import graft.streaming.{MergeTable, Streams, TxLog, Zorder}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
@@ -77,7 +77,7 @@ class ZorderSpec extends AnyFunSuite {
         rnd.nextDouble())
     }.toDF("k", "x", "y", "v")
     MergeTable.load(spark, table, rows, "k", buckets = 2)
-    val before = MergeTable.read(spark, table)
+    val before = Streams.readMergeTable(spark, table)
       .orderBy("k").collect().toSeq
 
     val (v1, rewritten) = MergeTable.optimizeZorder(
@@ -88,8 +88,8 @@ class ZorderSpec extends AnyFunSuite {
     assert(snap.stats.size === 16, "every chunk file carries z stats")
 
     // content identical across the rewrite; old version still readable
-    assert(MergeTable.read(spark, table).orderBy("k").collect().toSeq === before)
-    assert(MergeTable.read(spark, table, Some(0L)).orderBy("k")
+    assert(Streams.readMergeTable(spark, table).orderBy("k").collect().toSeq === before)
+    assert(Streams.readMergeTable(spark, table, Some(0L)).orderBy("k")
       .collect().toSeq === before)
 
     // a box covering ~1/16 of the plane must prune files AND match the
@@ -128,7 +128,7 @@ class ZorderSpec extends AnyFunSuite {
     val upd = Seq((7L, 0L, 0L, -1.0)).toDF("k", "x", "y", "v")
     val (v2, _) = MergeTable.mergeInto(spark, table, upd, "k", buckets = 2)
     assert(v2 === 2L)
-    val cur = MergeTable.read(spark, table).filter(col("k") === 7L).head
+    val cur = Streams.readMergeTable(spark, table).filter(col("k") === 7L).head
     assert(cur.getDouble(3) === -1.0)
   }
 }
