@@ -23,6 +23,18 @@ object Relational extends QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 
+  /** A row whose Spark side runs its oracle's SQL text itself, over temp
+    * views of `tables`: the text is stated once. `audit` checks the
+    * optimized plan's shape in-row. */
+  private def sqlRow(name: String, tables: Seq[String], sql: String)(
+      audit: String => Unit): Q =
+    Q(name, (s, d) => {
+      tables.foreach(tn => Tables(s, d, tn).createOrReplaceTempView(tn))
+      val df = s.sql(sql)
+      audit(df.queryExecution.optimizedPlan.toString)
+      df
+    }, Some(sql))
+
   /** Per-group reservoir oracle — ONE string shared by the batch row
     * (q_agg_reservoir) and its streaming-maintenance twin
     * (q_stream_live_reservoir): the k-min-hash reservoir is mergeable,
@@ -355,34 +367,9 @@ object Relational extends QueryModule {
     // nested aggregate is ONE hash aggregate over the join (the CASE
     // folds the numerator — no self-join, no second pass). Audited
     // in-row: no cartesian anywhere in the 8-relation plan.
-    Q("q_rel_tpch_q8",
-      (s, d) => {
-        Seq("lineitem", "part", "supplier", "orders", "customer", "nation",
-          "region").foreach(tn => Tables(s, d, tn).createOrReplaceTempView(tn))
-        val df = s.sql(
-          """SELECT o_year,
-                    ROUND(SUM(CASE WHEN nation = 'NATION_2' THEN volume ELSE 0 END)
-                          / SUM(volume), 6) AS mkt_share
-             FROM (SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
-                          l_extendedprice * (1 - l_discount) AS volume,
-                          n2.n_name AS nation
-                   FROM part, supplier, lineitem, orders, customer,
-                        nation n1, nation n2, region
-                   WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey
-                     AND l_orderkey = o_orderkey AND o_custkey = c_custkey
-                     AND c_nationkey = n1.n_nationkey
-                     AND n1.n_regionkey = r_regionkey AND r_name = 'ASIA'
-                     AND s_nationkey = n2.n_nationkey
-                     AND o_orderdate >= TIMESTAMP '1996-01-01'
-                     AND o_orderdate < TIMESTAMP '1998-01-01'
-                     AND p_type = 'PROMO') all_nations
-             GROUP BY o_year ORDER BY o_year""")
-        val plan = df.queryExecution.optimizedPlan.toString
-        require(!plan.contains("Cross") && !plan.contains("Cartesian"),
-          "no cartesian product allowed in the Q8 plan")
-        df
-      },
-      Some("""SELECT o_year,
+    sqlRow("q_rel_tpch_q8",
+      Seq("lineitem", "part", "supplier", "orders", "customer", "nation", "region"),
+      """SELECT o_year,
                 ROUND(SUM(CASE WHEN nation = 'NATION_2' THEN volume ELSE 0 END)
                       / SUM(volume), 6) AS mkt_share
               FROM (SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
@@ -398,7 +385,10 @@ object Relational extends QueryModule {
                       AND o_orderdate >= TIMESTAMP '1996-01-01'
                       AND o_orderdate < TIMESTAMP '1998-01-01'
                       AND p_type = 'PROMO') all_nations
-              GROUP BY o_year ORDER BY o_year""")),
+              GROUP BY o_year ORDER BY o_year""") { plan =>
+      require(!plan.contains("Cross") && !plan.contains("Cartesian"),
+        "no cartesian product allowed in the Q8 plan")
+    },
 
     // TPC-H Q9 (product-type profit — VERDICT r10 missing #1): the
     // LIKE-filtered part set exploded through lineitem with the supply
@@ -416,34 +406,8 @@ object Relational extends QueryModule {
     // semi-reduces lineitem through the p_partkey join before the
     // supply-cost join; nation broadcasts onto supplier. Audited
     // in-row: no cartesian.
-    Q("q_rel_tpch_q9",
-      (s, d) => {
-        Seq("lineitem", "part", "supplier", "orders", "nation").foreach(tn =>
-          Tables(s, d, tn).createOrReplaceTempView(tn))
-        val df = s.sql(
-          """WITH ps AS (SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
-                    MIN(l_extendedprice) AS ps_supplycost
-                  FROM lineitem GROUP BY 1, 2)
-             SELECT nation, o_year,
-                    ROUND(CAST(SUM(amount) AS DOUBLE), 2) AS sum_profit
-             FROM (SELECT n_name AS nation,
-                          CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
-                          CAST(ROUND(l_extendedprice * (1 - l_discount)
-                            - ps_supplycost * l_quantity, 4)
-                            AS DECIMAL(18, 4)) AS amount
-                   FROM part, supplier, lineitem, ps, orders, nation
-                   WHERE s_suppkey = l_suppkey
-                     AND ps_suppkey = l_suppkey AND ps_partkey = l_partkey
-                     AND p_partkey = l_partkey AND o_orderkey = l_orderkey
-                     AND s_nationkey = n_nationkey
-                     AND p_name LIKE '%gear%') profit
-             GROUP BY nation, o_year ORDER BY nation, o_year DESC""")
-        val plan = df.queryExecution.optimizedPlan.toString
-        require(!plan.contains("Cross") && !plan.contains("Cartesian"),
-          "no cartesian product allowed in the Q9 plan")
-        df
-      },
-      Some("""WITH ps AS (SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
+    sqlRow("q_rel_tpch_q9", Seq("lineitem", "part", "supplier", "orders", "nation"),
+      """WITH ps AS (SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
                     MIN(l_extendedprice) AS ps_supplycost
                   FROM lineitem GROUP BY 1, 2)
               SELECT nation, o_year,
@@ -459,7 +423,10 @@ object Relational extends QueryModule {
                       AND p_partkey = l_partkey AND o_orderkey = l_orderkey
                       AND s_nationkey = n_nationkey
                       AND p_name LIKE '%gear%') profit
-              GROUP BY nation, o_year ORDER BY nation, o_year DESC""")),
+              GROUP BY nation, o_year ORDER BY nation, o_year DESC""") { plan =>
+      require(!plan.contains("Cross") && !plan.contains("Cartesian"),
+        "no cartesian product allowed in the Q9 plan")
+    },
 
     // TPC-H Q12 (shipmode priority — VERDICT r10 missing #1): the
     // CASE-aggregate over a date-window join. The testdata carries no
@@ -699,31 +666,8 @@ object Relational extends QueryModule {
     // country codes derive from c_nationkey; "no orders" tightens to
     // "no urgent order since 1997" (every synthetic customer has SOME
     // order). Audited: anti join present, no cartesian.
-    Q("q_rel_tpch_q22",
-      (s, d) => {
-        Seq("orders", "customer").foreach(tn =>
-          Tables(s, d, tn).createOrReplaceTempView(tn))
-        val df = s.sql(
-          """SELECT cntrycode, CAST(COUNT(*) AS BIGINT) AS numcust,
-                    ROUND(SUM(c_acctbal), 2) AS totacctbal
-             FROM (SELECT CAST(c_nationkey % 7 AS BIGINT) AS cntrycode,
-                          c_acctbal, c_custkey FROM customer
-                   WHERE c_nationkey % 7 IN (0, 2, 3, 5)) c
-             WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer
-                                WHERE c_acctbal > 0.0)
-               AND NOT EXISTS (SELECT 1 FROM orders
-                               WHERE o_custkey = c_custkey
-                                 AND o_orderpriority = '1-URGENT'
-                                 AND o_orderdate >= TIMESTAMP '1997-01-01')
-             GROUP BY cntrycode ORDER BY cntrycode""")
-        val plan = df.queryExecution.optimizedPlan.toString
-        require(plan.contains("LeftAnti"),
-          "Q22's NOT EXISTS must rewrite to a left-anti join")
-        require(!plan.contains("Cross") && !plan.contains("Cartesian"),
-          s"no cartesian product allowed in the Q22 plan")
-        df
-      },
-      Some("""SELECT cntrycode, CAST(COUNT(*) AS BIGINT) AS numcust,
+    sqlRow("q_rel_tpch_q22", Seq("orders", "customer"),
+      """SELECT cntrycode, CAST(COUNT(*) AS BIGINT) AS numcust,
                      ROUND(SUM(c_acctbal), 2) AS totacctbal
               FROM (SELECT CAST(c_nationkey % 7 AS BIGINT) AS cntrycode,
                            c_acctbal, c_custkey FROM customer
@@ -734,7 +678,12 @@ object Relational extends QueryModule {
                                 WHERE o_custkey = c_custkey
                                   AND o_orderpriority = '1-URGENT'
                                   AND o_orderdate >= TIMESTAMP '1997-01-01')
-              GROUP BY cntrycode ORDER BY cntrycode""")),
+              GROUP BY cntrycode ORDER BY cntrycode""") { plan =>
+      require(plan.contains("LeftAnti"),
+        "Q22's NOT EXISTS must rewrite to a left-anti join")
+      require(!plan.contains("Cross") && !plan.contains("Cartesian"),
+        s"no cartesian product allowed in the Q22 plan")
+    },
 
     // TPC-H Q17 shape (small-quantity-order revenue): the CORRELATED
     // SCALAR subquery per group — the remaining Catalyst subquery
@@ -745,26 +694,15 @@ object Relational extends QueryModule {
     // is integral, so the 0.5*AVG comparison boundary is exact in both
     // engines (integer sums are exact in double; the division is IEEE-
     // deterministic). Audited: no cartesian, an aggregate-feeding join.
-    Q("q_rel_tpch_q17",
-      (s, d) => {
-        Seq("lineitem", "part").foreach(tn =>
-          Tables(s, d, tn).createOrReplaceTempView(tn))
-        val df = s.sql(
-          """SELECT ROUND(SUM(l_extendedprice) / 7.0, 2) AS avg_yearly
-             FROM lineitem JOIN part ON p_partkey = l_partkey
-             WHERE p_brand = 'Brand#4' AND p_type = 'SMALL'
-               AND l_quantity < (SELECT 0.5 * AVG(l_quantity)
-                                 FROM lineitem WHERE l_partkey = p_partkey)""")
-        val plan = df.queryExecution.optimizedPlan.toString
-        require(!plan.contains("Cross") && !plan.contains("Cartesian"),
-          s"no cartesian product allowed in the Q17 plan")
-        df
-      },
-      Some("""SELECT ROUND(SUM(l_extendedprice) / 7.0, 2) AS avg_yearly
+    sqlRow("q_rel_tpch_q17", Seq("lineitem", "part"),
+      """SELECT ROUND(SUM(l_extendedprice) / 7.0, 2) AS avg_yearly
               FROM lineitem JOIN part ON p_partkey = l_partkey
               WHERE p_brand = 'Brand#4' AND p_type = 'SMALL'
                 AND l_quantity < (SELECT 0.5 * AVG(l_quantity)
-                                  FROM lineitem WHERE l_partkey = p_partkey)""")),
+                                  FROM lineitem WHERE l_partkey = p_partkey)""") { plan =>
+      require(!plan.contains("Cross") && !plan.contains("Cartesian"),
+        s"no cartesian product allowed in the Q17 plan")
+    },
 
     // TPC-H Q2 shape (minimum-cost supplier): the correlated scalar MIN
     // over a FOUR-WAY dimension join — the inner MIN re-joins
@@ -776,32 +714,8 @@ object Relational extends QueryModule {
     // price per (part, supplier)) with the identical CTE on both sides.
     // (s_name, p_partkey) is unique per output row, so the ORDER BY +
     // LIMIT cut is a total order — deterministic at the boundary.
-    Q("q_rel_tpch_q2",
-      (s, d) => {
-        Seq("lineitem", "part", "supplier", "nation", "region").foreach(tn =>
-          Tables(s, d, tn).createOrReplaceTempView(tn))
-        val df = s.sql(
-          """WITH ps AS (SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
-                    MIN(l_extendedprice) AS ps_supplycost
-                  FROM lineitem GROUP BY 1, 2)
-             SELECT s_acctbal, s_name, n_name, p_partkey, p_brand, ps_supplycost
-             FROM part, supplier, ps, nation, region
-             WHERE p_partkey = ps_partkey AND s_suppkey = ps_suppkey
-               AND p_size <= 15 AND p_type = 'SMALL'
-               AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-               AND r_name = 'ASIA'
-               AND ps_supplycost = (SELECT MIN(ps2.ps_supplycost)
-                 FROM ps ps2, supplier s2, nation n2, region r2
-                 WHERE ps2.ps_partkey = p_partkey AND s2.s_suppkey = ps2.ps_suppkey
-                   AND s2.s_nationkey = n2.n_nationkey
-                   AND n2.n_regionkey = r2.r_regionkey AND r2.r_name = 'ASIA')
-             ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100""")
-        val plan = df.queryExecution.optimizedPlan.toString
-        require(!plan.contains("Cross") && !plan.contains("Cartesian"),
-          s"no cartesian product allowed in the Q2 plan")
-        df
-      },
-      Some("""WITH ps AS (SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
+    sqlRow("q_rel_tpch_q2", Seq("lineitem", "part", "supplier", "nation", "region"),
+      """WITH ps AS (SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
                     MIN(l_extendedprice) AS ps_supplycost
                   FROM lineitem GROUP BY 1, 2)
               SELECT s_acctbal, s_name, n_name, p_partkey, p_brand, ps_supplycost
@@ -815,7 +729,10 @@ object Relational extends QueryModule {
                   WHERE ps2.ps_partkey = p_partkey AND s2.s_suppkey = ps2.ps_suppkey
                     AND s2.s_nationkey = n2.n_nationkey
                     AND n2.n_regionkey = r2.r_regionkey AND r2.r_name = 'ASIA')
-              ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100""")),
+              ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100""") { plan =>
+      require(!plan.contains("Cross") && !plan.contains("Cartesian"),
+        s"no cartesian product allowed in the Q2 plan")
+    },
 
     // TPC-H Q20 shape (excess-stock suppliers): the NESTED IN → semi
     // chain with a CORRELATED AGGREGATE threshold — supplier IN (ps
@@ -827,37 +744,8 @@ object Relational extends QueryModule {
     // derives deterministically from the keys; an empty shipped window
     // sums to NULL and the > comparison drops the row identically in
     // both engines. Audited: semi joins present, no cartesian.
-    Q("q_rel_tpch_q20",
-      (s, d) => {
-        Seq("lineitem", "part", "supplier", "nation").foreach(tn =>
-          Tables(s, d, tn).createOrReplaceTempView(tn))
-        val df = s.sql(
-          """WITH ps AS (SELECT DISTINCT l_partkey AS ps_partkey,
-                    l_suppkey AS ps_suppkey,
-                    (l_partkey * 7 + l_suppkey * 13) % 150 + 1 AS ps_availqty
-                  FROM lineitem)
-             SELECT s_name, s_acctbal
-             FROM supplier, nation
-             WHERE s_suppkey IN (
-                 SELECT ps_suppkey FROM ps
-                 WHERE ps_partkey IN (SELECT p_partkey FROM part
-                                      WHERE p_name LIKE 'small%')
-                   AND ps_availqty > (
-                     SELECT 0.5 * SUM(l_quantity) FROM lineitem
-                     WHERE l_partkey = ps_partkey AND l_suppkey = ps_suppkey
-                       AND l_shipdate >= DATE '1997-01-01'
-                       AND l_shipdate < DATE '1998-01-01'))
-               AND s_nationkey = n_nationkey
-               AND n_name IN ('NATION_1', 'NATION_2', 'NATION_3')
-             ORDER BY s_name""")
-        val plan = df.queryExecution.optimizedPlan.toString
-        require(plan.contains("LeftSemi"),
-          "Q20's IN chain must rewrite to left-semi joins")
-        require(!plan.contains("Cross") && !plan.contains("Cartesian"),
-          s"no cartesian product allowed in the Q20 plan")
-        df
-      },
-      Some("""WITH ps AS (SELECT DISTINCT l_partkey AS ps_partkey,
+    sqlRow("q_rel_tpch_q20", Seq("lineitem", "part", "supplier", "nation"),
+      """WITH ps AS (SELECT DISTINCT l_partkey AS ps_partkey,
                     l_suppkey AS ps_suppkey,
                     (l_partkey * 7 + l_suppkey * 13) % 150 + 1 AS ps_availqty
                   FROM lineitem)
@@ -874,34 +762,20 @@ object Relational extends QueryModule {
                         AND l_shipdate < DATE '1998-01-01'))
                 AND s_nationkey = n_nationkey
                 AND n_name IN ('NATION_1', 'NATION_2', 'NATION_3')
-              ORDER BY s_name""")),
+              ORDER BY s_name""") { plan =>
+      require(plan.contains("LeftSemi"),
+        "Q20's IN chain must rewrite to left-semi joins")
+      require(!plan.contains("Cross") && !plan.contains("Cartesian"),
+        s"no cartesian product allowed in the Q20 plan")
+    },
 
     // TPC-H Q15 shape (top supplier): the REVENUE VIEW consumed twice —
     // once as the join input and once inside an uncorrelated scalar MAX
     // — the "aggregate of an aggregate" selection TPC-H expresses as a
     // CREATE VIEW. Per-supplier revenue is rounded BEFORE the equality
     // against the max, so the tie surface is identical in both engines.
-    Q("q_rel_tpch_q15",
-      (s, d) => {
-        Seq("lineitem", "supplier").foreach(tn =>
-          Tables(s, d, tn).createOrReplaceTempView(tn))
-        val df = s.sql(
-          """WITH revenue AS (SELECT l_suppkey AS supplier_no,
-                    ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS total_revenue
-                  FROM lineitem
-                  WHERE l_shipdate >= DATE '1997-01-01'
-                    AND l_shipdate < DATE '1997-04-01'
-                  GROUP BY l_suppkey)
-             SELECT s_suppkey, s_name, total_revenue
-             FROM supplier JOIN revenue ON s_suppkey = supplier_no
-             WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-             ORDER BY s_suppkey""")
-        val plan = df.queryExecution.optimizedPlan.toString
-        require(!plan.contains("Cross") && !plan.contains("Cartesian"),
-          s"no cartesian product allowed in the Q15 plan")
-        df
-      },
-      Some("""WITH revenue AS (SELECT l_suppkey AS supplier_no,
+    sqlRow("q_rel_tpch_q15", Seq("lineitem", "supplier"),
+      """WITH revenue AS (SELECT l_suppkey AS supplier_no,
                     ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS total_revenue
                   FROM lineitem
                   WHERE l_shipdate >= DATE '1997-01-01'
@@ -910,41 +784,30 @@ object Relational extends QueryModule {
               SELECT s_suppkey, s_name, total_revenue
               FROM supplier JOIN revenue ON s_suppkey = supplier_no
               WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-              ORDER BY s_suppkey""")),
+              ORDER BY s_suppkey""") { plan =>
+      require(!plan.contains("Cross") && !plan.contains("Cartesian"),
+        s"no cartesian product allowed in the Q15 plan")
+    },
 
     // TPC-H Q18 shape (large-volume customers): IN over a HAVING
     // subquery on the SAME fact table the outer query aggregates — the
     // semi join must land BELOW the 3-way join and the outer GROUP BY
     // re-aggregates the surviving lineitems. (o_orderkey is unique per
     // output row, so ORDER BY qty DESC, key + LIMIT is a total order.)
-    Q("q_rel_tpch_q18",
-      (s, d) => {
-        Seq("customer", "orders", "lineitem").foreach(tn =>
-          Tables(s, d, tn).createOrReplaceTempView(tn))
-        val df = s.sql(
-          """SELECT c_custkey, o_orderkey, ROUND(SUM(l_quantity), 1) AS total_qty
-             FROM customer, orders, lineitem
-             WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem
-                                  GROUP BY l_orderkey
-                                  HAVING SUM(l_quantity) > 220)
-               AND c_custkey = o_custkey AND o_orderkey = l_orderkey
-             GROUP BY c_custkey, o_orderkey
-             ORDER BY total_qty DESC, o_orderkey LIMIT 100""")
-        val plan = df.queryExecution.optimizedPlan.toString
-        require(plan.contains("LeftSemi"),
-          "Q18's IN-over-HAVING must rewrite to a left-semi join")
-        require(!plan.contains("Cross") && !plan.contains("Cartesian"),
-          s"no cartesian product allowed in the Q18 plan")
-        df
-      },
-      Some("""SELECT c_custkey, o_orderkey, ROUND(SUM(l_quantity), 1) AS total_qty
+    sqlRow("q_rel_tpch_q18", Seq("customer", "orders", "lineitem"),
+      """SELECT c_custkey, o_orderkey, ROUND(SUM(l_quantity), 1) AS total_qty
               FROM customer, orders, lineitem
               WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem
                                    GROUP BY l_orderkey
                                    HAVING SUM(l_quantity) > 220)
                 AND c_custkey = o_custkey AND o_orderkey = l_orderkey
               GROUP BY c_custkey, o_orderkey
-              ORDER BY total_qty DESC, o_orderkey LIMIT 100""")),
+              ORDER BY total_qty DESC, o_orderkey LIMIT 100""") { plan =>
+      require(plan.contains("LeftSemi"),
+        "Q18's IN-over-HAVING must rewrite to a left-semi join")
+      require(!plan.contains("Cross") && !plan.contains("Cartesian"),
+        s"no cartesian product allowed in the Q18 plan")
+    },
 
     // TPC-H Q11 shape (important stock identification): GROUP BY +
     // HAVING against an UNCORRELATED scalar over the same 3-way join —
@@ -953,33 +816,8 @@ object Relational extends QueryModule {
     // corpus grows (0 rows at 100× with any constant), so the cut is
     // stated SCALE-FREE: parts whose value exceeds 1.4× the average
     // part value — same SQL at every SF, same rewrite shape.
-    Q("q_rel_tpch_q11",
-      (s, d) => {
-        Seq("lineitem", "supplier", "nation").foreach(tn =>
-          Tables(s, d, tn).createOrReplaceTempView(tn))
-        val df = s.sql(
-          """WITH ps AS (SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
-                    MIN(l_extendedprice) AS ps_supplycost,
-                    SUM(l_quantity) AS ps_availqty
-                  FROM lineitem GROUP BY 1, 2),
-                psn AS (SELECT ps_partkey, ps_supplycost, ps_availqty
-                  FROM ps, supplier, nation
-                  WHERE ps_suppkey = s_suppkey AND s_nationkey = n_nationkey
-                    AND n_name IN ('NATION_1', 'NATION_2', 'NATION_3',
-                                   'NATION_4', 'NATION_5'))
-             SELECT ps_partkey, ROUND(SUM(ps_supplycost * ps_availqty), 2) AS value
-             FROM psn
-             GROUP BY ps_partkey
-             HAVING SUM(ps_supplycost * ps_availqty) > (
-               SELECT SUM(ps_supplycost * ps_availqty) * 1.4
-                 / COUNT(DISTINCT ps_partkey) FROM psn)
-             ORDER BY value DESC, ps_partkey LIMIT 100""")
-        val plan = df.queryExecution.optimizedPlan.toString
-        require(!plan.contains("Cross") && !plan.contains("Cartesian"),
-          s"no cartesian product allowed in the Q11 plan")
-        df
-      },
-      Some("""WITH ps AS (SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
+    sqlRow("q_rel_tpch_q11", Seq("lineitem", "supplier", "nation"),
+      """WITH ps AS (SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
                     MIN(l_extendedprice) AS ps_supplycost,
                     SUM(l_quantity) AS ps_availqty
                   FROM lineitem GROUP BY 1, 2),
@@ -994,38 +832,18 @@ object Relational extends QueryModule {
               HAVING SUM(ps_supplycost * ps_availqty) > (
                 SELECT SUM(ps_supplycost * ps_availqty) * 1.4
                   / COUNT(DISTINCT ps_partkey) FROM psn)
-              ORDER BY value DESC, ps_partkey LIMIT 100""")),
+              ORDER BY value DESC, ps_partkey LIMIT 100""") { plan =>
+      require(!plan.contains("Cross") && !plan.contains("Cartesian"),
+        s"no cartesian product allowed in the Q11 plan")
+    },
 
     // TPC-H Q16 shape (parts/supplier relationship): NOT IN against a
     // subquery (null-free key, so the null-aware anti join degenerates
     // to a plain one) + COUNT(DISTINCT) over the surviving pairs, with
     // multi-predicate dimension cuts. "Complaints" surrogate: suppliers
     // with negative balances.
-    Q("q_rel_tpch_q16",
-      (s, d) => {
-        Seq("lineitem", "part", "supplier").foreach(tn =>
-          Tables(s, d, tn).createOrReplaceTempView(tn))
-        val df = s.sql(
-          """WITH ps AS (SELECT DISTINCT l_partkey AS ps_partkey,
-                    l_suppkey AS ps_suppkey FROM lineitem)
-             SELECT p_brand, p_type, p_size,
-                    CAST(COUNT(DISTINCT ps_suppkey) AS BIGINT) AS supplier_cnt
-             FROM ps, part
-             WHERE p_partkey = ps_partkey
-               AND p_brand <> 'Brand#1' AND p_type NOT LIKE 'PROMO%'
-               AND p_size IN (1, 4, 7, 10, 13, 16, 19, 22)
-               AND ps_suppkey NOT IN (SELECT s_suppkey FROM supplier
-                                      WHERE s_acctbal < 0)
-             GROUP BY p_brand, p_type, p_size
-             ORDER BY supplier_cnt DESC, p_brand, p_type, p_size LIMIT 100""")
-        val plan = df.queryExecution.optimizedPlan.toString
-        require(plan.contains("LeftAnti"),
-          "Q16's NOT IN must rewrite to an anti join")
-        require(!plan.contains("Cross") && !plan.contains("Cartesian"),
-          s"no cartesian product allowed in the Q16 plan")
-        df
-      },
-      Some("""WITH ps AS (SELECT DISTINCT l_partkey AS ps_partkey,
+    sqlRow("q_rel_tpch_q16", Seq("lineitem", "part", "supplier"),
+      """WITH ps AS (SELECT DISTINCT l_partkey AS ps_partkey,
                     l_suppkey AS ps_suppkey FROM lineitem)
               SELECT p_brand, p_type, p_size,
                      CAST(COUNT(DISTINCT ps_suppkey) AS BIGINT) AS supplier_cnt
@@ -1036,7 +854,12 @@ object Relational extends QueryModule {
                 AND ps_suppkey NOT IN (SELECT s_suppkey FROM supplier
                                        WHERE s_acctbal < 0)
               GROUP BY p_brand, p_type, p_size
-              ORDER BY supplier_cnt DESC, p_brand, p_type, p_size LIMIT 100""")),
+              ORDER BY supplier_cnt DESC, p_brand, p_type, p_size LIMIT 100""") { plan =>
+      require(plan.contains("LeftAnti"),
+        "Q16's NOT IN must rewrite to an anti join")
+      require(!plan.contains("Cross") && !plan.contains("Cartesian"),
+        s"no cartesian product allowed in the Q16 plan")
+    },
 
     // TPC-H Q13 shape (customer order-count distribution): the OUTER-
     // join aggregate histogram — the join condition carries a non-key
@@ -1099,28 +922,16 @@ object Relational extends QueryModule {
     // works in (GraftExtensions' native kernels are registered into the
     // same session, see q_fn_vec_sql). The statement exercises a join,
     // a distinct aggregate, and a ranking window; the oracle is the
-    // near-identical text, which is the point.
-    Q("q_sql_e2e",
-      (s, d) => {
-        Seq("orders", "customer").foreach(tn =>
-          Tables(s, d, tn).createOrReplaceTempView(tn))
-        s.sql("""SELECT c_mktsegment, n_cust, revenue,
-                   CAST(RANK() OVER (ORDER BY revenue DESC) AS BIGINT) AS rnk
-                 FROM (SELECT c_mktsegment,
-                         CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_cust,
-                         ROUND(SUM(o_totalprice), 2) AS revenue
-                       FROM orders JOIN customer ON c_custkey = o_custkey
-                       GROUP BY c_mktsegment) t
-                 ORDER BY c_mktsegment""")
-      },
-      Some("""SELECT c_mktsegment, n_cust, revenue,
+    // same text, which is the point.
+    sqlRow("q_sql_e2e", Seq("orders", "customer"),
+      """SELECT c_mktsegment, n_cust, revenue,
                 CAST(RANK() OVER (ORDER BY revenue DESC) AS BIGINT) AS rnk
               FROM (SELECT c_mktsegment,
                       CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_cust,
                       ROUND(SUM(o_totalprice), 2) AS revenue
                     FROM orders JOIN customer ON c_custkey = o_custkey
                     GROUP BY c_mktsegment) t
-              ORDER BY c_mktsegment""")),
+              ORDER BY c_mktsegment""")(_ => ()),
 
     Q("q_agg_distinct",
       (s, d) => t(s, d, "orders")

@@ -172,16 +172,6 @@ object StreamingOps extends QueryModule {
     })
   }
 
-  /** events staged as THREE mod-split shipments (event_id % 3,
-    * mtime-ordered) — EXPLICIT batch boundaries an oracle can restate,
-    * unlike the range-sampled time split below. */
-  private def stagedShipmentSplit(s: SparkSession, d: String): String =
-    graft.Memo(s, "shipmentSplit", d, "events") {
-      val ev = Tables(s, d, "events")
-      stageOrderedParts("graft-shipsplit-raw", "graft-shipsplit-in",
-        (0 to 2).map(m => ev.filter(col("event_id") % 3 === m)))
-    }
-
   /** TRAIN embeddings (vec_id >= 50, the eval set excluded at the
     * source) staged as two mtime-ordered parquet files (vec_id parity
     * split) — two micro-batches under maxFilesPerTrigger=1 for the
@@ -1078,7 +1068,7 @@ object StreamingOps extends QueryModule {
           .select(col("event_type"), col("band"),
             ((coalesce(col("c"), lit(0L)) + 0.5) / (col("n") + 5.0)).as("p_ref"))
         val batches = graft.streaming.Streams.runDriftMonitor(
-          s, stagedShipmentSplit(s, d), ref, out, Curation.psiBandSql)
+          s, stagedModSplit(s, d), ref, out, Curation.psiBandSql)
         require(batches.size >= 3,
           s"the staged replay must deliver 3 shipments, got ${batches.size}")
         graft.plans.Iterate.release(counts)

@@ -3,6 +3,8 @@ package graft.streaming
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.json4s.{JArray, JField, JInt, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
@@ -30,16 +32,15 @@ trait CommitPrimitive {
 /** Minimal log-based transactional table format (the lake-scale MERGE
   * sink the upsert rows defer to): a table is a directory of immutable
   * parquet part files plus a `_txlog/` of versioned JSON commit entries
-  * `<v>.json`, each with the fields, in this order:
+  * `<v>.json`, each with the fields:
   *
   *   - `version`: the entry's version (consecutive from 0);
   *   - `adds`, `removes`: data file names relative to the table root;
-  *   - `schema`: the TABLE's schema after this commit, as base64 of
-  *     `StructType.json` (absent from entries written before the field
-  *     existed);
+  *   - `schema`: the TABLE's schema after this commit (absent from
+  *     entries written before the field existed);
   *   - `stats` (optional): per-file, per-column (min, max) intervals;
-  *   - `batch` (optional): the replay record `[batchId,"fingerprint"]`
-  *     of the streaming micro-batch the commit lands (see [[commitBatch]]);
+  *   - `batch` (optional): the replay record of the streaming
+  *     micro-batch the commit lands (see [[commitBatch]]);
   *   - `ts`: the writer's commit wall-clock time.
   *
   * Schema rule: a commit's schema is the previous version's schema plus
@@ -51,7 +52,9 @@ trait CommitPrimitive {
   * table on parquet footer inference (`mergeSchema`) for that version
   * and every later one: the log cannot vouch for those files' columns. A
   * checkpoint `<v>.checkpoint.json` holds `{version, files[], schema,
-  * stats, batches}` of the replayed snapshot.
+  * stats, batches}` of the replayed snapshot. Entries and checkpoints
+  * are read and written through one JSON codec, so any file name and
+  * batch fingerprint round-trips; a stats column name must not hold `|`.
   *
   * The CURRENT table state is the log replay — data files are never
   * read unless a committed entry references them, which gives:
@@ -166,20 +169,14 @@ object TxLog {
     * reader's cost is O(commits since last checkpoint), not O(all
     * versions), and entries older than a checkpoint may be aged out
     * (after which time travel below the checkpoint is gone, by
-    * declared retention, and fails loudly here). */
+    * declared retention, and fails loudly here: a replay that does not
+    * reach an `asOf` at or below the newest version is refused). */
   def snapshot(table: String, asOf: Option[Long] = None): Snapshot = {
     val all = versions(table)
+    val cps = checkpointVersions(table)
     val upTo = asOf.fold(all)(a => all.filter(_ <= a))
-    val base = asOf.fold(checkpointVersions(table))(
-      a => checkpointVersions(table).filter(_ <= a)).lastOption
-    require(asOf.isEmpty || upTo.nonEmpty || base.nonEmpty || all.isEmpty,
-      s"no committed version <= ${asOf.get} in $table")
+    val base = asOf.fold(cps)(a => cps.filter(_ <= a)).lastOption
     val fromV = base.getOrElse(-1L)
-    val cp = base.map(v => text(table, s"$v.checkpoint.json"))
-    var files = cp.fold(Vector.empty[String])(arr(_, "files").toVector)
-    var stats = cp.fold(Map.empty[String, Map[String, (Long, Long)]])(parseStats)
-    var batches = cp.fold(Map.empty[Long, String])(parseBatches)
-    var newest = cp // each entry holds the whole schema: only the newest counts
     val replay = upTo.filter(_ > fromV)
     // versions are always committed consecutively, so the replayed
     // suffix must be exactly fromV+1, fromV+2, … — a hole means entries
@@ -187,16 +184,21 @@ object TxLog {
     // skip commits; refuse instead
     require(replay == ((fromV + 1) to (fromV + replay.length)),
       s"log gap after checkpoint $fromV in $table: ${replay.mkString(",")}")
-    replay.foreach { v =>
-      val txt = text(table, s"$v.json")
-      val removes = arr(txt, "removes")
-      files = files.filterNot(removes.toSet) ++ arr(txt, "adds")
-      stats = (stats -- removes) ++ parseStats(txt)
-      batches = batches ++ parseBatch(txt)
-      newest = Some(txt)
+    val start = base.fold(Snapshot(-1L, Vector.empty))(v =>
+      load(table, s"$v.checkpoint.json")(Codec.checkpoint))
+    val entries = replay.map(v => load(table, s"$v.json")(Codec.entry))
+    val replayed = entries.foldLeft(start) { (s, e) =>
+      val gone = e.removes.toSet
+      s.copy(version = e.version, files = s.files.filterNot(gone) ++ e.adds,
+        stats = (s.stats -- gone) ++ e.stats, batches = s.batches ++ e.batch)
     }
-    Snapshot(replay.lastOption.orElse(base).getOrElse(-1L), files, stats,
-      newest.flatMap(parseSchema), batches)
+    // each entry holds the whole schema: only the newest counts
+    val snap = entries.lastOption.fold(replayed)(e => replayed.copy(schema = e.schema))
+    val newest = (all ++ cps).foldLeft(-1L)(math.max)
+    asOf.foreach(a => require(snap.version == a || a > newest,
+      s"version $a of $table is not retained: the replay from checkpoint " +
+        s"$fromV reaches ${snap.version}"))
+    snap
   }
 
   /** Write a checkpoint of the CURRENT snapshot: one JSON file holding
@@ -212,73 +214,140 @@ object TxLog {
       primitive: CommitPrimitive = LocalFs): Option[Long] = {
     val snap = snapshot(table)
     if (snap.version < 0) return None
-    snap.files.foreach { n =>
-      require(!n.contains('"') && !n.contains(','),
-        s"file name must not contain '\"' or ',': $n")
-    }
-    val entry =
-      s"""{"version":${snap.version},"files":[${
-        snap.files.map("\"" + _ + "\"").mkString(",")}]${
-        schemaJson(snap.schema)}${statsJson(snap.stats)}${batchesJson(snap.batches)}}"""
     val target = logDir(table).resolve(s"${snap.version}.checkpoint.json")
-    if (primitive.createExclusive(target, entry.getBytes("UTF-8"))) Some(snap.version)
+    if (primitive.createExclusive(target, Codec.write(Codec.checkpoint(snap)))) Some(snap.version)
     else None
   }
-
-  /** `,"stats":{"f|col":[lo,hi],…}` — empty string when no stats. The
-    * nested file→column→interval map is FLATTENED to `file|col` keys so
-    * the object stays brace-free inside and the regex replay stays
-    * exact (file and column names are validated at commit time to
-    * contain no `"`, `,`, or `|`). Placed LAST in the entry so the
-    * adds/removes array regexes (which stop at the first `]`) never see
-    * the stats brackets. */
-  private def statsJson(stats: Map[String, Map[String, (Long, Long)]]): String = {
-    val flat = for ((f, cols) <- stats.toSeq; (c, (lo, hi)) <- cols.toSeq)
-      yield (s"$f|$c", lo, hi)
-    if (flat.isEmpty) ""
-    else flat.sortBy(_._1)
-      .map { case (k, lo, hi) => s""""$k":[$lo,$hi]""" }
-      .mkString(""","stats":{""", ",", "}")
-  }
-
-  /** `,"batches":{"<id>":"<fingerprint>",…}` — a checkpoint's batch
-    * records; empty string when there are none. Placed after `stats`,
-    * whose regex stops at its own closing brace. */
-  private def batchesJson(batches: Map[Long, String]): String =
-    if (batches.isEmpty) ""
-    else batches.toSeq.sorted.map { case (id, fp) => s""""$id":"$fp"""" }
-      .mkString(""","batches":{""", ",", "}")
-
-  private def parseBatches(txt: String): Map[Long, String] =
-    """"batches":\{([^}]*)\}""".r.findFirstMatchIn(txt).fold(Map.empty[Long, String]) { m =>
-      """"(-?\d+)":"(\w*)"""".r.findAllMatchIn(m.group(1))
-        .map(g => g.group(1).toLong -> g.group(2)).toMap
-    }
-
-  /** An entry's replay record; None on a commit that lands no batch. */
-  private def parseBatch(txt: String): Option[(Long, String)] =
-    """"batch":\[(-?\d+),"(\w*)"\]""".r.findFirstMatchIn(txt)
-      .map(m => m.group(1).toLong -> m.group(2))
-
-  /** `,"schema":"<base64 of StructType.json>"` — empty string on a
-    * schema-less log. Base64 holds no `"`, `,`, `]` or `}`, so the
-    * regex replay of the other fields stays exact. */
-  private def schemaJson(schema: Option[StructType]): String =
-    schema.fold("")(s => s""","schema":"${
-      java.util.Base64.getEncoder.encodeToString(s.json.getBytes("UTF-8"))}"""")
-
-  private def parseSchema(txt: String): Option[StructType] =
-    """"schema":"([A-Za-z0-9+/=]*)"""".r.findFirstMatchIn(txt).map { m =>
-      DataType.fromJson(new String(
-        java.util.Base64.getDecoder.decode(m.group(1)), "UTF-8")).asInstanceOf[StructType]
-    }
 
   /** The schema recorded at version `v` (its entry, or its checkpoint
     * once the entry has expired); None on a schema-less log. */
   private def schemaAt(table: String, v: Long): Option[StructType] =
-    Seq(s"$v.json", s"$v.checkpoint.json")
-      .find(f => Files.exists(logDir(table).resolve(f)))
-      .flatMap(f => parseSchema(text(table, f)))
+    if (Files.exists(logDir(table).resolve(s"$v.json")))
+      load(table, s"$v.json")(Codec.entry).schema
+    else if (Files.exists(logDir(table).resolve(s"$v.checkpoint.json")))
+      load(table, s"$v.checkpoint.json")(Codec.checkpoint).schema
+    else None
+
+  /** One decoded commit entry `<v>.json`. `schemaJson` is the table
+    * schema's `StructType.json`, decoded only on demand (a replay needs
+    * the newest entry's alone); `ts` is None on entries written before
+    * the field existed. */
+  private final case class Entry(version: Long, adds: Seq[String], removes: Seq[String],
+      schemaJson: Option[String], stats: Map[String, Map[String, (Long, Long)]],
+      batch: Option[(Long, String)], ts: Option[Long]) {
+    lazy val schema: Option[StructType] =
+      schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+  }
+
+  /** The one codec of the log: an [[Entry]] or a checkpoint (a
+    * [[Snapshot]]) maps to and from a json4s `JValue` here, and nothing
+    * else reads or writes log text. The on-disk shape:
+    *
+    *   - `schema` is base64 of `StructType.json`;
+    *   - `stats` is flat, `{"file|col":[lo,hi],…}`, split at the LAST
+    *     `|` (so a stats column name must not hold one). A key without
+    *     `|` (the pre-multi-column format) is DROPPED: an interval whose
+    *     column is unknown cannot be matched to any scan, and a
+    *     stat-less file is always read;
+    *   - an entry's `batch` is `[id,"fp"]`, a checkpoint's `batches` is
+    *     `{"id":"fp",…}`;
+    *   - an optional field with no value is omitted, never null.
+    *
+    * Integers parse as `JInt`; a malformed file fails its read. */
+  private object Codec {
+    def write(v: JValue): Array[Byte] = compact(render(v)).getBytes("UTF-8")
+
+    def entry(e: Entry): JValue = JObject(
+      List[JField]("version" -> JInt(e.version), "adds" -> strings(e.adds),
+        "removes" -> strings(e.removes)) ++
+        e.schemaJson.map(schemaField) ++ statsField(e.stats) ++
+        e.batch.map { case (id, fp) => "batch" -> JArray(List(JInt(id), JString(fp))) } ++
+        e.ts.map(t => "ts" -> JInt(t)))
+
+    def entry(v: JValue): Entry = {
+      val f = fields(v)
+      Entry(long(f("version")), strings(f("adds")), strings(f("removes")),
+        f.get("schema").map(schemaText), stats(f.get("stats")),
+        f.get("batch").map {
+          case JArray(List(id, JString(fp))) => long(id) -> fp
+          case other => malformed("batch", other)
+        }, f.get("ts").map(long))
+    }
+
+    def checkpoint(s: Snapshot): JValue = JObject(
+      List[JField]("version" -> JInt(s.version), "files" -> strings(s.files)) ++
+        s.schema.map(t => schemaField(t.json)) ++ statsField(s.stats) ++
+        Option.when(s.batches.nonEmpty)("batches" -> JObject(
+          s.batches.toList.sorted.map { case (id, fp) => id.toString -> JString(fp) })))
+
+    def checkpoint(v: JValue): Snapshot = {
+      val f = fields(v)
+      Snapshot(long(f("version")), strings(f("files")).toVector, stats(f.get("stats")),
+        f.get("schema").map(j => DataType.fromJson(schemaText(j)).asInstanceOf[StructType]),
+        f.get("batches").fold(Map.empty[Long, String])(b => fields(b).map {
+          case (id, JString(fp)) => id.toLong -> fp
+          case (_, other) => malformed("batches", other)
+        }))
+    }
+
+    private def schemaField(json: String): JField = "schema" ->
+      JString(java.util.Base64.getEncoder.encodeToString(json.getBytes("UTF-8")))
+
+    private def schemaText(v: JValue): String = v match {
+      case JString(b64) => new String(java.util.Base64.getDecoder.decode(b64), "UTF-8")
+      case other => malformed("schema", other)
+    }
+
+    private def statsField(stats: Map[String, Map[String, (Long, Long)]]): Option[JField] = {
+      val flat = for ((f, cols) <- stats.toList; (c, (lo, hi)) <- cols.toList)
+        yield s"$f|$c" -> JArray(List(JInt(lo), JInt(hi)))
+      Option.when(flat.nonEmpty)("stats" -> JObject(flat.sortBy(_._1)))
+    }
+
+    private def stats(v: Option[JValue]): Map[String, Map[String, (Long, Long)]] =
+      v.fold(List.empty[(String, JValue)])(fields(_).toList).flatMap { case (k, iv) =>
+        val cut = k.lastIndexOf('|')
+        val bounds = iv match {
+          case JArray(List(lo, hi)) => (long(lo), long(hi))
+          case other => malformed("stats", other)
+        }
+        Option.when(cut >= 0)((k.substring(0, cut), k.substring(cut + 1), bounds))
+      }.groupBy(_._1).map { case (f, rows) => f -> rows.map(r => r._2 -> r._3).toMap }
+
+    private def strings(xs: Seq[String]): JArray = JArray(xs.map(JString(_)).toList)
+
+    private def strings(v: JValue): Seq[String] = v match {
+      case JArray(xs) => xs.map {
+        case JString(s) => s
+        case other => malformed("name", other)
+      }
+      case other => malformed("name list", other)
+    }
+
+    private def fields(v: JValue): Map[String, JValue] = v match {
+      case JObject(fs) => fs.toMap
+      case other => malformed("object", other)
+    }
+
+    private def long(v: JValue): Long = v match {
+      case JInt(n) if n.isValidLong => n.toLong
+      case other => malformed("integer", other)
+    }
+
+    private def malformed(what: String, v: JValue): Nothing =
+      throw new IllegalArgumentException(s"malformed $what: ${compact(render(v))}")
+  }
+
+  /** Read and decode one log file; a file the codec cannot decode fails
+    * loudly, naming it. */
+  private def load[T](table: String, fileName: String)(decode: JValue => T): T = {
+    val p = logDir(table).resolve(fileName)
+    val txt = new String(Files.readAllBytes(p), "UTF-8")
+    try decode(parse(txt))
+    catch { case e: Exception =>
+      throw new IllegalArgumentException(s"unreadable log file $p: ${e.getMessage}", e)
+    }
+  }
 
   /** Parquet files hold every column as nullable, and a read returns
     * them so: the log records the schema the files actually carry. */
@@ -305,62 +374,29 @@ object TxLog {
       }
     }
 
-  /** Parse the `stats` object of a log/checkpoint file (empty when the
-    * field is absent — pre-stats entries stay readable). A key without
-    * the `|` column separator (the pre-multi-column format) is DROPPED:
-    * an interval whose column is unknown cannot be safely matched to
-    * any scan, and a stat-less file is always read — safe degradation
-    * in the only direction the contract allows. */
-  private def parseStats(txt: String): Map[String, Map[String, (Long, Long)]] =
-    """"stats":\{([^}]*)\}""".r.findFirstMatchIn(txt) match {
-      case None => Map.empty
-      case Some(m) =>
-        """"([^"]+)":\[(-?\d+),(-?\d+)\]""".r.findAllMatchIn(m.group(1))
-          .flatMap { g =>
-            val k = g.group(1)
-            val cut = k.lastIndexOf('|')
-            if (cut < 0) None // legacy single-interval key: column unknown
-            else Some((k.substring(0, cut), k.substring(cut + 1),
-              (g.group(2).toLong, g.group(3).toLong)))
-          }.toSeq.groupBy(_._1)
-          .map { case (f, rows) => f -> rows.map(r => r._2 -> r._3).toMap }
-    }
-
-  /** Retention: delete entry files AT OR BELOW the newest checkpoint.
-    * Readers then start from the checkpoint; time travel below it is
-    * deliberately given up (snapshot refuses loudly). Returns the
+  /** Retention: delete entry files AT OR BELOW the newest checkpoint,
+    * and every older checkpoint. Readers then start from the newest
+    * checkpoint; time travel below it is deliberately given up
+    * (snapshot refuses loudly), and [[vacuum]] may then sweep the files
+    * only the dropped entries and checkpoints listed. Returns the
     * expired versions. No-op without a checkpoint. */
   def expireEntriesBelowCheckpoint(table: String): Seq[Long] = {
-    checkpointVersions(table).lastOption match {
-      case None => Seq.empty
-      case Some(cp) =>
-        val old = versions(table).filter(_ <= cp)
+    checkpointVersions(table) match {
+      case Seq() => Seq.empty
+      case cps =>
+        val old = versions(table).filter(_ <= cps.last)
         old.foreach(v => Files.deleteIfExists(logDir(table).resolve(s"$v.json")))
+        cps.init.foreach(c =>
+          Files.deleteIfExists(logDir(table).resolve(s"$c.checkpoint.json")))
         old
     }
   }
-
-  private def text(table: String, fileName: String): String =
-    new String(Files.readAllBytes(logDir(table).resolve(fileName)), "UTF-8")
-
-  /** One string-array field of a log/checkpoint file. The JSON is written
-    * by [[commit]] and [[writeCheckpoint]] with a fixed field order, no
-    * nesting, and file names VALIDATED to contain no `"` or `,`
-    * (enforced at commit time), so a regex-based parse is exact (no JSON
-    * library in the engine deps). */
-  private def arr(txt: String, field: String): Seq[String] =
-    s""""$field":\\[([^\\]]*)\\]""".r.findFirstMatchIn(txt)
-      .map(_.group(1)).filter(_.nonEmpty)
-      .map(_.split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\"")))
-      .getOrElse(Seq.empty)
 
   /** Atomically commit `version` = current + 1 through `primitive`.
     * Returns the committed version, or None on a CONFLICT (someone else
     * committed that version first — [[commitRetrying]] re-reads the
     * snapshot and retries).
-    * File names are relative to the table root; names containing `"` or
-    * `,` would corrupt the regex replay, so they are rejected HERE, at
-    * write time, instead of corrupting every later read. `schema` is the
+    * File names are relative to the table root. `schema` is the
     * schema of the `adds` files (the written DataFrame's); the entry
     * records the table schema it implies under the rule in the object
     * doc, and a type clash fails here, before anything lands. On a log
@@ -371,19 +407,12 @@ object TxLog {
       primitive: CommitPrimitive = LocalFs,
       stats: Map[String, Map[String, (Long, Long)]] = Map.empty,
       batch: Option[(Long, String)] = None): Option[Long] = {
-    (adds ++ removes).foreach { n =>
-      require(!n.contains('"') && !n.contains(',') && !n.contains('|'),
-        s"file name must not contain '\"', ',' or '|': $n")
-    }
+    // the flat `file|col` stats key splits at its last `|`
     stats.valuesIterator.flatMap(_.keysIterator).foreach { c =>
-      require(!c.contains('"') && !c.contains(',') && !c.contains('|'),
-        s"stats column name must not contain '\"', ',' or '|': $c")
+      require(!c.contains('|'), s"stats column name must not contain '|': $c")
     }
     require(stats.keySet.subsetOf(adds.toSet),
       s"stats may only cover this commit's adds: ${stats.keySet -- adds.toSet}")
-    batch.foreach { case (_, fp) =>
-      require(fp.matches("\\w*"), s"batch fingerprint must be word characters only: $fp")
-    }
     val added = asNullable(schema).asInstanceOf[StructType]
     val tableSchema =
       if (expectedCurrent < 0) Some(added)
@@ -391,13 +420,9 @@ object TxLog {
     val next = expectedCurrent + 1
     val d = logDir(table)
     Files.createDirectories(d)
-    val entry =
-      s"""{"version":$next,"adds":[${adds.map("\"" + _ + "\"").mkString(",")}],""" +
-        s""""removes":[${removes.map("\"" + _ + "\"").mkString(",")}]""" +
-        s"""${schemaJson(tableSchema)}${statsJson(stats)}""" +
-        batch.fold("") { case (id, fp) => s""","batch":[$id,"$fp"]""" } + "," +
-        s""""ts":${System.currentTimeMillis()}}"""
-    if (primitive.createExclusive(d.resolve(s"$next.json"), entry.getBytes("UTF-8")))
+    val entry = Entry(next, adds, removes, tableSchema.map(_.json), stats, batch,
+      Some(System.currentTimeMillis()))
+    if (primitive.createExclusive(d.resolve(s"$next.json"), Codec.write(Codec.entry(entry))))
       Some(next)
     else None
   }
@@ -503,8 +528,6 @@ object TxLog {
     if (v > 0 && v % 10 == 0) {
       writeCheckpoint(table): Unit
       expireEntriesBelowCheckpoint(table): Unit
-      checkpointVersions(table).dropRight(1).foreach(c =>
-        Files.deleteIfExists(logDir(table).resolve(s"$c.checkpoint.json")))
       vacuum(table): Unit
     }
 
@@ -512,13 +535,9 @@ object TxLog {
     * the entry's recorded `ts` field, falling back to the entry FILE's
     * modification time for pre-`ts` entries (close enough — both are
     * the committing writer's clock at publish time). */
-  def commitTimeMillis(table: String, v: Long): Long = {
-    val p = logDir(table).resolve(s"$v.json")
-    val txt = new String(Files.readAllBytes(p), "UTF-8")
-    """"ts":(\d+)""".r.findFirstMatchIn(txt)
-      .map(_.group(1).toLong)
-      .getOrElse(Files.getLastModifiedTime(p).toMillis)
-  }
+  def commitTimeMillis(table: String, v: Long): Long =
+    load(table, s"$v.json")(Codec.entry).ts.getOrElse(
+      Files.getLastModifiedTime(logDir(table).resolve(s"$v.json")).toMillis)
 
   /** TIMESTAMP AS OF: the newest version whose commit time is at or
     * before `tsMillis` — `snapshot(table, Some(versionAt(...)))` is the
@@ -547,9 +566,10 @@ object TxLog {
     * Files REMOVED by some version stay on disk — they back time
     * travel. */
   def vacuum(table: String, minAgeMs: Long = defaultVacuumMinAgeMs): Seq[String] = {
-    val referenced = (versions(table)
-      .flatMap { v => val t = text(table, s"$v.json"); arr(t, "adds") ++ arr(t, "removes") } ++
-      checkpointVersions(table).flatMap(v => arr(text(table, s"$v.checkpoint.json"), "files"))).toSet
+    val referenced = (versions(table).flatMap { v =>
+      val e = load(table, s"$v.json")(Codec.entry); e.adds ++ e.removes } ++
+      checkpointVersions(table).flatMap(v =>
+        load(table, s"$v.checkpoint.json")(Codec.checkpoint).files)).toSet
     val root = Paths.get(table)
     if (!Files.exists(root)) return Seq.empty
     val cutoff = System.currentTimeMillis() - minAgeMs

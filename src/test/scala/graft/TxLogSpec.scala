@@ -25,6 +25,18 @@ class TxLogSpec extends AnyFunSuite {
   private def writePart(table: String, name: String): Unit =
     Files.write(Paths.get(table, name), Array[Byte](80, 65, 82, 49)) // "PAR1"
 
+  /** `schema` as the log writes it: base64 of `StructType.json`. */
+  private def b64(s: StructType): String =
+    java.util.Base64.getEncoder.encodeToString(s.json.getBytes("UTF-8"))
+
+  private def writeLog(table: String, file: String, json: String): Unit = {
+    Files.createDirectories(Paths.get(table, "_txlog"))
+    Files.write(Paths.get(table, "_txlog", file), json.getBytes("UTF-8"))
+  }
+
+  private def logText(table: String, file: String): String =
+    new String(Files.readAllBytes(Paths.get(table, "_txlog", file)), "UTF-8")
+
   import TestSpark.{landEvents, writeFile}
 
   test("commits replay to the expected file set; removes hide files") {
@@ -55,9 +67,7 @@ class TxLogSpec extends AnyFunSuite {
     // a pre-ts entry (hand-written old format) resolves via file mtime
     val t2 = freshTable("tsat-old")
     writePart(t2, "a.parquet")
-    Files.createDirectories(Paths.get(t2, "_txlog"))
-    Files.write(Paths.get(t2, "_txlog", "0.json"),
-      """{"version":0,"adds":["a.parquet"],"removes":[]}""".getBytes("UTF-8"))
+    writeLog(t2, "0.json", """{"version":0,"adds":["a.parquet"],"removes":[]}""")
     assert(TxLog.versionAt(t2, System.currentTimeMillis() + 1000) === 0L)
   }
 
@@ -103,9 +113,7 @@ class TxLogSpec extends AnyFunSuite {
     val t = freshTable("no-schema")
     writeFile(Seq((1L, 1.5)).toDF("k", "v"), t, "a.parquet")
     writeFile(Seq((2L, "x")).toDF("k", "tag"), t, "b.parquet")
-    Files.createDirectories(Paths.get(t, "_txlog"))
-    Files.write(Paths.get(t, "_txlog", "0.json"),
-      """{"version":0,"adds":["a.parquet","b.parquet"],"removes":[]}""".getBytes("UTF-8"))
+    writeLog(t, "0.json", """{"version":0,"adds":["a.parquet","b.parquet"],"removes":[]}""")
     assert(TxLog.snapshot(t).schema === None)
     val df = streaming.Streams.readMergeTable(spark, t)
     assert(df.columns.sorted === Array("k", "tag", "v"))
@@ -163,13 +171,31 @@ class TxLogSpec extends AnyFunSuite {
       Seq("committed.parquet", "inflight.parquet"))
   }
 
-  test("commit rejects file names that would corrupt the JSON replay") {
-    val t = freshTable("badname")
+  test("any file name and stats column round-trips through commit, checkpoint, expiry and snapshot") {
+    val t = freshTable("names")
+    val names = Seq("a]b.parquet", "a,b.parquet", "a\"b.parquet", "x|y.parquet", "c.parquet")
+    names.foreach(writePart(t, _))
+    val stats = Map(
+      "x|y.parquet" -> Map("a}b" -> (-2L, 7L), "k" -> (0L, 1L)),
+      "a]b.parquet" -> Map("a}b" -> (3L, 4L)))
+    val fp = "fp \"q\", [x]|{y}"
+    assert(TxLog.commit(t, names, Seq.empty, -1L, kv, stats = stats,
+      batch = Some(4L -> fp)) === Some(0L))
+    val v0 = TxLog.Snapshot(0L, names, stats, Some(kv), Map(4L -> fp))
+    assert(TxLog.snapshot(t) === v0)
+    assert(TxLog.commit(t, Seq.empty, Seq("a,b.parquet", "a]b.parquet"), 0L, kv) === Some(1L))
+    val v1 = v0.copy(version = 1L,
+      files = Seq("a\"b.parquet", "x|y.parquet", "c.parquet"),
+      stats = stats - "a]b.parquet")
+    assert(TxLog.snapshot(t) === v1)
+    assert(TxLog.writeCheckpoint(t) === Some(1L))
+    assert(TxLog.expireEntriesBelowCheckpoint(t) === Seq(0L, 1L))
+    assert(TxLog.snapshot(t) === v1, "the checkpoint alone carries every name back")
+    assert(TxLog.vacuum(t, minAgeMs = 0L).sorted === Seq("a,b.parquet", "a]b.parquet"))
+    // the flat `file|col` stats key needs a column name without `|`
     intercept[IllegalArgumentException] {
-      TxLog.commit(t, Seq("a,b.parquet"), Seq.empty, -1L, kv)
-    }
-    intercept[IllegalArgumentException] {
-      TxLog.commit(t, Seq("ok.parquet"), Seq("a\"b.parquet"), -1L, kv)
+      TxLog.commit(t, Seq("d.parquet"), Seq.empty, 1L, kv,
+        stats = Map("d.parquet" -> Map("a|b" -> (0L, 0L))))
     }
     assert(TxLog.versions(t) === Seq.empty, "no partial entry may land")
   }
@@ -268,6 +294,82 @@ class TxLogSpec extends AnyFunSuite {
     assert(Files.exists(Paths.get(t, "f2.parquet")))
     assert(Files.exists(Paths.get(t, "f1.parquet")),
       "checkpoint-referenced file must survive vacuum with entries expired")
+  }
+
+  test("entries and checkpoints keep their on-disk shape and replay exactly") {
+    val kvz = kv.add("z", LongType)
+    // a hand-laid log in the format every earlier writer produced: a
+    // checkpoint and an entry carrying every optional field (a stats key
+    // without `|` is the pre-multi-column format and is dropped), then a
+    // legacy entry with none of them
+    val t = freshTable("compat")
+    writeLog(t, "0.checkpoint.json", s"""{"version":0,"files":["a.parquet","b.parquet"],""" +
+      s""""schema":"${b64(kv)}","stats":{"a.parquet|k":[0,4],"b.parquet":[1,2]},""" +
+      """"batches":{"3":"f3","5":"f5"}}""")
+    writeLog(t, "1.json", """{"version":1,"adds":["c.parquet"],"removes":["a.parquet"],""" +
+      s""""schema":"${b64(kvz)}","stats":{"c.parquet":[9,9],"c.parquet|k":[1,5],""" +
+      """"c.parquet|z":[-3,9]},"batch":[7,"abc123"],"ts":1700000000000}""")
+    writeLog(t, "2.json", """{"version":2,"adds":["d.parquet"],"removes":[]}""")
+    val v1 = TxLog.Snapshot(1L, Seq("b.parquet", "c.parquet"),
+      Map("c.parquet" -> Map("k" -> (1L, 5L), "z" -> (-3L, 9L))), Some(kvz),
+      Map(3L -> "f3", 5L -> "f5", 7L -> "abc123"))
+    assert(TxLog.snapshot(t, Some(0L)) === TxLog.Snapshot(0L, Seq("a.parquet", "b.parquet"),
+      Map("a.parquet" -> Map("k" -> (0L, 4L))), Some(kv), Map(3L -> "f3", 5L -> "f5")))
+    assert(TxLog.snapshot(t, Some(1L)) === v1)
+    assert(TxLog.snapshot(t) === v1.copy(version = 2L,
+      files = Seq("b.parquet", "c.parquet", "d.parquet"), schema = None))
+    assert(TxLog.commitTimeMillis(t, 1L) === 1700000000000L)
+    // and the writers still produce that shape, byte for byte
+    val w = freshTable("compat-write")
+    assert(TxLog.commit(w, Seq("a.parquet", "b.parquet"), Seq.empty, -1L, kv,
+      stats = Map("a.parquet" -> Map("k" -> (0L, 4L)))) === Some(0L))
+    assert(TxLog.commit(w, Seq("c.parquet"), Seq("a.parquet"), 0L, kvz,
+      stats = Map("c.parquet" -> Map("z" -> (-3L, 9L), "k" -> (1L, 5L))),
+      batch = Some(7L -> "abc123")) === Some(1L))
+    val ts = TxLog.commitTimeMillis(w, 1L)
+    assert(logText(w, "1.json") ===
+      """{"version":1,"adds":["c.parquet"],"removes":["a.parquet"],""" +
+        s""""schema":"${b64(kvz)}","stats":{"c.parquet|k":[1,5],"c.parquet|z":[-3,9]},""" +
+        s""""batch":[7,"abc123"],"ts":$ts}""")
+    assert(TxLog.writeCheckpoint(w) === Some(1L))
+    assert(logText(w, "1.checkpoint.json") ===
+      """{"version":1,"files":["b.parquet","c.parquet"],""" +
+        s""""schema":"${b64(kvz)}","stats":{"c.parquet|k":[1,5],"c.parquet|z":[-3,9]},""" +
+        """"batches":{"7":"abc123"}}""")
+  }
+
+  test("expiry drops the older checkpoints: time travel below the newest fails, vacuum sweeps") {
+    val t = freshTable("expire-cps")
+    for (v <- 0 to 24) {
+      writePart(t, s"f$v.parquet")
+      val removes = if (v == 0) Seq.empty else Seq(s"f${v - 1}.parquet")
+      assert(TxLog.commit(t, Seq(s"f$v.parquet"), removes, v - 1L, kv) === Some(v.toLong))
+      if (v == 10 || v == 20) assert(TxLog.writeCheckpoint(t) === Some(v.toLong))
+    }
+    assert(TxLog.expireEntriesBelowCheckpoint(t) === (0L to 20L))
+    assert(TxLog.checkpointVersions(t) === Seq(20L))
+    intercept[IllegalArgumentException] { TxLog.snapshot(t, Some(15L)) }
+    intercept[IllegalArgumentException] { TxLog.snapshot(t, Some(10L)) }
+    assert(TxLog.snapshot(t, Some(20L)).files === Seq("f20.parquet"))
+    assert(TxLog.snapshot(t, Some(22L)).files === Seq("f22.parquet"))
+    assert(TxLog.vacuum(t, minAgeMs = 0L).sorted === (0 to 19).map(v => s"f$v.parquet").sorted)
+  }
+
+  test("time travel into an expired range fails on a log that kept an older checkpoint") {
+    // laid by hand as a log expired before expiry dropped old checkpoints:
+    // checkpoints 10 and 20 survive, entries 21..22 only
+    val t = freshTable("expire-legacy")
+    Seq(10, 20).foreach(v => writeLog(t, s"$v.checkpoint.json",
+      s"""{"version":$v,"files":["f$v.parquet"],"schema":"${b64(kv)}"}"""))
+    Seq(21, 22).foreach(v => writeLog(t, s"$v.json",
+      s"""{"version":$v,"adds":["f$v.parquet"],"removes":["f${v - 1}.parquet"],""" +
+        s""""schema":"${b64(kv)}","ts":1700000000000}"""))
+    assert(TxLog.snapshot(t, Some(10L)).files === Seq("f10.parquet"),
+      "a retained checkpoint still serves its own version")
+    val e = intercept[IllegalArgumentException] { TxLog.snapshot(t, Some(15L)) }
+    assert(e.getMessage.contains("not retained"))
+    assert(TxLog.snapshot(t, Some(21L)).files === Seq("f21.parquet"))
+    assert(TxLog.snapshot(t).version === 22L)
   }
 
   test("mergeInto auto-checkpoints and reads stay correct across the boundary") {
@@ -548,7 +650,7 @@ class TxLogSpec extends AnyFunSuite {
     assert(TxLog.commit(t, Seq("b.parquet"), Seq.empty, 0L, kv) === Some(1L))
     // neither the plain entries nor their checkpoint carry the field
     Seq("0.json", "0.checkpoint.json", "1.json").foreach { f =>
-      val txt = new String(Files.readAllBytes(Paths.get(t, "_txlog", f)), "UTF-8")
+      val txt = logText(t, f)
       assert(!txt.contains("batch"), s"$f must not carry a batch record: $txt")
     }
     assert(TxLog.snapshot(t).batches.isEmpty)

@@ -12,7 +12,9 @@ MemTotal and spills to a temp dir removed at exit.
 When the second argument is itself a Verify output dir (it holds an
 oracle_sql.json), each query's dump is compared row for row with that
 dir's dump of the same query instead of with DuckDB: the parent-vs-change
-compare for rows whose oracle does not fit in memory.
+compare for rows whose oracle does not fit in memory. The two
+oracle_sql.json maps are compared too: every query whose oracle text
+differs (or that only one side declares) is listed, and counts as a failure.
 """
 import sys, os, json, glob
 import pandas as pd
@@ -99,6 +101,13 @@ def mismatch(got: pd.DataFrame, want: pd.DataFrame):
     return None
 
 fails = 0
+if dump_vs_dump:
+    ref_oracle = json.load(open(f"{refdir}/oracle_sql.json"))
+    for name in sorted(set(oracle) | set(ref_oracle)):
+        if only and name not in only:
+            continue
+        if oracle.get(name) != ref_oracle.get(name):
+            print(f"FAIL {name}: oracle text differs from {refdir}"); fails += 1
 for name, sql in sorted(oracle.items()):
     if only and name not in only:
         continue
